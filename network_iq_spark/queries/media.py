@@ -18,7 +18,7 @@ from network_iq_spark.registry import register
 from network_iq_spark.sources import load_table
 
 
-def _pbuild(*thunks):
+def _pbuild(spark: SparkSession, *thunks):
     """Construct independent DataFrame subtrees on a small thread pool and
     return them in input order (r15, VERDICT item 2). The composites' plan
     CONSTRUCTION is the measured bottleneck at bench SF — ~7,000 py4j
@@ -29,7 +29,9 @@ def _pbuild(*thunks):
     §2.6 applied to driver-side planning; each arm's own plan is built by
     exactly one thread, the subtrees are combined afterwards in the same
     fixed order as before, and no job can observe the overlap (the arm
-    bodies are lazy), so plans and results are unchanged."""
+    bodies are lazy), so plans and results are unchanged. The workers inherit
+    the caller's local properties and job tags, so their jobs (a schema
+    inference on a cold table) stay attributed to the caller's query."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -37,7 +39,8 @@ def _pbuild(*thunks):
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        wrap = inheritable_thread_target(spark)
+        futs = [pool.submit(wrap(t)) for t in thunks]
         return [f.result() for f in futs]
 
 
@@ -2466,6 +2469,7 @@ def q_media_near_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     aud, img, vid = _pbuild(
+        spark,
         lambda: arm(
             q_audio_near_dup_pairs(spark, sf_dir), "audio", _WHASH_TWIN_OFFSET
         ),
@@ -3526,6 +3530,7 @@ def q_transform_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction is the census's measured bottleneck); the union below
     # consumes them in the same fixed order as the former serial build
     resample, trim, crop, rot, scale, vcrop, vresample, vtrim = _pbuild(
+        spark,
         lambda: arm(
             _audio_resampled_pairs_from(aud),
             "audio_resample", "full_id", "resampled_id", _RSMP_TWIN_OFFSET,
@@ -3694,6 +3699,7 @@ def _image_transform_edges_from(img: DataFrame) -> DataFrame:
     once per arm (guide §3.3 planning cost; the composites' build is
     measured py4j/parse-bound)."""
     crop, scale, rot = _pbuild(
+        img.sparkSession,
         lambda: _image_cropped_pairs_from(img),
         lambda: _image_thumbnail_pairs_from(img),
         lambda: _image_rotated_dedup_from(img),
@@ -3732,6 +3738,7 @@ def _audio_transform_edges_from(src: DataFrame) -> DataFrame:
     """Edge union over ONE shared walk frame (the
     ``_image_transform_edges_from`` build-once rationale)."""
     rsmp, trim, tg = _pbuild(
+        src.sparkSession,
         lambda: _audio_resampled_pairs_from(src),
         lambda: _audio_trimmed_pairs_from(src),
         lambda: _audio_trim_gain_pairs_from(src),
@@ -3770,6 +3777,7 @@ def _video_transform_edges_from(base: DataFrame) -> DataFrame:
     """Edge union over ONE shared grid frame (the
     ``_image_transform_edges_from`` build-once rationale)."""
     crop, rsmp, trim = _pbuild(
+        base.sparkSession,
         lambda: _video_cropped_pairs_from(base),
         lambda: _video_resampled_pairs_from(base),
         lambda: _video_trimmed_pairs_from(base),
@@ -4036,7 +4044,11 @@ def _keep_best_from_edges(e: DataFrame, members: DataFrame) -> DataFrame:
         F.expr(_VAR_UNITS_EXPR.format(v="s")).alias("var_units"),
     )
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(inheritable_thread_target(scored_plan.localCheckpoint))
+        fut = pool.submit(
+            inheritable_thread_target(scored_plan.sparkSession)(
+                scored_plan.localCheckpoint
+            )
+        )
         # endpoints-only CC (vertices=None): the vertex set is exactly the
         # edge endpoints, so the former union + distinct + seed join was
         # redundant with the CC seed's neighbor-min aggregate (guide §2.4)
@@ -4378,7 +4390,7 @@ def q_transform_admission_manifest(spark: SparkSession, sf_dir: str) -> DataFram
         return fn(spark, sf_dir).select(F.lit(m).alias("modality"), "*")
 
     with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-        frames = list(pool.map(inheritable_thread_target(build), parts))
+        frames = list(pool.map(inheritable_thread_target(spark)(build), parts))
     out = frames[0]
     for d in frames[1:]:
         out = out.unionByName(d)

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Scale A/B for the parts_bought_together pair stage (r15).
 
-r15 moved parts_bought_together from the distinct + self-join pair
-generation to the r14 triangle-census per-order collect_set comprehension
-(star.py::_order_part_pairs). At bench SF the solo readings are join 1.71s
+r15 tried moving parts_bought_together from the distinct + self-join
+pair generation to the r14 triangle-census per-order collect_set
+comprehension; that form never landed in star.py and is kept only here, as
+the A/B's second arm. At bench SF the solo readings are join 1.71s
 vs collect_set 2.06s — but the join form rides a BROADCAST of the whole
 distinct (order, part) table (committed before-plan: 2 BroadcastHashJoin,
 8 Exchange), which cannot exist at 100 TB. This script measures the scale
@@ -69,8 +70,8 @@ def _join_form(l: DataFrame) -> DataFrame:
 
 
 def _collect_form(l: DataFrame) -> DataFrame:
-    """The r15 per-order collect_set comprehension (star._order_part_pairs
-    body, re-stated verbatim so the A/B is self-contained)."""
+    """The tried-and-reverted r15 per-order collect_set comprehension
+    (never in star.py; this is its only copy)."""
     pairs = (
         l.groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("ps"))

@@ -25,6 +25,32 @@ def sf_dir() -> str:
     return SF_ORACLE
 
 
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group on this
+    thread and returns ``(result, n)``, where ``n`` is how many Spark jobs
+    it launched. Job groups are thread-local, so jobs that other threads
+    run meanwhile are not counted."""
+    import itertools
+
+    sc = spark.sparkContext
+    ids = itertools.count()
+
+    def run(fn):
+        group = f"count_jobs_{next(ids)}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job starts reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 class _RegistryPrefetch:
     """Build every registry query ONCE per sf_dir and capture everything the
     whole-registry test passes consume — collected rows, Spark schema,
@@ -138,7 +164,7 @@ class _RegistryPrefetch:
         results = {}
         with ThreadPoolExecutor(max_workers=self.WORKERS) as pool:
             for name, res in pool.map(
-                inheritable_thread_target(one), sorted(QUERIES)
+                inheritable_thread_target(self._spark)(one), sorted(QUERIES)
             ):
                 results[name] = res
         return results

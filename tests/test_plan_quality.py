@@ -445,3 +445,21 @@ def test_pq_tier_collects_only_model_artifacts(spark):
             assert out.count() > 0, name
     assert collected_sizes, "expected codebook/centroid artifact collects"
     assert max(collected_sizes) <= budget, collected_sizes
+
+
+def test_panels_queries_build_without_a_job(spark, count_jobs):
+    """Building (not executing) a dashboard query on a warm session must
+    launch no Spark job: an eager action at plan build (schema inference,
+    a collect, a count) is a fixed per-query cost on every interaction.
+    Covers the benchmark's ``panels`` workload."""
+    from perfbench.workloads import PANELS
+
+    for name in PANELS:
+        QUERIES[name](spark, SF)  # warm: first builds may infer schemas
+    launched = {}
+    for name in PANELS:
+        _, n = count_jobs(lambda: QUERIES[name](spark, SF))
+        if n:
+            launched[name] = n
+    assert len(PANELS) == 26
+    assert not launched, launched

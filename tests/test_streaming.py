@@ -7,11 +7,23 @@ import pytest
 
 from tests.telemetry_fixture import telemetry_pdf
 
+SOURCE_FILES = 4
+
 
 @pytest.fixture(scope="module")
 def source_dir(spark, tmp_path_factory) -> str:
+    """The telemetry fixture as SOURCE_FILES time-ordered parquet files:
+    sorted by name, each file's rows are all later than the previous
+    file's. The split is fixed, not one file per local core, so the
+    event-time watermark after any prefix of the files does not depend on
+    the host."""
     p = str(tmp_path_factory.mktemp("stream_src") / "telemetry")
-    spark.createDataFrame(telemetry_pdf()).write.mode("overwrite").parquet(p)
+    (
+        spark.createDataFrame(telemetry_pdf())
+        .repartitionByRange(SOURCE_FILES, "timestamp")
+        .write.mode("overwrite")
+        .parquet(p)
+    )
     return p
 
 
@@ -86,7 +98,7 @@ def test_checkpoint_incremental_processing(spark, source_dir, tmp_path):
     files = sorted(
         f for f in os.listdir(source_dir) if f.endswith(".parquet")
     )
-    assert len(files) >= 2
+    assert len(files) == SOURCE_FILES
     shutil.copy(os.path.join(source_dir, files[0]), src)
 
     def run_once() -> None:
