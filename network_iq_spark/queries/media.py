@@ -81,51 +81,113 @@ _IMG_QUANT_SQL = (
     "list_transform(embedding::DOUBLE[], x -> CAST(floor("
     "((least(greatest(x, -1.0), 1.0)) + 1.0) / 2.0 * 255.0 + 0.5) AS BIGINT))"
 )
-# Spark twin of _IMG_QUANT_SQL — the ONE definition of the 8-bit pixel
-# quantization every image tier shares (r11 review: the expr literal had
-# drifted into ten call sites; a rounding-rule change must hit both
-# engines in exactly one place each)
+# Spark twin of _IMG_QUANT_SQL — the ONE Spark definition of the 8-bit
+# pixel quantization every image and video tier shares, reached only
+# through _img_grid (r11 review: the expr literal had drifted into ten
+# call sites; a rounding-rule change must hit both engines in exactly one
+# place each). ``{v}`` is the embedding or its first-dims slice.
 _IMG_QUANT_EXPR_SQL = (
-    "transform(embedding, x -> cast(floor(((least(greatest("
+    "transform({v}, x -> cast(floor(((least(greatest("
     "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
     ") as int))"
 )
 
 
-@register(
-    "decoded_image_stats",
-    oracle=f"""
+def _emb_select(spark: SparkSession, sf_dir: str, expr: str, col: str) -> DataFrame:
+    """(media_id, <col>) — one SQL derivation per embeddings row; the
+    scan every synthesized media corpus starts from."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.select(F.col("vec_id").alias("media_id"), F.expr(expr).alias(col))
+
+
+def _img_grid(spark: SparkSession, sf_dir: str, dims: int | None = None) -> DataFrame:
+    """(media_id, px) — the quantized pixel grid every image and video
+    tier derives its corpus from (8×8 image, 4-frame 4×4 clip, or with
+    ``dims`` the first ``dims`` values only: the block constants of the
+    JPEG/GIF fixtures). The composites build it once per query and feed
+    every arm the same frame (the _aud_walks rule)."""
+    v = "embedding" if dims is None else f"slice(embedding, 1, {dims})"
+    return _emb_select(spark, sf_dir, _IMG_QUANT_EXPR_SQL.format(v=v), "px")
+
+
+def _roundtrip(df: DataFrame, col: str, dtype: str, fn) -> DataFrame:
+    """(media_id, <col> array<int>) after passing each row's ``col``
+    array, as a ``dtype`` numpy array, through ``fn`` — a REAL codec
+    encode → decode round trip — inside Arrow batches. ``fn`` returns the
+    decoded values in any shape; they are flattened in C order. ``fn`` is
+    shipped to the Python workers by value, so it must be a lambda or a
+    nested function that calls only ``operators/`` code: a module-level
+    function of this file would be pickled by reference, and every worker
+    would then import the whole queries package."""
+    import numpy as np
+    import pandas as pd
+
+    def run(it):
+        for pdf in it:
+            out = []
+            for a in pdf[col]:
+                dec = fn(np.asarray(list(a), dtype=dtype))
+                out.append([int(v) for v in np.asarray(dec).reshape(-1)])
+            yield pd.DataFrame({"media_id": pdf["media_id"], col: out})
+
+    return df.mapInPandas(run, schema=f"media_id bigint, {col} array<int>")
+
+
+def _codec_stats_oracle(out: int, keep: list[int], channels: int = 1) -> str:
+    """DuckDB replay of :func:`_image_codec_stats`: the stats of an
+    ``out``×``out`` center-aligned resample are the quantized values at
+    the 1-based ``keep`` positions, counted once per output channel. The
+    oracle never sees an image, so a codec or resample defect shows up as
+    a hash mismatch."""
+    px_sum = f"{channels} * ({' + '.join(f'px[{i}]' for i in keep)})"
+    return f"""
     WITH q AS (
       SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
     )
     SELECT media_id,
-           {_IMG_OUT} AS out_w, {_IMG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _IMG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _IMG_KEEP_1BASED)}) AS DOUBLE)
-             / {_IMG_OUT * _IMG_OUT}.0 AS px_mean
+           {out} AS out_w, {out} AS out_h,
+           {px_sum} AS px_sum,
+           CAST({px_sum} AS DOUBLE) / {out * out * channels}.0 AS px_mean
     FROM q ORDER BY media_id
-    """,
-)
-def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode, end to end and hash-checked: each embedding is
-    quantized to 8-bit pixels (Spark expressions — both engines evaluate
-    the identical doubles), encoded as an actual PGM image in an Arrow
-    batch, pushed through resize_media's decode → center-aligned
-    nearest-neighbor resample → PNM re-encode (operators/multimodal.py,
-    pure numpy), and the OUTPUT BYTES are decoded again for the stats.
-    The oracle never sees an image: it computes the same stats from the
-    16 surviving pixel positions directly, so any defect in the codec,
-    the resample index math, or the re-encode shows up as a hash
-    mismatch. All stages MAP-ONLY (zero shuffles before the final sort)."""
+    """
+
+
+def _image_codec_stats(
+    spark: SparkSession,
+    sf_dir: str,
+    side: int,
+    out: int,
+    encode,
+    *,
+    dims: int | None = None,
+    spread: bool = False,
+    channels: int = 1,
+) -> DataFrame:
+    """The shared body of the ``decoded_*_stats`` image queries:
+    quantized grid (first ``dims`` values) → ``encode(media_id, uint8
+    array)`` to a REAL ``side``×``side`` image file → resize_media's
+    decode → center-aligned nearest-neighbor resample to ``out``×``out``
+    → PNM re-encode (operators/multimodal.py, pure numpy) → the OUTPUT
+    BYTES decoded again for (out_w, out_h, px_sum, px_mean), with
+    ``channels`` samples per pixel in the mean. All stages MAP-ONLY
+    before the final sort. ``encode`` ships by value (see
+    :func:`_roundtrip`).
+
+    ``spread`` runs ensure_parallelism on the grid before the encode. It
+    is chosen by codec, not by the caller's data: the heavy codecs
+    (4:2:0 and progressive JPEG, GIF: ≥1 ms per row) gain from spreading
+    the tiny scan before encoding (A/B-measured r12, 1.58x on gif;
+    docs/ROUND14.md), while the light ones keep the scan partitioning.
+    It is an identity at real scale (ensure_parallelism docstring)."""
     import numpy as np
     import pandas as pd
 
-    from network_iq_spark.operators.multimodal import decode_image, encode_pnm
+    from network_iq_spark.operators.multimodal import decode_image
 
-    side = _IMG_SIDE
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    src = _img_grid(spark, sf_dir, dims)
+    if spread:
+        src = ensure_parallelism(src)
+    n_px = out * out * channels
 
     def build(it):
         for pdf in it:
@@ -133,10 +195,8 @@ def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {
                     "media_id": pdf["media_id"],
                     "payload": [
-                        encode_pnm(
-                            np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                        )
-                        for p in pdf["px"]
+                        encode(mid, np.asarray(list(p), dtype=np.uint8))
+                        for mid, p in zip(pdf["media_id"], pdf["px"])
                     ],
                     "media_type": "image",
                     "width": np.int32(side),
@@ -150,7 +210,7 @@ def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="media_id bigint, payload binary, media_type string, "
         "width int, height int, duration_ms int",
     )
-    resized = M.resize_media(media, _IMG_OUT, _IMG_OUT)
+    resized = M.resize_media(media, out, out)
 
     def stats(it):
         for pdf in it:
@@ -166,7 +226,7 @@ def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "out_w": pd.array(out_w, dtype="int32"),
                     "out_h": pd.array(out_h, dtype="int32"),
                     "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_IMG_OUT * _IMG_OUT) for s in sums],
+                    "px_mean": [s / n_px for s in sums],
                 }
             )
 
@@ -175,6 +235,29 @@ def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
         "px_mean double",
     ).orderBy("media_id")
+
+
+@register(
+    "decoded_image_stats",
+    oracle=_codec_stats_oracle(_IMG_OUT, _IMG_KEEP_1BASED),
+)
+def q_decoded_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL image decode, end to end and hash-checked: each embedding is
+    quantized to 8-bit pixels (Spark expressions — both engines evaluate
+    the identical doubles), encoded as an actual PGM image in an Arrow
+    batch, pushed through resize_media's decode → center-aligned
+    nearest-neighbor resample → PNM re-encode (operators/multimodal.py,
+    pure numpy), and the OUTPUT BYTES are decoded again for the stats.
+    The oracle never sees an image: it computes the same stats from the
+    16 surviving pixel positions directly, so any defect in the codec,
+    the resample index math, or the re-encode shows up as a hash
+    mismatch. All stages MAP-ONLY (zero shuffles before the final sort)."""
+    from network_iq_spark.operators.multimodal import encode_pnm
+
+    return _image_codec_stats(
+        spark, sf_dir, _IMG_SIDE, _IMG_OUT,
+        lambda mid, a: encode_pnm(a.reshape(_IMG_SIDE, _IMG_SIDE)),
+    )
 
 
 _PNG_OUT = 2
@@ -192,17 +275,7 @@ _JPEG_KEEP_1BASED = [1, 2, 3, 4]
 
 @register(
     "decoded_png_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_PNG_OUT} AS out_w, {_PNG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _PNG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _PNG_KEEP_1BASED)}) AS DOUBLE)
-             / {_PNG_OUT * _PNG_OUT}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
+    oracle=_codec_stats_oracle(_PNG_OUT, _PNG_KEEP_1BASED),
 )
 def q_decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG sibling of `decoded_image_stats` — same decode → resample →
@@ -215,64 +288,12 @@ def q_decoded_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a defect anywhere in the codec (CRC layout, filter math, alpha
     handling) or the resample surfaces as a hash mismatch. MAP-ONLY
     before the final sort."""
-    import numpy as np
-    import pandas as pd
+    from network_iq_spark.operators.multimodal import encode_png
 
-    from network_iq_spark.operators.multimodal import decode_image, encode_png
-
-    side = _IMG_SIDE
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-    def build(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_png(
-                            np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
+    return _image_codec_stats(
+        spark, sf_dir, _IMG_SIDE, _PNG_OUT,
+        lambda mid, a: encode_png(a.reshape(_IMG_SIDE, _IMG_SIDE)),
     )
-    resized = M.resize_media(media, _PNG_OUT, _PNG_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_PNG_OUT * _PNG_OUT) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
 
 
 # Image near-dup fixture: every {_DHASH_TWIN_EVERY}th image gets a planted
@@ -332,38 +353,30 @@ _IMG_ND_ORACLE = f"""
     """
 
 
-def _image_nd_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image near-dup fixture frame: quantized-embedding rasters plus
-    planted perturbed twins, pushed through the REAL PNG encode → decode
-    round trip inside Arrow batches. Shared by the pairs query and the
-    clusters query (same corpus, same decode path)."""
-    import numpy as np
-    import pandas as pd
-
-    from network_iq_spark.operators.multimodal import decode_image, encode_png
-
-    side = _IMG_SIDE
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    twin = src.filter(F.col("media_id") % _DHASH_TWIN_EVERY == 0).select(
+def _dhash_twins(src: DataFrame) -> DataFrame:
+    """The planted perturbed twins of every ``_DHASH_TWIN_EVERY``-th
+    image (the fixture comment above) — shared by the near-dup corpus
+    and the incremental probe's batch."""
+    return src.filter(F.col("media_id") % _DHASH_TWIN_EVERY == 0).select(
         (F.col("media_id") + _DHASH_TWIN_OFFSET).alias("media_id"),
         F.expr(
             "transform(px, (x, i) -> IF(i % 16 = 0, least(x + 3, 255), x))"
         ).alias("px"),
     )
-    imgs = src.unionByName(twin)
 
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for p in pdf["px"]:
-                img = np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                dec = decode_image(encode_png(img))
-                out.append([int(v) for v in dec.reshape(-1)])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
 
-    return imgs.mapInPandas(roundtrip, schema="media_id bigint, px array<int>")
+def _image_nd_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The image near-dup fixture frame: quantized-embedding rasters plus
+    planted perturbed twins, pushed through the REAL PNG encode → decode
+    round trip inside Arrow batches. Shared by the pairs query and the
+    clusters query (same corpus, same decode path)."""
+    from network_iq_spark.operators.multimodal import decode_image, encode_png
+
+    src = _img_grid(spark, sf_dir)
+    return _roundtrip(
+        src.unionByName(_dhash_twins(src)), "px", "uint8",
+        lambda a: decode_image(encode_png(a.reshape(_IMG_SIDE, _IMG_SIDE))),
+    )
 
 
 @register("image_near_dup_pairs", oracle=_IMG_ND_ORACLE)
@@ -528,20 +541,9 @@ def _crop_verify_sql(a: str, b: str) -> str:
     ORDER BY {a}, {b}"""
 
 
-def _img_quant_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(media_id, px) — the quantized 8×8 grid every image tier derives
-    its corpus from; ONE Spark-side definition the composites build
-    once per query and feed to every image arm (the _aud_walks rule)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        F.col("vec_id").alias("media_id"),
-        F.expr(_IMG_QUANT_EXPR_SQL).alias("px"),
-    )
-
-
 def _crop_corpus(spark: SparkSession, sf_dir: str):
     """Spark twin of _CROP_CORPUS_SQL: (base, crops) grid frames."""
-    return _crop_corpus_from(_img_quant_base(spark, sf_dir))
+    return _crop_corpus_from(_img_grid(spark, sf_dir))
 
 
 def _crop_corpus_from(img: DataFrame):
@@ -602,7 +604,7 @@ def q_image_cropped_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     reports each pair once with the recovered (dr, dc) offset and zero
     residual. Variable-size grids ride a (w, h, px) schema — the shape
     a thumbnail-normalized crawl corpus actually has."""
-    return _image_cropped_pairs_from(_img_quant_base(spark, sf_dir))
+    return _image_cropped_pairs_from(_img_grid(spark, sf_dir))
 
 
 def _image_cropped_pairs_from(img: DataFrame) -> DataFrame:
@@ -724,7 +726,7 @@ def q_image_thumbnail_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator docstring states the boundary: interpolating or
     round-half-up resamplers land ±1–2 per pixel away and are outside
     this tier's exact claim."""
-    return _image_thumbnail_pairs_from(_img_quant_base(spark, sf_dir))
+    return _image_thumbnail_pairs_from(_img_grid(spark, sf_dir))
 
 
 def _image_thumbnail_pairs_from(img: DataFrame) -> DataFrame:
@@ -871,51 +873,24 @@ _IMG_INCR_DEDUP_ORACLE = f"""
     """
 
 
-def _img_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The at-rest image corpus: embeddings quantized to 8×8 gray pixel
-    arrays (media_id, px) — shared by the whole image-dedup family."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    return emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-
 def _img_probe_batch(hist: DataFrame) -> DataFrame:
     """The incoming batch: perturbed copies of every
     ``_DHASH_TWIN_EVERY``-th image pushed through the REAL PNG
     encode → decode round trip (like any new crawl item), fingerprinted
     with dHash. O(batch) codec work — the only per-item cost the probe
     path pays."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.multimodal import decode_image, encode_png
 
-    side = _IMG_SIDE
-    batch_px = hist.filter(F.col("media_id") % _DHASH_TWIN_EVERY == 0).select(
-        (F.col("media_id") + _DHASH_TWIN_OFFSET).alias("media_id"),
-        F.expr(
-            "transform(px, (x, i) -> IF(i % 16 = 0, least(x + 3, 255), x))"
-        ).alias("px"),
-    )
-
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for p in pdf["px"]:
-                img = np.asarray(list(p), dtype=np.uint8).reshape(side, side)
-                dec = decode_image(encode_png(img))
-                out.append([int(v) for v in dec.reshape(-1)])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
-
-    return batch_px.mapInPandas(
-        roundtrip, schema="media_id bigint, px array<int>"
-    ).select("media_id", D.image_dhash("px", side).alias("dhash"))
+    return _roundtrip(
+        _dhash_twins(hist), "px", "uint8",
+        lambda a: decode_image(encode_png(a.reshape(_IMG_SIDE, _IMG_SIDE))),
+    ).select("media_id", D.image_dhash("px", _IMG_SIDE).alias("dhash"))
 
 
 def _img_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dHash segment index over the at-rest corpus (hamming_index
     rows) — what a deployment persists partitioned by (seg, seg_val)."""
-    hist_hashed = _img_hist(spark, sf_dir).select(
+    hist_hashed = _img_grid(spark, sf_dir).select(
         "media_id", D.image_dhash("px", _IMG_SIDE).alias("dhash")
     )
     return D.hamming_index(
@@ -945,7 +920,7 @@ def q_incremental_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-paired; the index build itself is hashed separately as
     ``media_dhash_index``."""
     index = _img_index_df(spark, sf_dir)
-    batch = _img_probe_batch(_img_hist(spark, sf_dir))
+    batch = _img_probe_batch(_img_grid(spark, sf_dir))
     return D.incremental_hamming_dedup(
         batch, index, "dhash", _DHASH_MAX_HAMMING,
         n_bits=_IMG_SIDE * (_IMG_SIDE - 1),
@@ -1052,7 +1027,7 @@ def q_incremental_image_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     index = (
         spark.read.parquet(path) if path else _img_index_df(spark, sf_dir)
     )
-    batch = _img_probe_batch(_img_hist(spark, sf_dir))
+    batch = _img_probe_batch(_img_grid(spark, sf_dir))
     return D.incremental_hamming_dedup(
         batch, index, "dhash", _DHASH_MAX_HAMMING,
         n_bits=_IMG_SIDE * (_IMG_SIDE - 1),
@@ -1061,17 +1036,7 @@ def q_incremental_image_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "decoded_jpeg_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_JPEG_OUT} AS out_w, {_JPEG_OUT} AS out_h,
-           ({' + '.join(f'px[{i}]' for i in _JPEG_KEEP_1BASED)}) AS px_sum,
-           CAST(({' + '.join(f'px[{i}]' for i in _JPEG_KEEP_1BASED)}) AS DOUBLE)
-             / {_JPEG_OUT * _JPEG_OUT}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
+    oracle=_codec_stats_oracle(_JPEG_OUT, _JPEG_KEEP_1BASED),
 )
 def q_decoded_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-JPEG sibling of `decoded_image_stats`: embedding dims 1–4
@@ -1088,75 +1053,19 @@ def q_decoded_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Huffman tables, bitstream, DC prediction, restart handling, or IDCT
     shifts a constant and breaks the hash. MAP-ONLY before the sort."""
     import numpy as np
-    import pandas as pd
 
     from network_iq_spark.operators.jpeg import encode_jpeg_gray
-    from network_iq_spark.operators.multimodal import decode_image
 
-    side = _JPEG_BLOCKS * 8
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
+    return _image_codec_stats(
+        spark, sf_dir, _JPEG_BLOCKS * 8, _JPEG_OUT,
+        lambda mid, a: encode_jpeg_gray(
+            np.kron(
+                a.reshape(_JPEG_BLOCKS, _JPEG_BLOCKS), np.ones((8, 8), np.uint8)
+            ),
+            restart_interval=2,
+        ),
+        dims=_JPEG_BLOCKS * _JPEG_BLOCKS,
     )
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-
-    def build(it):
-        ones = np.ones((8, 8), dtype=np.uint8)
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        encode_jpeg_gray(
-                            np.kron(
-                                np.asarray(list(p), dtype=np.uint8).reshape(
-                                    _JPEG_BLOCKS, _JPEG_BLOCKS
-                                ),
-                                ones,
-                            ),
-                            restart_interval=2,
-                        )
-                        for p in pdf["px"]
-                    ],
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _JPEG_OUT, _JPEG_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_JPEG_OUT * _JPEG_OUT) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
 
 
 _J420_MCUS = 2  # 2x2 grid of constant 16x16 MCUs -> 32x32 color image
@@ -1164,22 +1073,26 @@ _J420_OUT = 2
 # survivors for 32 -> 2: floor((i+0.5)*32/2) -> rows/cols {8, 24}; pixel
 # (8,8) lands in MCU (0,0), (8,24) in (0,1), ... — the resample picks the
 # 4 MCU luma constants, and with neutral chroma R=G=B=Y so each counts 3×
+# (GIF keeps the same 2×2 grid of constant 16×16 tiles and decodes to RGB)
+_J420_ORACLE = _codec_stats_oracle(_J420_OUT, [1, 2, 3, 4], channels=3)
 
 
-@register(
-    "decoded_jpeg420_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+def _mcu_encoder(encode_ycc):
+    """``encode(media_id, a)`` for the 4:2:0 JPEG fixtures: the 4 values
+    of ``a`` become the luma constants of a 2×2 grid of 16×16 MCUs with
+    chroma held at neutral 128, encoded by ``encode_ycc`` (an
+    operators/jpeg.py encoder) with restart markers every 2 MCUs."""
+    import numpy as np
+
+    def encode(mid, a):
+        y = np.kron(a.reshape(_J420_MCUS, _J420_MCUS), np.ones((16, 16), np.uint8))
+        ycc = np.stack([y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1)
+        return encode_ycc(ycc, restart_interval=2)
+
+    return encode
+
+
+@register("decoded_jpeg420_stats", oracle=_J420_ORACLE)
 def q_decoded_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:0 chroma-subsampled JPEG — the dominant format of real crawled
     corpora (VERDICT r7 top-next; previously these files fell to the
@@ -1200,97 +1113,16 @@ def q_decoded_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling-factor parse, MCU block order, chroma upsample, restart
     handling, or color transform shifts a value and breaks the hash.
     MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.jpeg import encode_jpeg_ycbcr
-    from network_iq_spark.operators.multimodal import decode_image
 
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
+    return _image_codec_stats(
+        spark, sf_dir, _J420_MCUS * 16, _J420_OUT,
+        _mcu_encoder(encode_jpeg_ycbcr),
+        dims=_J420_MCUS * _J420_MCUS, spread=True, channels=3,
     )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for p in pdf["px"]:
-                y = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                ycc = np.stack(
-                    [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                )
-                payloads.append(encode_jpeg_ycbcr(ycc, restart_interval=2))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
 
 
-@register(
-    "decoded_jpeg_prog_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_jpeg_prog_stats", oracle=_J420_ORACLE)
 def q_decoded_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) 4:2:0 JPEG decode at scale — the multi-scan
     half of the real-corpus format pair (VERDICT r7 item 1's remaining
@@ -1306,97 +1138,16 @@ def q_decoded_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle as the baseline-420 twin hash-replays it: any defect
     in scan sequencing, refinement bit order, or EOB-run accounting
     shifts a pixel and breaks the hash. MAP-ONLY before the sort."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.jpeg import encode_jpeg_progressive
-    from network_iq_spark.operators.multimodal import decode_image
 
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
+    return _image_codec_stats(
+        spark, sf_dir, _J420_MCUS * 16, _J420_OUT,
+        _mcu_encoder(encode_jpeg_progressive),
+        dims=_J420_MCUS * _J420_MCUS, spread=True, channels=3,
     )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for p in pdf["px"]:
-                y = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                ycc = np.stack(
-                    [y, np.full_like(y, 128), np.full_like(y, 128)], axis=-1
-                )
-                payloads.append(encode_jpeg_progressive(ycc, restart_interval=2))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
 
 
-@register(
-    "decoded_gif_stats",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    )
-    SELECT media_id,
-           {_J420_OUT} AS out_w, {_J420_OUT} AS out_h,
-           3 * (px[1] + px[2] + px[3] + px[4]) AS px_sum,
-           CAST(3 * (px[1] + px[2] + px[3] + px[4]) AS DOUBLE)
-             / {_J420_OUT * _J420_OUT * 3}.0 AS px_mean
-    FROM q ORDER BY media_id
-    """,
-)
+@register("decoded_gif_stats", oracle=_J420_ORACLE)
 def q_decoded_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF (LZW) decode at scale — the third real crawl format after
     PNG and JPEG. Embedding dims 1–4 become a 2×2 grid of constant 16×16
@@ -1410,77 +1161,17 @@ def q_decoded_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette indexing, or interlace reordering shifts a value and breaks
     the hash. MAP-ONLY before the sort."""
     import numpy as np
-    import pandas as pd
 
     from network_iq_spark.operators.gif import encode_gif
-    from network_iq_spark.operators.multimodal import decode_image
 
-    side = _J420_MCUS * 16
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
+    return _image_codec_stats(
+        spark, sf_dir, _J420_MCUS * 16, _J420_OUT,
+        lambda mid, a: encode_gif(
+            np.kron(a.reshape(_J420_MCUS, _J420_MCUS), np.ones((16, 16), np.uint8)),
+            interlace=bool(int(mid) % 2),
+        ),
+        dims=_J420_MCUS * _J420_MCUS, spread=True, channels=3,
     )
-    src = ensure_parallelism(
-        emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
-    )  # heavy codec stage (>=1 ms/row): spreading beats the exchange
-    # (A/B-measured r12; light decoders keep the scan partitioning).
-    # Identity at real scale (ensure_parallelism docstring).
-
-    def build(it):
-        ones = np.ones((16, 16), dtype=np.uint8)
-        for pdf in it:
-            payloads = []
-            for vid, p in zip(pdf["media_id"], pdf["px"]):
-                g = np.kron(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _J420_MCUS, _J420_MCUS
-                    ),
-                    ones,
-                )
-                payloads.append(encode_gif(g, interlace=bool(int(vid) % 2)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": payloads,
-                    "media_type": "image",
-                    "width": np.int32(side),
-                    "height": np.int32(side),
-                    "duration_ms": pd.array([None] * len(pdf), dtype="Int32"),
-                }
-            )
-
-    media = src.mapInPandas(
-        build,
-        schema="media_id bigint, payload binary, media_type string, "
-        "width int, height int, duration_ms int",
-    )
-    resized = M.resize_media(media, _J420_OUT, _J420_OUT)
-
-    def stats(it):
-        for pdf in it:
-            out_w, out_h, sums = [], [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                out_h.append(img.shape[0])
-                out_w.append(img.shape[1])
-                sums.append(int(img.sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "out_w": pd.array(out_w, dtype="int32"),
-                    "out_h": pd.array(out_h, dtype="int32"),
-                    "px_sum": pd.array(sums, dtype="int64"),
-                    "px_mean": [s / (_J420_OUT * _J420_OUT * 3) for s in sums],
-                }
-            )
-
-    return resized.mapInPandas(
-        stats,
-        schema="media_id bigint, out_w int, out_h int, px_sum bigint, "
-        "px_mean double",
-    ).orderBy("media_id")
 
 
 @register(
@@ -1512,9 +1203,9 @@ def q_media_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r7 item 2): which declared formats REALLY decode vs silently
     fall back to the metadata-only path, as a shipped per-format number
     (the media twin of contract_quarantine_summary; same governance move
-    as lsh_quality_report). The corpus is a deterministic six-way format
-    mix built from embeddings (vec_id % 7): a real PNG, a baseline 4:4:4
-    JPEG, a 4:2:0 chroma-subsampled JPEG, a real PROGRESSIVE 4:2:0 JPEG
+    as lsh_quality_report). The corpus is a deterministic seven-way format
+    mix built from embeddings (vec_id % 7): a real PNG, a baseline
+    grayscale JPEG, a 4:2:0 chroma-subsampled JPEG, a real PROGRESSIVE 4:2:0 JPEG
     (SOF2 multi-scan — the census row that flipped from fallback to
     decoded when the Annex-G decoder landed, which is exactly the
     coverage movement this query exists to publish), a PNM, a row
@@ -1542,13 +1233,7 @@ def q_media_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_decode_contract,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(slice(embedding, 1, 4), x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    src = _img_grid(spark, sf_dir, 4)
 
     def build(it):
         ones8 = np.ones((8, 8), dtype=np.uint8)
@@ -1604,6 +1289,11 @@ _WAV_QUANT_SQL = (
     "list_transform(embedding::DOUBLE[], x -> CAST(floor("
     "(least(greatest(x, -1.0), 1.0)) * 32767.0 + 0.5) AS INT))"
 )
+# Spark twin of _WAV_QUANT_SQL: int16 PCM samples, one per embedding dim
+_WAV_QUANT_EXPR_SQL = (
+    "transform(embedding, x -> cast(floor((least(greatest("
+    "cast(x as double), -1.0D), 1.0D)) * 32767.0D + 0.5D) as int))"
+)
 
 
 @register(
@@ -1658,12 +1348,7 @@ def q_decoded_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(embedding, x -> cast(floor((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) * 32767.0D + 0.5D) as int))"
-    )
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("s"))
+    src = _emb_select(spark, sf_dir, _WAV_QUANT_EXPR_SQL, "s")
 
     def build(it):
         for pdf in it:
@@ -1776,17 +1461,9 @@ def q_audio_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays fingerprint/bands/verify from the quantized values
     directly — the decoder is bit-exact, so a defect anywhere in the
     RIFF walk or the hash surfaces as a mismatch."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.audio import decode_wav, encode_wav
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(
-        "transform(embedding, x -> cast(floor((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) * 32767.0D + 0.5D) as int))"
-    )
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("s"))
+    src = _emb_select(spark, sf_dir, _WAV_QUANT_EXPR_SQL, "s")
     twin = src.filter(F.col("media_id") % _WHASH_TWIN_EVERY == 0).select(
         (F.col("media_id") + _WHASH_TWIN_OFFSET).alias("media_id"),
         F.expr(
@@ -1794,19 +1471,10 @@ def q_audio_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "least(x + 300, 32767), x))"
         ).alias("s"),
     )
-    clips = src.unionByName(twin)
-
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for s in pdf["s"]:
-                _, dec = decode_wav(
-                    encode_wav(np.asarray(list(s), dtype=np.int16), _WAV_RATE)
-                )
-                out.append([int(v) for v in dec])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "s": out})
-
-    decoded = clips.mapInPandas(roundtrip, schema="media_id bigint, s array<int>")
+    decoded = _roundtrip(
+        src.unionByName(twin), "s", "int16",
+        lambda a: decode_wav(encode_wav(a, _WAV_RATE))[1],
+    )
     return D.audio_near_dup_pairs(
         decoded, max_hamming=_WHASH_MAX_HAMMING
     ).orderBy("id_a", "id_b")
@@ -1854,10 +1522,7 @@ def _aud_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, s) — the embedding-seeded 64-sample walks every audio
     tier derives its clips from; ONE Spark-side definition (the
     _crop_corpus desync rule, extended to audio in r14)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        F.col("vec_id").alias("media_id"), F.expr(_AUD_WALK_EXPR).alias("s")
-    )
+    return _emb_select(spark, sf_dir, _AUD_WALK_EXPR, "s")
 
 
 def _rsmp_twins(src: DataFrame) -> DataFrame:
@@ -1903,16 +1568,6 @@ def _tg_twins(src: DataFrame) -> DataFrame:
             f"64 - ({head_sql}) - ({tail_sql})), "
             f"x -> ({a_sql}) * x + ({b_sql}))"
         ).alias("s"),
-    )
-
-
-def _vid_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(media_id, px) — the quantized flat pixel grids every video tier
-    derives its clips from."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        F.col("vec_id").alias("media_id"),
-        F.expr(_IMG_QUANT_EXPR_SQL).alias("px"),
     )
 
 
@@ -2052,34 +1707,19 @@ def q_audio_shifted_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     given the data (fixed hash family), so DuckDB replays the identical
     candidate set and the external gate now covers banding, Jaccard
     threshold, and verify end to end."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.audio import decode_wav, encode_wav
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    src = emb.select(
-        F.col("vec_id").alias("media_id"), F.expr(_AUD_WALK_EXPR).alias("s")
-    )
+    src = _aud_walks(spark, sf_dir)
     twin = src.filter(F.col("media_id") % _WHASH_TWIN_EVERY == 0).select(
         (F.col("media_id") + _WHASH_TWIN_OFFSET).alias("media_id"),
         F.expr(
             "transform(sequence(0, 63), i -> IF(i < 63, s[i + 1], s[63]))"
         ).alias("s"),
     )
-    clips = src.unionByName(twin)
-
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for s in pdf["s"]:
-                _, dec = decode_wav(
-                    encode_wav(np.asarray(list(s), dtype=np.int16), _WAV_RATE)
-                )
-                out.append([int(v) for v in dec])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "s": out})
-
-    decoded = clips.mapInPandas(roundtrip, schema="media_id bigint, s array<int>")
+    decoded = _roundtrip(
+        src.unionByName(twin), "s", "int16",
+        lambda a: decode_wav(encode_wav(a, _WAV_RATE))[1],
+    )
     # env_hamming (the gain-invariant envelope feature) stays an operator
     # extra: the sheet projection carries the oracle-replayable columns
     return D.audio_shifted_pairs(
@@ -2135,9 +1775,7 @@ def q_decoded_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from network_iq_spark.operators.multimodal import decode_image
     from network_iq_spark.operators.video import encode_y4m
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    src = _img_grid(spark, sf_dir)
     dur = _VID_FRAMES * 1000 // _VID_FPS
 
     def build(it):
@@ -2257,40 +1895,24 @@ def q_video_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming_blocked_pairs. The oracle replays everything from the
     quantized values — the Y4M decoder is bit-exact, so a defect in the
     header/FRAME walk or the hash surfaces as a mismatch."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.video import decode_y4m, encode_y4m
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    src = _img_grid(spark, sf_dir)
     twin = src.filter(F.col("media_id") % _VHASH_TWIN_EVERY == 0).select(
         (F.col("media_id") + _VHASH_TWIN_OFFSET).alias("media_id"),
         F.expr(
             "transform(px, (x, i) -> IF(i % 16 = 0, least(x + 3, 255), x))"
         ).alias("px"),
     )
-    clips = src.unionByName(twin)
-
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for p in pdf["px"]:
-                frames = list(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _VID_FRAMES, _VID_SIDE, _VID_SIDE
-                    )
-                )
-                _w, _h, _fps, dec = decode_y4m(
-                    encode_y4m(frames, fps=(_VID_FPS, 1))
-                )
-                out.append(
-                    [int(v) for f in dec for v in np.asarray(f).reshape(-1)]
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
-
-    decoded = clips.mapInPandas(roundtrip, schema="media_id bigint, px array<int>")
+    decoded = _roundtrip(
+        src.unionByName(twin), "px", "uint8",
+        lambda a: decode_y4m(
+            encode_y4m(
+                list(a.reshape(_VID_FRAMES, _VID_SIDE, _VID_SIDE)),
+                fps=(_VID_FPS, 1),
+            )
+        )[3],
+    )
     return D.video_near_dup_pairs(
         decoded,
         max_hamming=_VHASH_MAX_HAMMING,
@@ -2377,14 +1999,9 @@ def q_video_frame_shifted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve (~0.94) but DETERMINISTIC given the data, so DuckDB replays
     the identical candidate set — the external gate covers the whole
     pipeline."""
-    import numpy as np
-    import pandas as pd
-
     from network_iq_spark.operators.video import decode_y4m, encode_y4m
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    quant = F.expr(_IMG_QUANT_EXPR_SQL)
-    src = emb.select(F.col("vec_id").alias("media_id"), quant.alias("px"))
+    src = _img_grid(spark, sf_dir)
     fsz = _VID_SIDE * _VID_SIDE
     n = _VID_FRAMES * fsz
     # 1-frame shift: drop the first frame, repeat the last
@@ -2395,26 +2012,15 @@ def q_video_frame_shifted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"IF(i < {n - fsz}, px[i + {fsz}], px[i]))"
         ).alias("px"),
     )
-    clips = src.unionByName(twin)
-
-    def roundtrip(it):
-        for pdf in it:
-            out = []
-            for p in pdf["px"]:
-                frames = list(
-                    np.asarray(list(p), dtype=np.uint8).reshape(
-                        _VID_FRAMES, _VID_SIDE, _VID_SIDE
-                    )
-                )
-                _w, _h, _fps, dec = decode_y4m(
-                    encode_y4m(frames, fps=(_VID_FPS, 1))
-                )
-                out.append(
-                    [int(v) for f in dec for v in np.asarray(f).reshape(-1)]
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
-
-    decoded = clips.mapInPandas(roundtrip, schema="media_id bigint, px array<int>")
+    decoded = _roundtrip(
+        src.unionByName(twin), "px", "uint8",
+        lambda a: decode_y4m(
+            encode_y4m(
+                list(a.reshape(_VID_FRAMES, _VID_SIDE, _VID_SIDE)),
+                fps=(_VID_FPS, 1),
+            )
+        )[3],
+    )
     return D.video_frame_shifted_pairs(
         decoded, frames=_VID_FRAMES, side=_VID_SIDE, max_lag=1, ssd_tol=0
     ).orderBy("id_a", "id_b")
@@ -2569,7 +2175,7 @@ def q_image_rotated_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ∝ duplicates. Every 10th image gets a planted twin cycling through
     all 7 non-identity transforms (3 rotations + 4 reflections);
     integer-exact end to end, oracle-replayable."""
-    return _image_rotated_dedup_from(_img_quant_base(spark, sf_dir))
+    return _image_rotated_dedup_from(_img_grid(spark, sf_dir))
 
 
 def _image_rotated_dedup_from(img: DataFrame) -> DataFrame:
@@ -2831,7 +2437,7 @@ def q_video_cropped_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     diverge is rejected exactly. Output (id_a, id_b, dr, dc, ssd = 0);
     DuckDB replays tokens, candidates, and the multi-frame verify end
     to end."""
-    return _video_cropped_pairs_from(_vid_base(spark, sf_dir))
+    return _video_cropped_pairs_from(_img_grid(spark, sf_dir))
 
 
 def _video_cropped_pairs_from(vbase: DataFrame) -> DataFrame:
@@ -2905,7 +2511,7 @@ def q_video_resampled_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFr
     the truncating division is engine-trivial), fully
     oracle-replayable. One generic core covers both scale-axis media
     cells; stride = 1 IS the audio tier, byte-identical."""
-    return _video_resampled_pairs_from(_vid_base(spark, sf_dir))
+    return _video_resampled_pairs_from(_img_grid(spark, sf_dir))
 
 
 def _video_resampled_pairs_from(base: DataFrame) -> DataFrame:
@@ -3310,7 +2916,7 @@ def q_video_trimmed_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     recall 1.0 by construction, integer-exact, fully oracle-replayable.
     stride = 1 IS the audio tier, byte-identical (the
     resampled_derivative_pairs contract)."""
-    return _video_trimmed_pairs_from(_vid_base(spark, sf_dir))
+    return _video_trimmed_pairs_from(_img_grid(spark, sf_dir))
 
 
 def _video_trimmed_pairs_from(base: DataFrame) -> DataFrame:
@@ -3519,13 +3125,13 @@ def q_transform_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_planted_links"),
         ).select(F.lit(axis).alias("axis"), "n_pairs", "n_planted_links")
 
-    # one shared source per modality, CHECKPOINTED — materialize-decode-
+    # one shared source per corpus, CHECKPOINTED — materialize-decode-
     # once; full rationale on _image_transform_edges_inplan (planned
-    # once per modality instead of once per arm, decoded once at
-    # execution, registered arm queries untouched)
+    # once per corpus instead of once per arm, decoded once at
+    # execution, registered arm queries untouched). The image and video
+    # arms read the same quantized grid, so they share one checkpoint.
     aud = _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
-    img = _img_quant_base(spark, sf_dir).localCheckpoint(eager=False)
-    vid = _vid_base(spark, sf_dir).localCheckpoint(eager=False)
+    grid = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     # the eight arm subtrees are built concurrently (_pbuild — plan
     # construction is the census's measured bottleneck); the union below
     # consumes them in the same fixed order as the former serial build
@@ -3540,27 +3146,27 @@ def q_transform_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "audio_trim", "full_id", "trimmed_id", _TRIM_TWIN_OFFSET,
         ),
         lambda: arm(
-            _image_cropped_pairs_from(img),
+            _image_cropped_pairs_from(grid),
             "crop", "id_a", "id_b", _CROP_TWIN_OFFSET,
         ),
         lambda: arm(
-            _image_rotated_dedup_from(img),
+            _image_rotated_dedup_from(grid),
             "rotation", "keep_id", "dup_id", _ROT_TWIN_OFFSET,
         ),
         lambda: arm(
-            _image_thumbnail_pairs_from(img),
+            _image_thumbnail_pairs_from(grid),
             "scale", "full_id", "thumb_id", _THUMB_TWIN_OFFSET,
         ),
         lambda: arm(
-            _video_cropped_pairs_from(vid),
+            _video_cropped_pairs_from(grid),
             "video_crop", "id_a", "id_b", _VCROP_TWIN_OFFSET,
         ),
         lambda: arm(
-            _video_resampled_pairs_from(vid),
+            _video_resampled_pairs_from(grid),
             "video_resample", "full_id", "resampled_id", _VRSMP_TWIN_OFFSET,
         ),
         lambda: arm(
-            _video_trimmed_pairs_from(vid),
+            _video_trimmed_pairs_from(grid),
             "video_trim", "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET,
         ),
     )
@@ -3688,7 +3294,7 @@ def _image_transform_edges_inplan(spark: SparkSession, sf_dir: str) -> DataFrame
     # arm queries are untouched — they keep deriving from the raw scan
     # (their stamped plans must not move).
     return _image_transform_edges_from(
-        _img_quant_base(spark, sf_dir).localCheckpoint(eager=False)
+        _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     )
 
 
@@ -3769,7 +3375,7 @@ def _audio_transform_edges_from(src: DataFrame) -> DataFrame:
 def _video_transform_edges_inplan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize-decode-once (see _image_transform_edges_inplan)
     return _video_transform_edges_from(
-        _vid_base(spark, sf_dir).localCheckpoint(eager=False)
+        _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     )
 
 
@@ -4144,7 +3750,7 @@ def q_image_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one shared quantized-grid frame feeds the edge arms AND the member
     # corpus (the census build-once rationale), checkpointed so it is
     # planned once and decoded once (materialize-decode-once)
-    img = _img_quant_base(spark, sf_dir).localCheckpoint(eager=False)
+    img = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     e = _transform_edges(
         spark, sf_dir, "image", lambda sp, sd: _image_transform_edges_from(img)
     )
@@ -4320,7 +3926,7 @@ def q_video_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer, exact cross-engine, members from the arms' own plant
     texts."""
     # checkpointed shared source (materialize-decode-once)
-    base = _vid_base(spark, sf_dir).localCheckpoint(eager=False)
+    base = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     return _keep_best_from_edges(
         _transform_edges(
             spark, sf_dir, "video",
@@ -4527,7 +4133,7 @@ def q_video_landmark_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere.
     Output (id_a, id_b, offset, votes, corr2) with offset in pixels
     (frame index × 16)."""
-    base = _vid_base(spark, sf_dir)
+    base = _img_grid(spark, sf_dir)
     clips = base.unionByName(_vlm_twins(base))
     return D.landmark_sequence_pairs(
         clips, s_col="px", max_bucket_size=256

@@ -129,6 +129,28 @@ def test_no_unpartitioned_window_over_fact(spark, name):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
 
 
+@pytest.mark.parametrize(
+    "name, round_robin",
+    [
+        ("decoded_image_stats", 1),
+        ("decoded_png_stats", 1),
+        ("decoded_jpeg_stats", 1),
+        ("decoded_jpeg420_stats", 2),
+        ("decoded_jpeg_prog_stats", 2),
+        ("decoded_gif_stats", 2),
+    ],
+)
+def test_codec_stats_plan_shape(spark, name, round_robin):
+    """The image codec-stats family is map-only apart from the final sort:
+    one range exchange for the ORDER BY, the resize stage's spread, and
+    for the heavy codecs (4:2:0 / progressive JPEG, GIF) one more spread
+    before the encode. Any other exchange is a new shuffle."""
+    plan = _plan(spark, name)
+    assert plan.count("Exchange rangepartitioning") == 1
+    assert plan.count("Exchange RoundRobinPartitioning") == round_robin
+    assert plan.count("Exchange") == 1 + round_robin
+
+
 def test_deterministic_sample_is_pure_map(spark):
     """Hash sampling must add ZERO exchanges — it's a filter, so the scan's
     parallelism carries through untouched at any scale."""

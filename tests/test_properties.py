@@ -175,10 +175,12 @@ def test_chunk_dedup_conserves_tokens_and_first_doc_intact(spark, texts):
 def test_aggregates_partition_invariant_under_shuffle_width(spark):
     """The cross-engine determinism contract implies PARTITION invariance:
     the same query must produce bit-identical rows whether the shuffle
-    fans out over 32 partitions or 5 (different partial-agg groupings,
-    different merge orders). This is the property the integer-unit dsum
-    discipline exists to buy — asserted here on a cross-section of the
-    aggregate/window/text families."""
+    fans out over 32 partitions, 5, or 1 (different partial-agg groupings,
+    different merge orders, different fixpoint round layouts). This is the
+    property the integer-unit dsum discipline exists to buy — asserted
+    here on a cross-section of the aggregate/window/text families, plus
+    connected components over a codec round trip (image_dedup_clusters),
+    the MinHash/SimHash pair tiers and top-k."""
     from network_iq_spark.registry import QUERIES
 
     names = [
@@ -188,24 +190,26 @@ def test_aggregates_partition_invariant_under_shuffle_width(spark):
         "rolling_features",
         "tfidf_top_terms",
         "grouping_sets_revenue",
+        "image_dedup_clusters",
+        "minhash_lsh_pairs",
+        "simhash_pairs",
+        "cosine_topk",
+        "top_revenue_customers",
     ]
     sf = "/root/testdata/sf0.001"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    rows = {}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        wide = {
-            n: sorted(tuple(r) for r in QUERIES[n](spark, sf).collect())
-            for n in names
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", "5")
-        narrow = {
-            n: sorted(tuple(r) for r in QUERIES[n](spark, sf).collect())
-            for n in names
-        }
+        for width in ("32", "5", "1"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            rows[width] = {
+                n: sorted(tuple(r) for r in QUERIES[n](spark, sf).collect())
+                for n in names
+            }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     for n in names:
-        assert wide[n] == narrow[n], n
+        assert rows["32"][n] == rows["5"][n] == rows["1"][n], n
 
 
 @given(
