@@ -7,6 +7,9 @@ cross-modality census. Split out of llmdata.py in r10.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from functools import partial, reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3049,37 +3052,86 @@ def q_incremental_trim_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("new_id", "old_id", "role")
 
 
+class _Arm(NamedTuple):
+    """One transform arm of the media composites: its registered pair
+    query (whose oracle the composites' oracles compose), the (src, dst)
+    pair columns, the id offset of its planted twins, and the builder
+    that derives its pairs from the modality's shared source frame."""
+
+    modality: str
+    axis: str
+    query: str
+    src: str
+    dst: str
+    offset: int
+    pairs_from: Callable[[DataFrame], DataFrame]
+
+    @property
+    def label(self) -> str:
+        """Census axis label; the image arms kept their bare axis names."""
+        if self.modality == "image":
+            return self.axis
+        return f"{self.modality}_{self.axis}"
+
+
+# The one table of transform arms: the census, the resolutions, the
+# keep-bests, the manifest and all their oracles derive their arms from
+# it. Row order within a modality is the resolution edge-union order.
+_TRANSFORM_ARMS = (
+    _Arm("image", "crop", "image_cropped_near_dup_pairs",
+         "id_a", "id_b", _CROP_TWIN_OFFSET, _image_cropped_pairs_from),
+    _Arm("image", "scale", "image_thumbnail_pairs",
+         "full_id", "thumb_id", _THUMB_TWIN_OFFSET, _image_thumbnail_pairs_from),
+    _Arm("image", "rotation", "image_rotated_dedup",
+         "keep_id", "dup_id", _ROT_TWIN_OFFSET, _image_rotated_dedup_from),
+    _Arm("audio", "resample", "audio_resampled_near_dup_pairs",
+         "full_id", "resampled_id", _RSMP_TWIN_OFFSET, _audio_resampled_pairs_from),
+    _Arm("audio", "trim", "audio_trimmed_near_dup_pairs",
+         "full_id", "trimmed_id", _TRIM_TWIN_OFFSET, _audio_trimmed_pairs_from),
+    # the composed axis joins the resolution surface (r14 review): its
+    # planted duplicates are REAL duplicates a pipeline must resolve —
+    # excluding them would admit both the original and its trim∘gain
+    # re-encode. The census stays at the 8 pure-matrix cells and skips
+    # this row; composed axes live on the admission surface.
+    _Arm("audio", "trim_gain", "audio_trim_gain_pairs",
+         "full_id", "trimmed_id", _TG_TWIN_OFFSET, _audio_trim_gain_pairs_from),
+    _Arm("video", "crop", "video_cropped_near_dup_pairs",
+         "id_a", "id_b", _VCROP_TWIN_OFFSET, _video_cropped_pairs_from),
+    _Arm("video", "resample", "video_resampled_near_dup_pairs",
+         "full_id", "resampled_id", _VRSMP_TWIN_OFFSET, _video_resampled_pairs_from),
+    _Arm("video", "trim", "video_trimmed_near_dup_pairs",
+         "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET, _video_trimmed_pairs_from),
+)
+
+
+def _census_arms() -> list[_Arm]:
+    """The census's eight pure-matrix arms (every row but the composed
+    ``trim_gain``, see its row), in label order: the union order."""
+    return sorted(
+        (a for a in _TRANSFORM_ARMS if a.axis != "trim_gain"),
+        key=lambda a: a.label,
+    )
+
+
 def _transform_census_oracle() -> str:
-    """Composed from the three transform tiers' registered oracles (the
+    """Composed from the transform tiers' registered oracles (the
     registry is the single source of truth, so the census can never
     desync from the tiers it summarizes)."""
     from network_iq_spark.registry import ORACLES
 
-    def arm(axis: str, name: str, a: str, b: str, offset: int) -> str:
-        return f"""
-      SELECT '{axis}' AS axis,
+    arms = "\n      UNION ALL\n".join(
+        f"""
+      SELECT '{a.label}' AS axis,
              CAST(COUNT(*) AS BIGINT) AS n_pairs,
-             CAST(SUM(CASE WHEN {b} = {a} + {offset} OR {a} = {b} + {offset}
+             CAST(SUM(CASE WHEN {a.dst} = {a.src} + {a.offset}
+                             OR {a.src} = {a.dst} + {a.offset}
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_planted_links
-      FROM ({ORACLES[name]})"""
-
+      FROM ({ORACLES[a.query]})"""
+        for a in _census_arms()
+    )
     return f"""
     SELECT axis, n_pairs, n_planted_links FROM (
-      {arm("audio_resample", "audio_resampled_near_dup_pairs", "full_id", "resampled_id", _RSMP_TWIN_OFFSET)}
-      UNION ALL
-      {arm("audio_trim", "audio_trimmed_near_dup_pairs", "full_id", "trimmed_id", _TRIM_TWIN_OFFSET)}
-      UNION ALL
-      {arm("video_trim", "video_trimmed_near_dup_pairs", "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET)}
-      UNION ALL
-      {arm("crop", "image_cropped_near_dup_pairs", "id_a", "id_b", _CROP_TWIN_OFFSET)}
-      UNION ALL
-      {arm("rotation", "image_rotated_dedup", "keep_id", "dup_id", _ROT_TWIN_OFFSET)}
-      UNION ALL
-      {arm("scale", "image_thumbnail_pairs", "full_id", "thumb_id", _THUMB_TWIN_OFFSET)}
-      UNION ALL
-      {arm("video_crop", "video_cropped_near_dup_pairs", "id_a", "id_b", _VCROP_TWIN_OFFSET)}
-      UNION ALL
-      {arm("video_resample", "video_resampled_near_dup_pairs", "full_id", "resampled_id", _VRSMP_TWIN_OFFSET)}
+      {arms}
     ) ORDER BY axis
     """
 
@@ -3108,97 +3160,53 @@ def q_transform_dedup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation + joins). A 100 TB deployment materializes the decoded/
     quantized media table ONCE and feeds all arms from it — the
     registered census intentionally trades the cheap re-scan for
-    composing the seven registered oracles verbatim, which is what
+    composing the eight registered oracles verbatim, which is what
     keeps one hash over the whole surface trustworthy."""
 
-    def arm(df: DataFrame, axis: str, a: str, b: str, offset: int) -> DataFrame:
-        return df.agg(
+    def arm(a: _Arm) -> DataFrame:
+        return a.pairs_from(srcs[a.modality]).agg(
             F.count("*").cast("bigint").alias("n_pairs"),
             F.sum(
                 F.when(
-                    (F.col(b) == F.col(a) + offset)
-                    | (F.col(a) == F.col(b) + offset),
+                    (F.col(a.dst) == F.col(a.src) + a.offset)
+                    | (F.col(a.src) == F.col(a.dst) + a.offset),
                     1,
                 ).otherwise(0)
             )
             .cast("bigint")
             .alias("n_planted_links"),
-        ).select(F.lit(axis).alias("axis"), "n_pairs", "n_planted_links")
+        ).select(F.lit(a.label).alias("axis"), "n_pairs", "n_planted_links")
 
     # one shared source per corpus, CHECKPOINTED — materialize-decode-
-    # once; full rationale on _image_transform_edges_inplan (planned
-    # once per corpus instead of once per arm, decoded once at
-    # execution, registered arm queries untouched). The image and video
+    # once; full rationale on _transform_edges_from. The image and video
     # arms read the same quantized grid, so they share one checkpoint.
     aud = _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
     grid = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
+    srcs = {"audio": aud, "image": grid, "video": grid}
     # the eight arm subtrees are built concurrently (_pbuild — plan
-    # construction is the census's measured bottleneck); the union below
-    # consumes them in the same fixed order as the former serial build
-    resample, trim, crop, rot, scale, vcrop, vresample, vtrim = _pbuild(
-        spark,
-        lambda: arm(
-            _audio_resampled_pairs_from(aud),
-            "audio_resample", "full_id", "resampled_id", _RSMP_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _audio_trimmed_pairs_from(aud),
-            "audio_trim", "full_id", "trimmed_id", _TRIM_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _image_cropped_pairs_from(grid),
-            "crop", "id_a", "id_b", _CROP_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _image_rotated_dedup_from(grid),
-            "rotation", "keep_id", "dup_id", _ROT_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _image_thumbnail_pairs_from(grid),
-            "scale", "full_id", "thumb_id", _THUMB_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _video_cropped_pairs_from(grid),
-            "video_crop", "id_a", "id_b", _VCROP_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _video_resampled_pairs_from(grid),
-            "video_resample", "full_id", "resampled_id", _VRSMP_TWIN_OFFSET,
-        ),
-        lambda: arm(
-            _video_trimmed_pairs_from(grid),
-            "video_trim", "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET,
-        ),
-    )
-    return (
-        resample.unionByName(trim)
-        .unionByName(crop)
-        .unionByName(rot)
-        .unionByName(scale)
-        .unionByName(vcrop)
-        .unionByName(vresample)
-        .unionByName(vtrim)
-        .orderBy("axis")
-    )
+    # construction is the census's measured bottleneck); the union
+    # consumes them in label order
+    parts = _pbuild(spark, *(partial(arm, a) for a in _census_arms()))
+    return reduce(DataFrame.unionByName, parts).orderBy("axis")
 
 
-def _resolution_oracle(arms: list[tuple[str, str, str, str]]) -> str:
-    """Cross-axis resolution oracle, composed from the named arm oracles
-    via the registry (the census discipline) + the dedup_clusters walk
-    CTE: edge union → min-label connected components → per-cluster
-    resolution stats. ``arms`` = (registered query name, src column,
-    dst column, axis label) — one generic builder serves the image,
-    audio and video resolutions so the three can never disagree on the
-    closure semantics (r14, VERDICT item 2)."""
+def _closure_ctes(modality: str) -> str:
+    """The CTE chain the resolution and keep-best oracles share: edges
+    from the modality's registered arm oracles via the registry (the
+    census discipline) → the dedup_clusters walk → min-label clusters →
+    per-cluster member count (``stats``) and distinct contributing axes
+    (``axes``). One builder serves both families of all three
+    modalities, so they can never disagree on the closure semantics
+    (r14, VERDICT item 2)."""
     from network_iq_spark.registry import ORACLES
 
     edge_sql = "\n      UNION ALL\n".join(
-        f"      SELECT {src} AS src, {dst} AS dst, '{axis}' AS axis\n"
-        f"      FROM ({ORACLES[name]})"
-        for name, src, dst, axis in arms
+        f"      SELECT {a.src} AS src, {a.dst} AS dst, '{a.axis}' AS axis\n"
+        f"      FROM ({ORACLES[a.query]})"
+        for a in _TRANSFORM_ARMS
+        if a.modality == modality
     )
-    return f"""
-    WITH RECURSIVE edges AS (
+    return f"""edges AS (
 {edge_sql}
     ),
     sym AS (
@@ -3221,7 +3229,15 @@ def _resolution_oracle(arms: list[tuple[str, str, str, str]]) -> str:
       SELECT c.cluster_id, CAST(COUNT(DISTINCT e.axis) AS INT) AS n_axes
       FROM edges e JOIN clusters c ON c.v = e.src
       GROUP BY c.cluster_id
-    )
+    )"""
+
+
+def _resolution_oracle(modality: str) -> str:
+    """Cross-axis resolution oracle: the shared closure
+    (``_closure_ctes``: edge union → min-label connected components)
+    reported as per-cluster resolution stats."""
+    return f"""
+    WITH RECURSIVE {_closure_ctes(modality)}
     SELECT s.cluster_id AS keep_id, s.n_members, a.n_axes,
            CAST(s.n_members - 1 AS BIGINT) AS n_dropped
     FROM stats s JOIN axes a USING (cluster_id)
@@ -3229,195 +3245,46 @@ def _resolution_oracle(arms: list[tuple[str, str, str, str]]) -> str:
     """
 
 
-_IMG_RESOLUTION_ARMS = [
-    ("image_cropped_near_dup_pairs", "id_a", "id_b", "crop"),
-    ("image_thumbnail_pairs", "full_id", "thumb_id", "scale"),
-    ("image_rotated_dedup", "keep_id", "dup_id", "rotation"),
-]
-_AUD_RESOLUTION_ARMS = [
-    ("audio_resampled_near_dup_pairs", "full_id", "resampled_id", "resample"),
-    ("audio_trimmed_near_dup_pairs", "full_id", "trimmed_id", "trim"),
-    # the composed axis joins the resolution surface (r14 review): its
-    # planted duplicates are REAL duplicates a pipeline must resolve —
-    # excluding them would admit both the original and its trim∘gain
-    # re-encode. (The census stays at the 8 pure-matrix cells; composed
-    # axes live here, on the admission surface.)
-    ("audio_trim_gain_pairs", "full_id", "trimmed_id", "trim_gain"),
-]
-_VID_RESOLUTION_ARMS = [
-    ("video_cropped_near_dup_pairs", "id_a", "id_b", "crop"),
-    ("video_resampled_near_dup_pairs", "full_id", "resampled_id", "resample"),
-    ("video_trimmed_near_dup_pairs", "full_id", "trimmed_id", "trim"),
-]
+def _transform_edges_from(modality: str, src: DataFrame) -> DataFrame:
+    """(src, dst, axis) edge union of one modality's transform arms,
+    all built over ONE shared source frame ``src`` (the quantized grid
+    for image and video, the walks for audio).
 
-
-def _transform_edges(
-    spark: SparkSession, sf_dir: str, modality: str, inplan
-) -> DataFrame:
-    """(src, dst, axis) edge union for one modality's transform arms,
-    composed IN-PLAN from the registered arm queries via ``inplan`` —
-    the default, and the only mode the bench/oracle path ever uses.
-
-    Deployment mode (``NETWORK_IQ_EDGE_ARTIFACTS=1``): read the
-    committed at-rest artifact
-    (aux_data/transform_edges/<modality>/<sf>, built by
-    scripts/build_transform_edges.py) when the sf_dir is canonical —
-    the posture the r13 verdict asked to become code (item 5): in a
-    real corpus pipeline the arm tiers run ONCE per corpus and persist
-    their pair tables; downstream aggregates (resolution, keep-best)
-    read them. The mode is opt-in and OFF by default because these are
-    BATCH queries: a timed/verified invocation must derive its edges
-    from the parquet inputs, not from a checked-in intermediate (the
-    r14 optimization-round measurement contract) — unlike the
-    incremental probes, whose at-rest index is the query's modeled
-    INPUT and whose in-plan twins are registered alongside.
-    Artifact/in-plan equality is test-pinned, the oracles recompute
-    the arms end-to-end in both modes, and the canonical-root gate
-    keeps a foreign directory with a matching basename on the in-plan
-    path (r13 ADVICE)."""
-    if os.environ.get("NETWORK_IQ_EDGE_ARTIFACTS") == "1":
-        art = _artifact_dir(f"transform_edges/{modality}", sf_dir)
-        if art:
-            return spark.read.parquet(art)
-    return inplan(spark, sf_dir)
-
-
-def _image_transform_edges_inplan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize-decode-once (r13 VERDICT item 5, made code in r14) —
-    # THE canonical statement of the idiom; every other composite site
-    # cross-references here: the composite checkpoints the shared
-    # decoded frame so (a) every arm normalizer's build-time checkpoint
-    # plans a subtree rooted at the RDD instead of re-planning the
-    # walk/quant derivation per arm (the census build is measured
-    # py4j/planning-bound — guide §3.3), and (b) the arms decode the
-    # corpus ONCE at execution instead of once per arm. The registered
-    # arm queries are untouched — they keep deriving from the raw scan
-    # (their stamped plans must not move).
-    return _image_transform_edges_from(
-        _img_grid(spark, sf_dir).localCheckpoint(eager=False)
-    )
-
-
-def _image_transform_edges_from(img: DataFrame) -> DataFrame:
-    """Edge union over ONE shared quantized-grid frame: each arm's plan
-    is structurally identical to its registered query (same subtree),
-    but the driver builds/analyzes the base expression once instead of
-    once per arm (guide §3.3 planning cost; the composites' build is
-    measured py4j/parse-bound)."""
-    crop, scale, rot = _pbuild(
-        img.sparkSession,
-        lambda: _image_cropped_pairs_from(img),
-        lambda: _image_thumbnail_pairs_from(img),
-        lambda: _image_rotated_dedup_from(img),
-    )
-    return (
-        crop.select(
-            F.col("id_a").alias("src"),
-            F.col("id_b").alias("dst"),
-            F.lit("crop").alias("axis"),
-        )
-        .unionByName(
-            scale.select(
-                F.col("full_id").alias("src"),
-                F.col("thumb_id").alias("dst"),
-                F.lit("scale").alias("axis"),
+    Materialize-decode-once (r13 VERDICT item 5, made code in r14) —
+    THE canonical statement of the idiom; every composite site
+    cross-references here: the composite checkpoints the shared
+    decoded frame before passing it in, so (a) every arm normalizer's
+    build-time checkpoint plans a subtree rooted at the RDD instead of
+    re-planning the walk/quant derivation per arm (the census build is
+    measured py4j/planning-bound — guide §3.3), and (b) the arms decode
+    the corpus ONCE at execution instead of once per arm. Each arm's
+    plan is structurally identical to its registered query (same
+    subtree), but the driver builds/analyzes the base expression once
+    instead of once per arm. The registered arm queries are untouched —
+    they keep deriving from the raw scan (their stamped plans must not
+    move)."""
+    arms = [a for a in _TRANSFORM_ARMS if a.modality == modality]
+    pairs = _pbuild(src.sparkSession, *(partial(a.pairs_from, src) for a in arms))
+    return reduce(
+        DataFrame.unionByName,
+        (
+            p.select(
+                F.col(a.src).alias("src"),
+                F.col(a.dst).alias("dst"),
+                F.lit(a.axis).alias("axis"),
             )
-        )
-        .unionByName(
-            rot.select(
-                F.col("keep_id").alias("src"),
-                F.col("dup_id").alias("dst"),
-                F.lit("rotation").alias("axis"),
-            )
-        )
+            for a, p in zip(arms, pairs)
+        ),
     )
 
 
-def _audio_transform_edges_inplan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize-decode-once (see _image_transform_edges_inplan)
-    return _audio_transform_edges_from(
-        _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
-    )
-
-
-def _audio_transform_edges_from(src: DataFrame) -> DataFrame:
-    """Edge union over ONE shared walk frame (the
-    ``_image_transform_edges_from`` build-once rationale)."""
-    rsmp, trim, tg = _pbuild(
-        src.sparkSession,
-        lambda: _audio_resampled_pairs_from(src),
-        lambda: _audio_trimmed_pairs_from(src),
-        lambda: _audio_trim_gain_pairs_from(src),
-    )
-    return (
-        rsmp.select(
-            F.col("full_id").alias("src"),
-            F.col("resampled_id").alias("dst"),
-            F.lit("resample").alias("axis"),
-        )
-        .unionByName(
-            trim.select(
-                F.col("full_id").alias("src"),
-                F.col("trimmed_id").alias("dst"),
-                F.lit("trim").alias("axis"),
-            )
-        )
-        .unionByName(
-            tg.select(
-                F.col("full_id").alias("src"),
-                F.col("trimmed_id").alias("dst"),
-                F.lit("trim_gain").alias("axis"),
-            )
-        )
-    )
-
-
-def _video_transform_edges_inplan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize-decode-once (see _image_transform_edges_inplan)
-    return _video_transform_edges_from(
-        _img_grid(spark, sf_dir).localCheckpoint(eager=False)
-    )
-
-
-def _video_transform_edges_from(base: DataFrame) -> DataFrame:
-    """Edge union over ONE shared grid frame (the
-    ``_image_transform_edges_from`` build-once rationale)."""
-    crop, rsmp, trim = _pbuild(
-        base.sparkSession,
-        lambda: _video_cropped_pairs_from(base),
-        lambda: _video_resampled_pairs_from(base),
-        lambda: _video_trimmed_pairs_from(base),
-    )
-    return (
-        crop.select(
-            F.col("id_a").alias("src"),
-            F.col("id_b").alias("dst"),
-            F.lit("crop").alias("axis"),
-        )
-        .unionByName(
-            rsmp.select(
-                F.col("full_id").alias("src"),
-                F.col("resampled_id").alias("dst"),
-                F.lit("resample").alias("axis"),
-            )
-        )
-        .unionByName(
-            trim.select(
-                F.col("full_id").alias("src"),
-                F.col("trimmed_id").alias("dst"),
-                F.lit("trim").alias("axis"),
-            )
-        )
-    )
-
-
-def _resolution_from_edges(e: DataFrame) -> DataFrame:
-    """Shared resolution tail for the per-modality transform-resolution
-    queries: (src, dst, axis) edges → min-label connected components
-    over ONLY the duplicate-involved vertices → one row per cluster
-    (keep_id, n_members, n_axes, n_dropped). The edge union is
-    checkpointed once and feeds both the CC and the axis rollup; the
-    vertex set is exactly the edge endpoints, so the CC runs in
+def _cc_rollup(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The CC core the resolution and keep-best tails share: checkpoint
+    the edge union once (it feeds both the CC and the axis rollup), run
+    min-label connected components over ONLY the duplicate-involved
+    vertices, and roll up per-cluster member counts (``stats``) and
+    distinct contributing axes (``axes``). Returns (cc, stats, axes).
+    The vertex set is exactly the edge endpoints, so the CC runs in
     endpoints-only mode (vertices=None) — the former union + distinct +
     seed join was redundant with the CC seed's own neighbor-min
     aggregate (guide §2.4)."""
@@ -3435,6 +3302,15 @@ def _resolution_from_edges(e: DataFrame) -> DataFrame:
         .groupBy("cluster_id")
         .agg(F.countDistinct("axis").cast("int").alias("n_axes"))
     )
+    return cc, stats, axes
+
+
+def _resolution_from_edges(e: DataFrame) -> DataFrame:
+    """Shared resolution tail for the per-modality transform-resolution
+    queries: (src, dst, axis) edges → the shared CC core
+    (``_cc_rollup``) → one row per cluster (keep_id, n_members, n_axes,
+    n_dropped)."""
+    _, stats, axes = _cc_rollup(e)
     return (
         stats.join(axes, "cluster_id")
         .select(
@@ -3449,7 +3325,7 @@ def _resolution_from_edges(e: DataFrame) -> DataFrame:
 
 @register(
     "image_transform_resolution",
-    oracle=_resolution_oracle(_IMG_RESOLUTION_ARMS),
+    oracle=_resolution_oracle("image"),
 )
 def q_image_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-AXIS duplicate RESOLUTION over the image transform tiers
@@ -3470,14 +3346,13 @@ def q_image_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-involved vertices (pair density × corpus, never the
     corpus itself); the edge union is checkpointed once and feeds both
     the CC and the axis rollup."""
-    return _resolution_from_edges(
-        _transform_edges(spark, sf_dir, "image", _image_transform_edges_inplan)
-    )
+    img = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
+    return _resolution_from_edges(_transform_edges_from("image", img))
 
 
 @register(
     "audio_transform_resolution",
-    oracle=_resolution_oracle(_AUD_RESOLUTION_ARMS),
+    oracle=_resolution_oracle("audio"),
 )
 def q_audio_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-axis duplicate RESOLUTION over the AUDIO transform tiers
@@ -3491,20 +3366,19 @@ def q_audio_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative (min-label = the original, by the twin-offset
     construction: resample twins at +4M, trim twins at +7M, trim∘gain
     twins at +9M), member count, contributing-axis count, and the
-    drop count a dedup pass realizes. Composes two registered tiers
+    drop count a dedup pass realizes. Composes three registered tiers
     verbatim + the shared min-label CC core; the oracle replays edges
     from the registered arm oracles and the same fixpoint via the walk
     CTE. Scale shape: the arms' bounded pipelines + CC over ONLY
     duplicate-involved vertices; edge union checkpointed once feeding
     both the CC and the axis rollup (``_resolution_from_edges``)."""
-    return _resolution_from_edges(
-        _transform_edges(spark, sf_dir, "audio", _audio_transform_edges_inplan)
-    )
+    src = _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
+    return _resolution_from_edges(_transform_edges_from("audio", src))
 
 
 @register(
     "video_transform_resolution",
-    oracle=_resolution_oracle(_VID_RESOLUTION_ARMS),
+    oracle=_resolution_oracle("video"),
 )
 def q_video_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-axis duplicate RESOLUTION over the VIDEO transform tiers
@@ -3521,9 +3395,8 @@ def q_video_transform_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered arm oracles + the walk CTE. Scale shape identical:
     bounded arm pipelines, CC over duplicate-involved vertices only
     (pair density × corpus, never the corpus), one edge checkpoint."""
-    return _resolution_from_edges(
-        _transform_edges(spark, sf_dir, "video", _video_transform_edges_inplan)
-    )
+    base = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
+    return _resolution_from_edges(_transform_edges_from("video", base))
 
 
 # Integer "quality units" for keep-best ranking: n·Σx² − (Σx)² over a
@@ -3545,52 +3418,20 @@ _VAR_UNITS_SQL = (
 )
 
 
-def _keep_best_oracle(
-    arms: list[tuple[str, str, str, str]], members_cte: str
-) -> str:
-    """Resolution keep-best oracle: the resolution closure (edges from
-    the registered arm oracles + the walk CTE) RANKED by member quality
-    metadata instead of reporting the label minimum. ``members_cte``
-    must define a CTE chain ending in ``members(media_id, s)`` holding
-    every corpus member's signal (base + all planted twins, composed
-    from the same shared plant texts as the arm oracles)."""
-    from network_iq_spark.registry import ORACLES
-
-    edge_sql = "\n      UNION ALL\n".join(
-        f"      SELECT {src} AS src, {dst} AS dst, '{axis}' AS axis\n"
-        f"      FROM ({ORACLES[name]})"
-        for name, src, dst, axis in arms
-    )
+def _keep_best_oracle(modality: str, members_cte: str) -> str:
+    """Resolution keep-best oracle: the shared closure (``_closure_ctes``)
+    RANKED by member quality metadata instead of reporting the label
+    minimum. ``members_cte`` must define a CTE chain ending in
+    ``members(media_id, s)`` holding every corpus member's signal (base +
+    all planted twins, composed from the same shared plant texts as the
+    arm oracles)."""
     return f"""
-    WITH RECURSIVE edges AS (
-{edge_sql}
-    ),
-    sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION ALL
-      SELECT dst AS a, src AS b FROM edges
-    ),
-    verts AS (SELECT DISTINCT a AS v FROM sym),
-    walk(v, label) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT s.b, w.label FROM walk w JOIN sym s ON s.a = w.v
-    ),
-    clusters AS (SELECT v, MIN(label) AS cluster_id FROM walk GROUP BY v),
+    WITH RECURSIVE {_closure_ctes(modality)},
     {members_cte},
     scored AS (
       SELECT media_id, CAST(len(s) AS INT) AS n_px,
              {_VAR_UNITS_SQL.format(v="s")} AS var_units
       FROM members
-    ),
-    stats AS (
-      SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-      FROM clusters GROUP BY cluster_id
-    ),
-    axes AS (
-      SELECT c.cluster_id, CAST(COUNT(DISTINCT e.axis) AS INT) AS n_axes
-      FROM edges e JOIN clusters c ON c.v = e.src
-      GROUP BY c.cluster_id
     ),
     ranked AS (
       SELECT c.cluster_id, c.v AS media_id, sc.n_px, sc.var_units,
@@ -3624,9 +3465,6 @@ def _keep_best_from_edges(e: DataFrame, members: DataFrame) -> DataFrame:
     largest duplicate family, never the corpus."""
     from pyspark.sql import Window
 
-    from network_iq_spark.operators import graph as G
-
-    e = e.localCheckpoint(eager=False)
     # Score the member corpus and MATERIALIZE the scored frame DURING the
     # CC fixpoint (r15, VERDICT item 6; guide §2.6 overlap independent
     # jobs): the CC loop is driver-sequential (one blocking action per
@@ -3640,35 +3478,13 @@ def _keep_best_from_edges(e: DataFrame, members: DataFrame) -> DataFrame:
     # per row vs an order-of-magnitude narrower exchange. Results are
     # byte-identical: same scoring expressions, same window, same
     # media_id tie-break.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     scored_plan = members.select(
         "media_id",
         F.expr("cast(size(s) as int)").alias("n_px"),
         F.expr(_VAR_UNITS_EXPR.format(v="s")).alias("var_units"),
     )
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            inheritable_thread_target(scored_plan.sparkSession)(
-                scored_plan.localCheckpoint
-            )
-        )
-        # endpoints-only CC (vertices=None): the vertex set is exactly the
-        # edge endpoints, so the former union + distinct + seed join was
-        # redundant with the CC seed's neighbor-min aggregate (guide §2.4)
-        cc = G.connected_components(
-            None, e, id_col="media_id", src="src", dst="dst"
-        )
-        scored = fut.result()
-    stats = cc.groupBy("cluster_id").agg(
-        F.count("*").cast("bigint").alias("n_members")
-    )
-    axes = (
-        e.join(cc, e["src"] == cc["media_id"])
-        .groupBy("cluster_id")
-        .agg(F.countDistinct("axis").cast("int").alias("n_axes"))
+    scored, (cc, stats, axes) = _pbuild(
+        members.sparkSession, scored_plan.localCheckpoint, partial(_cc_rollup, e)
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_px").desc(), F.col("var_units").desc(), F.col("media_id").asc()
@@ -3727,7 +3543,7 @@ def _img_members_cte() -> str:
 
 @register(
     "image_resolution_keep_best",
-    oracle=_keep_best_oracle(_IMG_RESOLUTION_ARMS, _img_members_cte()),
+    oracle=_keep_best_oracle("image", _img_members_cte()),
 )
 def q_image_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the image transform clusters
@@ -3751,9 +3567,7 @@ def q_image_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus (the census build-once rationale), checkpointed so it is
     # planned once and decoded once (materialize-decode-once)
     img = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
-    e = _transform_edges(
-        spark, sf_dir, "image", lambda sp, sd: _image_transform_edges_from(img)
-    )
+    e = _transform_edges_from("image", img)
     base, crops = _crop_corpus_from(img)
     members = (
         base.select("media_id", F.col("px").alias("s"))
@@ -3826,7 +3640,7 @@ def _audio_members(src: DataFrame) -> DataFrame:
 
 @register(
     "audio_resolution_keep_best",
-    oracle=_keep_best_oracle(_AUD_RESOLUTION_ARMS, _aud_members_cte()),
+    oracle=_keep_best_oracle("audio", _aud_members_cte()),
 )
 def q_audio_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the audio transform clusters
@@ -3842,11 +3656,7 @@ def q_audio_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three edge arms + the member corpus (materialize-decode-once)
     src = _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
     return _keep_best_from_edges(
-        _transform_edges(
-            spark, sf_dir, "audio",
-            lambda sp, sd: _audio_transform_edges_from(src),
-        ),
-        _audio_members(src),
+        _transform_edges_from("audio", src), _audio_members(src)
     )
 
 
@@ -3914,7 +3724,7 @@ def _video_members(base: DataFrame) -> DataFrame:
 
 @register(
     "video_resolution_keep_best",
-    oracle=_keep_best_oracle(_VID_RESOLUTION_ARMS, _vid_members_cte()),
+    oracle=_keep_best_oracle("video", _vid_members_cte()),
 )
 def q_video_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the video transform clusters
@@ -3928,25 +3738,20 @@ def q_video_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed shared source (materialize-decode-once)
     base = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     return _keep_best_from_edges(
-        _transform_edges(
-            spark, sf_dir, "video",
-            lambda sp, sd: _video_transform_edges_from(base),
-        ),
-        _video_members(base),
+        _transform_edges_from("video", base), _video_members(base)
     )
 
 
 def _admission_manifest_oracle() -> str:
-    """Union of the three per-modality keep-best oracles with a
-    modality literal — the manifest can never disagree with the
+    """Union of the three registered per-modality keep-best oracles with
+    a modality literal — the manifest can never disagree with the
     queries it summarizes (the census composition rule)."""
-    mods = (
-        ("image", _keep_best_oracle(_IMG_RESOLUTION_ARMS, _img_members_cte())),
-        ("audio", _keep_best_oracle(_AUD_RESOLUTION_ARMS, _aud_members_cte())),
-        ("video", _keep_best_oracle(_VID_RESOLUTION_ARMS, _vid_members_cte())),
-    )
+    from network_iq_spark.registry import ORACLES
+
     unions = "\n    UNION ALL\n".join(
-        f"    SELECT '{m}' AS modality, * FROM ({o})" for m, o in mods
+        f"    SELECT '{m}' AS modality, * "
+        f"FROM ({ORACLES[f'{m}_resolution_keep_best']})"
+        for m in ("image", "audio", "video")
     )
     return f"""
     SELECT * FROM (
@@ -3964,43 +3769,34 @@ def q_transform_admission_manifest(spark: SparkSession, sf_dir: str) -> DataFram
     cluster geometry (``n_members``, ``n_axes``), and the realized
     dedup yield (``n_dropped``: artifacts a training-data pass
     excludes). Composes the three per-modality keep-best queries
-    verbatim — same edge artifacts, same member scoring, same policy —
+    verbatim — same edges, same member scoring, same policy —
     plus one modality literal, so the manifest can never desync from
     the queries it summarizes; the oracle is the same union over the
     three keep-best oracles (the census composition discipline).
     Clusters never span modalities (disjoint corpora by construction),
     so the union is exact, not an approximation. Scale shape: three
-    artifact reads + three bounded CC/window tails — the deployment
-    pipeline's final cheap aggregate, not a recompute."""
+    in-plan edge builds (each over one checkpointed source) + three
+    bounded CC/window tails."""
     parts = (
         ("image", q_image_resolution_keep_best),
         ("audio", q_audio_resolution_keep_best),
         ("video", q_video_resolution_keep_best),
     )
 
-    # Build the three modality frames from a small thread pool (guide
-    # §2.6 "overlap independent jobs"): each keep-best's construction
-    # runs a driver-sequential CC fixpoint (eager checkpoints + a
-    # convergence count per round), so composing them serially left the
-    # cluster idle during every round's driver turnaround — measured
-    # 21.0 s ≈ the straight SUM of the three keep-bests (7.3 + 10.2 +
-    # 5.3) with zero overlap. The modalities are independent (disjoint
-    # corpora), pool.map preserves input order, and the union itself
-    # stays deterministic, so results are byte-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    def build(part):
-        m, fn = part
+    # Build the three modality frames concurrently (_pbuild; guide §2.6
+    # "overlap independent jobs"): each keep-best's construction runs a
+    # driver-sequential CC fixpoint (eager checkpoints + a convergence
+    # count per round), so composing them serially left the cluster idle
+    # during every round's driver turnaround — measured 21.0 s ≈ the
+    # straight SUM of the three keep-bests (7.3 + 10.2 + 5.3) with zero
+    # overlap. The modalities are independent (disjoint corpora), _pbuild
+    # preserves input order, and the union itself stays deterministic,
+    # so results are byte-identical.
+    def build(m: str, fn) -> DataFrame:
         return fn(spark, sf_dir).select(F.lit(m).alias("modality"), "*")
 
-    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-        frames = list(pool.map(inheritable_thread_target(spark)(build), parts))
-    out = frames[0]
-    for d in frames[1:]:
-        out = out.unionByName(d)
-    return out.orderBy("modality", "cluster_id")
+    frames = _pbuild(spark, *(partial(build, m, fn) for m, fn in parts))
+    return reduce(DataFrame.unionByName, frames).orderBy("modality", "cluster_id")
 
 
 # ---------------------------------------------------------------------------

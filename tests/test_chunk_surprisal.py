@@ -258,36 +258,3 @@ def test_artifact_gated_on_canonical_testdata_root(spark, tmp_path, monkeypatch)
     assert MQ._artifact_dir("media_index", str(foreign)) is None
     # canonical dir DOES see it
     assert MQ._artifact_dir("media_index", "/root/testdata/sf0.001") is not None
-
-
-def test_transform_edges_in_plan_fallback_matches_artifact(spark, tmp_path, monkeypatch):
-    """The resolution/keep-best queries compose their edges in-plan by
-    default (the r14 optimization-round measurement contract: a batch
-    query computes from the parquet inputs). Deployment mode
-    (NETWORK_IQ_EDGE_ARTIFACTS=1) reads the committed at-rest edge
-    artifacts (aux_data/transform_edges/<mod>/<sf>, r14 VERDICT item 5
-    — arms run once per corpus, downstream aggregates read their
-    persisted pairs); that mode must return identical results, and
-    with the artifact absent it must fall back in-plan WITHOUT
-    writing."""
-    import os
-
-    from network_iq_spark.queries import media as MQ
-    from network_iq_spark.registry import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    inplan = sorted(
-        map(tuple, QUERIES["audio_transform_resolution"](spark, sf).collect())
-    )
-    monkeypatch.setenv("NETWORK_IQ_EDGE_ARTIFACTS", "1")
-    with_art = sorted(
-        map(tuple, QUERIES["audio_transform_resolution"](spark, sf).collect())
-    )
-    assert with_art == inplan
-    # artifact mode with the artifact absent: in-plan fallback, no writes
-    monkeypatch.setattr(MQ, "_AUX_DATA_DIR", str(tmp_path / "aux"))
-    without = sorted(
-        map(tuple, QUERIES["audio_transform_resolution"](spark, sf).collect())
-    )
-    assert not os.path.exists(str(tmp_path / "aux"))  # read query: no writes
-    assert with_art == without

@@ -5,6 +5,7 @@ window formulation, z-score scope invariance, union/unpivot round-trip."""
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
 import pytest
@@ -172,7 +173,7 @@ def test_chunk_dedup_conserves_tokens_and_first_doc_intact(spark, texts):
                 seen.add(c)
 
 
-def test_aggregates_partition_invariant_under_shuffle_width(spark):
+def test_aggregates_partition_invariant_under_shuffle_width(spark, tmp_path):
     """The cross-engine determinism contract implies PARTITION invariance:
     the same query must produce bit-identical rows whether the shuffle
     fans out over 32 partitions, 5, or 1 (different partial-agg groupings,
@@ -180,7 +181,13 @@ def test_aggregates_partition_invariant_under_shuffle_width(spark):
     property the integer-unit dsum discipline exists to buy — asserted
     here on a cross-section of the aggregate/window/text families, plus
     connected components over a codec round trip (image_dedup_clusters),
-    the MinHash/SimHash pair tiers and top-k."""
+    the MinHash/SimHash pair tiers and top-k. The same rows must come back
+    from a copy of every input table with its rows permuted under a fixed
+    seed (input-order invariance: first-seen, tie-break and merge orders
+    all move)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
     from network_iq_spark.registry import QUERIES
 
     names = [
@@ -197,19 +204,31 @@ def test_aggregates_partition_invariant_under_shuffle_width(spark):
         "top_revenue_customers",
     ]
     sf = "/root/testdata/sf0.001"
+    rng = np.random.default_rng(7)
+    for fname in sorted(os.listdir(sf)):
+        t = pq.read_table(os.path.join(sf, fname))
+        pq.write_table(t.take(rng.permutation(t.num_rows)), str(tmp_path / fname))
+    runs = {
+        "32": ("32", sf),
+        "5": ("5", sf),
+        "1": ("1", sf),
+        "permuted": ("32", str(tmp_path)),
+    }
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     rows = {}
     try:
-        for width in ("32", "5", "1"):
+        for key, (width, d) in runs.items():
             spark.conf.set("spark.sql.shuffle.partitions", width)
-            rows[width] = {
-                n: sorted(tuple(r) for r in QUERIES[n](spark, sf).collect())
+            rows[key] = {
+                n: sorted(tuple(r) for r in QUERIES[n](spark, d).collect())
                 for n in names
             }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     for n in names:
-        assert rows["32"][n] == rows["5"][n] == rows["1"][n], n
+        assert (
+            rows["32"][n] == rows["5"][n] == rows["1"][n] == rows["permuted"][n]
+        ), n
 
 
 @given(
