@@ -14,21 +14,20 @@ template-recycling docs (3/4 dup chunks -> must be REJECTED at the 20 %
 cap) and half fresh docs (must be admitted) — so the soak also asserts
 the admission decision stays correct at every scale.
 
-Run: python scripts/admission_soak.py   (writes under /tmp, nothing in
-the repo; prints the docs/SCALE.md row to stdout, per-scale lines to
-stderr)
+Batch 0 (the at-rest index a deployment already has on disk) and the
+first write of batch 1 run untimed; every checked and timed run replays
+batch 1 — the sink's strictly-earlier-batch probe path, so min-of-N
+times identical work.
+
+Run: python scripts/ab.py chunk_admission_sink   (sink state under .soak/)
 """
 
 from __future__ import annotations
 
-import math
 import os
-import shutil
-import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell, state_dir
+from network_iq_spark.streaming.dedup import chunk_admission_sink
 
 BASE_DOCS = 3_000
 BATCH_DOCS = 400
@@ -68,66 +67,33 @@ def batch_rows():
     return rows
 
 
-def main() -> None:
-    from network_iq_spark.session import get_spark
-    from network_iq_spark.streaming.dedup import chunk_admission_sink
-
-    spark = get_spark(app_name="admission-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    batch = spark.createDataFrame(
-        batch_rows(), "doc_id bigint, text string"
-    ).localCheckpoint()
-    want_admitted = BATCH_DOCS // 2
-
-    ts = []
-    for m in mults:
-        root = tempfile.mkdtemp(prefix=f"admission_soak_x{m}_")
-        corpus = os.path.join(root, "corpus")
-        bands = os.path.join(root, "bands")
-        sets_ = os.path.join(root, "sets")
-        sink = chunk_admission_sink(corpus, bands, sets_)
-        # untimed: materialize the at-rest history index (batch 0) — the
-        # artifact a deployment already has on disk
-        hist = spark.createDataFrame(
-            history_rows(m), "doc_id bigint, text string"
-        )
-        sink(hist, 0)
-        # timed: the fixed probe batch as batch 1; re-running the same
-        # batch_id is the sink's replay path (strictly-earlier-batch
-        # probes), so min-of-N over replays times the identical work
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            sink(batch, 1)
-            best = min(best, time.perf_counter() - t0)
-        admitted = (
-            spark.read.parquet(corpus)
-            .filter("doc_id >= 10000000")
-            .count()
-        )
-        assert admitted == want_admitted, (m, admitted, want_admitted)
-        ts.append(best)
-        print(
-            f"x{m:<3d} chunk_admission_sink batch {best:7.2f}s "
-            f"(admitted {admitted}/{BATCH_DOCS}, history {BASE_DOCS * m})",
-            file=sys.stderr,
-        )
-        shutil.rmtree(root, ignore_errors=True)
-
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+def _prepare(spark, m):
+    root = state_dir(f"admission_soak_x{m:g}")
+    corpus = os.path.join(root, "corpus")
+    sink = chunk_admission_sink(
+        corpus, os.path.join(root, "bands"), os.path.join(root, "sets")
     )
-    cells = " | ".join(f"{t:.2f} s" for t in ts)
-    print(
-        f"| `chunk_admission_sink` (fixed 400-doc batch, at-rest index) "
-        f"| {cells} | **{e:.2f}** |"
+    schema = "doc_id bigint, text string"
+    sink(spark.createDataFrame(history_rows(m), schema), 0)
+    batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
+    sink(batch, 1)
+    return sink, batch, lambda: (
+        spark.read.parquet(corpus).filter("doc_id >= 10000000").count()
     )
 
 
-if __name__ == "__main__":
-    main()
+def _check(data, _):
+    admitted = data[2]()
+    assert admitted == BATCH_DOCS // 2, (admitted, BATCH_DOCS // 2)
+    return f"admitted {admitted}/{BATCH_DOCS}"
+
+
+CELLS = [
+    Cell(
+        "chunk_admission_sink",
+        (1, 3, 10),
+        _prepare,
+        {"fixed 400-doc batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
+        _check,
+    )
+]

@@ -2,20 +2,18 @@
 """1x/3x/10x soak for the shift-tolerant audio tier (VERDICT r9 item 7):
 random-walk clips (locally correlated, like real audio) with 2 % planted
 1-sample-shifted twins, run through audio_shifted_pairs (energy-envelope
-blocking + exact lag-scan verify). Prints the docs/SCALE.md row plus the
-recall of the envelope blocking on the planted twins at each scale.
+blocking + exact lag-scan verify). The check admits no non-twin pair and
+reports the recall of the envelope blocking on the planted twins.
+
+Run: python scripts/ab.py audio_shifted_pairs
 """
 
 from __future__ import annotations
 
-import math
-import os
-import sys
-import time
-
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE_CLIPS = 2_000
 TWIN_FRACTION = 0.02
@@ -35,54 +33,25 @@ def synth_clips(mult: int):
     return rows, {(int(i), int(i) + 10_000_000) for i in twin_idx}
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
+def _prepare(spark, m):
+    rows, twins = synth_clips(m)
+    df = spark.createDataFrame(rows, "media_id long, s array<int>")
+    return df.localCheckpoint(), twins
 
-    spark = get_spark(app_name="audio-shift-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
 
-    ts, recalls, npairs = [], [], []
-    for m in mults:
-        rows, twins = synth_clips(m)
-        df = spark.createDataFrame(
-            rows, "media_id long, s array<int>"
-        ).localCheckpoint()
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            D.audio_shifted_pairs(df, max_lag=2).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        got = {
-            (r.id_a, r.id_b)
-            for r in D.audio_shifted_pairs(df, max_lag=2).collect()
-        }
-        assert got <= twins, "lag-scan verify admitted a non-twin pair"
-        ts.append(best)
-        recalls.append(len(got) / len(twins))
-        npairs.append(len(got))
-        print(
-            f"x{m:<3d} audio_shifted_pairs {best:7.2f}s "
-            f"recall={len(got)}/{len(twins)}",
-            file=sys.stderr,
-        )
+def _check(data, rows):
+    twins = data[1]
+    got = {(r.id_a, r.id_b) for r in rows}
+    assert got <= twins, "lag-scan verify admitted a non-twin pair"
+    return f"{len(got):,} pairs (blocking recall {len(got) / len(twins):.2f})"
 
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+
+CELLS = [
+    Cell(
+        "audio_shifted_pairs",
+        (1, 3, 10),
+        _prepare,
+        {"2% shifted twins": lambda spark, d: D.audio_shifted_pairs(d[0], max_lag=2)},
+        _check,
     )
-    cells = " | ".join(f"{t:.2f} s" for t in ts)
-    rc = " / ".join(f"{r:.2f}" for r in recalls)
-    print(
-        f"| `audio_shifted_pairs` (2% shifted twins) | {cells} | {e:.2f} | "
-        f"{npairs[-1]:,} (blocking recall {rc}) |"
-    )
-
-
-if __name__ == "__main__":
-    main()
+]

@@ -101,12 +101,14 @@ def triples(spark, d: str, max_df_ratio: float | None):
     )
 
 
+MULTS = (1, 3, 10)
+
+
 def main() -> None:
     from network_iq_spark.session import get_spark
 
     spark = get_spark(app_name="bm25-volume")
     spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
     for label, builder, ceilings in (
         ("shared-vocab (31 words, all stopwords)", build_corpus, [0.5]),
         ("zipf (10k vocab, a=1.1)", build_zipf_corpus, [0.5, 0.05]),
@@ -117,7 +119,7 @@ def main() -> None:
         ) + " | uncapped s | " + " | ".join(f"s @ {c}" for c in ceilings) + " |"
         print(hdr)
         print("|" + "---|" * (2 + 2 * len(ceilings) + 1))
-        for m in mults:
+        for m in MULTS:
             d = builder(m)
             t0 = time.perf_counter()
             full = triples(spark, d, None)

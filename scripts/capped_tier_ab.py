@@ -8,28 +8,23 @@ bench-SF A/B was noise-band (±5%), so the claimed shuffle-scaling win was
 unproven where it was sold. This script proves or refutes it: synthesize
 corpora at 1x/3x/10x the sf0.1 document count (scale_soak's deterministic
 generator — same vocabulary, length and duplicate structure as the driver
-testdata), run both candidate forms INTERLEAVED (min of N alternating
-pairs) for the two registered configs, check pair-set equality at each
-size, and print the (N, seconds) table plus the growth slope per form.
+testdata) and run both candidate forms as the two arms of one cell: the
+driver checks that they return the identical top-100 at each size, then
+times them interleaved and prints the growth slope per form.
 
-Run:  python scripts/capped_tier_ab.py          # 1x 3x 10x
-      AB_MULTS=1,3 AB_RUNS=3 python scripts/capped_tier_ab.py
+Run:  python scripts/ab.py capped_tier_candidates
 """
 
 from __future__ import annotations
 
-import math
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from scale_soak import build_corpus  # noqa: E402
-
-from pyspark.sql import DataFrame  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+from ab import Cell
+from network_iq_spark.operators import dedup as D
+from scale_soak import build_corpus
 
 MAX_DF = 4  # _fragments._JACCARD_MAX_DF — the registered config
 CONTAIN_T = 0.6  # llmdata._CONTAIN_THRESHOLD
@@ -108,72 +103,20 @@ def _jaccard_capped_with(sh: DataFrame, cand_fn, threshold: float, max_df: int):
     )
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-
-    mults = [int(x) for x in os.environ.get("AB_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("AB_RUNS", "3"))
-    spark = get_spark(app_name="capped-tier-ab")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed(df) -> float:
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    results: dict[str, dict[int, dict[str, float]]] = {"posting": {}, "join": {}}
-    for mult in mults:
-        d = build_corpus(mult)
-        docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
-        sh = D.shingles(docs)
-
-        # equality first: identical top-100 (order-insensitive set of rows)
-        post_rows = sorted(
-            map(tuple, _jaccard_capped_with(sh, _posting_form_cand, 0.0, MAX_DF).collect())
-        )
-        join_rows = sorted(
-            map(tuple, _jaccard_capped_with(sh, _join_form_cand, 0.0, MAX_DF).collect())
-        )
-        assert post_rows == join_rows, f"x{mult}: result sets differ"
-
-        best = {"posting": float("inf"), "join": float("inf")}
-        for i in range(runs):
-            order = ["posting", "join"] if i % 2 == 0 else ["join", "posting"]
-            for form in order:
-                fn = _posting_form_cand if form == "posting" else _join_form_cand
-                spark._jvm.System.gc()
-                best[form] = min(
-                    best[form], timed(_jaccard_capped_with(sh, fn, 0.0, MAX_DF))
-                )
-        for form in ("posting", "join"):
-            results[form].setdefault(mult, {})["jaccard"] = best[form]
-        print(
-            f"x{mult} ({5000*mult} docs): posting={best['posting']:.2f}s "
-            f"join={best['join']:.2f}s  (equal top-100: yes)",
-            flush=True,
-        )
-
-    # growth slope per form: log t = a + e log N
-    print("\n| form | " + " | ".join(f"{m}x" for m in mults) + " | slope |")
-    for form in ("posting", "join"):
-        ts = [results[form][m]["jaccard"] for m in mults]
-        if len(mults) >= 2:
-            xs = [math.log(m) for m in mults]
-            ys = [math.log(t) for t in ts]
-            n = len(xs)
-            sx, sy = sum(xs), sum(ys)
-            sxx = sum(x * x for x in xs)
-            sxy = sum(x * y for x, y in zip(xs, ys))
-            slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-        else:
-            slope = float("nan")
-        print(
-            f"| {form} | "
-            + " | ".join(f"{t:.2f}s" for t in ts)
-            + f" | {slope:.2f} |"
-        )
+def _prepare(spark, mult):
+    docs = spark.read.parquet(os.path.join(build_corpus(mult), "documents.parquet"))
+    return D.shingles(docs)
 
 
-if __name__ == "__main__":
-    main()
+def _arm(cand_fn):
+    return lambda spark, sh: _jaccard_capped_with(sh, cand_fn, 0.0, MAX_DF)
+
+
+CELLS = [
+    Cell(
+        "capped_tier_candidates",
+        (1, 3, 10),
+        _prepare,
+        {"posting": _arm(_posting_form_cand), "join": _arm(_join_form_cand)},
+    )
+]

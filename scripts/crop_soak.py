@@ -2,24 +2,24 @@
 """1x/3x/10x soak for the crop-tolerant image tier (VERDICT r11 item 4):
 8x8 luma grids with 2 % planted top-left crop twins (1-2 rows, 0-2 cols),
 run through cropped_grid_pairs (6x6 sub-block pigeonhole blocking + exact
-2-D lag-scan verify). Prints the docs/SCALE.md row plus planted-twin
-recall at each scale — recall must be 1.00 at every scale (pigeonhole,
-not an S-curve) with zero false positives (exact verify).
+2-D lag-scan verify). Every scale checks planted-twin recall — it must be
+1.00 at every scale (pigeonhole, not an S-curve) with zero false
+positives (exact verify). The thumbnail tier (downscale_derivative_pairs,
+exact-key join; expected near-flat slope) runs over the same corpus shape.
+
+Run: python scripts/ab.py cropped_grid_pairs downscale_derivative_pairs
 """
 
 from __future__ import annotations
 
-import math
-import os
-import sys
-import time
-
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE_IMGS = 2_000
 TWIN_FRACTION = 0.02
+SCHEMA = "media_id long, w int, h int, px array<int>"
 
 
 def synth_grids(mult: int):
@@ -57,92 +57,48 @@ def synth_thumbs(mult: int):
     return rows, planted
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
+def _prepare(synth):
+    def prepare(spark, m):
+        rows, planted = synth(m)
+        return spark.createDataFrame(rows, SCHEMA).localCheckpoint(), planted
 
-    spark = get_spark(app_name="crop-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    # --- thumbnail tier (exact-key join; expected near-flat slope) -----
-    tts = []
-    for m in mults:
-        rows, planted = synth_thumbs(m)
-        df = spark.createDataFrame(
-            rows, "media_id long, w int, h int, px array<int>"
-        ).localCheckpoint()
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            D.downscale_derivative_pairs(df).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        got = {
-            (r.full_id, r.thumb_id)
-            for r in D.downscale_derivative_pairs(df).collect()
-        }
-        assert got == planted, "thumbnail tier missed a twin or false-matched"
-        tts.append(best)
-        print(
-            f"x{m:<3d} downscale_derivative_pairs {best:7.2f}s "
-            f"recall={len(got)}/{len(planted)}",
-            file=sys.stderr,
-        )
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in tts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    te = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
-    )
-    print(
-        f"| `downscale_derivative_pairs` (2% planted thumbs) "
-        f"| {' | '.join(f'{t:.2f} s' for t in tts)} | **{te:.2f}** "
-        f"| recall 1.00 at every scale |"
-    )
-
-    ts, recalls = [], []
-    for m in mults:
-        rows, planted = synth_grids(m)
-        df = spark.createDataFrame(
-            rows, "media_id long, w int, h int, px array<int>"
-        ).localCheckpoint()
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            D.cropped_grid_pairs(df, max_crop=2).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        got = {
-            (r.id_a, r.id_b): (r.dr, r.dc, r.ssd)
-            for r in D.cropped_grid_pairs(df, max_crop=2).collect()
-        }
-        assert set(got) == set(planted), "false positive or missed twin"
-        assert all(
-            got[k] == (dr, dc, 0) for k, (dr, dc) in planted.items()
-        ), "wrong recovered offset"
-        ts.append(best)
-        recalls.append(len(got) / len(planted))
-        print(
-            f"x{m:<3d} cropped_grid_pairs {best:7.2f}s "
-            f"recall={len(got)}/{len(planted)}",
-            file=sys.stderr,
-        )
-
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
-    )
-    cells = " | ".join(f"{t:.2f} s" for t in ts)
-    rc = " / ".join(f"{r:.2f}" for r in recalls)
-    print(
-        f"| `cropped_grid_pairs` (2% planted crop twins) "
-        f"| {cells} | **{e:.2f}** | recall {rc} |"
-    )
+    return prepare
 
 
-if __name__ == "__main__":
-    main()
+def _check_thumbs(data, rows):
+    planted = data[1]
+    got = {(r.full_id, r.thumb_id) for r in rows}
+    assert got == planted, "thumbnail tier missed a twin or false-matched"
+    return "recall 1.00"
+
+
+def _check_crops(data, rows):
+    planted = data[1]
+    got = {(r.id_a, r.id_b): (r.dr, r.dc, r.ssd) for r in rows}
+    assert set(got) == set(planted), "false positive or missed twin"
+    assert all(
+        got[k] == (dr, dc, 0) for k, (dr, dc) in planted.items()
+    ), "wrong recovered offset"
+    return "recall 1.00"
+
+
+CELLS = [
+    Cell(
+        "downscale_derivative_pairs",
+        (1, 3, 10),
+        _prepare(synth_thumbs),
+        {"2% planted thumbs": lambda spark, d: D.downscale_derivative_pairs(d[0])},
+        _check_thumbs,
+    ),
+    Cell(
+        "cropped_grid_pairs",
+        (1, 3, 10),
+        _prepare(synth_grids),
+        {
+            "2% planted crop twins": lambda spark, d: (
+                D.cropped_grid_pairs(d[0], max_crop=2)
+            )
+        },
+        _check_crops,
+    ),
+]

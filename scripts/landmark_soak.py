@@ -13,19 +13,19 @@ documented contract — no pigeonhole guarantee): each scale asserts
 recall >= 0.97 with the true head offset on every recovered pair, and
 ZERO false accepts (the corr² verify's precision claim).
 
-Run: python scripts/landmark_soak.py   (prints the docs/SCALE.md row to
-stdout, per-scale lines to stderr)
+The probe cell times a FIXED batch (the 1x twins) against a GROWING
+at-rest index — the O(batch) deployment claim; its exponent measures how
+little the probe cares about history size beyond the index scan.
+
+Run: python scripts/ab.py landmark_sequence_pairs incremental_landmark_probe
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE = 2_000
 TWIN_EVERY = 50  # 2% planted twins
@@ -72,106 +72,56 @@ def landmark_rows(mult: int):
     return rows, want
 
 
-def _fit(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
-    )
+SCHEMA = "media_id bigint, s array<int>"
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="landmark-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    ts, recalls = [], []
-    for m in mults:
-        rows, want = landmark_rows(m)
-        df = spark.createDataFrame(
-            rows, "media_id bigint, s array<int>"
-        ).localCheckpoint()
-        best, got = float("inf"), None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            got = {
-                (r.id_a, r.id_b): r.offset
-                for r in D.landmark_sequence_pairs(
-                    df, max_bucket_size=256
-                ).collect()
-            }
-            best = min(best, time.perf_counter() - t0)
+def _check(a: str, b: str):
+    def check(data, rows):
+        want = data[-1]
+        got = {(r[a], r[b]): r.offset for r in rows}
         fps = set(got) - set(want)
-        assert not fps, (m, len(fps), sorted(fps)[:5])
-        hit = sum(1 for p, h in want.items() if got.get(p) == h)
-        recall = hit / len(want)
-        assert recall >= 0.97, (m, recall)
-        ts.append(best)
-        recalls.append(recall)
-        print(
-            f"x{m:<3d} landmark_sequence_pairs {best:7.2f}s "
-            f"({len(want)} planted trim∘gain∘noise twins, recall "
-            f"{recall:.3f} w/ true offsets, 0 FP)",
-            file=sys.stderr,
-        )
-    print(
-        "| `landmark_sequence_pairs` (2 % planted trim∘gain∘noise twins) | "
-        + " | ".join(f"{t:.2f} s" for t in ts)
-        + f" | **{_fit(mults, ts):.2f}** | measured recall "
-        + "/".join(f"{r:.3f}" for r in recalls)
-        + " (true offsets), 0 FP at every scale |"
-    )
+        assert not fps, (len(fps), sorted(fps)[:5])
+        recall = sum(1 for p, h in want.items() if got.get(p) == h) / len(want)
+        assert recall >= 0.97, recall
+        return f"recall {recall:.3f} (true offsets), 0 FP"
 
-    # probe arm: FIXED batch (the 1x twins) against a GROWING at-rest
-    # index — the O(batch) deployment claim; the exponent measures how
-    # little the probe cares about history size beyond the index scan
-    ts2, recalls2 = [], []
-    batch_rows, want1 = landmark_rows(1)
-    batch = spark.createDataFrame(
-        [r for r in batch_rows if r[0] >= TWIN_OFF],
-        "media_id bigint, s array<int>",
-    ).localCheckpoint()
-    for m in mults:
-        hist_rows = [r for r in landmark_rows(m)[0] if r[0] < TWIN_OFF]
-        idx = D.landmark_index(
-            spark.createDataFrame(hist_rows, "media_id bigint, s array<int>")
-        ).localCheckpoint()
-        best, got = float("inf"), None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            got = {
-                (r.old_id, r.new_id): r.offset
-                for r in D.incremental_landmark_probe(
-                    batch, idx, max_bucket_size=256
-                ).collect()
-            }
-            best = min(best, time.perf_counter() - t0)
-        want_p = {(a, b): h for (a, b), h in want1.items()}
-        fps = set(got) - set(want_p)
-        assert not fps, (m, len(fps), sorted(fps)[:5])
-        hit = sum(1 for p, h in want_p.items() if got.get(p) == h)
-        recall = hit / len(want_p)
-        assert recall >= 0.97, (m, recall)
-        ts2.append(best)
-        recalls2.append(recall)
-        print(
-            f"x{m:<3d} incremental_landmark_probe {best:7.2f}s "
-            f"(fixed {len(want_p)}-twin batch vs {len(hist_rows)}-clip "
-            f"index, recall {recall:.3f}, 0 FP)",
-            file=sys.stderr,
-        )
-    print(
-        "| `incremental_landmark_probe` (fixed batch, growing index) | "
-        + " | ".join(f"{t:.2f} s" for t in ts2)
-        + f" | **{_fit(mults, ts2):.2f}** | measured recall "
-        + "/".join(f"{r:.3f}" for r in recalls2)
-        + ", 0 FP at every scale |"
-    )
+    return check
 
 
-if __name__ == "__main__":
-    main()
+def _prepare_pairs(spark, m):
+    rows, want = landmark_rows(m)
+    return spark.createDataFrame(rows, SCHEMA).localCheckpoint(), want
+
+
+def _prepare_probe(spark, m):
+    batch_rows, want = landmark_rows(1)
+    batch = spark.createDataFrame([r for r in batch_rows if r[0] >= TWIN_OFF], SCHEMA)
+    hist_rows = [r for r in landmark_rows(m)[0] if r[0] < TWIN_OFF]
+    idx = D.landmark_index(spark.createDataFrame(hist_rows, SCHEMA))
+    return batch.localCheckpoint(), idx.localCheckpoint(), want
+
+
+CELLS = [
+    Cell(
+        "landmark_sequence_pairs",
+        (1, 3, 10),
+        _prepare_pairs,
+        {
+            "2 % planted trim∘gain∘noise twins": lambda spark, d: (
+                D.landmark_sequence_pairs(d[0], max_bucket_size=256)
+            )
+        },
+        _check("id_a", "id_b"),
+    ),
+    Cell(
+        "incremental_landmark_probe",
+        (1, 3, 10),
+        _prepare_probe,
+        {
+            "fixed batch, growing index": lambda spark, d: (
+                D.incremental_landmark_probe(d[0], d[1], max_bucket_size=256)
+            )
+        },
+        _check("old_id", "new_id"),
+    ),
+]

@@ -14,29 +14,27 @@ cheaper — splitting the partition parallelizes the blowup, it does not
 shrink it.
 
 Times minhash_lsh_pairs uncapped vs max_bucket_size=50 (b=16/r=1, the
-recall-heavy config), counts candidate pairs for both, and prints the
-markdown rows for docs/SCALE.md. Run:
+recall-heavy config) as two cells (their pair sets differ by design).
+Each arm times a count() of the pairs, which is also the reported pair
+volume: at 10x the uncapped tier emits ~11M pairs, too many to collect.
+Run:
 
-    python scripts/lsh_hotband_soak.py
-    SOAK_MULTS=1,3 python scripts/lsh_hotband_soak.py
+    python scripts/ab.py minhash_lsh_hotband_uncapped minhash_lsh_hotband_cap50
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
-import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from scale_soak import BASE_DOCS, SOAK_DIR, VOCAB, synth_documents  # noqa: E402
+from ab import Cell
+from network_iq_spark.operators import dedup as D
+from network_iq_spark.sources import load_table
+from scale_soak import BASE_DOCS, SOAK_DIR, synth_documents
 
 HOT_FRACTION = 0.02
 MAX_BUCKET = 50
@@ -66,59 +64,25 @@ def build_hot_corpus(mult: int) -> str:
     return out
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-    from network_iq_spark.sources import load_table
-
-    spark = get_spark(app_name="lsh-hotband-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    variants = {
-        "minhash_lsh_hotband_uncapped": dict(max_bucket_size=None),
-        f"minhash_lsh_hotband_cap{MAX_BUCKET}": dict(max_bucket_size=MAX_BUCKET),
-    }
-    times: dict[str, dict[int, float]] = {v: {} for v in variants}
-    pairs: dict[str, dict[int, int]] = {v: {} for v in variants}
-    for m in mults:
-        d = build_hot_corpus(m)
-        docs = load_table(spark, d, "documents")
-        for v, kw in variants.items():
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                D.minhash_lsh_pairs(
-                    docs, threshold=0.0, n_bands=16, rows_per_band=1, **kw
-                ).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            times[v][m] = best
-            pairs[v][m] = D.minhash_lsh_pairs(
-                docs, threshold=0.0, n_bands=16, rows_per_band=1, **kw
+def _cell(name, max_bucket_size):
+    return Cell(
+        name,
+        (1, 3, 10),
+        lambda spark, m: load_table(spark, build_hot_corpus(m), "documents"),
+        {
+            "": lambda spark, docs: D.minhash_lsh_pairs(
+                docs,
+                threshold=0.0,
+                n_bands=16,
+                rows_per_band=1,
+                max_bucket_size=max_bucket_size,
             ).count()
-            print(
-                f"x{m:<3d} {v:34s} {best:7.2f}s  pairs={pairs[v][m]:,}",
-                file=sys.stderr,
-            )
-
-    header = (
-        "| variant | "
-        + " | ".join(f"{m}x ({BASE_DOCS*m//1000}k docs)" for m in mults)
-        + " | exponent | pairs at 10x |"
+        },
+        lambda docs, n: f"{n:,} pairs",
     )
-    print(header)
-    print("|" + "---|" * (len(mults) + 3))
-    for v in variants:
-        ts = [times[v][m] for m in mults]
-        xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-        xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-        e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-            (x - xbar) ** 2 for x in xs
-        )
-        cells = " | ".join(f"{t:.2f} s" for t in ts)
-        print(f"| `{v}` | {cells} | {e:.2f} | {pairs[v][mults[-1]]:,} |")
 
 
-if __name__ == "__main__":
-    main()
+CELLS = [
+    _cell("minhash_lsh_hotband_uncapped", None),
+    _cell(f"minhash_lsh_hotband_cap{MAX_BUCKET}", MAX_BUCKET),
+]

@@ -17,28 +17,25 @@ Image skew axis: CROP_FRACTION of images are byte-identical copies of
 one image (the same crop re-encoded across pages) — all 7 segments of
 their dHash collide, |B|² verify pairs with no cap.
 
-Prints docs/SCALE.md markdown rows. Run:
+Each variant is one cell (capped and uncapped pair sets differ by
+design); the check reports the pair volume. Run:
 
-    python scripts/media_skew_soak.py
-    SOAK_MULTS=1,3 python scripts/media_skew_soak.py
+    python scripts/ab.py chunk_near_dup_pairs_hot chunk_near_dup_pairs_capped_hot
 """
 
 from __future__ import annotations
 
-import math
 import os
 import shutil
-import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from scale_soak import BASE_DOCS, SOAK_DIR, synth_documents  # noqa: E402
+from ab import Cell
+from network_iq_spark.operators import dedup as D
+from network_iq_spark.registry import QUERIES
+from scale_soak import BASE_DOCS, SOAK_DIR, synth_documents
 
 HOT_FRACTION = 0.02
 CROP_FRACTION = 0.02
@@ -93,72 +90,46 @@ def synth_images(mult: int):
     return [(i, px(i)) for i in range(n)]
 
 
-def fit_exponent(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+def _hashed_images(spark, mult):
+    df = spark.createDataFrame(
+        synth_images(mult), "media_id long, px array<int>"
+    ).localCheckpoint()
+    return df.select("media_id", D.image_dhash("px").alias("dh"))
+
+
+def _pairs(data, rows):
+    return f"{len(rows):,} pairs"
+
+
+def _chunk_cell(q):
+    # (a) chunk grain: the registered sheet queries against hot corpora
+    return Cell(
+        f"{q}_hot",
+        (1, 3, 10),
+        lambda spark, m: build_chunkhot_corpus(m),
+        {"hot-chunk": lambda spark, d: QUERIES[q](spark, d)},
+        _pairs,
     )
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.registry import QUERIES
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="media-skew-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    rows = []
-
-    # (a) chunk grain: the registered sheet queries against hot corpora
-    for qname in ("chunk_near_dup_pairs", "chunk_near_dup_pairs_capped"):
-        ts, np_ = [], {}
-        for m in mults:
-            d = build_chunkhot_corpus(m)
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                QUERIES[qname](spark, d).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            ts.append(best)
-            np_[m] = QUERIES[qname](spark, d).count()
-            print(f"x{m:<3d} {qname:32s} {best:7.2f}s pairs={np_[m]:,}", file=sys.stderr)
-        rows.append((f"{qname} (hot-chunk)", mults, ts, np_[mults[-1]]))
-
+def _image_cell(name, **kw):
     # (b) image dHash: identical-crop clusters, capped vs uncapped blocking
-    for label, kw in (
-        ("image_hamming_uncapped (hot-crop)", {}),
-        ("image_hamming_cap50 (hot-crop)", {"max_bucket_size": 50}),
-    ):
-        ts, np_ = [], {}
-        for m in mults:
-            df = spark.createDataFrame(
-                synth_images(m), "media_id long, px array<int>"
-            ).localCheckpoint()
-            hashed = df.select("media_id", D.image_dhash("px").alias("dh"))
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                D.hamming_blocked_pairs(
-                    hashed, "dh", 6, n_bits=56, id_col="media_id", **kw
-                ).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            ts.append(best)
-            np_[m] = D.hamming_blocked_pairs(
+    return Cell(
+        name,
+        (1, 3, 10),
+        _hashed_images,
+        {
+            "hot-crop": lambda spark, hashed: D.hamming_blocked_pairs(
                 hashed, "dh", 6, n_bits=56, id_col="media_id", **kw
-            ).count()
-            print(f"x{m:<3d} {label:32s} {best:7.2f}s pairs={np_[m]:,}", file=sys.stderr)
-        rows.append((label, mults, ts, np_[mults[-1]]))
-
-    print("| variant | " + " | ".join(f"{m}x" for m in mults) + " | exponent | pairs at 10x |")
-    print("|" + "---|" * (len(mults) + 3))
-    for label, ms, ts, pairs in rows:
-        cells = " | ".join(f"{t:.2f} s" for t in ts)
-        print(f"| `{label}` | {cells} | {fit_exponent(ms, ts):.2f} | {pairs:,} |")
+            )
+        },
+        _pairs,
+    )
 
 
-if __name__ == "__main__":
-    main()
+CELLS = [
+    _chunk_cell("chunk_near_dup_pairs"),
+    _chunk_cell("chunk_near_dup_pairs_capped"),
+    _image_cell("image_hamming_uncapped"),
+    _image_cell("image_hamming_cap50", max_bucket_size=50),
+]

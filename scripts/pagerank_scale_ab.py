@@ -8,37 +8,38 @@ layout: (src, dsts[], deg) checkpointed once, per-round NODE-grained
 join + map-side explode + partial-agg before the only edge-volume
 shuffle. The claim is shuffle-volume scaling, so prove it where it was
 sold: the scale_soak hub-heavy graph (edge count ∝ N) at 1x/3x/10x the
-sf0.1 document count, both forms INTERLEAVED (min of N alternating
-pairs), exact-equality check at each size (integer sums are
-order-independent — the two forms must agree bit-for-bit), then the
-(N, seconds) table plus the growth slope per form.
+sf0.1 document count, both forms as the two arms of one cell — the
+driver's exact-equality check at each size (integer sums are
+order-independent — the two forms must agree bit-for-bit), then
+interleaved timing and the growth slope per form. A second cell sweeps
+the REAL registered caller's graph (the symmetrized customer↔supplier
+trade graph) over the sf0.001 / sf0.01 / sf0.1 testdata. Both run
+PR_ITERS iterations, and each arm's timing covers construction AND
+execution: both forms do real work in eager localCheckpoints during
+construction (the adjacency grouping / the edge+deg materializations),
+so timing only the final action would exclude exactly the stage the
+forms differ in.
 
-Run:  python scripts/pagerank_scale_ab.py
-      AB_MULTS=1,3 AB_RUNS=3 python scripts/pagerank_scale_ab.py
+Run:  python scripts/ab.py pagerank_hub_graph pagerank_supplier_graph
 """
 
 from __future__ import annotations
 
-import math
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from scale_soak import build_corpus  # noqa: E402
-
-from pyspark.sql import DataFrame  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from network_iq_spark.operators.graph import (  # noqa: E402
+from ab import Cell
+from network_iq_spark.operators.graph import (
     PR_DAMP_DEN,
     PR_DAMP_NUM,
     PR_ITERS,
     PR_MASS,
     pagerank_int,
 )
+from network_iq_spark.queries.media import _CANON_TESTDATA_ROOT
+from scale_soak import build_corpus, hub_edges
 
 
 def pagerank_int_joinform(
@@ -81,20 +82,6 @@ def pagerank_int_joinform(
     return ranks
 
 
-def _hub_edges(spark, d: str) -> DataFrame:
-    """scale_soak's hub-heavy graph: docs ↔ their source (20 hubs),
-    symmetrized — edge count ∝ N."""
-    from network_iq_spark.sources import load_table
-
-    docs = load_table(spark, d, "documents").select(
-        (F.col("doc_id") * 2).alias("src"),
-        (F.xxhash64("source") % 1000 * 2 + 1).alias("dst"),
-    )
-    return docs.union(
-        docs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
 def _supplier_edges(spark, d: str) -> DataFrame:
     """The registered supplier_pagerank edge pipeline verbatim
     (queries/extras.py): symmetrized customer↔supplier trade graph."""
@@ -120,82 +107,24 @@ def _supplier_edges(spark, d: str) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
-def main() -> None:
-    from network_iq_spark.session import get_spark
+ARMS = {
+    "adjacency": lambda spark, edges: pagerank_int(edges),
+    "join": lambda spark, edges: pagerank_int_joinform(edges),
+}
 
-    mults = [int(x) for x in os.environ.get("AB_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("AB_RUNS", "3"))
-    iters = int(os.environ.get("AB_ITERS", "5"))
-    spark = get_spark(app_name="pagerank-scale-ab")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timed(make) -> float:
-        # time construction AND execution: both forms do real work in
-        # eager localCheckpoints during construction (the adjacency
-        # grouping / the edge+deg materializations), so timing only the
-        # final action would exclude exactly the stage the forms differ in
-        t0 = time.perf_counter()
-        make().write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    forms = {"adjacency": pagerank_int, "join": pagerank_int_joinform}
-    results: dict[str, dict[int, float]] = {f: {} for f in forms}
-    # AB_REAL=1: sweep the REAL registered caller's graph (the symmetrized
-    # customer↔supplier trade graph) across the sf dirs instead of the
-    # synthetic hub graph — mults become sf-milli values (1=sf0.001, ...)
-    real = bool(os.environ.get("AB_REAL"))
-    if real:
-        mults = [int(x) for x in os.environ.get("AB_MULTS", "1,10,100").split(",")]
-    for mult in mults:
-        if real:
-            d = f"/root/testdata/sf{mult / 1000:g}"
-            edges = _supplier_edges(spark, d)
-        else:
-            d = build_corpus(mult)
-            edges = _hub_edges(spark, d)
-
-        adj_rows = sorted(map(tuple, pagerank_int(edges, n_iters=iters).collect()))
-        join_rows = sorted(
-            map(tuple, pagerank_int_joinform(edges, n_iters=iters).collect())
-        )
-        assert adj_rows == join_rows, f"x{mult}: rank sets differ"
-
-        best = {f: float("inf") for f in forms}
-        for i in range(runs):
-            order = list(forms) if i % 2 == 0 else list(reversed(list(forms)))
-            for form in order:
-                spark._jvm.System.gc()
-                fn = forms[form]
-                best[form] = min(
-                    best[form], timed(lambda: fn(edges, n_iters=iters))
-                )
-        for form in forms:
-            results[form][mult] = best[form]
-        label = f"sf{mult / 1000:g}" if real else f"x{mult} ({10000 * mult} sym edges)"
-        print(
-            f"{label}: "
-            + " ".join(f"{f}={best[f]:.2f}s" for f in forms)
-            + "  (exact-equal ranks: yes)",
-            flush=True,
-        )
-
-    print("\n| form | " + " | ".join(f"{m}x" for m in mults) + " | slope |")
-    for form in forms:
-        ts = [results[form][m] for m in mults]
-        if len(mults) >= 2:
-            xs = [math.log(m) for m in mults]
-            ys = [math.log(t) for t in ts]
-            n = len(xs)
-            sx, sy = sum(xs), sum(ys)
-            sxx = sum(x * x for x in xs)
-            sxy = sum(x * y for x, y in zip(xs, ys))
-            slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-        else:
-            slope = float("nan")
-        print(
-            f"| {form} | " + " | ".join(f"{t:.2f}s" for t in ts) + f" | {slope:.2f} |"
-        )
-
-
-if __name__ == "__main__":
-    main()
+CELLS = [
+    Cell(
+        "pagerank_hub_graph",
+        (1, 3, 10),
+        lambda spark, m: hub_edges(spark, build_corpus(m)),
+        ARMS,
+    ),
+    Cell(
+        "pagerank_supplier_graph",
+        (0.001, 0.01, 0.1),
+        lambda spark, sf: _supplier_edges(
+            spark, os.path.join(_CANON_TESTDATA_ROOT, f"sf{sf:g}")
+        ),
+        ARMS,
+    ),
+]

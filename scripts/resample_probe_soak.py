@@ -7,19 +7,15 @@ must stay flat-ish as history grows 10x (the index scan is the at-rest
 side's sequential read; candidate work is bounded by the batch), recall
 1.0 and zero false positives at every scale.
 
-Run: python scripts/resample_probe_soak.py   (prints the docs/SCALE.md
-row to stdout, per-scale lines to stderr)
+Run: python scripts/ab.py incremental_resampled_dedup
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE = 2_000
 BATCH = 40  # decimations of history clips 0..39 — constant across scales
@@ -35,63 +31,33 @@ def _dec(s: list[int]) -> list[int]:
     return [int((s[2 * k] + s[2 * k + 1]) / 2) for k in range(len(s) // 2)]
 
 
-def _fit(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
-    )
+def _prepare(spark, m):
+    schema = "media_id bigint, s array<int>"
+    hist = spark.createDataFrame([(i, _vals(i, 64)) for i in range(BASE * m)], schema)
+    # the index is the AT-REST side: materialize it outside the timed
+    # runs (a deployment reads it back bucketed by key)
+    idx = D.resample_index(hist, factor=2).localCheckpoint()
+    batch = [(i + TWIN_OFF, _dec(_vals(i, 64))) for i in range(BATCH)]
+    return spark.createDataFrame(batch, schema).localCheckpoint(), idx
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="resample-probe-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    batch_rows = [(i + TWIN_OFF, _dec(_vals(i, 64))) for i in range(BATCH)]
+def _check(data, rows):
     want = {(i + TWIN_OFF, i): ("batch_resampled", 32) for i in range(BATCH)}
-    bdf = None
+    got = {(r.new_id, r.old_id): (r.role, r.resampled_n) for r in rows}
+    assert got == want, (len(set(got) - set(want)), len(set(want) - set(got)))
+    return "1.00 / 0 FP"
 
-    ts = []
-    for m in mults:
-        hist = spark.createDataFrame(
-            [(i, _vals(i, 64)) for i in range(BASE * m)],
-            "media_id bigint, s array<int>",
-        )
-        # the index is the AT-REST side: materialize it outside the
-        # timed loop (a deployment reads it back bucketed by key)
-        idx = D.resample_index(hist, factor=2).localCheckpoint()
-        if bdf is None:
-            bdf = spark.createDataFrame(
-                batch_rows, "media_id bigint, s array<int>"
-            ).localCheckpoint()
-        best, got = float("inf"), None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            got = {
-                (r.new_id, r.old_id): (r.role, r.resampled_n)
-                for r in D.incremental_resampled_dedup(
-                    bdf, idx, factor=2
-                ).collect()
-            }
-            best = min(best, time.perf_counter() - t0)
-        assert got == want, (m, len(set(got) - set(want)), len(set(want) - set(got)))
-        ts.append(best)
-        print(
-            f"x{m:<3d} incremental_resampled_dedup {best:7.2f}s "
-            f"(history {BASE * m}, batch {BATCH}, all recovered, 0 FP)",
-            file=sys.stderr,
-        )
-    print(
-        "| `incremental_resampled_dedup` (fixed 40-clip batch vs growing index) | "
-        + " | ".join(f"{t:.2f} s" for t in ts)
-        + f" | **{_fit(mults, ts):.2f}** | 1.00 / 0 FP at every scale |"
+
+CELLS = [
+    Cell(
+        "incremental_resampled_dedup",
+        (1, 3, 10),
+        _prepare,
+        {
+            "fixed 40-clip batch vs growing index": lambda spark, d: (
+                D.incremental_resampled_dedup(d[0], d[1], factor=2)
+            )
+        },
+        _check,
     )
-
-
-if __name__ == "__main__":
-    main()
+]

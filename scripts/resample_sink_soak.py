@@ -13,22 +13,19 @@ admitted) — so the soak also asserts the dedup decision stays correct
 at every scale, including under replay (re-running the same batch_id
 is the sink's strictly-earlier-batch probe path).
 
-Run: python scripts/resample_sink_soak.py   (writes under /tmp, nothing
-in the repo; prints the docs/SCALE.md row to stdout, per-scale lines to
-stderr)
+Batch 0 (the at-rest index) and the first write of batch 1 run
+untimed; every checked and timed run is a replay of batch 1.
+
+Run: python scripts/ab.py incremental_resample_dedup_sink   (sink state under .soak/)
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import os
-import shutil
-import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell, state_dir
+from network_iq_spark.streaming.dedup import incremental_resample_dedup_sink
 
 BASE_CLIPS = 2_000
 BATCH_CLIPS = 400
@@ -58,58 +55,31 @@ def batch_rows():
     return rows
 
 
-def main() -> None:
-    from network_iq_spark.session import get_spark
-    from network_iq_spark.streaming.dedup import incremental_resample_dedup_sink
-
-    spark = get_spark(app_name="resample-sink-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
+def _prepare(spark, m):
+    root = state_dir(f"resample_sink_soak_x{m:g}")
+    corpus = os.path.join(root, "corpus")
+    sink = incremental_resample_dedup_sink(corpus, os.path.join(root, "index"), factor=2)
     schema = "media_id bigint, s array<int>"
+    sink(spark.createDataFrame(history_rows(m), schema), 0)
     batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
-    want_admitted = BATCH_CLIPS // 2
-
-    ts = []
-    for m in mults:
-        root = tempfile.mkdtemp(prefix=f"resample_sink_soak_x{m}_")
-        corpus = os.path.join(root, "corpus")
-        index = os.path.join(root, "index")
-        sink = incremental_resample_dedup_sink(corpus, index, factor=2)
-        # untimed: materialize the at-rest index (batch 0)
-        sink(spark.createDataFrame(history_rows(m), schema), 0)
-        # timed: the fixed probe batch as batch 1; replays are the
-        # strictly-earlier-batch probe path, so min-of-N times the
-        # identical work and asserts replay convergence
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            sink(batch, 1)
-            best = min(best, time.perf_counter() - t0)
-        admitted = (
-            spark.read.parquet(corpus).filter("media_id >= 10000000").count()
-        )
-        assert admitted == want_admitted, (m, admitted, want_admitted)
-        ts.append(best)
-        print(
-            f"x{m:<3d} incremental_resample_dedup_sink batch {best:7.2f}s "
-            f"(admitted {admitted}/{BATCH_CLIPS}, history {BASE_CLIPS * m})",
-            file=sys.stderr,
-        )
-        shutil.rmtree(root, ignore_errors=True)
-
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
-    )
-    cells = " | ".join(f"{t:.2f} s" for t in ts)
-    print(
-        f"| `incremental_resample_dedup_sink` (fixed 400-clip batch, "
-        f"at-rest index) | {cells} | **{e:.2f}** |"
+    sink(batch, 1)
+    return sink, batch, lambda: (
+        spark.read.parquet(corpus).filter("media_id >= 10000000").count()
     )
 
 
-if __name__ == "__main__":
-    main()
+def _check(data, _):
+    admitted = data[2]()
+    assert admitted == BATCH_CLIPS // 2, (admitted, BATCH_CLIPS // 2)
+    return f"admitted {admitted}/{BATCH_CLIPS}"
+
+
+CELLS = [
+    Cell(
+        "incremental_resample_dedup_sink",
+        (1, 3, 10),
+        _prepare,
+        {"fixed 400-clip batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
+        _check,
+    )
+]

@@ -18,18 +18,13 @@ gets a DERIVATIVE-OF-DERIVATIVE chain edge (a re-encode of a re-encode
 Each scale asserts the EXACT expected resolution rows (membership,
 axis count, min-label keeper), not just counts.
 
-Run: python scripts/resolution_soak.py   (prints the docs/SCALE.md
-rows to stdout, per-scale lines to stderr)
+Run: python scripts/ab.py resolution_from_edges
 """
 
 from __future__ import annotations
 
-import math
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.queries.media import _resolution_from_edges
 
 BASE = 40_000  # edges are the input grain, so the soak scales pair volume
 TWIN_EVERY = 50  # 2% planted duplicate families
@@ -59,55 +54,32 @@ def edge_rows(mult: int):
     return edges, expect
 
 
-def main() -> None:
-    from network_iq_spark.queries.media import _resolution_from_edges
-    from network_iq_spark.session import get_spark
+def _prepare(spark, mult):
+    edges, expect = edge_rows(mult)
+    return spark.createDataFrame(edges, "src bigint, dst bigint, axis string"), expect
 
-    spark = get_spark(app_name="resolution-soak")
-    spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up: one untimed pass absorbs JVM/codegen startup so the 1x
-    # cell measures the plan (the transform_soak discipline)
-    w_edges, w_expect = edge_rows(1)
-    wdf = spark.createDataFrame(w_edges, "src bigint, dst bigint, axis string")
-    assert {
-        r.keep_id: (r.n_members, r.n_axes, r.n_dropped)
-        for r in _resolution_from_edges(wdf).collect()
-    } == w_expect
-
-    results = []
-    for mult in (1, 3, 10):
-        edges, expect = edge_rows(mult)
-        df = spark.createDataFrame(
-            edges, "src bigint, dst bigint, axis string"
-        )
-        t0 = time.perf_counter()
-        got = {
-            r.keep_id: (r.n_members, r.n_axes, r.n_dropped)
-            for r in _resolution_from_edges(df).collect()
-        }
-        dt = time.perf_counter() - t0
-        assert got == expect, (
-            f"mult={mult}: {len(got)} clusters vs {len(expect)} expected; "
-            f"first diffs: "
-            f"{dict(list({k: (got.get(k), expect.get(k)) for k in set(got) ^ set(expect) or set(list(expect)[:3])}.items())[:3])}"
-        )
-        results.append((mult, len(edges), dt))
-        print(
-            f"mult={mult}: {len(edges)} edges -> {len(expect)} clusters "
-            f"exact in {dt:.2f} s",
-            file=sys.stderr,
-        )
-
-    (m1, e1, t1), _, (m10, e10, t10) = results
-    expo = math.log(t10 / t1) / math.log(e10 / e1)
-    cells = " | ".join(f"{t:.2f} s" for _, _, t in results)
-    print(
-        f"| `_resolution_from_edges` (2 % planted families, 1-3 axes + "
-        f"chains) | {cells} | **{expo:.2f}** | exact clusters at every "
-        f"scale |"
+def _check(data, rows):
+    expect = data[1]
+    got = {r.keep_id: (r.n_members, r.n_axes, r.n_dropped) for r in rows}
+    diff = {k: (got.get(k), expect.get(k)) for k in set(got) ^ set(expect)}
+    assert got == expect, (
+        f"{len(got)} clusters vs {len(expect)} expected; first diffs: "
+        f"{dict(list(diff.items())[:3])}"
     )
+    return "exact clusters"
 
 
-if __name__ == "__main__":
-    main()
+CELLS = [
+    Cell(
+        "resolution_from_edges",
+        (1, 3, 10),
+        _prepare,
+        {
+            "2 % planted families, 1-3 axes + chains": lambda spark, d: (
+                _resolution_from_edges(d[0])
+            )
+        },
+        _check,
+    )
+]

@@ -10,11 +10,12 @@ representative family queries at each size, and print the (N, seconds)
 runtime curve plus the fitted growth exponent per family
 (log t = a + e * log N  =>  e ~ 1 is linear).
 
-Corpora land under .soak/ (gitignored); registry correctness and bench
+Each query is one cell over the shared corpora, which land under .soak/
+(gitignored) and are reused across cells; registry correctness and bench
 continue to use the read-only driver testdata exclusively. Run with:
 
-    python scripts/scale_soak.py            # 1x 3x 10x
-    SOAK_MULTS=1,3 python scripts/scale_soak.py
+    python scripts/ab.py semantic_dedup semantic_dedup_autocells
+    python scripts/ab.py                    # lists every cell
 """
 
 from __future__ import annotations
@@ -22,17 +23,17 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import SOAK_DIR, Cell
+from network_iq_spark.operators import similarity as S
+from network_iq_spark.registry import QUERIES
+from network_iq_spark.sources import load_table
 
 BASE_DOCS, BASE_VECS = 5_000, 2_000  # sf0.1 row counts
-SOAK_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".soak")
 QUERIES_UNDER_TEST = [
     "minhash_lsh_pairs_prod",
     "dedup_clusters",
@@ -193,60 +194,50 @@ def build_corpus(mult: int) -> str:
     return out
 
 
-def main() -> None:
-    from network_iq_spark.operators import similarity as S
-    from network_iq_spark.registry import QUERIES
-    from network_iq_spark.session import get_spark
-    from network_iq_spark.sources import load_table
+# the registered semantic_dedup pins n_cells for its DuckDB oracle; the
+# scale path passes n_cells=None (auto_n_cells: cells ∝ N). Soak BOTH so
+# the curve shows why the discipline matters, not just that it exists.
+def _semantic_auto(spark, d):
+    emb = load_table(spark, d, "embeddings")
+    return S.semantic_dedup(emb, n_cells=None, threshold=0.30)
 
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-    spark = get_spark(app_name="network-iq-spark-soak")
-    spark.sparkContext.setLogLevel("WARN")
 
-    # the registered semantic_dedup pins n_cells for its DuckDB oracle; the
-    # scale path passes n_cells=None (auto_n_cells: cells ∝ N). Soak BOTH so
-    # the curve shows why the discipline matters, not just that it exists.
-    def _semantic_auto(spark, d):
-        emb = load_table(spark, d, "embeddings")
-        return S.semantic_dedup(emb, n_cells=None, threshold=0.30)
+def hub_edges(spark, d):
+    """Iterative tier on a hub-heavy graph: docs ↔ their source (20 hubs),
+    symmetrized — edge count ∝ N, so the per-iteration join/agg scales
+    with the corpus like the real trade graph does."""
+    from pyspark.sql import functions as F
 
-    # iterative tier on a hub-heavy graph: docs ↔ their source (20 hubs),
-    # symmetrized — edge count ∝ N, so the per-iteration join/agg scales
-    # with the corpus like the real trade graph does
-    def _pagerank(spark, d):
-        from pyspark.sql import functions as F
+    docs = load_table(spark, d, "documents").select(
+        (F.col("doc_id") * 2).alias("src"),
+        (F.xxhash64("source") % 1000 * 2 + 1).alias("dst"),
+    )
+    return docs.union(
+        docs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
-        from network_iq_spark.operators.graph import pagerank_int
 
-        docs = load_table(spark, d, "documents").select(
-            (F.col("doc_id") * 2).alias("src"),
-            (F.xxhash64("source") % 1000 * 2 + 1).alias("dst"),
-        )
-        edges = docs.union(
-            docs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        return pagerank_int(edges, n_iters=5)
+def _pagerank(spark, d):
+    from network_iq_spark.operators.graph import pagerank_int
 
-    plans = {q: QUERIES[q] for q in QUERIES_UNDER_TEST}
-    plans["semantic_dedup_autocells"] = _semantic_auto
-    plans["pagerank_int_5iters"] = _pagerank
+    return pagerank_int(hub_edges(spark, d), n_iters=5)
 
-    # ---- incremental tier: search-only against AT-REST artifacts -------
-    # The artifacts (fingerprint table, LSH bands+sets, IVF centroids +
-    # inverted file) are built and written ONCE per corpus size, outside
-    # the timed loop — exactly what a deployment persists. The timed plans
-    # read them back and process a FIXED-size batch, so the curve isolates
-    # the per-cycle cost from the one-time index build.
-    def _prepare_incremental(d: str) -> None:
-        from pyspark.sql import functions as F
 
-        from network_iq_spark.operators import dedup as D
-        from network_iq_spark.operators import text as T
+# ---- incremental tier: search-only against AT-REST artifacts -------
+# The artifacts (fingerprint table, LSH bands+sets, IVF centroids +
+# inverted file) are built and written ONCE per corpus size, outside
+# the timed loop — exactly what a deployment persists. The timed plans
+# read them back and process a FIXED-size batch, so the curve isolates
+# the per-cycle cost from the one-time index build.
+def _prepare_incremental(spark, mult: int) -> str:
+    from pyspark.sql import functions as F
 
-        art = os.path.join(d, "art")
-        if os.path.isdir(art):
-            return
+    from network_iq_spark.operators import dedup as D
+    from network_iq_spark.operators import text as T
+
+    d = build_corpus(mult)
+    art = os.path.join(d, "art")
+    if not os.path.isdir(art):
         docs = load_table(spark, d, "documents")
         n_docs = docs.count()
         hist_docs = docs.filter(F.col("doc_id") < n_docs - BATCH_DOCS)
@@ -265,25 +256,28 @@ def main() -> None:
         cent.write.parquet(f"{art}.tmp/ivf_cent")
         inv.write.parquet(f"{art}.tmp/ivf_inv")
         shutil.move(art + ".tmp", art)
+    return d
 
-    # media twin of the at-rest artifacts: the dHash segment index over the
-    # history rasters (hashed straight from the quantized rasters — the
-    # decoders are bit-exact, so dHash(raster) == dHash(decoded)); kept in
-    # its own dir so pre-existing art/ caches stay valid
-    _IMG_QUANT = (
-        "transform(embedding, x -> cast(floor(((least(greatest("
-        "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
-        ") as int))"
-    )
 
-    def _prepare_media_index(d: str) -> None:
-        from pyspark.sql import functions as F
+# media twin of the at-rest artifacts: the dHash segment index over the
+# history rasters (hashed straight from the quantized rasters — the
+# decoders are bit-exact, so dHash(raster) == dHash(decoded)); kept in
+# its own dir so pre-existing art/ caches stay valid
+_IMG_QUANT = (
+    "transform(embedding, x -> cast(floor(((least(greatest("
+    "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
+    ") as int))"
+)
 
-        from network_iq_spark.operators import dedup as D
 
-        art = os.path.join(d, "art_media")
-        if os.path.isdir(art):
-            return
+def _prepare_media_index(spark, mult: int) -> str:
+    from pyspark.sql import functions as F
+
+    from network_iq_spark.operators import dedup as D
+
+    d = build_corpus(mult)
+    art = os.path.join(d, "art_media")
+    if not os.path.isdir(art):
         emb = load_table(spark, d, "embeddings")
         n_vecs = emb.count()
         hist = emb.filter(F.col("vec_id") < n_vecs - BATCH_VECS).select(
@@ -295,124 +289,93 @@ def main() -> None:
             f"{art}.tmp/img_index"
         )
         shutil.move(art + ".tmp", art)
-
-    def _inc_media(spark, d):
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from network_iq_spark.operators import dedup as D
-        from network_iq_spark.operators.multimodal import decode_image, encode_png
-
-        emb = load_table(spark, d, "embeddings")
-        n_vecs = emb.count()
-        batch_px = emb.filter(F.col("vec_id") >= n_vecs - BATCH_VECS).select(
-            F.col("vec_id").alias("media_id"), F.expr(_IMG_QUANT).alias("px")
-        )
-
-        def roundtrip(it):
-            for pdf in it:
-                out = []
-                for p in pdf["px"]:
-                    img = np.asarray(list(p), dtype=np.uint8).reshape(8, 8)
-                    out.append([int(v) for v in decode_image(encode_png(img)).reshape(-1)])
-                yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
-
-        batch = batch_px.mapInPandas(
-            roundtrip, schema="media_id bigint, px array<int>"
-        ).select("media_id", D.image_dhash("px").alias("dhash"))
-        index = spark.read.parquet(os.path.join(d, "art_media", "img_index"))
-        return D.incremental_hamming_dedup(batch, index, "dhash", 6, n_bits=56)
-
-    def _inc_exact(spark, d):
-        from pyspark.sql import functions as F
-
-        from network_iq_spark.operators import dedup as D
-        from network_iq_spark.operators import text as T
-
-        docs = load_table(spark, d, "documents")
-        n_docs = docs.count()
-        batch = T.fingerprint(docs.filter(F.col("doc_id") >= n_docs - BATCH_DOCS))
-        hist = spark.read.parquet(os.path.join(d, "art", "fp_hist"))
-        return D.incremental_exact_dedup(batch, hist)
-
-    def _inc_near(spark, d):
-        from pyspark.sql import functions as F
-
-        from network_iq_spark.operators import dedup as D
-
-        docs = load_table(spark, d, "documents")
-        n_docs = docs.count()
-        batch = docs.filter(F.col("doc_id") >= n_docs - BATCH_DOCS)
-        bands = spark.read.parquet(os.path.join(d, "art", "lsh_bands"))
-        sets = spark.read.parquet(os.path.join(d, "art", "lsh_sets"))
-        return D.incremental_near_dup(batch, bands, sets, threshold=0.6)
-
-    def _inc_ann(spark, d):
-        from pyspark.sql import functions as F
-
-        emb = load_table(spark, d, "embeddings")
-        n_vecs = emb.count()
-        vecs = S.with_norm(
-            emb.select("vec_id", S.as_double_vec("embedding").alias("v"))
-        ).select("vec_id", "v", "norm")
-        hist = vecs.filter(F.col("vec_id") < n_vecs - BATCH_VECS)
-        batch = vecs.filter(F.col("vec_id") >= n_vecs - BATCH_VECS)
-        cent = spark.read.parquet(os.path.join(d, "art", "ivf_cent"))
-        inv = spark.read.parquet(os.path.join(d, "art", "ivf_inv"))
-        return S.ivf_search(
-            hist, batch, n_cells=0, nprobe=4, k=10, prebuilt=(cent, inv)
-        )
-
-    plans["incremental_exact_dedup_batch"] = _inc_exact
-    plans["incremental_near_dup_batch"] = _inc_near
-    plans["incremental_ann_batch"] = _inc_ann
-    plans["incremental_media_dedup_batch"] = _inc_media
-
-    only = os.environ.get("SOAK_ONLY")
-    if only:  # subset runs for newly-added families (full sweep untouched)
-        wanted = {s.strip() for s in only.split(",") if s.strip()}
-        unknown = wanted - set(plans)
-        if unknown:
-            raise SystemExit(f"SOAK_ONLY names not in the plan set: {unknown}")
-        plans = {q: f for q, f in plans.items() if q in wanted}
-
-    dirs = {m: build_corpus(m) for m in mults}
-    if any(q.startswith("incremental_") for q in plans):
-        for m in mults:
-            _prepare_incremental(dirs[m])
-    if "incremental_media_dedup_batch" in plans:
-        for m in mults:
-            _prepare_media_index(dirs[m])
-    results: dict[str, dict[int, float]] = {q: {} for q in plans}
-    for m in mults:
-        for q in plans:
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                plans[q](spark, dirs[m]).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            results[q][m] = best
-            print(f"x{m:<3d} {q:28s} {best:7.2f}s", file=sys.stderr)
-
-    # markdown table + fitted exponent (least squares on log-log)
-    header = "| query | " + " | ".join(f"{m}x ({BASE_DOCS*m//1000}k docs)" for m in mults) + " | exponent |"
-    print(header)
-    print("|" + "---|" * (len(mults) + 2))
-    for q in results:
-        ts = [results[q][m] for m in mults]
-        if len(mults) >= 2:
-            xs = [math.log(m) for m in mults]
-            ys = [math.log(t) for t in ts]
-            xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-            e = sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-                (x - xbar) ** 2 for x in xs
-            )
-        else:
-            e = float("nan")
-        cells = " | ".join(f"{t:.2f} s" for t in ts)
-        print(f"| `{q}` | {cells} | {e:.2f} |")
+    return d
 
 
-if __name__ == "__main__":
-    main()
+def _inc_media(spark, d):
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from network_iq_spark.operators import dedup as D
+    from network_iq_spark.operators.multimodal import decode_image, encode_png
+
+    emb = load_table(spark, d, "embeddings")
+    n_vecs = emb.count()
+    batch_px = emb.filter(F.col("vec_id") >= n_vecs - BATCH_VECS).select(
+        F.col("vec_id").alias("media_id"), F.expr(_IMG_QUANT).alias("px")
+    )
+
+    def roundtrip(it):
+        for pdf in it:
+            out = []
+            for p in pdf["px"]:
+                img = np.asarray(list(p), dtype=np.uint8).reshape(8, 8)
+                out.append([int(v) for v in decode_image(encode_png(img)).reshape(-1)])
+            yield pd.DataFrame({"media_id": pdf["media_id"], "px": out})
+
+    batch = batch_px.mapInPandas(
+        roundtrip, schema="media_id bigint, px array<int>"
+    ).select("media_id", D.image_dhash("px").alias("dhash"))
+    index = spark.read.parquet(os.path.join(d, "art_media", "img_index"))
+    return D.incremental_hamming_dedup(batch, index, "dhash", 6, n_bits=56)
+
+
+def _inc_exact(spark, d):
+    from pyspark.sql import functions as F
+
+    from network_iq_spark.operators import dedup as D
+    from network_iq_spark.operators import text as T
+
+    docs = load_table(spark, d, "documents")
+    n_docs = docs.count()
+    batch = T.fingerprint(docs.filter(F.col("doc_id") >= n_docs - BATCH_DOCS))
+    hist = spark.read.parquet(os.path.join(d, "art", "fp_hist"))
+    return D.incremental_exact_dedup(batch, hist)
+
+
+def _inc_near(spark, d):
+    from pyspark.sql import functions as F
+
+    from network_iq_spark.operators import dedup as D
+
+    docs = load_table(spark, d, "documents")
+    n_docs = docs.count()
+    batch = docs.filter(F.col("doc_id") >= n_docs - BATCH_DOCS)
+    bands = spark.read.parquet(os.path.join(d, "art", "lsh_bands"))
+    sets = spark.read.parquet(os.path.join(d, "art", "lsh_sets"))
+    return D.incremental_near_dup(batch, bands, sets, threshold=0.6)
+
+
+def _inc_ann(spark, d):
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, d, "embeddings")
+    n_vecs = emb.count()
+    vecs = S.with_norm(
+        emb.select("vec_id", S.as_double_vec("embedding").alias("v"))
+    ).select("vec_id", "v", "norm")
+    hist = vecs.filter(F.col("vec_id") < n_vecs - BATCH_VECS)
+    batch = vecs.filter(F.col("vec_id") >= n_vecs - BATCH_VECS)
+    cent = spark.read.parquet(os.path.join(d, "art", "ivf_cent"))
+    inv = spark.read.parquet(os.path.join(d, "art", "ivf_inv"))
+    return S.ivf_search(
+        hist, batch, n_cells=0, nprobe=4, k=10, prebuilt=(cent, inv)
+    )
+
+
+def _cell(name, arm, prepare=lambda spark, m: build_corpus(m)):
+    return Cell(name, (1, 3, 10), prepare, {"": arm})
+
+
+CELLS = (
+    [_cell(q, lambda spark, d, q=q: QUERIES[q](spark, d)) for q in QUERIES_UNDER_TEST]
+    + [
+        _cell("semantic_dedup_autocells", _semantic_auto),
+        _cell("pagerank_int_5iters", _pagerank),
+        _cell("incremental_exact_dedup_batch", _inc_exact, _prepare_incremental),
+        _cell("incremental_near_dup_batch", _inc_near, _prepare_incremental),
+        _cell("incremental_ann_batch", _inc_ann, _prepare_incremental),
+        _cell("incremental_media_dedup_batch", _inc_media, _prepare_media_index),
+    ]
+)

@@ -20,37 +20,38 @@ documented mitigations actually buy vs the naive plans:
   (operators/skew.py — no shuffle at all).
 
 Synthesizes events-like tables at 1x/3x/10x with HOT_FRACTION of rows on
-one key and the rest uniform over N_KEYS-1 keys, times each variant
-(min of RUNS), and prints per-variant (N, seconds) curves with fitted
-growth exponents — paste the table into docs/SCALE.md. Corpora land
-under .soak/ (gitignored). Run:
+one key and the rest uniform over N_KEYS-1 keys; each variant is one cell
+over the shared corpus (outputs differ between variants, so they are not
+arms of one A/B). The window variants end in a one-row digest (row count
+and the sum of every feature column) so the check never collects 4M
+rows; the join variants set their confs around their own collect.
+Corpora land under .soak/ (gitignored). Run:
 
-    python scripts/skew_soak.py             # 1x 3x 10x
-    SKEW_MULTS=1,3 python scripts/skew_soak.py
+    python scripts/ab.py skew_window_naive    # one of the seven skew_* cells
 """
 
 from __future__ import annotations
 
-import math
 import os
-import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import SOAK_DIR, Cell
+from network_iq_spark.operators.skew import (
+    salted_broadcast_join,
+    salted_sum_count,
+)
+from network_iq_spark.operators.windows import time_sliced_rolling
 
 BASE_ROWS = 400_000
 HOT_FRACTION = 0.5
 N_KEYS = 100
 ROLL_N = 100  # trailing-frame length for the window variants
 SALTS = 32
-RUNS = 2
-SOAK_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".soak"
-)
 
 
 def synth_skewed_events(n: int, seed: int = 11) -> pa.Table:
@@ -88,122 +89,83 @@ def build(mult: int) -> str:
     return p
 
 
-def main() -> None:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from network_iq_spark.operators.skew import (
-        salted_broadcast_join,
-        salted_sum_count,
+def _prepare(spark, mult):
+    ev = spark.read.parquet(build(mult))
+    dim = spark.range(N_KEYS).select(
+        F.col("id").alias("cell_id"), (F.col("id") % 7).alias("region")
     )
-    from network_iq_spark.operators.windows import time_sliced_rolling
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="skew-soak")
-    spark.sparkContext.setLogLevel("ERROR")
-    mults = [
-        int(x) for x in os.environ.get("SKEW_MULTS", "1,3,10").split(",")
-    ]
-
-    def timed(fn) -> float:
-        best = float("inf")
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    def with_confs(confs: dict, fn):
-        old = {k: spark.conf.get(k) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            return fn()
-        finally:
-            for k, v in old.items():
-                spark.conf.set(k, v)
-
-    curves: dict[str, list[tuple[int, float]]] = {}
-    for mult in mults:
-        path = build(mult)
-        ev = spark.read.parquet(path)
-        n = BASE_ROWS * mult
-        dim = (
-            spark.range(N_KEYS)
-            .select(
-                F.col("id").alias("cell_id"),
-                (F.col("id") % 7).alias("region"),
-            )
-        )
-
-        def naive_window():
-            w = (
-                Window.partitionBy("cell_id")
-                .orderBy("ts")
-                .rowsBetween(-(ROLL_N - 1), 0)
-            )
-            return ev.withColumn("rmean", F.avg("value").over(w))
-
-        def sliced_window():
-            return time_sliced_rolling(
-                ev, ["cell_id"], "ts", ["value"], n=ROLL_N, slice_fmt="yyyy-MM"
-            )
-
-        def naive_agg():
-            return ev.groupBy("cell_id").agg(
-                F.sum("value").alias("s"), F.count("*").alias("c")
-            )
-
-        def salted_agg():
-            return salted_sum_count(ev, ["cell_id"], "value", n_salts=SALTS)
-
-        smj_confs = {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.skewJoin.enabled": "false",
-        }
-        aqe_confs = {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-        }
-
-        def smj_join():
-            return ev.join(dim, "cell_id").groupBy("region").agg(
-                F.sum("value").alias("s")
-            )
-
-        variants = {
-            "window_naive": lambda: timed(naive_window),
-            "window_time_sliced": lambda: timed(sliced_window),
-            "agg_naive": lambda: timed(naive_agg),
-            "agg_salted": lambda: timed(salted_agg),
-            "join_smj_noaqe": lambda: with_confs(
-                smj_confs, lambda: timed(smj_join)
-            ),
-            "join_smj_aqe_skew": lambda: with_confs(
-                aqe_confs, lambda: timed(smj_join)
-            ),
-            "join_salted_bcast": lambda: timed(
-                lambda: salted_broadcast_join(
-                    ev, dim, "cell_id", n_salts=SALTS
-                )
-                .groupBy("region")
-                .agg(F.sum("value").alias("s"))
-            ),
-        }
-        for name, run in variants.items():
-            sec = run()
-            curves.setdefault(name, []).append((n, sec))
-            print(f"mult={mult:>2} n={n:>9,} {name:<20} {sec:7.2f}s", flush=True)
-
-    print("\n== fitted growth exponents (log t = a + e log N) ==")
-    for name, pts in curves.items():
-        if len(pts) >= 2:
-            xs = [math.log(p[0]) for p in pts]
-            ys = [math.log(max(p[1], 1e-3)) for p in pts]
-            e = np.polyfit(xs, ys, 1)[0]
-            curve = "  ".join(f"{s:.2f}s" for _, s in pts)
-            print(f"{name:<20} exponent={e:5.2f}   [{curve}]")
+    return ev, dim
 
 
-if __name__ == "__main__":
-    main()
+def _digest(df, cols):
+    return df.agg(F.count("*").alias("n"), *[F.sum(c) for c in cols])
+
+
+def _naive_window(spark, data):
+    w = Window.partitionBy("cell_id").orderBy("ts").rowsBetween(-(ROLL_N - 1), 0)
+    return _digest(data[0].withColumn("rmean", F.avg("value").over(w)), ["rmean"])
+
+
+def _sliced_window(spark, data):
+    out = time_sliced_rolling(
+        data[0], ["cell_id"], "ts", ["value"], n=ROLL_N, slice_fmt="yyyy-MM"
+    )
+    return _digest(out, ["value_rmean", "value_rstd", "value_rdiff"])
+
+
+def _check_window(data, rows):
+    n = data[0].count()
+    assert rows[0]["n"] == n, (rows[0]["n"], n)
+
+
+def _region_sums(ev, dim):
+    return ev.join(dim, "cell_id").groupBy("region").agg(F.sum("value").alias("s"))
+
+
+def _with_confs(spark, confs: dict, fn):
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        return fn()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _smj(skew_join: str):
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.enabled": skew_join,
+    }
+    return lambda spark, d: _with_confs(
+        spark, confs, lambda: _region_sums(*d).collect()
+    )
+
+
+def _cell(name, arm, check=None):
+    return Cell(name, (1, 3, 10), _prepare, {"": arm}, check)
+
+
+CELLS = [
+    _cell("skew_window_naive", _naive_window, _check_window),
+    _cell("skew_window_time_sliced", _sliced_window, _check_window),
+    _cell(
+        "skew_agg_naive",
+        lambda spark, d: d[0].groupBy("cell_id").agg(
+            F.sum("value").alias("s"), F.count("*").alias("c")
+        ),
+    ),
+    _cell(
+        "skew_agg_salted",
+        lambda spark, d: salted_sum_count(d[0], ["cell_id"], "value", n_salts=SALTS),
+    ),
+    _cell("skew_join_smj_noaqe", _smj("false")),
+    _cell("skew_join_smj_aqe_skew", _smj("true")),
+    _cell(
+        "skew_join_salted_bcast",
+        lambda spark, d: salted_broadcast_join(d[0], d[1], "cell_id", n_salts=SALTS)
+        .groupBy("region")
+        .agg(F.sum("value").alias("s")),
+    ),
+]

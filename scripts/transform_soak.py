@@ -11,19 +11,16 @@ clips with a consistent per-frame (dr, dc) crop cycling through
 (1,0)/(0,1)/(1,1). Each scale asserts recall 1.0 (pigeonhole /
 exact-key, not an S-curve) and zero false positives (exact verify).
 
-Run: python scripts/transform_soak.py   (prints the docs/SCALE.md rows
-to stdout, per-scale lines to stderr)
+Run: python scripts/ab.py resampled_derivative_pairs video_cropped_pairs \
+         video_resampled_pairs
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE = 2_000
 TWIN_EVERY = 50  # 2% planted twins
@@ -86,78 +83,45 @@ def video_rows(mult: int):
     return rows, want
 
 
-def _fit(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+def _cell(name, mk, plan, pair_cols, schema="media_id bigint, s array<int>"):
+    def prepare(spark, m):
+        rows, want = mk(m)
+        return spark.createDataFrame(rows, schema).localCheckpoint(), want
+
+    def check(data, rows):
+        # recall 1.0 and zero false positives, at every scale
+        want = data[1]
+        got = {(r[pair_cols[0]], r[pair_cols[1]]) for r in rows}
+        assert got == want, (len(got - want), len(want - got))
+        return "1.00 / 0 FP"
+
+    return Cell(
+        name,
+        (1, 3, 10),
+        prepare,
+        {"2 % planted twins": lambda spark, d: plan(d[0])},
+        check,
     )
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="transform-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    rows_out = []
-    for name, mk, plan, pair_cols in [
-        (
-            "resampled_derivative_pairs",
-            audio_rows,
-            lambda df: D.resampled_derivative_pairs(df, factor=2),
-            ("full_id", "resampled_id"),
-        ),
-        (
-            "video_cropped_pairs",
-            video_rows,
-            lambda df: D.video_cropped_pairs(df, frames=4, max_crop=1, side=4),
-            ("id_a", "id_b"),
-        ),
-        (
-            "video_resampled_pairs",
-            video_resample_rows,
-            lambda df: D.resampled_derivative_pairs(df, factor=2, stride=16),
-            ("full_id", "resampled_id"),
-        ),
-    ]:
-        ts = []
-        for m in mults:
-            rows, want = mk(m)
-            schema = (
-                "media_id bigint, w int, h int, px array<int>"
-                if name == "video_cropped_pairs"
-                else "media_id bigint, s array<int>"
-            )
-            df = spark.createDataFrame(rows, schema).localCheckpoint()
-            best, got = float("inf"), None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                got = {
-                    (r[pair_cols[0]], r[pair_cols[1]])
-                    for r in plan(df).collect()
-                }
-                best = min(best, time.perf_counter() - t0)
-            # recall 1.0 and zero false positives, at every scale
-            assert got == want, (
-                name, m, len(got - want), len(want - got),
-            )
-            ts.append(best)
-            print(
-                f"x{m:<3d} {name} {best:7.2f}s "
-                f"({len(want)} planted twins, all recovered, 0 FP)",
-                file=sys.stderr,
-            )
-        cells = " | ".join(f"{t:.2f} s" for t in ts)
-        rows_out.append(
-            f"| `{name}` (2 % planted twins) | {cells} "
-            f"| **{_fit(mults, ts):.2f}** | 1.00 / 0 FP at every scale |"
-        )
-    print("\n".join(rows_out))
-
-
-if __name__ == "__main__":
-    main()
+CELLS = [
+    _cell(
+        "resampled_derivative_pairs",
+        audio_rows,
+        lambda df: D.resampled_derivative_pairs(df, factor=2),
+        ("full_id", "resampled_id"),
+    ),
+    _cell(
+        "video_cropped_pairs",
+        video_rows,
+        lambda df: D.video_cropped_pairs(df, frames=4, max_crop=1, side=4),
+        ("id_a", "id_b"),
+        "media_id bigint, w int, h int, px array<int>",
+    ),
+    _cell(
+        "video_resampled_pairs",
+        video_resample_rows,
+        lambda df: D.resampled_derivative_pairs(df, factor=2, stride=16),
+        ("full_id", "resampled_id"),
+    ),
+]

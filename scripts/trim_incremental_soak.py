@@ -7,21 +7,21 @@ stay flat (token-collision probe, O(batch x collision), never a
 history rescan); the dedup/match decision is asserted at every scale,
 and sink replays ride the strictly-earlier-batch path.
 
-Run: python scripts/trim_incremental_soak.py   (writes under /tmp;
-prints the docs/SCALE.md rows to stdout, per-scale lines to stderr)
+Batch 0 (the history) and the first write of batch 1 run untimed; every
+checked and timed sink run is a replay of batch 1.
+
+Run: python scripts/ab.py incremental_trimmed_dedup incremental_trim_dedup_sink
+     (sink state under .soak/)
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import os
-import shutil
-import sys
-import tempfile
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell, state_dir
+from network_iq_spark.operators import dedup as D
+from network_iq_spark.streaming.dedup import incremental_trim_dedup_sink
 
 BASE_CLIPS = 2_000
 BATCH_CLIPS = 400
@@ -49,80 +49,56 @@ def batch_rows():
     return rows
 
 
-def _fit(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+SCHEMA = "media_id bigint, s array<int>"
+
+
+def _prepare_probe(spark, m):
+    # at-rest index materialized outside the timed runs
+    toks, seqs = D.trim_index(spark.createDataFrame(history_rows(m), SCHEMA))
+    batch = spark.createDataFrame(batch_rows(), SCHEMA).localCheckpoint()
+    return batch, toks.localCheckpoint(), seqs.localCheckpoint()
+
+
+def _check_probe(data, rows):
+    assert len(rows) == BATCH_CLIPS // 2, (len(rows), BATCH_CLIPS // 2)
+    return f"matched {len(rows)}/{BATCH_CLIPS}"
+
+
+def _prepare_sink(spark, m):
+    root = state_dir(f"trim_sink_soak_x{m:g}")
+    paths = [os.path.join(root, p) for p in ("corpus", "toks", "seqs")]
+    sink = incremental_trim_dedup_sink(*paths)
+    sink(spark.createDataFrame(history_rows(m), SCHEMA), 0)
+    batch = spark.createDataFrame(batch_rows(), SCHEMA).localCheckpoint()
+    sink(batch, 1)
+    return sink, batch, lambda: (
+        spark.read.parquet(paths[0]).filter("media_id >= 10000000").count()
     )
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-    from network_iq_spark.streaming.dedup import incremental_trim_dedup_sink
+def _check_sink(data, _):
+    admitted = data[2]()
+    assert admitted == BATCH_CLIPS - BATCH_CLIPS // 2, admitted
+    return f"admitted {admitted}/{BATCH_CLIPS}"
 
-    spark = get_spark(app_name="trim-incremental-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
 
-    schema = "media_id bigint, s array<int>"
-    batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
-    want_dropped = BATCH_CLIPS // 2
-
-    probe_ts, sink_ts = [], []
-    for m in mults:
-        hist = spark.createDataFrame(history_rows(m), schema)
-        # --- probe: at-rest index materialized outside the timed loop
-        toks, seqs = D.trim_index(hist)
-        toks, seqs = toks.localCheckpoint(), seqs.localCheckpoint()
-        best, matched = float("inf"), None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            matched = (
-                D.incremental_trimmed_dedup(batch, toks, seqs)
-                .select("new_id")
-                .distinct()
-                .count()
+CELLS = [
+    Cell(
+        "incremental_trimmed_dedup",
+        (1, 3, 10),
+        _prepare_probe,
+        {
+            "fixed 400-clip batch vs growing index": lambda spark, d: (
+                D.incremental_trimmed_dedup(*d).select("new_id").distinct()
             )
-            best = min(best, time.perf_counter() - t0)
-        assert matched == want_dropped, (m, matched, want_dropped)
-        probe_ts.append(best)
-        print(
-            f"x{m:<3d} incremental_trimmed_dedup {best:7.2f}s "
-            f"(matched {matched}/{BATCH_CLIPS}, history {BASE_CLIPS * m})",
-            file=sys.stderr,
-        )
-        # --- sink: batch 0 = history (untimed), batch 1 = fixed probe
-        root = tempfile.mkdtemp(prefix=f"trim_sink_soak_x{m}_")
-        paths = [os.path.join(root, p) for p in ("corpus", "toks", "seqs")]
-        sink = incremental_trim_dedup_sink(*paths)
-        sink(hist, 0)
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            sink(batch, 1)
-            best = min(best, time.perf_counter() - t0)
-        admitted = (
-            spark.read.parquet(paths[0]).filter("media_id >= 10000000").count()
-        )
-        assert admitted == BATCH_CLIPS - want_dropped, (m, admitted)
-        sink_ts.append(best)
-        print(
-            f"x{m:<3d} incremental_trim_dedup_sink batch {best:7.2f}s "
-            f"(admitted {admitted}/{BATCH_CLIPS})",
-            file=sys.stderr,
-        )
-        shutil.rmtree(root, ignore_errors=True)
-
-    for name, ts in (
-        ("incremental_trimmed_dedup` (fixed 400-clip batch vs growing index)", probe_ts),
-        ("incremental_trim_dedup_sink` (fixed 400-clip batch, at-rest index)", sink_ts),
-    ):
-        cells = " | ".join(f"{t:.2f} s" for t in ts)
-        print(f"| `{name} | {cells} | **{_fit(mults, ts):.2f}** |")
-
-
-if __name__ == "__main__":
-    main()
+        },
+        _check_probe,
+    ),
+    Cell(
+        "incremental_trim_dedup_sink",
+        (1, 3, 10),
+        _prepare_sink,
+        {"fixed 400-clip batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
+        _check_sink,
+    ),
+]

@@ -14,19 +14,15 @@ asserts recall 1.0 (deterministic pigeonhole, not an S-curve) and zero
 false positives (exact verify), plus the TRUE (head, tail) on every
 recovered pair.
 
-Run: python scripts/trim_soak.py   (prints the docs/SCALE.md row to
-stdout, per-scale lines to stderr)
+Run: python scripts/ab.py trimmed_sequence_pairs trimmed_sequence_pairs_video
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from ab import Cell
+from network_iq_spark.operators import dedup as D
 
 BASE = 2_000
 TWIN_EVERY = 50  # 2% planted twins
@@ -81,62 +77,39 @@ def video_trim_rows(mult: int):
     return rows, want
 
 
-def _fit(mults, ts):
-    xs, ys = [math.log(m) for m in mults], [math.log(t) for t in ts]
-    xbar, ybar = sum(xs) / len(xs), sum(ys) / len(ys)
-    return sum((x - xbar) * (y - ybar) for x, y in zip(xs, ys)) / sum(
-        (x - xbar) ** 2 for x in xs
+def _cell(name, mk, arm, kwargs):
+    def prepare(spark, m):
+        rows, want = mk(m)
+        df = spark.createDataFrame(rows, "media_id bigint, s array<int>")
+        return df.localCheckpoint(), want
+
+    def check(data, rows):
+        # recall 1.0, zero false positives, true (head, tail), per scale
+        want = data[1]
+        got = {(r.full_id, r.trimmed_id): (r.head, r.tail) for r in rows}
+        assert got == want, (len(set(got) - set(want)), len(set(want) - set(got)))
+        return "1.00 / 0 FP"
+
+    return Cell(
+        name,
+        (1, 3, 10),
+        prepare,
+        {arm: lambda spark, d: D.trimmed_sequence_pairs(d[0], **kwargs)},
+        check,
     )
 
 
-def main() -> None:
-    from network_iq_spark.operators import dedup as D
-    from network_iq_spark.session import get_spark
-
-    spark = get_spark(app_name="trim-soak")
-    spark.sparkContext.setLogLevel("WARN")
-    mults = [int(m) for m in os.environ.get("SOAK_MULTS", "1,3,10").split(",")]
-    runs = int(os.environ.get("SOAK_RUNS", "2"))
-
-    for label, mk, kwargs in (
-        ("trimmed_sequence_pairs", trim_rows,
-         dict(max_trim=2, anchor=16)),
-        ("trimmed_sequence_pairs stride=16", video_trim_rows,
-         dict(max_trim=1, anchor=1, stride=VFRAME)),
-    ):
-        ts = []
-        for m in mults:
-            rows, want = mk(m)
-            df = spark.createDataFrame(
-                rows, "media_id bigint, s array<int>"
-            ).localCheckpoint()
-            best, got = float("inf"), None
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                got = {
-                    (r.full_id, r.trimmed_id): (r.head, r.tail)
-                    for r in D.trimmed_sequence_pairs(df, **kwargs).collect()
-                }
-                best = min(best, time.perf_counter() - t0)
-            # recall 1.0, zero false positives, true (head, tail), per scale
-            assert got == want, (
-                label, m,
-                len(set(got) - set(want)),
-                len(set(want) - set(got)),
-            )
-            ts.append(best)
-            print(
-                f"x{m:<3d} {label} {best:7.2f}s "
-                f"({len(want)} planted twins, all recovered with true "
-                f"(head, tail), 0 FP)",
-                file=sys.stderr,
-            )
-        print(
-            f"| `{label}` (2 % planted twins) | "
-            + " | ".join(f"{t:.2f} s" for t in ts)
-            + f" | **{_fit(mults, ts):.2f}** | 1.00 / 0 FP at every scale |"
-        )
-
-
-if __name__ == "__main__":
-    main()
+CELLS = [
+    _cell(
+        "trimmed_sequence_pairs",
+        trim_rows,
+        "2 % planted twins",
+        dict(max_trim=2, anchor=16),
+    ),
+    _cell(
+        "trimmed_sequence_pairs_video",
+        video_trim_rows,
+        "stride=16, 2 % planted twins",
+        dict(max_trim=1, anchor=1, stride=VFRAME),
+    ),
+]

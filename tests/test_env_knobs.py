@@ -1,17 +1,19 @@
-"""The engine reads a fixed, known set of environment variables. Every
-``os.environ.get``, ``os.environ[...]`` and ``os.getenv`` under
-``network_iq_spark/`` is found by walking the AST, so a new engine option
-read from the environment fails this test until it is added to ``KNOBS``,
-and shows up in the diff that adds it. A name passed through a function
-parameter resolves to that parameter's string default."""
+"""The engine and the hand-run scripts each read a fixed, known set of
+environment variables. Every ``os.environ.get``, ``os.environ[...]`` and
+``os.getenv`` under ``network_iq_spark/`` and ``scripts/`` is found by
+walking the AST, so a new option read from the environment fails this
+test until it is added to ``KNOBS`` or ``SCRIPT_KNOBS``, and shows up in
+the diff that adds it. A name passed through a function parameter
+resolves to that parameter's string default."""
 
 from __future__ import annotations
 
 import ast
 import os
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PACKAGE = os.path.join(ROOT, "network_iq_spark")
 
 KNOBS = {
     "SPARK_GRAFT_CPUS",
@@ -20,6 +22,19 @@ KNOBS = {
     "LLM_MODEL",
     "LLM_API_KEY",
     "NETWORKIQ_S3_PATH",
+}
+
+# the soak/A-B cells run through scripts/ab.py, which has no options; these
+# are the data dir and repeat counts of the profilers, the plan dumper and
+# the suite-context A/B
+SCRIPT_KNOBS = {
+    "SPARK_GRAFT_SF_DIR",
+    "SOLO_RUNS",
+    "PROFILE_RUNS",
+    "PLAN_OUT",
+    "PLAN_REPO",
+    "PLAN_SUFFIX",
+    "CTX_RUNS",
 }
 
 
@@ -80,16 +95,21 @@ def _reads(tree: ast.AST, where: str):
     yield from visit(tree, {})
 
 
-def test_engine_reads_only_the_known_env_knobs():
+@pytest.mark.parametrize(
+    "subdir, knobs",
+    [("network_iq_spark", KNOBS), ("scripts", SCRIPT_KNOBS)],
+    ids=["network_iq_spark", "scripts"],
+)
+def test_reads_only_the_known_env_knobs(subdir, knobs):
     found = set()
-    for dirpath, _, files in os.walk(PACKAGE):
+    for dirpath, _, files in os.walk(os.path.join(ROOT, subdir)):
         for fname in files:
             if fname.endswith(".py"):
                 path = os.path.join(dirpath, fname)
                 with open(path) as fh:
                     tree = ast.parse(fh.read(), path)
                 found |= set(_reads(tree, os.path.relpath(path, ROOT)))
-    assert found == KNOBS
+    assert found == knobs
 
 
 def test_reads_resolve_literals_subscripts_and_parameter_defaults():
