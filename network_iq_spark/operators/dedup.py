@@ -256,51 +256,6 @@ def containment_pairs_capped(
 MINHASH_P = 1_000_000_007
 
 
-def _affine(h: Column, i: int) -> Column:
-    return (F.lit(2 * i + 1) * h + F.lit(7 * i + 3)) % F.lit(MINHASH_P)
-
-
-def base_hash48(col: Column) -> Column:
-    """First 12 hex digits of md5 as a bigint. Spark uses ``conv``; the SQL
-    oracle reproduces the same value with per-nibble positional arithmetic
-    (DuckDB has no conv) — equal VALUES, different mechanics."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("bigint")
-
-
-def minhash_signatures(
-    sh: DataFrame, n_hashes: int = N_HASHES, id_col: str = "doc_id"
-) -> DataFrame:
-    """k integer minhashes per doc: ``min((aᵢ·h48(shingle)+bᵢ) mod P)``."""
-    h = base_hash48(F.col("shingle"))
-    aggs = [F.min(_affine(h, i)).alias(f"m{i}") for i in range(n_hashes)]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def lsh_band_buckets(
-    sig: DataFrame,
-    n_bands: int = N_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Band the signature: bucket = md5(m_{r·b} ‖ … ‖ m_{r·b+r−1}) per band.
-    Output long form (id, band, bucket) — the LSH join key. The (b, r)
-    choice sets the S-curve: P(candidate) = 1-(1-s^r)^b."""
-    bands = []
-    for b in range(n_bands):
-        cols = [
-            F.col(f"m{b * rows_per_band + j}").cast("string")
-            for j in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band"), F.md5(F.concat_ws("|", *cols)).alias("bucket")
-            )
-        )
-    return sig.select(
-        id_col, F.explode(F.array(*bands)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
 def minhash_sig(
     df: DataFrame, n_hashes: int, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

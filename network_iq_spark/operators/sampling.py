@@ -34,7 +34,7 @@ def _bp(rate: float) -> int:
 
 def hash_bucket(key: Column, salt: str = "") -> Column:
     """Stable pseudo-random bucket in [0, BUCKETS) from md5(key ‖ salt).
-    Same conv(substring(md5)) integer contract as dedup.base_hash48."""
+    Same conv(substring(md5)) integer contract as dedup.minhash_sig."""
     h = F.conv(
         F.substring(F.md5(F.concat(key.cast("string"), F.lit(salt))), 1, 12), 16, 10
     ).cast("bigint")

@@ -38,7 +38,7 @@ def positional_windows(
 ) -> DataFrame:
     """(id, pos, win_hash): every k-token window with its 1-based token
     position; the window key is md5 of the space-joined tokens (identical
-    digests in any engine — same contract as dedup.base_hash48). Docs with
+    digests in any engine — same contract as dedup.minhash_sig). Docs with
     fewer than k tokens emit nothing. Pure map + explode."""
     df = ensure_parallelism(df)
     out = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(

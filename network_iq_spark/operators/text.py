@@ -465,7 +465,7 @@ def winnowing_fingerprints(
     base = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(
         F.size("_toks") >= 2 + w
     )
-    # positional 3-gram 48-bit hashes (same digest as dedup.base_hash48)
+    # positional 3-gram 48-bit hashes (same digest as dedup.minhash_sig)
     hs = (
         "transform(sequence(0, size(_toks) - 3), i -> "
         "cast(conv(substring(md5(concat(_toks[i], ' ', _toks[i+1], ' ', "

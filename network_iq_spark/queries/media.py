@@ -94,6 +94,11 @@ _IMG_QUANT_EXPR_SQL = (
     "cast(x as double), -1.0D), 1.0D)) + 1.0D) / 2.0D * 255.0D + 0.5D"
     ") as int))"
 )
+# DuckDB twin of _img_grid: the quantized grid as base(media_id, px), the
+# source relation of the video twin plants and the dHash oracles
+_GRID_SQL = f"""base AS (
+      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
+    )"""
 
 
 def _emb_select(spark: SparkSession, sf_dir: str, expr: str, col: str) -> DataFrame:
@@ -311,35 +316,40 @@ _DHASH_TWIN_EVERY = 10
 _DHASH_TWIN_OFFSET = 1_000_000
 
 
-# shared CTE chain (quantize -> plant twins -> dHash -> bands -> candidate
-# pairs) reused verbatim by the pairs oracle and the clusters oracle
-_IMG_ND_CHAIN = f"""q0 AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    q AS (
-      SELECT media_id, px FROM q0
-      UNION ALL
-      SELECT media_id + {_DHASH_TWIN_OFFSET},
+# DuckDB twin of _dhash_twins over base(media_id, px)
+_DHASH_TWINS_SQL = f"""SELECT media_id + {_DHASH_TWIN_OFFSET} AS media_id,
              list_transform(generate_series(1, {_IMG_SIDE * _IMG_SIDE}),
                i -> CASE WHEN (i - 1) % 16 = 0
-                         THEN least(px[i] + 3, 255) ELSE px[i] END)
-      FROM q0 WHERE media_id % {_DHASH_TWIN_EVERY} = 0
-    ),
-    bits AS (
+                         THEN least(px[i] + 3, 255) ELSE px[i] END) AS px
+      FROM base WHERE media_id % {_DHASH_TWIN_EVERY} = 0"""
+
+
+def _dhash_ctes(src: str, bits: str, bands: str) -> str:
+    """DuckDB twin of image_dhash + hamming_index over ``src``(media_id,
+    px): ``bits``(media_id, dhash) and its pigeonhole segments
+    ``bands``(media_id, dhash, b, v) — one text for every dHash oracle."""
+    return f"""{bits} AS (
       SELECT media_id,
              CAST(SUM(CASE WHEN px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
                                    + (k % {_IMG_SIDE - 1}) + 2]
                            > px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
                                 + (k % {_IMG_SIDE - 1}) + 1]
                       THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS dhash
-      FROM q, LATERAL unnest(generate_series(0, {_IMG_SIDE * (_IMG_SIDE - 1) - 1}))
+      FROM {src}, LATERAL unnest(generate_series(0, {_IMG_SIDE * (_IMG_SIDE - 1) - 1}))
                 AS s(k)
       GROUP BY media_id
     ),
-    bands AS (
+    {bands} AS (
       SELECT media_id, dhash, b, (dhash >> (8 * b)) & 255 AS v
-      FROM bits, LATERAL unnest(generate_series(0, {_DHASH_MAX_HAMMING})) AS g(b)
-    ),
+      FROM {bits}, LATERAL unnest(generate_series(0, {_DHASH_MAX_HAMMING})) AS g(b)
+    )"""
+
+
+# shared CTE chain (quantize -> plant twins -> dHash -> bands -> candidate
+# pairs) reused verbatim by the pairs oracle and the clusters oracle
+_IMG_ND_CHAIN = f"""{_GRID_SQL},
+    q AS (SELECT media_id, px FROM base UNION ALL {_DHASH_TWINS_SQL}),
+    {_dhash_ctes("q", "bits", "bands")},
     cand AS (
       SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
              a.dhash AS da, b.dhash AS db
@@ -468,16 +478,14 @@ def _crop_tok_sql(b: int) -> str:
     )
 
 
-# Shared corpus CTEs: the planted-crop corpus (base 8×8 grids + every
-# 10th image's top-left crop) — ONE definition for both crop queries so
-# the plant can never desync between the pair scan and the incremental
-# probe (same rule as _crop_tok_sql / _IMG_QUANT_SQL).
-_CROP_CORPUS_SQL = f"""base AS (
+# The image corpus as base(media_id, w, h, px): the source relation of
+# every image twin plant (the DuckDB twin of _img_grid + a w/h select).
+_IMG_BASE_SQL = f"""base AS (
       SELECT vec_id AS media_id, 8 AS w, 8 AS h, {_IMG_QUANT_SQL} AS px
       FROM embeddings
-    ),
-    crops AS (
-      SELECT media_id + {_CROP_TWIN_OFFSET} AS media_id,
+    )"""
+# DuckDB twin of _crop_twins: every 10th image's top-left crop
+_CROP_TWINS_SQL = f"""SELECT media_id + {_CROP_TWIN_OFFSET} AS media_id,
              8 - dc AS w, 8 - dr AS h,
              flatten(list_transform(range(0, 8 - dr), i ->
                list_transform(range(0, 8 - dc), j ->
@@ -487,8 +495,13 @@ _CROP_CORPUS_SQL = f"""base AS (
                1 + (media_id // {_CROP_TWIN_EVERY}) % 2 AS dr,
                (media_id // {2 * _CROP_TWIN_EVERY}) % 3 AS dc
         FROM base WHERE media_id % {_CROP_TWIN_EVERY} = 0
-      )
-    ),
+      )"""
+# Shared corpus CTEs: the planted-crop corpus (base 8×8 grids + every
+# 10th image's top-left crop) — ONE definition for both crop queries so
+# the plant can never desync between the pair scan and the incremental
+# probe (same rule as _crop_tok_sql / _IMG_QUANT_SQL).
+_CROP_CORPUS_SQL = f"""{_IMG_BASE_SQL},
+    crops AS ({_CROP_TWINS_SQL}),
     imgs AS (SELECT * FROM base UNION ALL SELECT * FROM crops),
     toks AS (
       SELECT DISTINCT media_id, unnest({_crop_tok_sql(_CROP_BLOCK)}) AS tok
@@ -558,7 +571,13 @@ def _crop_corpus_from(img: DataFrame):
         F.lit(8).alias("h"),
         "px",
     )
-    crops = (
+    return base, _crop_twins(base)
+
+
+def _crop_twins(base: DataFrame) -> DataFrame:
+    """Planted top-left crops of every 10th image, with the cropped
+    (w, h). ``base`` needs (media_id, px)."""
+    return (
         base.filter(F.col("media_id") % _CROP_TWIN_EVERY == 0)
         .select(
             "media_id",
@@ -580,7 +599,6 @@ def _crop_corpus_from(img: DataFrame):
             ).alias("px"),
         )
     )
-    return base, crops
 
 
 @register(
@@ -665,6 +683,10 @@ _THUMB_KEY_SQL = (
     "md5(CAST({w} AS VARCHAR) || 'x' || CAST({h} AS VARCHAR) || ':' || "
     "array_to_string(list_transform({g}, x -> CAST(x AS VARCHAR)), ' '))"
 )
+# DuckDB twin of _thumb_twins over base(media_id, w, h, px)
+_THUMB_TWINS_SQL = f"""SELECT media_id + {_THUMB_TWIN_OFFSET} AS media_id,
+             4 AS w, 4 AS h, {_THUMB_DOWN_SQL} AS px
+      FROM base WHERE media_id % {_THUMB_TWIN_EVERY} = 0"""
 
 
 def _thumb_twins(base: DataFrame) -> DataFrame:
@@ -688,15 +710,8 @@ def _thumb_twins(base: DataFrame) -> DataFrame:
 @register(
     "image_thumbnail_pairs",
     oracle=f"""
-    WITH base AS (
-      SELECT vec_id AS media_id, 8 AS w, 8 AS h, {_IMG_QUANT_SQL} AS px
-      FROM embeddings
-    ),
-    thumbs AS (
-      SELECT media_id + {_THUMB_TWIN_OFFSET} AS media_id,
-             4 AS w, 4 AS h, {_THUMB_DOWN_SQL} AS px
-      FROM base WHERE media_id % {_THUMB_TWIN_EVERY} = 0
-    ),
+    WITH {_IMG_BASE_SQL},
+    thumbs AS ({_THUMB_TWINS_SQL}),
     imgs AS (SELECT * FROM base UNION ALL SELECT * FROM thumbs),
     parents AS (
       SELECT media_id AS full_id,
@@ -824,46 +839,10 @@ def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IMG_INCR_DEDUP_ORACLE = f"""
-    WITH hist AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    batch AS (
-      SELECT media_id + {_DHASH_TWIN_OFFSET} AS media_id,
-             list_transform(generate_series(1, {_IMG_SIDE * _IMG_SIDE}),
-               i -> CASE WHEN (i - 1) % 16 = 0
-                         THEN least(px[i] + 3, 255) ELSE px[i] END) AS px
-      FROM hist WHERE media_id % {_DHASH_TWIN_EVERY} = 0
-    ),
-    hbits AS (
-      SELECT media_id,
-             CAST(SUM(CASE WHEN px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                   + (k % {_IMG_SIDE - 1}) + 2]
-                           > px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                + (k % {_IMG_SIDE - 1}) + 1]
-                      THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS dhash
-      FROM hist, LATERAL unnest(generate_series(0, {_IMG_SIDE * (_IMG_SIDE - 1) - 1}))
-                AS s(k)
-      GROUP BY media_id
-    ),
-    bbits AS (
-      SELECT media_id,
-             CAST(SUM(CASE WHEN px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                   + (k % {_IMG_SIDE - 1}) + 2]
-                           > px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                + (k % {_IMG_SIDE - 1}) + 1]
-                      THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS dhash
-      FROM batch, LATERAL unnest(generate_series(0, {_IMG_SIDE * (_IMG_SIDE - 1) - 1}))
-                AS s(k)
-      GROUP BY media_id
-    ),
-    hband AS (
-      SELECT media_id, dhash, b, (dhash >> (8 * b)) & 255 AS v
-      FROM hbits, LATERAL unnest(generate_series(0, {_DHASH_MAX_HAMMING})) AS g(b)
-    ),
-    bband AS (
-      SELECT media_id, dhash, b, (dhash >> (8 * b)) & 255 AS v
-      FROM bbits, LATERAL unnest(generate_series(0, {_DHASH_MAX_HAMMING})) AS g(b)
-    ),
+    WITH {_GRID_SQL},
+    batch AS ({_DHASH_TWINS_SQL}),
+    {_dhash_ctes("base", "hbits", "hband")},
+    {_dhash_ctes("batch", "bbits", "bband")},
     cand AS (
       SELECT DISTINCT n.media_id AS new_id, o.media_id AS old_id,
              n.dhash AS dn, o.dhash AS do_
@@ -933,25 +912,10 @@ def q_incremental_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "media_dhash_index",
     oracle=f"""
-    WITH hist AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    hbits AS (
-      SELECT media_id,
-             CAST(SUM(CASE WHEN px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                   + (k % {_IMG_SIDE - 1}) + 2]
-                           > px[(k // {_IMG_SIDE - 1}) * {_IMG_SIDE}
-                                + (k % {_IMG_SIDE - 1}) + 1]
-                      THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS dhash
-      FROM hist, LATERAL unnest(generate_series(0, {_IMG_SIDE * (_IMG_SIDE - 1) - 1}))
-                AS s(k)
-      GROUP BY media_id
-    )
-    SELECT media_id, dhash,
-           CAST(b AS INT) AS seg,
-           (dhash >> (8 * b)) & 255 AS seg_val
-    FROM hbits, LATERAL unnest(generate_series(0, {_DHASH_MAX_HAMMING})) AS g(b)
-    ORDER BY media_id, seg
+    WITH {_GRID_SQL},
+    {_dhash_ctes("base", "hbits", "hband")}
+    SELECT media_id, dhash, CAST(b AS INT) AS seg, v AS seg_val
+    FROM hband ORDER BY media_id, seg
     """,
 )
 def q_media_dhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2095,10 +2059,10 @@ def q_media_near_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROT_TWIN_EVERY, _ROT_TWIN_OFFSET = 10, 3_000_000
 
 
-def _rot_plant_sql() -> str:
-    """DuckDB CASE planting one of the 7 non-identity dihedral
-    transforms chosen by id — shared by the rotation-tier oracle and
-    the resolution keep-best oracle (one plant text, two consumers)."""
+def _rot_twins_sql() -> str:
+    """DuckDB twin of _rot_twins over base(media_id, w, h, px): a CASE
+    planting one of the 7 non-identity dihedral transforms chosen by
+    id."""
     from network_iq_spark.operators.dedup import _dihedral_index_maps
 
     maps = _dihedral_index_maps(_IMG_SIDE)
@@ -2106,7 +2070,9 @@ def _rot_plant_sql() -> str:
         f"WHEN {t - 1} THEN [" + ", ".join(f"px[{k + 1}]" for k in maps[t]) + "]"
         for t in range(1, 8)
     )
-    return f"CASE (media_id // {_ROT_TWIN_EVERY}) % 7 {plant_arms} END"
+    return f"""SELECT media_id + {_ROT_TWIN_OFFSET} AS media_id, 8 AS w, 8 AS h,
+             CASE (media_id // {_ROT_TWIN_EVERY}) % 7 {plant_arms} END AS px
+      FROM base WHERE media_id % {_ROT_TWIN_EVERY} = 0"""
 
 
 def _rot_oracle() -> str:
@@ -2127,14 +2093,8 @@ def _rot_oracle() -> str:
 
     canon = "md5(LEAST(" + ", ".join(ser(m) for m in maps) + "))"
     return f"""
-    WITH base AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    twins AS (
-      SELECT media_id + {_ROT_TWIN_OFFSET} AS media_id,
-             {_rot_plant_sql()} AS px
-      FROM base WHERE media_id % {_ROT_TWIN_EVERY} = 0
-    ),
+    WITH {_IMG_BASE_SQL},
+    twins AS ({_rot_twins_sql()}),
     imgs AS (SELECT * FROM base UNION ALL SELECT * FROM twins),
     keyed AS (SELECT media_id, {canon} AS ckey FROM imgs),
     keep AS (SELECT ckey, MIN(media_id) AS keep_id FROM keyed GROUP BY 1)
@@ -2205,17 +2165,17 @@ _RSMP_KEY_SQL = (
     "md5(CAST(len({v}) AS VARCHAR) || ':' || "
     "array_to_string(list_transform({v}, x -> CAST(x AS VARCHAR)), ' '))"
 )
+# DuckDB twin of _rsmp_twins over walks(media_id, s)
+_RSMP_TWINS_SQL = f"""SELECT media_id + {_RSMP_TWIN_OFFSET} AS media_id,
+             {_RSMP_DOWN_SQL} AS s
+      FROM walks WHERE media_id % {_RSMP_TWIN_EVERY} = 0"""
 
 
 @register(
     "audio_resampled_near_dup_pairs",
     oracle=f"""
     WITH {_AUD_WALK_SQL},
-    twins AS (
-      SELECT media_id + {_RSMP_TWIN_OFFSET} AS media_id,
-             {_RSMP_DOWN_SQL} AS s
-      FROM walks WHERE media_id % {_RSMP_TWIN_EVERY} = 0
-    ),
+    twins AS ({_RSMP_TWINS_SQL}),
     clips AS (SELECT * FROM walks UNION ALL SELECT * FROM twins),
     parents AS (
       SELECT media_id AS full_id,
@@ -2272,11 +2232,7 @@ def _audio_resampled_pairs_from(src: DataFrame) -> DataFrame:
     "incremental_resample_probe",
     oracle=f"""
     WITH {_AUD_WALK_SQL},
-    twins AS (
-      SELECT media_id + {_RSMP_TWIN_OFFSET} AS media_id,
-             {_RSMP_DOWN_SQL} AS s
-      FROM walks WHERE media_id % {_RSMP_TWIN_EVERY} = 0
-    ),
+    twins AS ({_RSMP_TWINS_SQL}),
     idx AS (
       SELECT media_id AS old_id, len(s) AS n,
              {_RSMP_KEY_SQL.format(v="s")} AS own_key,
@@ -2338,18 +2294,8 @@ def q_incremental_resample_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _VCROP_TWIN_EVERY, _VCROP_TWIN_OFFSET, _VCROP_MAX = 10, 5_000_000, 1
 _VCROP_BLOCK = _VID_SIDE - _VCROP_MAX  # 3x3 frame-0 pigeonhole anchors
-
-
-@register(
-    "video_cropped_near_dup_pairs",
-    oracle=f"""
-    WITH base AS (
-      SELECT vec_id AS media_id, {_VID_SIDE} AS w, {_VID_SIDE} AS h,
-             {_IMG_QUANT_SQL} AS px
-      FROM embeddings
-    ),
-    twins AS (
-      SELECT media_id + {_VCROP_TWIN_OFFSET} AS media_id,
+# DuckDB twin of _vcrop_twins over base(media_id, px)
+_VCROP_TWINS_SQL = f"""SELECT media_id + {_VCROP_TWIN_OFFSET} AS media_id,
              {_VID_SIDE - 1} AS w, {_VID_SIDE - 1} AS h,
              flatten(list_transform(range(0, {_VID_FRAMES}), f ->
                flatten(list_transform(range(0, {_VID_SIDE - 1}), i ->
@@ -2363,8 +2309,18 @@ _VCROP_BLOCK = _VID_SIDE - _VCROP_MAX  # 3x3 frame-0 pigeonhole anchors
                CASE WHEN (media_id // {_VCROP_TWIN_EVERY}) % 3 = 0
                     THEN 0 ELSE 1 END AS dc
         FROM base WHERE media_id % {_VCROP_TWIN_EVERY} = 0
-      )
+      )"""
+
+
+@register(
+    "video_cropped_near_dup_pairs",
+    oracle=f"""
+    WITH base AS (
+      SELECT vec_id AS media_id, {_VID_SIDE} AS w, {_VID_SIDE} AS h,
+             {_IMG_QUANT_SQL} AS px
+      FROM embeddings
     ),
+    twins AS ({_VCROP_TWINS_SQL}),
     clips AS (SELECT * FROM base UNION ALL SELECT * FROM twins),
     toks AS (
       SELECT DISTINCT media_id, unnest({_crop_tok_sql(_VCROP_BLOCK)}) AS tok
@@ -2469,19 +2425,17 @@ _VRSMP_DOWN_SQL = (
     "(px[((j // 16) * 2) * 16 + (j % 16) + 1] "
     "+ px[((j // 16) * 2 + 1) * 16 + (j % 16) + 1]) // 2)"
 )
+# DuckDB twin of _vrsmp_twins over base(media_id, px)
+_VRSMP_TWINS_SQL = f"""SELECT media_id + {_VRSMP_TWIN_OFFSET} AS media_id,
+             {_VRSMP_DOWN_SQL} AS px
+      FROM base WHERE media_id % {_VRSMP_TWIN_EVERY} = 0"""
 
 
 @register(
     "video_resampled_near_dup_pairs",
     oracle=f"""
-    WITH base AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    twins AS (
-      SELECT media_id + {_VRSMP_TWIN_OFFSET} AS media_id,
-             {_VRSMP_DOWN_SQL} AS px
-      FROM base WHERE media_id % {_VRSMP_TWIN_EVERY} = 0
-    ),
+    WITH {_GRID_SQL},
+    twins AS ({_VRSMP_TWINS_SQL}),
     clips AS (SELECT * FROM base UNION ALL SELECT * FROM twins),
     parents AS (
       SELECT media_id AS full_id,
@@ -2548,20 +2502,22 @@ def _trim_twin_case(col: str, pick: str) -> str:
     return f"CASE CAST(({col}) % {len(_TRIM_ARMS)} AS INT) {whens} ELSE {last} END"
 
 
-@register(
-    "audio_trimmed_near_dup_pairs",
-    oracle=f"""
-    WITH {_AUD_WALK_SQL},
-    twins AS (
-      SELECT media_id + {_TRIM_TWIN_OFFSET} AS media_id,
+# DuckDB twin of _audio_trim_twins over walks(media_id, s)
+_TRIM_TWINS_SQL = f"""SELECT media_id + {_TRIM_TWIN_OFFSET} AS media_id,
              list_slice(s, head + 1, 64 - tail) AS s
       FROM (
         SELECT media_id, s,
                {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "h")} AS head,
                {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "t")} AS tail
         FROM walks WHERE media_id % {_TRIM_TWIN_EVERY} = 0
-      )
-    ),
+      )"""
+
+
+@register(
+    "audio_trimmed_near_dup_pairs",
+    oracle=f"""
+    WITH {_AUD_WALK_SQL},
+    twins AS ({_TRIM_TWINS_SQL}),
     clips AS (SELECT * FROM walks UNION ALL SELECT * FROM twins),
     ptoks AS (
       SELECT DISTINCT media_id AS full_id,
@@ -2677,27 +2633,28 @@ def _tg_gain_case(col: str, pick: str) -> str:
     return f"CASE CAST(({col}) % {len(_TG_GAIN_ARMS)} AS INT) {whens} ELSE {last} END"
 
 
+# DuckDB twin of _tg_twins over walks(media_id, s)
+_TG_TWINS_SQL = f"""SELECT media_id + {_TG_TWIN_OFFSET} AS media_id,
+             list_transform(list_slice(s, head + 1, 64 - tail),
+                            x -> a * x + b) AS s
+      FROM (
+        SELECT media_id, s,
+               {_trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "h")} AS head,
+               {_trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "t")} AS tail,
+               {_tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "a")} AS a,
+               {_tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "b")} AS b
+        FROM walks WHERE media_id % {_TG_TWIN_EVERY} = 0
+      )"""
+
+
 def _trim_gain_oracle() -> str:
     """DuckDB replay of the trim∘gain tier: plant affine-gain trimmed
     twins, map every clip to its gradient-sign sequence, then run the
     trim tier's own CTE chain (prefix-anchor pigeonhole + exact
     head-offset scan) over the sign sequences."""
-    head = _trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "h")
-    tail = _trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "t")
-    ga = _tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "a")
-    gb = _tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "b")
     return f"""
     WITH {_AUD_WALK_SQL},
-    twins AS (
-      SELECT media_id + {_TG_TWIN_OFFSET} AS media_id,
-             list_transform(list_slice(s, head + 1, 64 - tail),
-                            x -> a * x + b) AS s
-      FROM (
-        SELECT media_id, s, {head} AS head, {tail} AS tail,
-               {ga} AS a, {gb} AS b
-        FROM walks WHERE media_id % {_TG_TWIN_EVERY} = 0
-      )
-    ),
+    twins AS ({_TG_TWINS_SQL}),
     tg_clips AS (SELECT * FROM walks UNION ALL SELECT * FROM twins),
     clips AS (
       SELECT media_id, {_GSIGN_SQL.format(v="s")} AS s FROM tg_clips
@@ -2826,6 +2783,18 @@ def _vtrim_twin_case(col: str, pick: str) -> str:
     return f"CASE CAST(({col}) % {len(_VTRIM_ARMS)} AS INT) {whens} ELSE {last} END"
 
 
+# DuckDB twin of _vtrim_twins over base(media_id, px)
+_VTRIM_TWINS_SQL = f"""SELECT media_id + {_VTRIM_TWIN_OFFSET} AS media_id,
+             list_slice(px, head * {_VTRIM_FRAME} + 1,
+                        ({_VID_FRAMES} - tail) * {_VTRIM_FRAME}) AS px
+      FROM (
+        SELECT media_id, px,
+               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "h")} AS head,
+               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "t")} AS tail
+        FROM base WHERE media_id % {_VTRIM_TWIN_EVERY} = 0
+      )"""
+
+
 _VTRIM_TOK_SQL = (
     "md5(array_to_string(list_transform(range(0, {B}), i -> "
     "CAST(px[{off} + i + 1] AS VARCHAR)), ' '))"
@@ -2835,20 +2804,8 @@ _VTRIM_TOK_SQL = (
 @register(
     "video_trimmed_near_dup_pairs",
     oracle=f"""
-    WITH base AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    twins AS (
-      SELECT media_id + {_VTRIM_TWIN_OFFSET} AS media_id,
-             list_slice(px, head * {_VTRIM_FRAME} + 1,
-                        ({_VID_FRAMES} - tail) * {_VTRIM_FRAME}) AS px
-      FROM (
-        SELECT media_id, px,
-               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "h")} AS head,
-               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "t")} AS tail
-        FROM base WHERE media_id % {_VTRIM_TWIN_EVERY} = 0
-      )
-    ),
+    WITH {_GRID_SQL},
+    twins AS ({_VTRIM_TWINS_SQL}),
     clips AS (SELECT * FROM base UNION ALL SELECT * FROM twins),
     ptoks AS (
       SELECT DISTINCT media_id AS full_id,
@@ -2974,16 +2931,7 @@ def _trim_probe_dir_sql(
     "incremental_trim_probe",
     oracle=f"""
     WITH {_AUD_WALK_SQL},
-    twins AS (
-      SELECT media_id + {_TRIM_TWIN_OFFSET} AS media_id,
-             list_slice(s, head + 1, 64 - tail) AS s
-      FROM (
-        SELECT media_id, s,
-               {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "h")} AS head,
-               {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "t")} AS tail
-        FROM walks WHERE media_id % {_TRIM_TWIN_EVERY} = 0
-      )
-    ),
+    twins AS ({_TRIM_TWINS_SQL}),
     htoks AS (
       SELECT DISTINCT media_id AS old_id,
              unnest(list_transform(
@@ -3055,8 +3003,10 @@ def q_incremental_trim_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 class _Arm(NamedTuple):
     """One transform arm of the media composites: its registered pair
     query (whose oracle the composites' oracles compose), the (src, dst)
-    pair columns, the id offset of its planted twins, and the builder
-    that derives its pairs from the modality's shared source frame."""
+    pair columns, the id offset of its planted twins, the builder that
+    derives its pairs from the modality's shared source frame, and its
+    twin plant in both engines — the Spark builder over that frame and
+    the DuckDB SELECT over the modality's source CTE (``_CORPUS``)."""
 
     modality: str
     axis: str
@@ -3065,6 +3015,8 @@ class _Arm(NamedTuple):
     dst: str
     offset: int
     pairs_from: Callable[[DataFrame], DataFrame]
+    twins: Callable[[DataFrame], DataFrame]
+    twins_sql: str
 
     @property
     def label(self) -> str:
@@ -3076,32 +3028,55 @@ class _Arm(NamedTuple):
 
 # The one table of transform arms: the census, the resolutions, the
 # keep-bests, the manifest and all their oracles derive their arms from
-# it. Row order within a modality is the resolution edge-union order.
+# it. Row order within a modality is the resolution edge-union order and
+# the keep-best member-union order (after the modality's source frame).
 _TRANSFORM_ARMS = (
     _Arm("image", "crop", "image_cropped_near_dup_pairs",
-         "id_a", "id_b", _CROP_TWIN_OFFSET, _image_cropped_pairs_from),
+         "id_a", "id_b", _CROP_TWIN_OFFSET, _image_cropped_pairs_from,
+         _crop_twins, _CROP_TWINS_SQL),
     _Arm("image", "scale", "image_thumbnail_pairs",
-         "full_id", "thumb_id", _THUMB_TWIN_OFFSET, _image_thumbnail_pairs_from),
+         "full_id", "thumb_id", _THUMB_TWIN_OFFSET, _image_thumbnail_pairs_from,
+         _thumb_twins, _THUMB_TWINS_SQL),
     _Arm("image", "rotation", "image_rotated_dedup",
-         "keep_id", "dup_id", _ROT_TWIN_OFFSET, _image_rotated_dedup_from),
+         "keep_id", "dup_id", _ROT_TWIN_OFFSET, _image_rotated_dedup_from,
+         _rot_twins, _rot_twins_sql()),
     _Arm("audio", "resample", "audio_resampled_near_dup_pairs",
-         "full_id", "resampled_id", _RSMP_TWIN_OFFSET, _audio_resampled_pairs_from),
+         "full_id", "resampled_id", _RSMP_TWIN_OFFSET, _audio_resampled_pairs_from,
+         _rsmp_twins, _RSMP_TWINS_SQL),
     _Arm("audio", "trim", "audio_trimmed_near_dup_pairs",
-         "full_id", "trimmed_id", _TRIM_TWIN_OFFSET, _audio_trimmed_pairs_from),
+         "full_id", "trimmed_id", _TRIM_TWIN_OFFSET, _audio_trimmed_pairs_from,
+         _audio_trim_twins, _TRIM_TWINS_SQL),
     # the composed axis joins the resolution surface (r14 review): its
     # planted duplicates are REAL duplicates a pipeline must resolve —
     # excluding them would admit both the original and its trim∘gain
     # re-encode. The census stays at the 8 pure-matrix cells and skips
     # this row; composed axes live on the admission surface.
     _Arm("audio", "trim_gain", "audio_trim_gain_pairs",
-         "full_id", "trimmed_id", _TG_TWIN_OFFSET, _audio_trim_gain_pairs_from),
+         "full_id", "trimmed_id", _TG_TWIN_OFFSET, _audio_trim_gain_pairs_from,
+         _tg_twins, _TG_TWINS_SQL),
     _Arm("video", "crop", "video_cropped_near_dup_pairs",
-         "id_a", "id_b", _VCROP_TWIN_OFFSET, _video_cropped_pairs_from),
+         "id_a", "id_b", _VCROP_TWIN_OFFSET, _video_cropped_pairs_from,
+         _vcrop_twins, _VCROP_TWINS_SQL),
     _Arm("video", "resample", "video_resampled_near_dup_pairs",
-         "full_id", "resampled_id", _VRSMP_TWIN_OFFSET, _video_resampled_pairs_from),
+         "full_id", "resampled_id", _VRSMP_TWIN_OFFSET, _video_resampled_pairs_from,
+         _vrsmp_twins, _VRSMP_TWINS_SQL),
     _Arm("video", "trim", "video_trimmed_near_dup_pairs",
-         "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET, _video_trimmed_pairs_from),
+         "full_id", "trimmed_id", _VTRIM_TWIN_OFFSET, _video_trimmed_pairs_from,
+         _vtrim_twins, _VTRIM_TWINS_SQL),
 )
+# Each modality's corpus as its twin plants read it: the DuckDB source
+# CTE's name and text, and the signal column in both engines. The image
+# and video arms share the quantized grid; the image plants also read w/h.
+_CORPUS = {
+    "image": ("base", _IMG_BASE_SQL, "px"),
+    "audio": ("walks", _AUD_WALK_SQL, "s"),
+    "video": ("base", _GRID_SQL, "px"),
+}
+
+
+def _modality_arms(modality: str) -> list[_Arm]:
+    """The modality's rows of ``_TRANSFORM_ARMS``, in table order."""
+    return [a for a in _TRANSFORM_ARMS if a.modality == modality]
 
 
 def _census_arms() -> list[_Arm]:
@@ -3203,8 +3178,7 @@ def _closure_ctes(modality: str) -> str:
     edge_sql = "\n      UNION ALL\n".join(
         f"      SELECT {a.src} AS src, {a.dst} AS dst, '{a.axis}' AS axis\n"
         f"      FROM ({ORACLES[a.query]})"
-        for a in _TRANSFORM_ARMS
-        if a.modality == modality
+        for a in _modality_arms(modality)
     )
     return f"""edges AS (
 {edge_sql}
@@ -3263,7 +3237,7 @@ def _transform_edges_from(modality: str, src: DataFrame) -> DataFrame:
     instead of once per arm. The registered arm queries are untouched —
     they keep deriving from the raw scan (their stamped plans must not
     move)."""
-    arms = [a for a in _TRANSFORM_ARMS if a.modality == modality]
+    arms = _modality_arms(modality)
     pairs = _pbuild(src.sparkSession, *(partial(a.pairs_from, src) for a in arms))
     return reduce(
         DataFrame.unionByName,
@@ -3418,16 +3392,43 @@ _VAR_UNITS_SQL = (
 )
 
 
-def _keep_best_oracle(modality: str, members_cte: str) -> str:
+def _members_sql(modality: str) -> str:
+    """members(media_id, s) over the modality's full transform corpus:
+    its source CTE plus every arm's twins in table row order, each
+    planted by the arm's ``twins_sql`` — the text its pair oracle
+    plants with."""
+    name, src_sql, sig = _CORPUS[modality]
+    arms = _modality_arms(modality)
+    twins = "".join(f",\n    {a.axis}_twins AS ({a.twins_sql})" for a in arms)
+    union = "\n      UNION ALL ".join(
+        f"SELECT media_id, {sig} AS s FROM {t}"
+        for t in [name, *(f"{a.axis}_twins" for a in arms)]
+    )
+    return f"""{src_sql}{twins},
+    members AS (
+      {union}
+    )"""
+
+
+def _members(modality: str, src: DataFrame) -> DataFrame:
+    """Spark twin of ``_members_sql``: the shared source frame ``src``
+    plus every arm's ``twins`` over it, in table row order, as
+    (media_id, s)."""
+    sig = _CORPUS[modality][2]
+    parts = [src, *(a.twins(src) for a in _modality_arms(modality))]
+    return reduce(
+        DataFrame.unionByName,
+        (p.select("media_id", F.col(sig).alias("s")) for p in parts),
+    )
+
+
+def _keep_best_oracle(modality: str) -> str:
     """Resolution keep-best oracle: the shared closure (``_closure_ctes``)
     RANKED by member quality metadata instead of reporting the label
-    minimum. ``members_cte`` must define a CTE chain ending in
-    ``members(media_id, s)`` holding every corpus member's signal (base +
-    all planted twins, composed from the same shared plant texts as the
-    arm oracles)."""
+    minimum, over every corpus member's signal (``_members_sql``)."""
     return f"""
     WITH RECURSIVE {_closure_ctes(modality)},
-    {members_cte},
+    {_members_sql(modality)},
     scored AS (
       SELECT media_id, CAST(len(s) AS INT) AS n_px,
              {_VAR_UNITS_SQL.format(v="s")} AS var_units
@@ -3517,33 +3518,9 @@ def _keep_best_from_edges(e: DataFrame, members: DataFrame) -> DataFrame:
     )
 
 
-def _img_members_cte() -> str:
-    """members(media_id, s) over the full IMAGE transform corpus: base
-    8×8 grids + crop twins (+1M, via _CROP_CORPUS_SQL — base/crops/imgs
-    come along) + thumbnail twins (+2M, _THUMB_DOWN_SQL) + dihedral
-    twins (+3M, _rot_plant_sql) — each plant the SAME shared SQL text
-    its arm oracle uses."""
-    return f"""{_CROP_CORPUS_SQL},
-    thumbs AS (
-      SELECT media_id + {_THUMB_TWIN_OFFSET} AS media_id,
-             4 AS w, 4 AS h, {_THUMB_DOWN_SQL} AS px
-      FROM base WHERE media_id % {_THUMB_TWIN_EVERY} = 0
-    ),
-    rots AS (
-      SELECT media_id + {_ROT_TWIN_OFFSET} AS media_id,
-             8 AS w, 8 AS h, {_rot_plant_sql()} AS px
-      FROM base WHERE media_id % {_ROT_TWIN_EVERY} = 0
-    ),
-    members AS (
-      SELECT media_id, px AS s FROM imgs
-      UNION ALL SELECT media_id, px AS s FROM thumbs
-      UNION ALL SELECT media_id, px AS s FROM rots
-    )"""
-
-
 @register(
     "image_resolution_keep_best",
-    oracle=_keep_best_oracle("image", _img_members_cte()),
+    oracle=_keep_best_oracle("image"),
 )
 def q_image_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the image transform clusters
@@ -3561,86 +3538,20 @@ def q_image_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole policy is oracle-replayable. Composes the three
     registered arm tiers verbatim + the shared CC core + one bounded
     window; member signals come from the same shared plant texts as
-    the arms (_crop_corpus / _thumb_twins / _rot_twins), so the score
+    the arms (each arm row's ``twins`` / ``twins_sql``), so the score
     table can never desync from the pair detection."""
     # one shared quantized-grid frame feeds the edge arms AND the member
     # corpus (the census build-once rationale), checkpointed so it is
     # planned once and decoded once (materialize-decode-once)
     img = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
-    e = _transform_edges_from("image", img)
-    base, crops = _crop_corpus_from(img)
-    members = (
-        base.select("media_id", F.col("px").alias("s"))
-        .unionByName(crops.select("media_id", F.col("px").alias("s")))
-        .unionByName(
-            _thumb_twins(base).select("media_id", F.col("px").alias("s"))
-        )
-        .unionByName(
-            _rot_twins(img).select("media_id", F.col("px").alias("s"))
-        )
-    )
-    return _keep_best_from_edges(e, members)
-
-
-def _aud_members_cte() -> str:
-    """members(media_id, s) over the full AUDIO transform corpus:
-    embedding-seeded walks + resample twins (+4M, _RSMP_DOWN_SQL — the
-    same derivation text the arm oracle plants) + trim twins (+7M,
-    _trim_twin_case — ditto) + trim∘gain twins (+9M, _trim_twin_case ×
-    _tg_gain_case)."""
-    return f"""{_AUD_WALK_SQL},
-    rsmp_twins AS (
-      SELECT media_id + {_RSMP_TWIN_OFFSET} AS media_id,
-             {_RSMP_DOWN_SQL} AS s
-      FROM walks WHERE media_id % {_RSMP_TWIN_EVERY} = 0
-    ),
-    trim_twins AS (
-      SELECT media_id + {_TRIM_TWIN_OFFSET} AS media_id,
-             list_slice(s, head + 1, 64 - tail) AS s
-      FROM (
-        SELECT media_id, s,
-               {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "h")} AS head,
-               {_trim_twin_case(f"media_id // {_TRIM_TWIN_EVERY}", "t")} AS tail
-        FROM walks WHERE media_id % {_TRIM_TWIN_EVERY} = 0
-      )
-    ),
-    tg_twins AS (
-      SELECT media_id + {_TG_TWIN_OFFSET} AS media_id,
-             list_transform(list_slice(s, head + 1, 64 - tail),
-                            x -> a * x + b) AS s
-      FROM (
-        SELECT media_id, s,
-               {_trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "h")} AS head,
-               {_trim_twin_case(f"media_id // {_TG_TWIN_EVERY}", "t")} AS tail,
-               {_tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "a")} AS a,
-               {_tg_gain_case(f"media_id // {_TG_TWIN_EVERY}", "b")} AS b
-        FROM walks WHERE media_id % {_TG_TWIN_EVERY} = 0
-      )
-    ),
-    members AS (
-      SELECT media_id, s FROM walks
-      UNION ALL SELECT media_id, s FROM rsmp_twins
-      UNION ALL SELECT media_id, s FROM trim_twins
-      UNION ALL SELECT media_id, s FROM tg_twins
-    )"""
-
-
-def _audio_members(src: DataFrame) -> DataFrame:
-    """Spark twin of _aud_members_cte: every audio corpus member's
-    signal — walks plus all three planted twin families, via the SAME
-    shared plant helpers the arm queries call (the image modality's
-    no-desync rule, closed for audio in r14). Takes the shared walk
-    frame the keep-best builds once per query."""
-    return (
-        src.unionByName(_rsmp_twins(src))
-        .unionByName(_audio_trim_twins(src))
-        .unionByName(_tg_twins(src))
+    return _keep_best_from_edges(
+        _transform_edges_from("image", img), _members("image", img)
     )
 
 
 @register(
     "audio_resolution_keep_best",
-    oracle=_keep_best_oracle("audio", _aud_members_cte()),
+    oracle=_keep_best_oracle("audio"),
 )
 def q_audio_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the audio transform clusters
@@ -3656,75 +3567,13 @@ def q_audio_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three edge arms + the member corpus (materialize-decode-once)
     src = _aud_walks(spark, sf_dir).localCheckpoint(eager=False)
     return _keep_best_from_edges(
-        _transform_edges_from("audio", src), _audio_members(src)
-    )
-
-
-def _vid_members_cte() -> str:
-    """members(media_id, s) over the full VIDEO transform corpus: base
-    quantized grids + per-frame crop twins (+5M) + temporal-resample
-    twins (+6M, _VRSMP_DOWN_SQL) + temporal-trim twins (+8M,
-    _vtrim_twin_case) — each plant the same SQL text its arm oracle
-    uses."""
-    return f"""vbase AS (
-      SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
-    ),
-    vcrop_twins AS (
-      SELECT media_id + {_VCROP_TWIN_OFFSET} AS media_id,
-             flatten(list_transform(range(0, {_VID_FRAMES}), f ->
-               flatten(list_transform(range(0, {_VID_SIDE - 1}), i ->
-                 list_transform(range(0, {_VID_SIDE - 1}), j ->
-                   px[f * {_VID_SIDE * _VID_SIDE}
-                      + (i + dr) * {_VID_SIDE} + j + dc + 1]))))) AS px
-      FROM (
-        SELECT media_id, px,
-               CASE WHEN (media_id // {_VCROP_TWIN_EVERY}) % 3 = 1
-                    THEN 0 ELSE 1 END AS dr,
-               CASE WHEN (media_id // {_VCROP_TWIN_EVERY}) % 3 = 0
-                    THEN 0 ELSE 1 END AS dc
-        FROM vbase WHERE media_id % {_VCROP_TWIN_EVERY} = 0
-      )
-    ),
-    vrsmp_twins AS (
-      SELECT media_id + {_VRSMP_TWIN_OFFSET} AS media_id,
-             {_VRSMP_DOWN_SQL} AS px
-      FROM vbase WHERE media_id % {_VRSMP_TWIN_EVERY} = 0
-    ),
-    vtrim_twins AS (
-      SELECT media_id + {_VTRIM_TWIN_OFFSET} AS media_id,
-             list_slice(px, head * {_VTRIM_FRAME} + 1,
-                        ({_VID_FRAMES} - tail) * {_VTRIM_FRAME}) AS px
-      FROM (
-        SELECT media_id, px,
-               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "h")} AS head,
-               {_vtrim_twin_case(f"media_id // {_VTRIM_TWIN_EVERY}", "t")} AS tail
-        FROM vbase WHERE media_id % {_VTRIM_TWIN_EVERY} = 0
-      )
-    ),
-    members AS (
-      SELECT media_id, px AS s FROM vbase
-      UNION ALL SELECT media_id, px AS s FROM vcrop_twins
-      UNION ALL SELECT media_id, px AS s FROM vrsmp_twins
-      UNION ALL SELECT media_id, px AS s FROM vtrim_twins
-    )"""
-
-
-def _video_members(base: DataFrame) -> DataFrame:
-    """Spark twin of _vid_members_cte: every video corpus member's
-    pixels — base grids plus the three planted twin families, via the
-    SAME shared plant helpers the arm queries call. Takes the shared
-    grid frame the keep-best builds once per query."""
-    return (
-        base.unionByName(_vcrop_twins(base).select("media_id", "px"))
-        .unionByName(_vrsmp_twins(base))
-        .unionByName(_vtrim_twins(base))
-        .select("media_id", F.col("px").alias("s"))
+        _transform_edges_from("audio", src), _members("audio", src)
     )
 
 
 @register(
     "video_resolution_keep_best",
-    oracle=_keep_best_oracle("video", _vid_members_cte()),
+    oracle=_keep_best_oracle("video"),
 )
 def q_video_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolution-aware KEEP-BEST over the video transform clusters
@@ -3738,7 +3587,7 @@ def q_video_resolution_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed shared source (materialize-decode-once)
     base = _img_grid(spark, sf_dir).localCheckpoint(eager=False)
     return _keep_best_from_edges(
-        _transform_edges_from("video", base), _video_members(base)
+        _transform_edges_from("video", base), _members("video", base)
     )
 
 

@@ -65,6 +65,21 @@ def compact_parquet_dir(
     return before, _count(path)
 
 
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_cols: Sequence[str]
+) -> None:
+    """Dynamic partition overwrite set on this write alone: the partitions
+    present in ``df`` are replaced, every other one is left as is. The
+    session's ``partitionOverwriteMode`` is never flipped, so another
+    writer in the same session keeps its own mode."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
 def upsert_partitioned(
     spark: SparkSession,
     path: str,
@@ -76,8 +91,8 @@ def upsert_partitioned(
     table format: rows in ``updates`` replace existing rows with the same
     ``keys``; new keys append. Returns the number of partitions rewritten.
 
-    Only the partitions the updates touch are read and rewritten —
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` scopes the
+    Only the partitions the updates touch are read and rewritten — a
+    per-write ``partitionOverwriteMode=dynamic`` option scopes the
     overwrite to exactly those directories, so cost is O(touched partitions)
     not O(table). The rewrite is existing-partition-data ANTI-JOIN update
     keys, UNION update rows: one broadcast-able join per run (update sets
@@ -112,12 +127,7 @@ def upsert_partitioned(
     # a table format would make this a snapshot read instead
     merged = merged.localCheckpoint()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(merged, path, partition_cols)
     return len(parts)
 
 
@@ -595,12 +605,7 @@ def delete_keys_partitioned(
     survivor_parts = {
         tuple(r) for r in survivors.select(*partition_cols).distinct().collect()
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        survivors.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(survivors, path, partition_cols)
     emptied = [vals for vals in parts if vals not in survivor_parts]
     if emptied:
         jvm = spark._jvm

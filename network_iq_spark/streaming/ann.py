@@ -46,9 +46,10 @@ def incremental_ann_search_sink(
       batch (no history → no matches; the batch still joins the index).
     - ``results_path``: per-batch top-k (q_vec_id, n_vec_id, rank, cos).
 
-    Exactly-once: every output lands under a ``batch=<id>`` partition via
-    dynamic partition overwrite, so a replayed micro-batch rewrites its
-    own partitions (same discipline as the near-dup sink).
+    Exactly-once: every output overwrites its own ``batch=<id>``
+    directory (``streaming.dedup.write_batch_partition``), so a replayed
+    micro-batch rewrites its own partitions (same discipline as the
+    near-dup sink).
     """
     from network_iq_spark.operators.similarity import (
         ivf_assign,

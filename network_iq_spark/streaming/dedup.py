@@ -79,17 +79,19 @@ def read_if_exists(spark, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+def write_batch_partition(
+    df: DataFrame, path: str, batch_id: int, col: str = "batch"
+) -> None:
     """Exactly-once micro-batch append: write DIRECTLY to the
-    ``batch=<id>`` partition directory with overwrite, so a replayed
+    ``<col>=<id>`` partition directory with overwrite, so a replayed
     batch truncates-and-rewrites its own partition (the streaming/sink.py
     discipline, without a key-merge). The direct-path form (vs dynamic
     partition overwrite of the root) matters in one replay corner: a
     replay whose recomputed frame is EMPTY still rewrites the directory —
     dynamic overwrite of an empty frame touches no partitions and would
-    leave the original rows standing. The ``batch`` column comes back at
+    leave the original rows standing. The ``col`` column comes back at
     read time from partition discovery over the directory name."""
-    df.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
+    df.write.mode("overwrite").parquet(f"{path}/{col}={batch_id}")
 
 
 def incremental_near_dup_sink(
@@ -177,8 +179,8 @@ def incremental_media_dedup_sink(
     ``incremental_hamming_dedup`` — O(batch × collision rate), never
     O(history)); survivors append to the corpus and their segment rows
     (``hamming_index``) append to the index, so the next batch sees
-    them. Same exactly-once discipline: every output lands under its
-    ``batch=<id>`` partition via dynamic partition overwrite, so a
+    them. Same exactly-once discipline: every output overwrites its own
+    ``batch=<id>`` directory (``write_batch_partition``), so a
     replayed micro-batch converges instead of appending twice.
 
     One sink serves all modalities — the index schema is
@@ -248,8 +250,8 @@ def incremental_crop_dedup_sink(
     vice versa — the 2-D lag scan is symmetric in sign) is dropped,
     survivors append to the corpus and their token + grid rows append to
     the index, so the next batch sees them. Same exactly-once
-    discipline: every output lands under its ``batch=<id>`` partition
-    via dynamic partition overwrite, and the probe reads STRICTLY
+    discipline: every output overwrites its own ``batch=<id>``
+    directory (``write_batch_partition``), and the probe reads STRICTLY
     earlier batches so a replayed micro-batch converges instead of
     self-matching at ssd 0 and emitting an empty survivor set.
     ``frames`` > 1 makes this the VIDEO crop cell's sink (r12):

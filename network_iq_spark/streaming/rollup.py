@@ -7,11 +7,16 @@ foreachBatch is at-least-once, and a fold is not idempotent — replaying a
 batch would double-count it (the keyed-upsert trick of ``sink.py`` works
 there because upsert IS idempotent; merge is not).
 
-The fix is log-structured: each micro-batch writes its PARTIAL state to
-its own ``_batch_id=N`` partition with dynamic partition overwrite, so a
-replay rewrites the same directory instead of folding twice — idempotence
-recovered at the storage layer, not the algebra. The queryable state is
-the monoid merge over partials at read time, and a maintenance-window
+The fix is log-structured: each micro-batch overwrites its PARTIAL state
+straight into its own ``_batch_id=N`` directory
+(``streaming.dedup.write_batch_partition``), so a replay rewrites the
+same directory instead of folding twice — idempotence recovered at the
+storage layer, not the algebra. Writing the directory itself, not a
+dynamic overwrite of the root, also covers a replay whose batch comes
+back EMPTY: the epoch's old partial is replaced by nothing. No write
+here touches the session's ``partitionOverwriteMode``; compaction sets
+its mode on its own write. The queryable state is the monoid merge
+over partials at read time, and a maintenance-window
 ``compact_rollup_state`` folds the log into one base partial (safe at any
 moment: the merge is associative, so (base ⊕ p1 ⊕ p2) ≡ ((base ⊕ p1) ⊕ p2)
 by the same law the oracle equality of ``incremental_rollup_refresh``
@@ -38,27 +43,14 @@ def rollup_state_sink(
     scale: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: micro-batch → partial rollup state
-    at ``_batch_id=<epoch>``. Replays of any epoch converge (dynamic
-    partition overwrite rewrites, never appends)."""
+    at ``_batch_id=<epoch>``. Replays of any epoch converge (the epoch's
+    directory is rewritten, never appended to)."""
     from network_iq_spark.sources.maintenance import ROLLUP_SCALE, rollup_state
 
     sc = ROLLUP_SCALE if scale is None else scale
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        partial = rollup_state(batch_df, keys, value_col, sc).withColumn(
-            "_batch_id", F.lit(int(batch_id))
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            partial.write.mode("overwrite").partitionBy("_batch_id").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return sink
+    return monoid_state_sink(
+        path, lambda batch_df: rollup_state(batch_df, keys, value_col, sc)
+    )
 
 
 def read_rollup_state(
@@ -69,32 +61,17 @@ def read_rollup_state(
     never fact rows."""
     from network_iq_spark.sources.maintenance import merge_rollup_states
 
-    return merge_rollup_states([spark.read.parquet(path).drop("_batch_id")], keys)
+    return read_monoid_state(spark, path, lambda s: merge_rollup_states(s, keys))
 
 
 def compact_rollup_state(
     spark: SparkSession, path: str, keys: Sequence[str]
 ) -> None:
     """Fold the partial log into a single base partial (``_batch_id=-1``).
-    Readers before/after see identical state (associativity); the write
-    breaks lineage via localCheckpoint because it overwrites directories
-    the plan read (the upsert_partitioned idiom)."""
-    from pyspark.sql import functions as F
+    Readers before/after see identical state (associativity)."""
+    from network_iq_spark.sources.maintenance import merge_rollup_states
 
-    merged = (
-        read_rollup_state(spark, path, keys)
-        .withColumn("_batch_id", F.lit(-1))
-        .localCheckpoint()
-    )
-    # force STATIC overwrite: under a session-level dynamic mode this write
-    # would only replace _batch_id=-1 and leave the old partials in place —
-    # every read after that would double-count the history
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        merged.write.mode("overwrite").partitionBy("_batch_id").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    compact_monoid_state(spark, path, lambda s: merge_rollup_states(s, keys))
 
 
 def monoid_state_sink(
@@ -104,22 +81,14 @@ def monoid_state_sink(
     """Generalized log-structured sink: any monoid state builder (the
     rollup state, a histogram_state, a cm_sketch_state — anything whose
     merge is a groupBy-SUM/MIN/MAX over its own output) gets the same
-    replay-idempotent storage shape: per-epoch partials at
-    ``_batch_id=N`` under dynamic overwrite. The read side merges with
-    the state family's own merge function; compaction is
-    ``compact_monoid_state`` with the same merge."""
+    replay-idempotent storage shape: per-epoch partials overwritten at
+    ``_batch_id=N``. The read side merges with the state family's own
+    merge function; compaction is ``compact_monoid_state`` with the same
+    merge."""
+    from network_iq_spark.streaming.dedup import write_batch_partition
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        partial = state_fn(batch_df).withColumn("_batch_id", F.lit(int(batch_id)))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            partial.write.mode("overwrite").partitionBy("_batch_id").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_batch_partition(state_fn(batch_df), path, batch_id, col="_batch_id")
 
     return sink
 
@@ -134,9 +103,11 @@ def read_monoid_state(
 
 
 def compact_monoid_state(spark: SparkSession, path: str, merge_fn) -> None:
-    """Fold the partial log down to one base partial with the family's own
-    merge (associativity makes any compaction moment safe); STATIC
-    overwrite for the same reason as ``compact_rollup_state``."""
+    """Fold the partial log down to one base partial (``_batch_id=-1``)
+    with the family's own merge (associativity makes any compaction
+    moment safe). The write breaks lineage via localCheckpoint because
+    it overwrites directories the plan read (the upsert_partitioned
+    idiom)."""
     from pyspark.sql import functions as F
 
     merged = (
@@ -144,9 +115,12 @@ def compact_monoid_state(spark: SparkSession, path: str, merge_fn) -> None:
         .withColumn("_batch_id", F.lit(-1))
         .localCheckpoint()
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        merged.write.mode("overwrite").partitionBy("_batch_id").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # STATIC overwrite, set on this write alone: under a dynamic mode it
+    # would only replace _batch_id=-1 and leave the old partials in place —
+    # every read after that would double-count the history
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("_batch_id")
+        .parquet(path)
+    )

@@ -1039,8 +1039,9 @@ def test_incremental_ann_search_sink_matches_batch_ivf_search(spark, tmp_path):
 
 def test_rollup_state_sink_replay_and_compact(spark, tmp_path):
     """Streaming IVM: per-epoch partial states merge to the direct rollup;
-    replaying an epoch converges (dynamic overwrite, not a second fold);
-    compaction preserves the state byte-for-byte (associativity)."""
+    replaying an epoch converges (its directory is rewritten, not folded
+    a second time), also when the replayed batch is empty; compaction
+    preserves the state byte-for-byte (associativity)."""
     import pyspark.sql.functions as F
 
     from network_iq_spark.sources.maintenance import present_rollup, rollup_state
@@ -1074,6 +1075,14 @@ def test_rollup_state_sink_replay_and_compact(spark, tmp_path):
     )
     assert snap() == direct
     sink(bdf(100, 250), 1)  # replay epoch 1 → must converge, not double-count
+    assert snap() == direct
+    # an EMPTY replay of epoch 2 removes that epoch's partial (a dynamic
+    # overwrite of an empty frame touches no partition and keeps it)
+    sink(bdf(250, 250), 2)
+    assert snap() == sorted(
+        tuple(r) for r in present_rollup(rollup_state(bdf(0, 250), keys)).collect()
+    )
+    sink(bdf(250, 300), 2)
     assert snap() == direct
     compact_rollup_state(spark, path, keys)
     assert snap() == direct
