@@ -1798,30 +1798,24 @@ def q_decoded_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id", "frame_idx")
 
 
-# Video near-dup fixture: every 10th clip gets a planted twin with +3 on
+# Video near-dup fixture: the clips are the image rasters, so every 10th
+# clip gets the image dHash twin (_dhash_twins / _DHASH_TWINS_SQL): +3 on
 # the (row 0, col 0) pixel of each of the 4 frames (1-based flat positions
 # 1/17/33/49, clamped). A col-0 pixel feeds exactly ONE gradient
 # comparison, so the twin's 48-bit clip fingerprint is ≤ 4 Hamming away —
 # under the threshold, and blocking guarantees recall. max_hamming=5
-# gives six exact 8-bit segments.
+# gives six exact 8-bit segments. The frame-shifted query plants its own
+# twins at _VHASH_TWIN_EVERY / _VHASH_TWIN_OFFSET.
 _VHASH_MAX_HAMMING = 5
 _VHASH_TWIN_EVERY = 10
 _VHASH_TWIN_OFFSET = 1_000_000
 
 
 _VID_ND_ORACLE = f"""
-    WITH q0 AS (
+    WITH base AS (
       SELECT vec_id AS media_id, {_IMG_QUANT_SQL} AS px FROM embeddings
     ),
-    q AS (
-      SELECT media_id, px FROM q0
-      UNION ALL
-      SELECT media_id + {_VHASH_TWIN_OFFSET},
-             list_transform(generate_series(1, 64),
-               i -> CASE WHEN (i - 1) % 16 = 0
-                         THEN least(px[i] + 3, 255) ELSE px[i] END)
-      FROM q0 WHERE media_id % {_VHASH_TWIN_EVERY} = 0
-    ),
+    q AS (SELECT media_id, px FROM base UNION ALL {_DHASH_TWINS_SQL}),
     bits AS (
       SELECT media_id,
              CAST(SUM(CASE WHEN px[(k // 12) * 16
@@ -1865,14 +1859,8 @@ def q_video_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from network_iq_spark.operators.video import decode_y4m, encode_y4m
 
     src = _img_grid(spark, sf_dir)
-    twin = src.filter(F.col("media_id") % _VHASH_TWIN_EVERY == 0).select(
-        (F.col("media_id") + _VHASH_TWIN_OFFSET).alias("media_id"),
-        F.expr(
-            "transform(px, (x, i) -> IF(i % 16 = 0, least(x + 3, 255), x))"
-        ).alias("px"),
-    )
     decoded = _roundtrip(
-        src.unionByName(twin), "px", "uint8",
+        src.unionByName(_dhash_twins(src)), "px", "uint8",
         lambda a: decode_y4m(
             encode_y4m(
                 list(a.reshape(_VID_FRAMES, _VID_SIDE, _VID_SIDE)),
@@ -2011,7 +1999,7 @@ def _nd_census_arm(modality: str, oracle: str, offset: int) -> str:
       UNION ALL
       {_nd_census_arm("image", _IMG_ND_ORACLE, _DHASH_TWIN_OFFSET)}
       UNION ALL
-      {_nd_census_arm("video", _VID_ND_ORACLE, _VHASH_TWIN_OFFSET)}
+      {_nd_census_arm("video", _VID_ND_ORACLE, _DHASH_TWIN_OFFSET)}
     ) ORDER BY modality
     """,
 )
@@ -2050,7 +2038,7 @@ def q_media_near_dup_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             q_image_near_dup_pairs(spark, sf_dir), "image", _DHASH_TWIN_OFFSET
         ),
         lambda: arm(
-            q_video_near_dup_pairs(spark, sf_dir), "video", _VHASH_TWIN_OFFSET
+            q_video_near_dup_pairs(spark, sf_dir), "video", _DHASH_TWIN_OFFSET
         ),
     )
     return aud.unionByName(img).unionByName(vid).orderBy("modality")

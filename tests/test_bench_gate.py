@@ -1,9 +1,10 @@
-"""Unit tests for bench.py's watchdog arithmetic — the creeper-forensics
+"""Unit tests for bench.py: its watchdog arithmetic — the creeper-forensics
 machinery that r10–r12 hardened (floor comparison bands, noise-floor
-exemption, self-seeding, and the r12 host-gate threshold). bench.py is a
-script, but its pure functions import cleanly; a regression here silently
-re-opens a class of cross-round forensics the repo already paid for
-three times."""
+exemption, self-seeding, and the r12 host-gate threshold) — plus the
+stopping rule, the artifact guard and the per-run storage release.
+bench.py is a script, but its functions import cleanly; a regression here
+silently re-opens a class of cross-round forensics the repo already paid
+for three times."""
 
 from __future__ import annotations
 
@@ -153,3 +154,76 @@ def test_retime_block_present_in_artifact_schema():
     for name in alarms:
         assert name in retimed, f"{name} flagged >1.8x without a retime"
         assert "retimed_sec" in retimed[name] or "err" in retimed[name]
+
+
+# First-run sequences recorded on idle hosts (seconds, in run order): the
+# suite's warm-up pathologies the stopping rule has to see through.
+RECORDED_SEQUENCES = {
+    "ewma_hourly": [1.21, 0.63, 0.60, 0.52, 0.50, 0.51],
+    "decoded_image_stats": [9.10, 1.87, 1.70, 1.57, 1.54, 1.45],
+    "minhash_lsh_pairs": [6.46, 2.71, 2.01, 2.04],
+    "decoded_jpeg_prog_stats": [12.47, 5.03, 4.73, 4.74, 4.52],
+    "duplicate_spans": [9.26, 2.19, 1.59, 1.46, 1.53, 1.57],
+    "incremental_image_crop_probe": [9.22, 2.52, 2.27, 2.25, 2.22],
+    "ivf_cosine_topk": [16.75, 2.88, 1.94, 2.05, 1.76, 1.89],
+    "ivf_centroid_join_topk": [4.91, 1.92, 1.68, 1.61, 1.49, 1.65],
+    "ab_test_conversion": [8.21, 1.40, 1.01, 0.85, 0.83, 0.79],
+    "video_frame_shifted_pairs_after_predecessor": [7.52, 2.40, 2.25, 2.73],
+    "video_frame_shifted_pairs_after_census": [8.65, 2.54],
+    "ann_cosine_topk": [4.95, 1.60, 1.98],
+}
+
+
+@pytest.mark.parametrize("name", sorted(RECORDED_SEQUENCES))
+def test_stopping_rule_settles_near_the_recorded_min(bench, name):
+    """Replay a recorded sequence through ``_settled``: the rule stops by
+    MAX_RUNS, and the min it stops at is within 1.10x of the sequence's
+    min above the noise floor and within 1.25x below it. A sequence that
+    ends before the rule stops is read in full."""
+    mod, _ = bench
+    seq = RECORDED_SEQUENCES[name]
+    taken: list[float] = []
+    for reading in seq:
+        taken.append(reading)
+        if mod._settled(taken):
+            break
+    assert len(taken) <= mod.MAX_RUNS
+    bound = 1.10 if min(seq) >= mod.NOISE_FLOOR_SEC else 1.25
+    assert min(taken) <= bound * min(seq)
+
+
+def test_stopping_rule_bounds(bench):
+    mod, _ = bench
+    assert not mod._settled([])
+    assert not mod._settled([1.0] * (mod.MIN_RUNS - 1))
+    assert mod._settled([1.0] * mod.MIN_RUNS)
+    assert not mod._settled([1.0, 2.0])
+    assert mod._settled([9.0, 1.0, 9.0, 1.0, 9.0, 1.0][: mod.MAX_RUNS])
+
+
+def test_names_or_non_canonical_runs_select_no_artifact(bench):
+    mod, _ = bench
+    assert mod._artifact_path("0.1", names_run=False).endswith("bench_full.json")
+    assert mod._artifact_path("0.1", names_run=True) is None
+    assert mod._artifact_path("0.001", names_run=False) is None
+    assert mod._artifact_path("0.01", names_run=True) is None
+
+
+def test_time_query_releases_the_storage_it_persisted(bench, spark, sf_dir):
+    """ann_pq_adc_topk localCheckpoints its codebook, so a plain run
+    leaves persisted RDDs behind; ``_time_query`` must leave none. RDDs
+    that other tests of this session persisted are left alone."""
+    from network_iq_spark.registry import QUERIES
+
+    mod, _ = bench
+    jsc = spark.sparkContext._jsc
+    query = QUERIES["ann_pq_adc_topk"]
+    before = set(jsc.getPersistentRDDs().keys())
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    left = [r for i, r in jsc.getPersistentRDDs().items() if i not in before]
+    assert left, "the query no longer persists anything to release"
+    for rdd in left:
+        rdd.unpersist(True)
+    readings = mod._time_query(spark, query, sf_dir)
+    assert mod.MIN_RUNS <= len(readings) <= mod.MAX_RUNS
+    assert set(jsc.getPersistentRDDs().keys()) <= before

@@ -1,9 +1,10 @@
-"""The engine and the hand-run scripts each read a fixed, known set of
-environment variables. Every ``os.environ.get``, ``os.environ[...]`` and
-``os.getenv`` under ``network_iq_spark/`` and ``scripts/`` is found by
-walking the AST, so a new option read from the environment fails this
-test until it is added to ``KNOBS`` or ``SCRIPT_KNOBS``, and shows up in
-the diff that adds it. A name passed through a function parameter
+"""The engine, the hand-run scripts and ``bench.py`` each read a fixed,
+known set of environment variables. Every ``os.environ.get``,
+``os.environ[...]`` and ``os.getenv`` under ``network_iq_spark/`` and
+``scripts/`` and in ``bench.py`` is found by walking the AST, so a new
+option read from the environment fails this test until it is added to
+``KNOBS``, ``SCRIPT_KNOBS`` or ``BENCH_KNOBS``, and shows up in the diff
+that adds it. A name passed through a function parameter
 resolves to that parameter's string default."""
 
 from __future__ import annotations
@@ -25,17 +26,18 @@ KNOBS = {
 }
 
 # the soak/A-B cells run through scripts/ab.py, which has no options; these
-# are the data dir and repeat counts of the profilers, the plan dumper and
-# the suite-context A/B
+# are the data dir and the options of the plan dumper
 SCRIPT_KNOBS = {
     "SPARK_GRAFT_SF_DIR",
-    "SOLO_RUNS",
-    "PROFILE_RUNS",
     "PLAN_OUT",
     "PLAN_REPO",
     "PLAN_SUFFIX",
-    "CTX_RUNS",
 }
+
+# bench.py takes its queries as arguments; its repeat count and storage
+# release follow from what it observes, so only the data dir and the
+# retime switch remain
+BENCH_KNOBS = {"SPARK_GRAFT_SF_DIR", "BENCH_NO_RETIME"}
 
 
 def _is_environ(node: ast.AST) -> bool:
@@ -95,20 +97,29 @@ def _reads(tree: ast.AST, where: str):
     yield from visit(tree, {})
 
 
+def _py_files(target: str):
+    path = os.path.join(ROOT, target)
+    if os.path.isfile(path):
+        yield path
+    for dirpath, _, files in os.walk(path):
+        yield from (os.path.join(dirpath, f) for f in files if f.endswith(".py"))
+
+
 @pytest.mark.parametrize(
-    "subdir, knobs",
-    [("network_iq_spark", KNOBS), ("scripts", SCRIPT_KNOBS)],
-    ids=["network_iq_spark", "scripts"],
+    "target, knobs",
+    [
+        ("network_iq_spark", KNOBS),
+        ("scripts", SCRIPT_KNOBS),
+        ("bench.py", BENCH_KNOBS),
+    ],
+    ids=["network_iq_spark", "scripts", "bench.py"],
 )
-def test_reads_only_the_known_env_knobs(subdir, knobs):
+def test_reads_only_the_known_env_knobs(target, knobs):
     found = set()
-    for dirpath, _, files in os.walk(os.path.join(ROOT, subdir)):
-        for fname in files:
-            if fname.endswith(".py"):
-                path = os.path.join(dirpath, fname)
-                with open(path) as fh:
-                    tree = ast.parse(fh.read(), path)
-                found |= set(_reads(tree, os.path.relpath(path, ROOT)))
+    for path in _py_files(target):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        found |= set(_reads(tree, os.path.relpath(path, ROOT)))
     assert found == knobs
 
 
