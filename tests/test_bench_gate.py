@@ -168,6 +168,10 @@ RECORDED_SEQUENCES = {
     "ivf_cosine_topk": [16.75, 2.88, 1.94, 2.05, 1.76, 1.89],
     "ivf_centroid_join_topk": [4.91, 1.92, 1.68, 1.61, 1.49, 1.65],
     "ab_test_conversion": [8.21, 1.40, 1.01, 0.85, 0.83, 0.79],
+}
+# Recorded sequences that end while the warm-up is still visible: the
+# rule must ask for another run rather than stop at their min.
+UNSETTLED_SEQUENCES = {
     "video_frame_shifted_pairs_after_predecessor": [7.52, 2.40, 2.25, 2.73],
     "video_frame_shifted_pairs_after_census": [8.65, 2.54],
     "ann_cosine_topk": [4.95, 1.60, 1.98],
@@ -176,10 +180,9 @@ RECORDED_SEQUENCES = {
 
 @pytest.mark.parametrize("name", sorted(RECORDED_SEQUENCES))
 def test_stopping_rule_settles_near_the_recorded_min(bench, name):
-    """Replay a recorded sequence through ``_settled``: the rule stops by
-    MAX_RUNS, and the min it stops at is within 1.10x of the sequence's
-    min above the noise floor and within 1.25x below it. A sequence that
-    ends before the rule stops is read in full."""
+    """Replay a recorded sequence through ``_settled``: the rule stops
+    within the sequence, by MAX_RUNS, at a min within 1.10x of the
+    sequence's min above the noise floor and within 1.25x below it."""
     mod, _ = bench
     seq = RECORDED_SEQUENCES[name]
     taken: list[float] = []
@@ -187,9 +190,17 @@ def test_stopping_rule_settles_near_the_recorded_min(bench, name):
         taken.append(reading)
         if mod._settled(taken):
             break
+    assert mod._settled(taken), "the rule never stopped on this sequence"
     assert len(taken) <= mod.MAX_RUNS
     bound = 1.10 if min(seq) >= mod.NOISE_FLOOR_SEC else 1.25
     assert min(taken) <= bound * min(seq)
+
+
+@pytest.mark.parametrize("name", sorted(UNSETTLED_SEQUENCES))
+def test_stopping_rule_runs_on_through_an_unsettled_warm_up(bench, name):
+    mod, _ = bench
+    seq = UNSETTLED_SEQUENCES[name]
+    assert not any(mod._settled(seq[:k]) for k in range(1, len(seq) + 1))
 
 
 def test_stopping_rule_bounds(bench):
@@ -197,7 +208,12 @@ def test_stopping_rule_bounds(bench):
     assert not mod._settled([])
     assert not mod._settled([1.0] * (mod.MIN_RUNS - 1))
     assert mod._settled([1.0] * mod.MIN_RUNS)
-    assert not mod._settled([1.0, 2.0])
+    # readings that agree within WARMUP stop at MIN_RUNS, a warm-up or a
+    # query under the noise floor does not
+    floor = mod.NOISE_FLOOR_SEC
+    assert mod._settled([floor, floor * mod.WARMUP])
+    assert not mod._settled([floor, 2 * floor * mod.WARMUP])
+    assert not mod._settled([floor / 2, floor / 2 * mod.WARMUP])
     assert mod._settled([9.0, 1.0, 9.0, 1.0, 9.0, 1.0][: mod.MAX_RUNS])
 
 
