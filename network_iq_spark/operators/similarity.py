@@ -456,9 +456,11 @@ def ivf_assign_np(
     centroid id — centroid columns are ordered by c_id so numpy's
     first-max argmax lands on the smallest id) up to last-ulp cosine
     differences from matmul summation order, which is why the
-    oracle-pinned registered queries keep the interpreted path and the
-    scale/auto paths use this one. Still MAP-ONLY: centroids ride the
-    closure (tiny), output is (id, cell).
+    oracle-pinned registered queries keep the interpreted path. No engine
+    path calls it any more: ``semantic_dedup(n_cells=None)`` assigns with
+    :func:`ivf_assign_dist`. It stays as the flat matmul reference that
+    the two-level assigners' tests compare against. Still MAP-ONLY:
+    centroids ride the closure (tiny), output is (id, cell).
     """
     import numpy as np
     import pandas as pd

@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from network_iq_spark.streaming.dedup import read_if_exists, write_batch_partition
+from network_iq_spark.streaming.dedup import (
+    read_history,
+    read_if_exists,
+    write_batch_partition,
+)
 
 
 def incremental_ann_search_sink(
@@ -49,7 +53,9 @@ def incremental_ann_search_sink(
     Exactly-once: every output overwrites its own ``batch=<id>``
     directory (``streaming.dedup.write_batch_partition``), so a replayed
     micro-batch rewrites its own partitions (same discipline as the
-    near-dup sink).
+    near-dup sink). The batch is persisted for one evaluation and
+    unpersisted when the call ends, as the admission sinks release
+    theirs.
     """
     from network_iq_spark.operators.similarity import (
         ivf_assign,
@@ -65,40 +71,38 @@ def incremental_ann_search_sink(
                 f"IVF centroids not found at {centroids_path}: the coarse "
                 "quantizer must be trained offline before streaming search"
             )
+        # history as of strictly earlier batches (read_history), so a
+        # replay searches the snapshot its first run searched
+        hist = read_history(spark, corpus_path, batch_id)
+        hist_inv = read_history(spark, inv_path, batch_id)
         batch = with_norm(
             batch_df.select(id_col, F.col(vec_col).alias("v"))
-        ).localCheckpoint()  # one evaluation: search + assign + write
-        # History is STRICTLY earlier batches: a replayed micro-batch must
-        # search the same snapshot it originally saw (batch N's own rows
-        # and any later batches already landed are excluded), otherwise a
-        # replay returns different neighbors and exactly-once breaks at
-        # the RESULT level even though the writes are idempotent.
-        corpus = read_if_exists(spark, corpus_path)
-        inv = read_if_exists(spark, inv_path)
-        if corpus is not None and inv is not None:
-            hist = corpus.filter(F.col("batch") < batch_id).drop("batch")
-            hist_inv = inv.filter(F.col("batch") < batch_id).drop("batch")
-            results = ivf_search(
-                hist,
-                batch,
-                n_cells=0,  # unused: the prebuilt index IS the structure
-                nprobe=nprobe,
-                k=k,
-                id_col=id_col,
-                prebuilt=(cent, hist_inv),
-            )
-        else:  # first batch: empty history, empty result set
-            results = (
-                batch.select(
-                    F.col(id_col).alias("q_vec_id"),
-                    F.col(id_col).alias("n_vec_id"),
-                    F.lit(0).cast("int").alias("rank"),
-                    F.lit(0.0).alias("cos"),
-                ).filter(F.lit(False))
-            )
-        new_inv = ivf_assign(batch, cent, id_col)
-        write_batch_partition(results, results_path, batch_id)
-        write_batch_partition(batch, corpus_path, batch_id)
-        write_batch_partition(new_inv, inv_path, batch_id)
+        ).persist()  # one evaluation: search + assign + write
+        try:
+            if hist is not None and hist_inv is not None:
+                results = ivf_search(
+                    hist,
+                    batch,
+                    n_cells=0,  # unused: the prebuilt index IS the structure
+                    nprobe=nprobe,
+                    k=k,
+                    id_col=id_col,
+                    prebuilt=(cent, hist_inv),
+                )
+            else:  # first batch: empty history, empty result set
+                results = (
+                    batch.select(
+                        F.col(id_col).alias("q_vec_id"),
+                        F.col(id_col).alias("n_vec_id"),
+                        F.lit(0).cast("int").alias("rank"),
+                        F.lit(0.0).alias("cos"),
+                    ).filter(F.lit(False))
+                )
+            new_inv = ivf_assign(batch, cent, id_col)
+            write_batch_partition(results, results_path, batch_id)
+            write_batch_partition(batch, corpus_path, batch_id)
+            write_batch_partition(new_inv, inv_path, batch_id)
+        finally:
+            batch.unpersist()
 
     return sink

@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from network_iq_spark.operators import dedup as D
+
 
 def with_content_fingerprint(
     df: DataFrame, text_col: str = "text", out: str = "fingerprint"
@@ -94,6 +96,61 @@ def write_batch_partition(
     df.write.mode("overwrite").parquet(f"{path}/{col}={batch_id}")
 
 
+def read_history(spark, path: str, batch_id: int) -> DataFrame | None:
+    """The artifact under ``path`` as of batches STRICTLY before
+    ``batch_id`` (None before its first write): a replay must see the
+    snapshot its first run saw, not its own at-rest rows, which would
+    self-match and empty the survivor set — or, for a search, change the
+    neighbors, breaking exactly-once though the writes are idempotent."""
+    df = read_if_exists(spark, path)
+    return None if df is None else df.filter(F.col("batch") < batch_id).drop("batch")
+
+
+def _admission_sink(corpus_path, index_paths, key_cols, carry_cols, rejected, index):
+    """The ``foreachBatch`` body every admission sink below shares.
+
+    Per micro-batch: select ``key_cols`` (id first) plus ``carry_cols``,
+    which ride along into the corpus rows (url, crawl metadata) and touch
+    neither the dedup keys nor the index. Read each artifact in
+    ``index_paths`` through :func:`read_history`. Once every artifact
+    exists, drop the ids ``rejected(keys, *history)`` returns; the first
+    batch has no history and admits every row. Persist the survivors (one
+    evaluation for every write), write them to the corpus and each frame
+    of ``index(survivor keys)`` to its index path, and unpersist them on
+    the way out, whether or not the writes succeeded.
+
+    Exactly-once effect: every output overwrites its own ``batch=<id>``
+    partition (:func:`write_batch_partition`), so a replayed micro-batch
+    rewrites its partitions instead of appending twice — a corrected
+    replay included, and an all-duplicate one empties them — and the
+    strictly-earlier history makes it decide as its first run did.
+
+    The release unpersists the sink's own frame and nothing else, never a
+    diff of the context's persisted RDDs: two streams in one session run
+    ``foreachBatch`` concurrently, and a diff would drop a sibling
+    stream's live storage.
+    """
+    id_col = key_cols[0]
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        batch = batch_df.select(*key_cols, *carry_cols)
+        history = [read_history(spark, p, batch_id) for p in index_paths]
+        survivors = batch
+        if all(h is not None for h in history):
+            dup_ids = rejected(batch.select(*key_cols), *history).toDF(id_col)
+            survivors = batch.join(dup_ids.distinct(), id_col, "left_anti")
+        survivors = survivors.persist()
+        try:
+            write_batch_partition(survivors, corpus_path, batch_id)
+            for df, path in zip(index(survivors.select(*key_cols)), index_paths):
+                write_batch_partition(df, path, batch_id)
+        finally:
+            survivors.unpersist()
+
+    return sink
+
+
 def incremental_near_dup_sink(
     corpus_path: str,
     bands_path: str,
@@ -115,50 +172,17 @@ def incremental_near_dup_sink(
     memory and must forget beyond the horizon, while here the "state" is
     the parquet index itself — unbounded history at parquet cost, shared
     with the batch tier (same artifacts ``lsh_index`` builds offline).
-
-    Exactly-once effect: every output lands under a ``batch=<id>``
-    partition written with ``overwrite`` of just that partition, so a
-    replayed micro-batch rewrites its own partition instead of appending
-    twice (same discipline as streaming/sink.py, without a key-merge).
-
-    ``carry_cols`` ride along into the corpus rows (url, crawl metadata)
-    without touching the dedup keys or the index artifacts.
     """
-    from network_iq_spark.operators.dedup import incremental_near_dup, lsh_index
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, text_col, *carry_cols)
-        bands = read_if_exists(spark, bands_path)
-        sets = read_if_exists(spark, sets_path)
-        if bands is not None and sets is not None:
-            # History is STRICTLY earlier batches (the ann.py discipline):
-            # on a replay the index already holds THIS batch's own rows,
-            # and probing them would make every row self-match (jaccard 1
-            # with itself), empty the survivor set, and leave the stale
-            # partition standing — the replay must see the same snapshot
-            # the original run saw.
-            matches = incremental_near_dup(
-                batch,
-                bands.filter(F.col("batch") < batch_id).drop("batch"),
-                sets.filter(F.col("batch") < batch_id).drop("batch"),
-                threshold,
-                text_col=text_col,
-                id_col=id_col,
-            )
-            dup_ids = matches.select(
-                F.col("new_doc").alias(id_col)
-            ).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 3 writes
-        new_bands, new_sets = lsh_index(survivors, text_col, id_col)
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_bands, bands_path, batch_id)
-        write_batch_partition(new_sets, sets_path, batch_id)
+    def rejected(batch, bands, sets):
+        return D.incremental_near_dup(
+            batch, bands, sets, threshold, text_col=text_col, id_col=id_col
+        ).select("new_doc")
 
-    return sink
+    return _admission_sink(
+        corpus_path, (bands_path, sets_path), (id_col, text_col), carry_cols,
+        rejected, lambda s: D.lsh_index(s, text_col, id_col),
+    )
 
 
 def incremental_media_dedup_sink(
@@ -179,50 +203,25 @@ def incremental_media_dedup_sink(
     ``incremental_hamming_dedup`` — O(batch × collision rate), never
     O(history)); survivors append to the corpus and their segment rows
     (``hamming_index``) append to the index, so the next batch sees
-    them. Same exactly-once discipline: every output overwrites its own
-    ``batch=<id>`` directory (``write_batch_partition``), so a
-    replayed micro-batch converges instead of appending twice.
+    them.
 
     One sink serves all modalities — the index schema is
     (id, hash, seg, seg_val) regardless of whether the fingerprint came
     from pixels, PCM, or frames; a deployment runs one sink per modality
     stream against per-modality paths.
     """
-    from network_iq_spark.operators.dedup import (
-        hamming_index,
-        incremental_hamming_dedup,
+
+    def rejected(batch, index):
+        return D.incremental_hamming_dedup(
+            batch, index, hash_col, max_hamming, n_bits, id_col=id_col
+        ).select("new_id")
+
+    def index(keys):
+        return (D.hamming_index(keys, hash_col, max_hamming, n_bits, id_col=id_col),)
+
+    return _admission_sink(
+        corpus_path, (index_path,), (id_col, hash_col), carry_cols, rejected, index
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, hash_col, *carry_cols)
-        index = read_if_exists(spark, index_path)
-        if index is not None:
-            # Strictly earlier batches only — a replay otherwise probes
-            # its own index rows, self-matches at hamming 0, and emits an
-            # empty survivor set instead of recomputing the partition
-            # (see incremental_near_dup_sink).
-            matches = incremental_hamming_dedup(
-                batch.select(id_col, hash_col),
-                index.filter(F.col("batch") < batch_id).drop("batch"),
-                hash_col,
-                max_hamming,
-                n_bits,
-                id_col=id_col,
-            )
-            dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 2 writes
-        new_index = hamming_index(
-            survivors.select(id_col, hash_col), hash_col, max_hamming, n_bits,
-            id_col=id_col,
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_index, index_path, batch_id)
-
-    return sink
 
 
 def incremental_crop_dedup_sink(
@@ -249,60 +248,27 @@ def incremental_crop_dedup_sink(
     O(history)); a batch grid that is a crop of ANY at-rest grid (or
     vice versa — the 2-D lag scan is symmetric in sign) is dropped,
     survivors append to the corpus and their token + grid rows append to
-    the index, so the next batch sees them. Same exactly-once
-    discipline: every output overwrites its own ``batch=<id>``
-    directory (``write_batch_partition``), and the probe reads STRICTLY
-    earlier batches so a replayed micro-batch converges instead of
-    self-matching at ssd 0 and emitting an empty survivor set.
+    the index, so the next batch sees them.
     ``frames`` > 1 makes this the VIDEO crop cell's sink (r12):
     crop_index tokens are frame-0-bounded by construction, so the
     at-rest artifacts are format-identical — only the verify widens
     to sum SSD across every plane."""
-    from network_iq_spark.operators.dedup import (
-        crop_index,
-        incremental_cropped_dedup,
+
+    cols = dict(id_col=id_col, px_col=px_col, w_col=w_col, h_col=h_col)
+
+    def rejected(batch, toks, grids):
+        return D.incremental_cropped_dedup(
+            batch, toks, grids, max_crop=max_crop, block=block, side=side,
+            ssd_tol=ssd_tol, frames=frames, **cols,
+        ).select("new_id")
+
+    def index(keys):
+        return D.crop_index(keys, max_crop=max_crop, block=block, side=side, **cols)
+
+    return _admission_sink(
+        corpus_path, (toks_path, grids_path), (id_col, w_col, h_col, px_col),
+        carry_cols, rejected, index,
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, w_col, h_col, px_col, *carry_cols)
-        toks = read_if_exists(spark, toks_path)
-        grids = read_if_exists(spark, grids_path)
-        if toks is not None and grids is not None:
-            matches = incremental_cropped_dedup(
-                batch.select(id_col, w_col, h_col, px_col),
-                toks.filter(F.col("batch") < batch_id).drop("batch"),
-                grids.filter(F.col("batch") < batch_id).drop("batch"),
-                max_crop=max_crop,
-                block=block,
-                side=side,
-                ssd_tol=ssd_tol,
-                id_col=id_col,
-                px_col=px_col,
-                w_col=w_col,
-                h_col=h_col,
-                frames=frames,
-            )
-            dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 3 writes
-        new_toks, new_grids = crop_index(
-            survivors.select(id_col, w_col, h_col, px_col),
-            max_crop=max_crop,
-            block=block,
-            side=side,
-            id_col=id_col,
-            px_col=px_col,
-            w_col=w_col,
-            h_col=h_col,
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_toks, toks_path, batch_id)
-        write_batch_partition(new_grids, grids_path, batch_id)
-
-    return sink
 
 
 def incremental_trim_dedup_sink(
@@ -327,52 +293,23 @@ def incremental_trim_dedup_sink(
     clip that is a trim of ANY at-rest clip or the untrimmed original
     of an at-rest trim is dropped (first-arrival-wins), survivors
     append to the corpus and their token + sequence rows append to the
-    index, so the next batch sees them. Same exactly-once discipline:
-    every output lands under its ``batch=<id>`` partition and the probe
-    reads STRICTLY earlier batches so a replayed micro-batch converges
-    instead of self-matching. ``stride`` > 1 makes this the VIDEO
-    temporal-trim cell's sink (units = frames), the crop sink's
+    index, so the next batch sees them. ``stride`` > 1 makes this the
+    VIDEO temporal-trim cell's sink (units = frames), the crop sink's
     ``frames`` / resample sink's ``stride`` precedent."""
-    from network_iq_spark.operators.dedup import (
-        incremental_trimmed_dedup,
-        trim_index,
+
+    cols = dict(
+        max_trim=max_trim, anchor=anchor, id_col=id_col, s_col=s_col, stride=stride
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, s_col, *carry_cols)
-        toks = read_if_exists(spark, toks_path)
-        seqs = read_if_exists(spark, seqs_path)
-        if toks is not None and seqs is not None:
-            matches = incremental_trimmed_dedup(
-                batch.select(id_col, s_col),
-                toks.filter(F.col("batch") < batch_id).drop("batch"),
-                seqs.filter(F.col("batch") < batch_id).drop("batch"),
-                max_trim=max_trim,
-                anchor=anchor,
-                ssd_tol=ssd_tol,
-                id_col=id_col,
-                s_col=s_col,
-                stride=stride,
-            )
-            dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 3 writes
-        new_toks, new_seqs = trim_index(
-            survivors.select(id_col, s_col),
-            max_trim=max_trim,
-            anchor=anchor,
-            id_col=id_col,
-            s_col=s_col,
-            stride=stride,
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_toks, toks_path, batch_id)
-        write_batch_partition(new_seqs, seqs_path, batch_id)
+    def rejected(batch, toks, seqs):
+        return D.incremental_trimmed_dedup(
+            batch, toks, seqs, ssd_tol=ssd_tol, **cols
+        ).select("new_id")
 
-    return sink
+    return _admission_sink(
+        corpus_path, (toks_path, seqs_path), (id_col, s_col), carry_cols,
+        rejected, lambda s: D.trim_index(s, **cols),
+    )
 
 
 def incremental_resample_dedup_sink(
@@ -397,46 +334,19 @@ def incremental_resample_dedup_sink(
     side is the graph tier's job, not the sink's), survivors append to
     the corpus and their (own_key, derived_key) rows
     (``resample_index``) append to the index, so the next batch sees
-    them. Same exactly-once discipline: every output lands under its
-    ``batch=<id>`` partition, and the probe reads STRICTLY earlier
-    batches so a replayed micro-batch recomputes its own partition
-    instead of probing its own rows. ``stride`` > 1 makes this the
-    VIDEO frame-rate cell's sink — the at-rest artifacts are
-    format-identical (the crop sink's ``frames`` precedent)."""
-    from network_iq_spark.operators.dedup import (
-        incremental_resampled_dedup,
-        resample_index,
+    them. ``stride`` > 1 makes this the VIDEO frame-rate cell's sink —
+    the at-rest artifacts are format-identical (the crop sink's
+    ``frames`` precedent)."""
+
+    cols = dict(factor=factor, stride=stride, id_col=id_col, s_col=s_col)
+
+    def rejected(batch, index):
+        return D.incremental_resampled_dedup(batch, index, **cols).select("new_id")
+
+    return _admission_sink(
+        corpus_path, (index_path,), (id_col, s_col), carry_cols,
+        rejected, lambda s: (D.resample_index(s, **cols),),
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, s_col, *carry_cols)
-        index = read_if_exists(spark, index_path)
-        if index is not None:
-            matches = incremental_resampled_dedup(
-                batch.select(id_col, s_col),
-                index.filter(F.col("batch") < batch_id).drop("batch"),
-                factor=factor,
-                stride=stride,
-                id_col=id_col,
-                s_col=s_col,
-            )
-            dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 2 writes
-        new_index = resample_index(
-            survivors.select(id_col, s_col),
-            factor=factor,
-            stride=stride,
-            id_col=id_col,
-            s_col=s_col,
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_index, index_path, batch_id)
-
-    return sink
 
 
 def chunk_admission_sink(
@@ -460,79 +370,38 @@ def chunk_admission_sink(
     threshold. Admitted documents append to the corpus and their CHUNK
     index rows append to the index, so the next batch sees them.
 
-    Same disciplines as the sibling sinks: the probe reads STRICTLY
-    earlier batches (a replay otherwise self-matches its own at-rest
-    chunks and rejects everything), every output lands via a direct
-    partition-path write so a corrected replay genuinely rewrites — and
-    the admission bit is integer arithmetic (1e6·dups ≤ ppm·n_chunks),
-    so a replayed batch decides identically.
+    The admission bit is integer arithmetic (1e6·dups ≤ ppm·n_chunks),
+    so a replayed batch decides identically. Only a document with a
+    near-matching chunk can be rejected: one whose text yields no
+    [a-z0-9]+ tokens has zero chunks, none of them duplicates, and is
+    admitted (r10 ADVICE).
     """
-    from network_iq_spark.operators.dedup import incremental_near_dup, lsh_index
+
     from network_iq_spark.queries._fragments import _CHUNK_ID_BASE, chunk_docs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select("doc_id", "text", *carry_cols)
-        chunks = chunk_docs(batch.select("doc_id", "text")).localCheckpoint()
-        n_chunks = (
-            chunks.select(
-                F.expr(f"doc_id div {_CHUNK_ID_BASE}").alias("doc_id")
-            )
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("__n__"))
-        )
-        bands = read_if_exists(spark, bands_path)
-        sets = read_if_exists(spark, sets_path)
-        if bands is not None and sets is not None:
-            matches = incremental_near_dup(
-                chunks,
-                bands.filter(F.col("batch") < batch_id).drop("batch"),
-                sets.filter(F.col("batch") < batch_id).drop("batch"),
-                threshold,
-                n_bands=n_bands,
-                rows_per_band=rows_per_band,
-            )
-            dup = (
-                matches.select(
-                    F.expr(f"new_doc div {_CHUNK_ID_BASE}").alias("doc_id"),
-                    "new_doc",
-                )
-                .groupBy("doc_id")
-                .agg(F.countDistinct("new_doc").alias("__d__"))
-            )
-            # Anchor the verdict on the BATCH's doc ids, not on n_chunks:
-            # a doc whose text yields no [a-z0-9]+ tokens produces zero
-            # chunks and would otherwise vanish from n_chunks and be
-            # silently dropped by the left_semi (r10 ADVICE). With
-            # __n__=0 and __d__=0 the integer rule reads 0 ≤ 0 —
-            # trivially admitted, consistent with "0 of its chunks are
-            # duplicates".
-            verdicts = (
-                batch.select("doc_id")
-                .distinct()
-                .join(n_chunks, "doc_id", "left")
-                .join(dup, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    (
-                        1_000_000 * F.coalesce(F.col("__d__"), F.lit(0))
-                        <= max_dup_ppm * F.coalesce(F.col("__n__"), F.lit(0))
-                    ).alias("__admit__"),
-                )
-            )
-            admitted_ids = verdicts.filter(F.col("__admit__")).select("doc_id")
-        else:  # first batch: empty history, everything admits
-            admitted_ids = batch.select("doc_id").distinct()
-        survivors = batch.join(admitted_ids, "doc_id", "left_semi").localCheckpoint()
-        surv_chunks = chunk_docs(survivors.select("doc_id", "text"))
-        new_bands, new_sets = lsh_index(
-            surv_chunks, n_bands=n_bands, rows_per_band=rows_per_band
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_bands, bands_path, batch_id)
-        write_batch_partition(new_sets, sets_path, batch_id)
+    lsh = dict(n_bands=n_bands, rows_per_band=rows_per_band)
 
-    return sink
+    def doc_of(chunk_col):
+        return F.expr(f"{chunk_col} div {_CHUNK_ID_BASE}").alias("doc_id")
+
+    def rejected(batch, bands, sets):
+        chunks = chunk_docs(batch)
+        n_chunks = chunks.groupBy(doc_of("doc_id")).agg(F.count("*").alias("__n__"))
+        dups = (
+            D.incremental_near_dup(chunks, bands, sets, threshold, **lsh)
+            .groupBy(doc_of("new_doc"))
+            .agg(F.countDistinct("new_doc").alias("__d__"))
+        )
+        return (
+            dups.join(n_chunks, "doc_id")
+            .filter(1_000_000 * F.col("__d__") > max_dup_ppm * F.col("__n__"))
+            .select("doc_id")
+        )
+
+    return _admission_sink(
+        corpus_path, (bands_path, sets_path), ("doc_id", "text"), carry_cols,
+        rejected, lambda s: D.lsh_index(chunk_docs(s), **lsh),
+    )
 
 
 def incremental_landmark_dedup_sink(
@@ -559,42 +428,19 @@ def incremental_landmark_dedup_sink(
     landmark-matches ANY at-rest clip (a trim∘gain∘noise or shift∘gain
     re-upload) is dropped (first-arrival-wins), survivors append to the
     corpus and their ``landmark_index`` rows append to the index, so
-    the next batch sees them. Same exactly-once discipline: every
-    output lands under its ``batch=<id>`` partition and the probe
-    reads STRICTLY earlier batches, so a replayed micro-batch
-    converges instead of self-matching. The family's measured-recall
+    the next batch sees them. The family's measured-recall
     contract carries over verbatim: a missed near-dup is admitted (the
     S-curve tiers' documented failure direction), never a false
     drop — precision is the verify's, which the soak pins at 0 FP."""
-    from network_iq_spark.operators.dedup import (
-        incremental_landmark_probe,
-        landmark_index,
+
+    def rejected(batch, index):
+        return D.incremental_landmark_probe(
+            batch, index, min_votes=min_votes, corr2_min=corr2_min,
+            min_overlap=min_overlap, id_col=id_col, s_col=s_col,
+            max_bucket_size=max_bucket_size,
+        ).select("new_id")
+
+    return _admission_sink(
+        corpus_path, (index_path,), (id_col, s_col), carry_cols,
+        rejected, lambda s: (D.landmark_index(s, id_col=id_col, s_col=s_col),),
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, s_col, *carry_cols)
-        index = read_if_exists(spark, index_path)
-        if index is not None:
-            matches = incremental_landmark_probe(
-                batch.select(id_col, s_col),
-                index.filter(F.col("batch") < batch_id).drop("batch"),
-                min_votes=min_votes,
-                corr2_min=corr2_min,
-                min_overlap=min_overlap,
-                id_col=id_col,
-                s_col=s_col,
-                max_bucket_size=max_bucket_size,
-            )
-            dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-        else:
-            survivors = batch
-        survivors = survivors.localCheckpoint()  # one evaluation, 2 writes
-        new_index = landmark_index(
-            survivors.select(id_col, s_col), id_col=id_col, s_col=s_col
-        )
-        write_batch_partition(survivors, corpus_path, batch_id)
-        write_batch_partition(new_index, index_path, batch_id)
-
-    return sink

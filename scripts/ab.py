@@ -77,6 +77,47 @@ def state_dir(name: str) -> str:
     return path
 
 
+FRESH_ID = 10_000_000  # sink cells: batch ids start here, history ids stay below
+
+
+def sink_cell(
+    name, state, sink, indexes, schema, history_rows, batch_rows, admitted, arm
+) -> Cell:
+    """A cell replaying one fixed batch through a streaming sink against an
+    at-rest history that grows 1x/3x/10x: per-batch cost must stay flat.
+
+    ``sink(corpus, *index_paths)`` builds the sink over ``corpus`` and
+    ``indexes`` in a fresh ``.soak/<state>_x<scale>`` directory. Untimed,
+    ``history_rows(scale)`` goes in as batch 0, then ``batch_rows()`` is
+    checkpointed and goes in once as batch 1. Every checked and timed run
+    replays batch 1, the sink's strictly-earlier-batch probe path, so each
+    run does identical work. The check counts the corpus ids at or above
+    ``FRESH_ID`` (the batch's ids) and expects ``admitted``."""
+    id_col = schema.split()[0]
+
+    def prepare(spark, m):
+        root = state_dir(f"{state}_x{m:g}")
+        corpus, *paths = (os.path.join(root, p) for p in ("corpus", *indexes))
+        run = sink(corpus, *paths)
+        run(spark.createDataFrame(history_rows(m), schema), 0)
+        rows = batch_rows()
+        batch = spark.createDataFrame(rows, schema).localCheckpoint()
+        run(batch, 1)
+        return run, batch, corpus, len(rows)
+
+    def check(data, _):
+        _, batch, corpus, n = data
+        got = (
+            batch.sparkSession.read.parquet(corpus)
+            .filter(f"{id_col} >= {FRESH_ID}")
+            .count()
+        )
+        assert got == admitted, (got, admitted)
+        return f"admitted {got}/{n}"
+
+    return Cell(name, (1, 3, 10), prepare, {arm: lambda spark, d: d[0](d[1], 1)}, check)
+
+
 def exponent(scales, times) -> float:
     """Least-squares slope of log(time) on log(scale); NaN below 2 points."""
     if len(scales) < 2:

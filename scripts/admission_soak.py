@@ -12,21 +12,15 @@ carry one shared template chunk (realistic boilerplate collisions, not
 the 31-word degenerate vocabulary); the probe batch is half
 template-recycling docs (3/4 dup chunks -> must be REJECTED at the 20 %
 cap) and half fresh docs (must be admitted) — so the soak also asserts
-the admission decision stays correct at every scale.
-
-Batch 0 (the at-rest index a deployment already has on disk) and the
-first write of batch 1 run untimed; every checked and timed run replays
-batch 1 — the sink's strictly-earlier-batch probe path, so min-of-N
-times identical work.
+the admission decision stays correct at every scale. Batch 0 is the
+at-rest index a deployment already has on disk.
 
 Run: python scripts/ab.py chunk_admission_sink   (sink state under .soak/)
 """
 
 from __future__ import annotations
 
-import os
-
-from ab import Cell, state_dir
+from ab import FRESH_ID, sink_cell
 from network_iq_spark.streaming.dedup import chunk_admission_sink
 
 BASE_DOCS = 3_000
@@ -55,7 +49,7 @@ def history_rows(mult: int):
 def batch_rows():
     rows = []
     for i in range(BATCH_DOCS):
-        doc_id = 10_000_000 + i
+        doc_id = FRESH_ID + i
         if i % 2 == 0:  # template-heavy: 3 of 4 chunks recycled -> reject
             rows.append(
                 (doc_id, " ".join([TEMPLATE] * 3 + [_chunk(f"b{i}f")]))
@@ -67,33 +61,16 @@ def batch_rows():
     return rows
 
 
-def _prepare(spark, m):
-    root = state_dir(f"admission_soak_x{m:g}")
-    corpus = os.path.join(root, "corpus")
-    sink = chunk_admission_sink(
-        corpus, os.path.join(root, "bands"), os.path.join(root, "sets")
-    )
-    schema = "doc_id bigint, text string"
-    sink(spark.createDataFrame(history_rows(m), schema), 0)
-    batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
-    sink(batch, 1)
-    return sink, batch, lambda: (
-        spark.read.parquet(corpus).filter("doc_id >= 10000000").count()
-    )
-
-
-def _check(data, _):
-    admitted = data[2]()
-    assert admitted == BATCH_DOCS // 2, (admitted, BATCH_DOCS // 2)
-    return f"admitted {admitted}/{BATCH_DOCS}"
-
-
 CELLS = [
-    Cell(
+    sink_cell(
         "chunk_admission_sink",
-        (1, 3, 10),
-        _prepare,
-        {"fixed 400-doc batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
-        _check,
+        "admission_soak",
+        chunk_admission_sink,
+        ("bands", "sets"),
+        "doc_id bigint, text string",
+        history_rows,
+        batch_rows,
+        BATCH_DOCS // 2,
+        "fixed 400-doc batch, at-rest index",
     )
 ]

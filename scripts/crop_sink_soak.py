@@ -13,18 +13,14 @@ the soak also asserts the dedup decision stays correct at every scale,
 including under replay (re-running the same batch_id is the sink's
 strictly-earlier-batch probe path).
 
-Batch 0 (the at-rest index) and the first write of batch 1 run
-untimed; every checked and timed run is a replay of batch 1.
-
 Run: python scripts/ab.py incremental_crop_dedup_sink   (sink state under .soak/)
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
-from ab import Cell, state_dir
+from ab import FRESH_ID, sink_cell
 from network_iq_spark.streaming.dedup import incremental_crop_dedup_sink
 
 BASE_IMGS = 2_000
@@ -48,7 +44,7 @@ def history_rows(mult: int):
 def batch_rows():
     rows = []
     for i in range(BATCH_IMGS):
-        mid = 10_000_000 + i
+        mid = FRESH_ID + i
         if i % 2 == 0:  # crop of history image i -> must be dropped
             rows.append((mid, 7, 7, _crop(_grid(i))))
         else:  # fresh -> must be admitted
@@ -56,33 +52,16 @@ def batch_rows():
     return rows
 
 
-def _prepare(spark, m):
-    root = state_dir(f"crop_sink_soak_x{m:g}")
-    corpus = os.path.join(root, "corpus")
-    sink = incremental_crop_dedup_sink(
-        corpus, os.path.join(root, "toks"), os.path.join(root, "grids"), max_crop=2
-    )
-    schema = "media_id bigint, w int, h int, px array<int>"
-    sink(spark.createDataFrame(history_rows(m), schema), 0)
-    batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
-    sink(batch, 1)
-    return sink, batch, lambda: (
-        spark.read.parquet(corpus).filter("media_id >= 10000000").count()
-    )
-
-
-def _check(data, _):
-    admitted = data[2]()
-    assert admitted == BATCH_IMGS // 2, (admitted, BATCH_IMGS // 2)
-    return f"admitted {admitted}/{BATCH_IMGS}"
-
-
 CELLS = [
-    Cell(
+    sink_cell(
         "incremental_crop_dedup_sink",
-        (1, 3, 10),
-        _prepare,
-        {"fixed 400-image batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
-        _check,
+        "crop_sink_soak",
+        incremental_crop_dedup_sink,
+        ("toks", "grids"),
+        "media_id bigint, w int, h int, px array<int>",
+        history_rows,
+        batch_rows,
+        BATCH_IMGS // 2,
+        "fixed 400-image batch, at-rest index",
     )
 ]

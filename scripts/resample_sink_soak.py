@@ -13,18 +13,14 @@ admitted) — so the soak also asserts the dedup decision stays correct
 at every scale, including under replay (re-running the same batch_id
 is the sink's strictly-earlier-batch probe path).
 
-Batch 0 (the at-rest index) and the first write of batch 1 run
-untimed; every checked and timed run is a replay of batch 1.
-
 Run: python scripts/ab.py incremental_resample_dedup_sink   (sink state under .soak/)
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
-from ab import Cell, state_dir
+from ab import FRESH_ID, sink_cell
 from network_iq_spark.streaming.dedup import incremental_resample_dedup_sink
 
 BASE_CLIPS = 2_000
@@ -47,7 +43,7 @@ def history_rows(mult: int):
 def batch_rows():
     rows = []
     for i in range(BATCH_CLIPS):
-        mid = 10_000_000 + i
+        mid = FRESH_ID + i
         if i % 2 == 0:  # decimation of history clip i -> must be dropped
             rows.append((mid, _dec(_clip(i))))
         else:  # fresh -> must be admitted
@@ -55,31 +51,16 @@ def batch_rows():
     return rows
 
 
-def _prepare(spark, m):
-    root = state_dir(f"resample_sink_soak_x{m:g}")
-    corpus = os.path.join(root, "corpus")
-    sink = incremental_resample_dedup_sink(corpus, os.path.join(root, "index"), factor=2)
-    schema = "media_id bigint, s array<int>"
-    sink(spark.createDataFrame(history_rows(m), schema), 0)
-    batch = spark.createDataFrame(batch_rows(), schema).localCheckpoint()
-    sink(batch, 1)
-    return sink, batch, lambda: (
-        spark.read.parquet(corpus).filter("media_id >= 10000000").count()
-    )
-
-
-def _check(data, _):
-    admitted = data[2]()
-    assert admitted == BATCH_CLIPS // 2, (admitted, BATCH_CLIPS // 2)
-    return f"admitted {admitted}/{BATCH_CLIPS}"
-
-
 CELLS = [
-    Cell(
+    sink_cell(
         "incremental_resample_dedup_sink",
-        (1, 3, 10),
-        _prepare,
-        {"fixed 400-clip batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
-        _check,
+        "resample_sink_soak",
+        incremental_resample_dedup_sink,
+        ("index",),
+        "media_id bigint, s array<int>",
+        history_rows,
+        batch_rows,
+        BATCH_CLIPS // 2,
+        "fixed 400-clip batch, at-rest index",
     )
 ]

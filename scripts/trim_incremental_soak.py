@@ -7,9 +7,6 @@ stay flat (token-collision probe, O(batch x collision), never a
 history rescan); the dedup/match decision is asserted at every scale,
 and sink replays ride the strictly-earlier-batch path.
 
-Batch 0 (the history) and the first write of batch 1 run untimed; every
-checked and timed sink run is a replay of batch 1.
-
 Run: python scripts/ab.py incremental_trimmed_dedup incremental_trim_dedup_sink
      (sink state under .soak/)
 """
@@ -17,9 +14,8 @@ Run: python scripts/ab.py incremental_trimmed_dedup incremental_trim_dedup_sink
 from __future__ import annotations
 
 import hashlib
-import os
 
-from ab import Cell, state_dir
+from ab import FRESH_ID, Cell, sink_cell
 from network_iq_spark.operators import dedup as D
 from network_iq_spark.streaming.dedup import incremental_trim_dedup_sink
 
@@ -40,7 +36,7 @@ def history_rows(mult: int):
 def batch_rows():
     rows = []
     for i in range(BATCH_CLIPS):
-        mid = 10_000_000 + i
+        mid = FRESH_ID + i
         if i % 2 == 0:  # trim of history clip i -> must be dropped
             head, tail = ARMS[(i // 2) % len(ARMS)]
             rows.append((mid, _clip(i)[head : 64 - tail]))
@@ -64,24 +60,6 @@ def _check_probe(data, rows):
     return f"matched {len(rows)}/{BATCH_CLIPS}"
 
 
-def _prepare_sink(spark, m):
-    root = state_dir(f"trim_sink_soak_x{m:g}")
-    paths = [os.path.join(root, p) for p in ("corpus", "toks", "seqs")]
-    sink = incremental_trim_dedup_sink(*paths)
-    sink(spark.createDataFrame(history_rows(m), SCHEMA), 0)
-    batch = spark.createDataFrame(batch_rows(), SCHEMA).localCheckpoint()
-    sink(batch, 1)
-    return sink, batch, lambda: (
-        spark.read.parquet(paths[0]).filter("media_id >= 10000000").count()
-    )
-
-
-def _check_sink(data, _):
-    admitted = data[2]()
-    assert admitted == BATCH_CLIPS - BATCH_CLIPS // 2, admitted
-    return f"admitted {admitted}/{BATCH_CLIPS}"
-
-
 CELLS = [
     Cell(
         "incremental_trimmed_dedup",
@@ -94,11 +72,15 @@ CELLS = [
         },
         _check_probe,
     ),
-    Cell(
+    sink_cell(
         "incremental_trim_dedup_sink",
-        (1, 3, 10),
-        _prepare_sink,
-        {"fixed 400-clip batch, at-rest index": lambda spark, d: d[0](d[1], 1)},
-        _check_sink,
+        "trim_sink_soak",
+        incremental_trim_dedup_sink,
+        ("toks", "seqs"),
+        SCHEMA,
+        history_rows,
+        batch_rows,
+        BATCH_CLIPS - BATCH_CLIPS // 2,
+        "fixed 400-clip batch, at-rest index",
     ),
 ]

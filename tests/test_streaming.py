@@ -832,88 +832,196 @@ def test_incremental_near_dup_sink_streams_against_at_rest_index(spark, tmp_path
     assert sorted(set(r.doc_id for r in spark.read.parquet(bands).collect())) == [1, 2, 11]
 
 
-def test_incremental_near_dup_sink_replay_with_changed_contents(spark, tmp_path):
-    """A replayed micro-batch with DIFFERENT contents (source correction,
-    late rows) must genuinely recompute and rewrite its partition — the
-    probe excludes the batch's own at-rest index rows (otherwise every
-    row self-matches at jaccard 1, the survivor set comes back empty, and
-    the stale partition stands), and an all-duplicate replay truncates
-    the partition rather than leaving the original rows."""
-    from network_iq_spark.streaming.dedup import incremental_near_dup_sink
-
-    corpus = str(tmp_path / "corpus")
-    bands = str(tmp_path / "bands")
-    sets = str(tmp_path / "sets")
-    sink = incremental_near_dup_sink(corpus, bands, sets, threshold=0.6)
-
-    base = ("the quick brown fox jumps over the lazy dog again and again today "
-            "while the merry little band of travellers watches from the old hill")
-    novel = ("completely different words about spark parquet shuffles and joins "
-             "plus executors partitions codegen catalyst and adaptive planning")
-    novel2 = ("a third corpus of text concerning rivers bridges harbours and "
-              "ferries crossing them at dawn with lanterns swinging in the fog")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-    def corpus_ids():
-        return sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
-
-    sink(docs([(1, base)]), 0)
-    sink(docs([(11, novel)]), 1)
-    assert corpus_ids() == [1, 11]
-    # corrected replay: 11 withdrawn, 12 delivered instead
-    sink(docs([(12, novel2)]), 1)
-    assert corpus_ids() == [1, 12]
-    index_ids = sorted(set(r.doc_id for r in spark.read.parquet(bands).collect()))
-    assert index_ids == [1, 12]  # 11's index rows rewritten away too
-    # corrected replay where EVERYTHING is a near-dup of history: the
-    # batch partition must end up empty, not keep its previous rows
-    sink(docs([(13, base.replace("lazy", "sleepy"))]), 1)
-    assert corpus_ids() == [1]
-
-
-def test_incremental_media_dedup_sink_replay_with_changed_contents(spark, tmp_path):
-    """Same replay contract for the media sink: a corrected batch-1
-    replay (different images) recomputes against the strictly-earlier
-    index snapshot — no hamming-0 self-matches against its own at-rest
-    rows — and rewrites both the corpus and index partitions."""
+def _md5_bytes(key, n, width=2):
     import hashlib
 
+    return [
+        int(hashlib.md5(f"{key}:{j}".encode()).hexdigest()[:width], 16)
+        for j in range(n)
+    ]
+
+
+def _words(seed, n):
+    return " ".join(f"w{seed}x{j}" for j in range(n))
+
+
+def _pcm(seed, n=64):
+    return [-32000 + v % 64000 for v in _md5_bytes(f"pcm{seed}", n, 4)]
+
+
+def _walk(seed, n=64):
+    acc, out = 0, []
+    for step in _md5_bytes(f"walk{seed}", n, 4):
+        acc = max(-32000, min(32000, acc + step % 4001 - 2000))
+        out.append(acc)
+    return out
+
+
+def _chunked(seed):
+    return " ".join(_words(f"{seed}c{k}", 20) for k in range(4))
+
+
+def _brighten(px):
+    return [min(v + 3, 255) if j % 16 == 0 else v for j, v in enumerate(px)]
+
+
+def _crop_1px(px):
+    return [px[8 * r + k] for r in range(1, 8) for k in range(1, 8)]
+
+
+def _decimate(s):
+    return [int((a + b) / 2) for a, b in zip(s[::2], s[1::2])]
+
+
+def _recycle_3_of_4(text):
+    return " ".join(text.split()[:60]) + " " + _words("fresh", 20)
+
+
+def _sink_case(name, spark, root):
+    """(sink, corpus path, {index path: id divisor}, frame(rows), item(seed),
+    twin(item)) for one admission sink. A row is (id, *item); twin(item) is
+    a payload the sink must reject once item is at rest. The divisor maps
+    an index row's id to its corpus id (chunk ids carry the doc id)."""
     from network_iq_spark.operators.dedup import image_dhash
-    from network_iq_spark.streaming.dedup import incremental_media_dedup_sink
+    from network_iq_spark.queries._fragments import _CHUNK_ID_BASE
+    from network_iq_spark.streaming import dedup as SD
 
-    corpus = str(tmp_path / "mcorpus")
-    index = str(tmp_path / "mindex")
-    sink = incremental_media_dedup_sink(
-        corpus, index, "dhash", max_hamming=6, n_bits=56
-    )
+    def paths(*names):
+        return [str(root / n) for n in names]
 
-    def img(seed):
-        return [
-            int(hashlib.md5(f"{seed}:{j}".encode()).hexdigest()[:2], 16)
-            for j in range(64)
-        ]
+    def frame(schema, post=lambda df: df):
+        return lambda rows: post(spark.createDataFrame(rows, schema))
 
-    def perturb(px):
-        return [min(v + 3, 255) if j % 16 == 0 else v for j, v in enumerate(px)]
+    text = frame("doc_id bigint, text string")
+    clips = frame("media_id bigint, s array<int>")
+    if name == "near_dup":
+        c, b, s = paths("corpus", "bands", "sets")
+        return (SD.incremental_near_dup_sink(c, b, s), c, {b: 1, s: 1}, text,
+                lambda seed: (_words(seed, 40),), lambda it: (f"{it[0]} more",))
+    if name == "media":
+        c, i = paths("corpus", "index")
+        dhash = frame(
+            "media_id bigint, px array<int>",
+            lambda df: df.select("media_id", image_dhash("px").alias("dhash")),
+        )
+        return (SD.incremental_media_dedup_sink(c, i, "dhash", 6, 56), c, {i: 1},
+                dhash, lambda seed: (_md5_bytes(f"img{seed}", 64),),
+                lambda it: (_brighten(it[0]),))
+    if name == "crop":
+        c, t, g = paths("corpus", "toks", "grids")
+        return (SD.incremental_crop_dedup_sink(c, t, g), c, {t: 1, g: 1},
+                frame("media_id bigint, w int, h int, px array<int>"),
+                lambda seed: (8, 8, _md5_bytes(f"grid{seed}", 64)),
+                lambda it: (7, 7, _crop_1px(it[2])))
+    if name == "trim":
+        c, t, q = paths("corpus", "toks", "seqs")
+        return (SD.incremental_trim_dedup_sink(c, t, q), c, {t: 1, q: 1}, clips,
+                lambda seed: (_pcm(seed),), lambda it: (it[0][2:],))
+    if name == "resample":
+        c, i = paths("corpus", "index")
+        return (SD.incremental_resample_dedup_sink(c, i), c, {i: 1}, clips,
+                lambda seed: (_pcm(seed),), lambda it: (_decimate(it[0]),))
+    if name == "chunk":
+        c, b, s = paths("corpus", "bands", "sets")
+        chunk_ids = dict.fromkeys((b, s), _CHUNK_ID_BASE)
+        return (SD.chunk_admission_sink(c, b, s), c, chunk_ids, text,
+                lambda seed: (_chunked(seed),), lambda it: (_recycle_3_of_4(it[0]),))
+    c, i = paths("corpus", "index")
+    return (SD.incremental_landmark_dedup_sink(c, i), c, {i: 1}, clips,
+            lambda seed: (_walk(seed),),
+            lambda it: ([2 * x + 5 + k % 5 - 2 for k, x in enumerate(it[0][1:-1])],))
 
-    def media(rows):
-        df = spark.createDataFrame(rows, "media_id bigint, px array<int>")
-        return df.select("media_id", image_dhash("px").alias("dhash"))
 
-    def corpus_ids():
-        return sorted(r.media_id for r in spark.read.parquet(corpus).collect())
+@pytest.fixture
+def streaming_storage(spark, monkeypatch):
+    """Spy on the storage that code in ``network_iq_spark.streaming`` takes:
+    the frames it persists or caches and the RDDs its checkpoints persist.
+    Returns ``(taken, held)``: ``taken`` lists everything taken so far,
+    ``held()`` what of it is still held."""
+    import sys
 
-    a, novel, novel2 = img(1), img(40), img(41)
-    sink(media([(1, a)]), 0)
-    sink(media([(11, novel)]), 1)
-    assert corpus_ids() == [1, 11]
-    sink(media([(12, novel2)]), 1)  # corrected replay: 11 -> 12
-    assert corpus_ids() == [1, 12]
-    assert sorted(set(r.media_id for r in spark.read.parquet(index).collect())) == [1, 12]
-    sink(media([(13, perturb(a))]), 1)  # all-duplicate replay truncates
-    assert corpus_ids() == [1]
+    from pyspark import StorageLevel
+
+    cls = type(spark.range(1))
+    jsc = spark.sparkContext._jsc
+    frames, rdds = [], set()
+
+    def from_streaming():
+        caller = sys._getframe(2).f_globals.get("__name__", "")
+        return caller.startswith("network_iq_spark.streaming")
+
+    def spy(method):
+        orig = getattr(cls, method)
+
+        def wrapped(self, *args, **kwargs):
+            if not from_streaming():
+                return orig(self, *args, **kwargs)
+            before = set(jsc.getPersistentRDDs().keys())
+            out = orig(self, *args, **kwargs)
+            rdds.update(set(jsc.getPersistentRDDs().keys()) - before)
+            frames.append(out)  # held here, so a GC cannot be what frees it
+            return out
+
+        monkeypatch.setattr(cls, method, wrapped)
+
+    for method in ("persist", "cache", "localCheckpoint", "checkpoint"):
+        spy(method)
+
+    def held():
+        live = set(jsc.getPersistentRDDs().keys())
+        cached = [f for f in frames if f.storageLevel != StorageLevel.NONE]
+        return cached + sorted(rdds & live)
+
+    return frames, held
+
+
+SINKS = ("near_dup", "media", "crop", "trim", "resample", "chunk", "landmark")
+
+
+@pytest.mark.parametrize("name", SINKS)
+def test_admission_sink_replay_contract(spark, tmp_path, streaming_storage, name):
+    """The contract every admission sink shares. A replayed batch
+    converges. A corrected replay (source correction, late rows) probes
+    the strictly-earlier snapshot — not its own at-rest rows, which would
+    self-match and empty the survivor set — and rewrites the corpus
+    partition and every index partition. An all-duplicate corrected
+    replay leaves the batch's corpus partition empty rather than keeping
+    its previous rows. An empty micro-batch writes empty partitions that
+    the next batch still probes past. And when each call returns, the
+    sink holds none of the storage it took."""
+    from pyspark.sql import functions as F
+
+    sink, corpus, indexes, frame, item, twin = _sink_case(name, spark, tmp_path)
+    taken, held = streaming_storage
+    h1, h2, novel, novel2, novel3 = (item(s) for s in (1, 2, 11, 12, 31))
+
+    def run(rows, batch_id):
+        sink(frame([(i, *payload) for i, payload in rows]), batch_id)
+        assert held() == [], f"{name} batch {batch_id} still holds {held()}"
+
+    def ids(path, batch_id=None, divisor=1):
+        df = spark.read.parquet(path)
+        if batch_id is not None:
+            df = df.filter(F.col("batch") == batch_id)
+        return sorted({r[0] // divisor for r in df.select(df.columns[0]).collect()})
+
+    run([(1, h1), (2, h2)], 0)
+    run([(11, novel)], 1)
+    assert ids(corpus) == [1, 2, 11]
+    run([(11, novel)], 1)  # replay converges
+    assert ids(corpus) == [1, 2, 11]
+    run([(12, novel2)], 1)  # corrected replay: 11 withdrawn, 12 delivered
+    assert ids(corpus) == [1, 2, 12]
+    for path, divisor in indexes.items():
+        assert ids(path, 1, divisor) == [12], path
+    run([(13, twin(h1))], 1)  # all-duplicate corrected replay
+    assert ids(corpus, 1) == []
+    assert ids(corpus) == [1, 2]
+    run([(12, novel2)], 1)
+    run([], 2)  # empty micro-batch
+    run([(30, twin(novel2)), (31, novel3)], 3)  # probes batch 1 past the empty one
+    assert ids(corpus) == [1, 2, 12, 31]
+    assert taken, f"{name} took no storage to release"
 
 
 def test_incremental_near_dup_sink_with_streaming_source(spark, tmp_path):
@@ -1035,6 +1143,32 @@ def test_incremental_ann_search_sink_matches_batch_ivf_search(spark, tmp_path):
         r.vec_id for r in spark.read.parquet(paths["corpus"]).collect()
     )
     assert corpus_ids == sorted(b0 + b1 + b2)
+
+
+def test_incremental_ann_search_sink_releases_its_batch(
+    spark, tmp_path, streaming_storage
+):
+    """The ann sink holds each batch for one evaluation (search, assign and
+    three writes) and releases it when the call returns, first batch and
+    probing batch alike."""
+    from network_iq_spark.operators.similarity import seed_centroids, with_norm
+    from network_iq_spark.streaming.ann import incremental_ann_search_sink
+
+    taken, held = streaming_storage
+
+    def vdf(ids):
+        return spark.createDataFrame(
+            [(i, [float((i * 7 + j * 3) % 11 + 1) for j in range(8)]) for i in ids],
+            "vec_id bigint, v array<double>",
+        )
+
+    paths = [str(tmp_path / n) for n in ("cent", "corpus", "inv", "res")]
+    seed_centroids(with_norm(vdf(range(8))), n_cells=2).write.parquet(paths[0])
+    sink = incremental_ann_search_sink(*paths, nprobe=2, k=3)
+    for batch_id, ids in enumerate((range(8), range(100, 104))):
+        sink(vdf(ids), batch_id)
+        assert held() == [], f"batch {batch_id} still holds {held()}"
+    assert taken
 
 
 def test_rollup_state_sink_replay_and_compact(spark, tmp_path):
