@@ -43,9 +43,7 @@ def _size_suffix_to_bytes(v: str) -> int:
 GUARD_MIN_BYTES = 4 << 20
 
 
-def ensure_parallelism(
-    df: _DataFrame, target: int | None = None, min_bytes: int = 0
-) -> _DataFrame:
+def ensure_parallelism(df: _DataFrame, min_bytes: int = 0) -> _DataFrame:
     """Spread a scan across the cluster before CPU-dense per-row work
     (digest/regex-heavy map stages: dedup signatures, text analysis).
 
@@ -74,8 +72,7 @@ def ensure_parallelism(
     in-memory relations ignore the floor (they always need the spread).
     """
     spark = df.sparkSession
-    if target is None:
-        target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     max_bytes = _size_suffix_to_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes")
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from network_iq_spark.functions import davg, dsum
 
 
-def pricing_summary(lineitem: DataFrame, ship_before: str = "2001-09-01") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """Flagship query: TPC-H Q1-shaped pricing summary.
 
     Exercises scan → pushed-down filter → grouped multi-agg (A5 shape) →
@@ -32,7 +32,7 @@ def pricing_summary(lineitem: DataFrame, ship_before: str = "2001-09-01") -> Dat
     baseline (streamlit_app.py:536-537) writ large.
     """
     return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(ship_before).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit("2001-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum("l_quantity").alias("sum_qty"),
@@ -54,21 +54,6 @@ def pricing_summary(lineitem: DataFrame, ship_before: str = "2001-09-01") -> Dat
     )
 
 
-def global_kpis(df: DataFrame, metrics: Sequence[str]) -> DataFrame:
-    """KPI cards (A1): one skip-null mean per metric, single pass.
-
-    Reference: ``view[m].mean()`` per card (streamlit_app.py:276,284) — four
-    separate passes over the frame; here one job, one row out.
-    """
-    return df.agg(*[davg(m).alias(f"avg_{m}") for m in metrics])
-
-
-def global_quantile(df: DataFrame, col: str, q: float = 0.95) -> DataFrame:
-    """P95-style global quantile (A2), exact to match the pandas/DuckDB
-    linear-interpolation semantics (SURVEY.md §2.4 A2 note)."""
-    return df.agg(F.percentile(F.col(col), F.lit(q)).alias(f"p{int(q * 100)}_{col}"))
-
-
 def boolean_rate(df: DataFrame, predicates: dict[str, Column]) -> DataFrame:
     """Boolean-rate aggregates (A3): ``avg(predicate::double)`` per name.
 
@@ -77,20 +62,6 @@ def boolean_rate(df: DataFrame, predicates: dict[str, Column]) -> DataFrame:
     """
     return df.agg(
         *[F.avg(pred.cast("double")).alias(name) for name, pred in predicates.items()]
-    )
-
-
-def grouped_mean(df: DataFrame, keys: Sequence[str], metric: str) -> DataFrame:
-    """Grouped mean (A4/A7/A9): ``groupBy(keys).agg(avg(metric))``."""
-    return df.groupBy(*keys).agg(davg(metric).alias(f"avg_{metric}"))
-
-
-def grouped_baseline(df: DataFrame, keys: Sequence[str], metric: str) -> DataFrame:
-    """Grouped mean+std baseline (A5): sample std (pandas ddof=1 ⇒
-    ``stddev_samp``), the build side of the z-score join (J1/W5)."""
-    return df.groupBy(*keys).agg(
-        davg(metric).alias("base_mean"),
-        F.stddev_samp(metric).alias("base_std"),
     )
 
 
@@ -103,12 +74,12 @@ def grouped_quantile(df: DataFrame, keys: Sequence[str], metric: str, q: float) 
 
 
 def grouped_quantile_approx(
-    df: DataFrame, keys: Sequence[str], metric: str, q: float, accuracy: int = 10000
+    df: DataFrame, keys: Sequence[str], metric: str, q: float
 ) -> DataFrame:
     """Sketch-based grouped quantile for the 100 TB tier: mergeable partial
     sketches, no per-group sort (SURVEY.md §4 quantile duality)."""
     return df.groupBy(*keys).agg(
-        F.percentile_approx(F.col(metric), F.lit(q), F.lit(accuracy)).alias(
+        F.percentile_approx(F.col(metric), F.lit(q), F.lit(10000)).alias(
             f"p{int(q * 100)}_{metric}"
         )
     )

@@ -32,14 +32,16 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 SHINGLE_K = 3
 
 
-def shingle_array_expr(k: int = SHINGLE_K) -> str:
-    """SQL expression for the distinct k-token shingle array over a bound
-    ``_toks`` column — the ONE place the shingle shape is defined, shared
-    by the exploded path (``shingles``) and the map-only minhash inline
-    path so the two can never desync from ``SHINGLE_K``."""
-    args = ", ' ', ".join(f"_toks[i+{j}]" if j else "_toks[i]" for j in range(k))
+def shingle_array_expr() -> str:
+    """SQL expression for the distinct ``SHINGLE_K``-token shingle array
+    over a bound ``_toks`` column — the ONE place the shingle shape is
+    defined, shared by the exploded path (``shingles``) and the map-only
+    minhash inline path so the two can never desync."""
+    args = ", ' ', ".join(
+        f"_toks[i+{j}]" if j else "_toks[i]" for j in range(SHINGLE_K)
+    )
     return (
-        f"array_distinct(transform(sequence(0, size(_toks) - {k}), "
+        f"array_distinct(transform(sequence(0, size(_toks) - {SHINGLE_K}), "
         f"i -> concat({args})))"
     )
 
@@ -60,49 +62,46 @@ def _cap_hot_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return df.join(small, keys, "left_semi")
 
 
-def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def shingles(df: DataFrame) -> DataFrame:
     """Distinct k-token shingles per document (docs with < k tokens drop —
     too short to near-dup on shingle evidence)."""
-    toks = tokens(text_col)
-    out = ensure_parallelism(df).select(F.col(id_col), toks.alias("_toks")).filter(
+    toks = tokens("text")
+    out = ensure_parallelism(df).select(F.col("doc_id"), toks.alias("_toks")).filter(
         F.size("_toks") >= SHINGLE_K
     )
-    return out.select(id_col, F.explode(F.expr(shingle_array_expr())).alias("shingle"))
+    shingle = F.explode(F.expr(shingle_array_expr())).alias("shingle")
+    return out.select("doc_id", shingle)
 
 
-def exact_dedup(fingerprints: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(fingerprints: DataFrame) -> DataFrame:
     """Exact dedup: keep min-id per fingerprint, count the group.
 
     Input: (id, fingerprint) from ``text.fingerprint``. One shuffle on the
     fingerprint — at 100 TB this is THE cheapest dedup and runs first.
     """
     return fingerprints.groupBy("fingerprint").agg(
-        F.min(id_col).alias("keeper"),
+        F.min("doc_id").alias("keeper"),
         F.count("*").alias("n_docs"),
     )
 
 
-def jaccard_pairs(
-    sh: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
+def jaccard_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
 
     |A∩B| via the shingle self-join; |A∪B| = |A|+|B|−|A∩B| from per-doc
     sizes. Integer counts → the Jaccard double is engine-deterministic.
     """
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
         a.join(b, "shingle")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -118,7 +117,7 @@ def jaccard_pairs(
     )
 
 
-def _rare_cand_pairs(rare: DataFrame, id_col: str) -> DataFrame:
+def _rare_cand_pairs(rare: DataFrame) -> DataFrame:
     """Distinct (doc_a < doc_b) candidate pairs from the frequency-capped
     (doc, shingle) grain via the rare⋈rare self-join. r14 replaced this
     with a map-side sorted-posting comprehension (collect each df-capped
@@ -130,8 +129,8 @@ def _rare_cand_pairs(rare: DataFrame, id_col: str) -> DataFrame:
     inputs stay small while the posting form pays its groupBy + explode +
     distinct chain regardless), so the join form is back (the BM25-dl
     negative-result precedent). Numbers in OPTIMIZATION_r15.md."""
-    a = rare.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = rare.select(F.col(id_col).alias("doc_b"), "shingle")
+    a = rare.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = rare.select(F.col("doc_id").alias("doc_b"), "shingle")
     return (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -140,9 +139,41 @@ def _rare_cand_pairs(rare: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def jaccard_pairs_capped(
-    sh: DataFrame, threshold: float, max_df: int, id_col: str = "doc_id"
-) -> DataFrame:
+def _capped_overlaps(sh: DataFrame, max_df: int) -> DataFrame:
+    """(doc_a < doc_b, inter, sz_a, sz_b) for every pair sharing ≥1 rare
+    shingle (document frequency ≤ max_df): the frequency-capped candidate
+    generation and the exact full-set intersection shared by
+    :func:`jaccard_pairs_capped` and :func:`containment_pairs_capped`."""
+    # the exploded shingle table feeds FIVE consumers (df counts, both
+    # candidate sides, sizes, both verify sides) — materialize it once or
+    # the explode re-executes per consumer. At 100 TB substitute a
+    # persisted shingle table at this boundary (same discipline as the
+    # pipeline's d1).
+    sh = sh.localCheckpoint()
+    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df__"))
+    stop = dfreq.filter(F.col("__df__") > max_df).select("shingle")
+    # NO broadcast hint on the stop set: at crawl scale the number of
+    # shingles with df > max_df is unbounded (most high-frequency shingles
+    # qualify), so forcing a broadcast would OOM the driver. A shuffle
+    # anti-join on the shingle key is the shape that survives 100 TB; AQE
+    # still converts it to broadcast at runtime when the set is small.
+    rare = sh.join(stop, "shingle", "left_anti")
+    cand = _rare_cand_pairs(rare)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    inter = (
+        cand.join(sh_a, "doc_a")
+        .join(sh_b, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def jaccard_pairs_capped(sh: DataFrame, threshold: float, max_df: int) -> DataFrame:
     """Exact Jaccard with stop-shingle-capped candidate generation — the
     100 TB shape of ``jaccard_pairs``.
 
@@ -161,35 +192,8 @@ def jaccard_pairs_capped(
     test scale); pairs similar ONLY through ubiquitous boilerplate are
     deliberately out of contract.
     """
-    # the exploded shingle table feeds FIVE consumers (df counts, both
-    # candidate sides, sizes, both verify sides) — materialize it once or
-    # the explode re-executes per consumer. At 100 TB substitute a
-    # persisted shingle table at this boundary (same discipline as the
-    # pipeline's d1).
-    sh = sh.localCheckpoint()
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df__"))
-    stop = dfreq.filter(F.col("__df__") > max_df).select("shingle")
-    # NO broadcast hint on the stop set: at crawl scale the number of
-    # shingles with df > max_df is unbounded (most high-frequency shingles
-    # qualify), so forcing a broadcast would OOM the driver. A shuffle
-    # anti-join on the shingle key is the shape that survives 100 TB; AQE
-    # still converts it to broadcast at runtime when the set is small.
-    rare = sh.join(stop, "shingle", "left_anti")
-    cand = _rare_cand_pairs(rare, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _capped_overlaps(sh, max_df)
         .select(
             "doc_a",
             "doc_b",
@@ -202,9 +206,7 @@ def jaccard_pairs_capped(
     )
 
 
-def containment_pairs_capped(
-    sh: DataFrame, threshold: float, max_df: int, id_col: str = "doc_id"
-) -> DataFrame:
+def containment_pairs_capped(sh: DataFrame, threshold: float, max_df: int) -> DataFrame:
     """Directed shingle containment C(src→dst) = |src ∩ dst| / |src| — the
     asymmetric complement of Jaccard: a short document wholly embedded in a
     long one has Jaccard ≈ |small|/|big| (invisible below any symmetric
@@ -213,28 +215,7 @@ def containment_pairs_capped(
     full-set verification as :func:`jaccard_pairs_capped`; each undirected
     candidate yields both directions, filtered at ``threshold``.
     """
-    # the exploded shingle table feeds FIVE consumers (df counts, both
-    # candidate sides, sizes, both verify sides) — materialize it once or
-    # the explode re-executes per consumer. At 100 TB substitute a
-    # persisted shingle table at this boundary (same discipline as the
-    # pipeline's d1).
-    sh = sh.localCheckpoint()
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("__df__"))
-    stop = dfreq.filter(F.col("__df__") > max_df).select("shingle")
-    rare = sh.join(stop, "shingle", "left_anti")
-    cand = _rare_cand_pairs(rare, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sh_a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    both = inter.join(sa, "doc_a").join(sb, "doc_b")
+    both = _capped_overlaps(sh, max_df)
     fwd = both.select(
         F.col("doc_a").alias("doc_src"),
         F.col("doc_b").alias("doc_dst"),
@@ -295,9 +276,7 @@ def minhash_sig(
     )
 
 
-def band_bucket_structs(
-    n_bands: int, rows_per_band: int, mins_col: str = "mins"
-) -> list[Column]:
+def band_bucket_structs(n_bands: int, rows_per_band: int) -> list[Column]:
     """The per-band (band, bucket) structs over an array-typed signature
     column — bucket = md5 of the band's '|'-joined min slots. The ONE
     place the bucket shape is defined for the array form, shared by the
@@ -306,7 +285,7 @@ def band_bucket_structs(
     out = []
     for bnd in range(n_bands):
         cols = [
-            F.col(mins_col)[bnd * rows_per_band + j].cast("string")
+            F.col("mins")[bnd * rows_per_band + j].cast("string")
             for j in range(rows_per_band)
         ]
         out.append(
@@ -320,8 +299,6 @@ def band_bucket_structs(
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
     max_bucket_size: int | None = None,
@@ -363,7 +340,7 @@ def minhash_lsh_pairs(
     same for every member). None = exact uncapped LSH.
     """
     n_hashes = n_bands * rows_per_band
-    sig = minhash_sig(df, n_hashes, text_col, id_col)
+    sig = minhash_sig(df, n_hashes)
     # The signature feeds TWO consumers — the band explode (needs m0..mk) and
     # the set verify (needs hs) — and the map-only plan has no exchange for
     # ReuseExchange to fire on, so without materialization the whole
@@ -374,18 +351,16 @@ def minhash_lsh_pairs(
     sig = sig.localCheckpoint()
 
     bands = band_bucket_structs(n_bands, rows_per_band)
-    bb = sig.select(
-        id_col, "mins", F.explode(F.array(*bands)).alias("b")
-    ).select(
-        id_col, "mins", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
+    bb = sig.select("doc_id", "mins", F.explode(F.array(*bands)).alias("b")).select(
+        "doc_id", "mins", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
     )
     if max_bucket_size is not None:
         bb = _cap_hot_buckets(bb, ["band", "bucket"], max_bucket_size)
     a = bb.select(
-        F.col(id_col).alias("doc_a"), F.col("mins").alias("mins_a"), "band", "bucket"
+        F.col("doc_id").alias("doc_a"), F.col("mins").alias("mins_a"), "band", "bucket"
     )
     b = bb.select(
-        F.col(id_col).alias("doc_b"), F.col("mins").alias("mins_b"), "band", "bucket"
+        F.col("doc_id").alias("doc_b"), F.col("mins").alias("mins_b"), "band", "bucket"
     )
 
     def band_slots_equal(j: int) -> Column:
@@ -407,9 +382,9 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
     )
 
-    sets = sig.select(id_col, "hs")
-    sa = sets.select(F.col(id_col).alias("doc_a"), F.col("hs").alias("hs_a"))
-    sb = sets.select(F.col(id_col).alias("doc_b"), F.col("hs").alias("hs_b"))
+    sets = sig.select("doc_id", "hs")
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
     inter = F.array_size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
     return (
         cand.join(sa, "doc_a")
@@ -508,11 +483,30 @@ def _simhash_segments(fp: Column, n_segments: int, n_bits: int = 32) -> list[Col
     return out
 
 
+def _first_matching_segment(xor: Column, n_segments: int, n_bits: int) -> Column:
+    """Index of the FIRST of :func:`_simhash_segments`' slices in which
+    ``xor`` (the XOR of two fingerprints) is zero, i.e. where the pair
+    agrees; the segment join guarantees at least one. Keeping a pair only
+    at that segment emits it once, a column filter on data already in the
+    join output instead of a ``distinct()`` shuffle."""
+    base, rem = divmod(n_bits, n_segments)
+    first_match, start = None, 0
+    for i in range(n_segments):
+        width = base + (1 if i < rem else 0)
+        mask = ((1 << width) - 1) << start
+        is_match = xor.bitwiseAND(F.lit(mask)) == 0
+        first_match = (
+            F.when(is_match, F.lit(i))
+            if first_match is None
+            else first_match.when(is_match, F.lit(i))
+        )
+        start += width
+    return first_match
+
+
 def simhash_pairs_blocked(
     df: DataFrame,
     max_hamming: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bits: int = 32,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming ≤ max_hamming — the 100 TB path.
@@ -537,35 +531,24 @@ def simhash_pairs_blocked(
     # materialize the tiny signature table once: the map-only fingerprint
     # has no exchange for Spark to reuse, so without this both self-join
     # branches would re-run the whole regexp+md5 pipeline
-    s = simhash32(df, text_col, id_col, n_bits=n_bits).localCheckpoint()
+    s = simhash32(df, n_bits=n_bits).localCheckpoint()
     segs = _simhash_segments(F.col("simhash"), n_seg, n_bits=n_bits)
     seg_structs = [
         F.struct(F.lit(i).alias("seg"), segs[i].alias("seg_val")) for i in range(n_seg)
     ]
     blocked = s.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*seg_structs)).alias("b")
-    ).select(id_col, "simhash", F.col("b.seg").alias("seg"), F.col("b.seg_val").alias("seg_val"))
+        F.col("doc_id"), F.col("simhash"), F.explode(F.array(*seg_structs)).alias("b")
+    ).select(
+        "doc_id", "simhash", F.col("b.seg").alias("seg"), F.col("b.seg_val").alias("seg_val")
+    )
     a = blocked.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sim_a"), "seg", "seg_val"
+        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "seg", "seg_val"
     )
     b = blocked.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sim_b"), "seg", "seg_val"
+        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "seg", "seg_val"
     )
     xor = F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-    # index of the FIRST segment where the fingerprints agree (the join
-    # guarantees at least one); emitting only there dedups without a shuffle
-    base, rem = divmod(n_bits, n_seg)
-    first_match, start = None, 0
-    for i in range(n_seg):
-        width = base + (1 if i < rem else 0)
-        mask = ((1 << width) - 1) << start
-        is_match = xor.bitwiseAND(F.lit(mask)) == 0
-        first_match = (
-            F.when(is_match, F.lit(i))
-            if first_match is None
-            else first_match.when(is_match, F.lit(i))
-        )
-        start += width
+    first_match = _first_matching_segment(xor, n_seg, n_bits)
     return (
         a.join(b, ["seg", "seg_val"])
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -629,18 +612,7 @@ def hamming_blocked_pairs(
         F.col(id_col).alias("id_b"), F.col("__h__").alias("h_b"), "seg", "seg_val"
     )
     xor = F.col("h_a").bitwiseXOR(F.col("h_b"))
-    base, rem = divmod(n_bits, n_seg)
-    first_match, start = None, 0
-    for i in range(n_seg):
-        width = base + (1 if i < rem else 0)
-        mask = ((1 << width) - 1) << start
-        is_match = xor.bitwiseAND(F.lit(mask)) == 0
-        first_match = (
-            F.when(is_match, F.lit(i))
-            if first_match is None
-            else first_match.when(is_match, F.lit(i))
-        )
-        start += width
+    first_match = _first_matching_segment(xor, n_seg, n_bits)
     return (
         a.join(b, ["seg", "seg_val"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -705,18 +677,7 @@ def incremental_hamming_dedup(
         "seg", "seg_val",
     )
     xor = F.col("h_new").bitwiseXOR(F.col("h_old"))
-    base, rem = divmod(n_bits, n_seg)
-    first_match, start = None, 0
-    for i in range(n_seg):
-        width = base + (1 if i < rem else 0)
-        mask = ((1 << width) - 1) << start
-        is_match = xor.bitwiseAND(F.lit(mask)) == 0
-        first_match = (
-            F.when(is_match, F.lit(i))
-            if first_match is None
-            else first_match.when(is_match, F.lit(i))
-        )
-        start += width
+    first_match = _first_matching_segment(xor, n_seg, n_bits)
     return (
         probe.join(base_idx, ["seg", "seg_val"])
         .filter(first_match == F.col("seg"))
@@ -726,9 +687,9 @@ def incremental_hamming_dedup(
     )
 
 
-def image_dhash(px_col: str = "px", side: int = 8) -> Column:
+def image_dhash(side: int = 8) -> Column:
     """Row-wise gradient perceptual hash (dHash) over a ``side``×``side``
-    luma raster stored row-major in an int array: bit (r, c) is set iff
+    luma raster stored row-major in the int array ``px``: bit (r, c) is set iff
     px[r][c+1] > px[r][c] — side·(side−1) bits (56 for 8×8) packed
     little-endian into one bigint. Integer-exact over the repo's bit-exact
     decoders, so unlike float perceptual hashes it is SQL-replayable. One
@@ -746,8 +707,8 @@ def image_dhash(px_col: str = "px", side: int = 8) -> Column:
     n_bits = side * n_c
     return F.expr(
         f"aggregate(sequence(0, {n_bits - 1}), cast(0 as bigint), (acc, k) -> "
-        f"acc + IF({px_col}[(k div {n_c}) * {side} + (k % {n_c}) + 1] "
-        f"> {px_col}[(k div {n_c}) * {side} + (k % {n_c})], "
+        f"acc + IF(px[(k div {n_c}) * {side} + (k % {n_c}) + 1] "
+        f"> px[(k div {n_c}) * {side} + (k % {n_c})], "
         f"shiftleft(cast(1 as bigint), k), cast(0 as bigint)))"
     )
 
@@ -755,9 +716,6 @@ def image_dhash(px_col: str = "px", side: int = 8) -> Column:
 def image_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 6,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    side: int = 8,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Image near-duplicate pairs by dHash Hamming ≤ max_hamming — the
@@ -770,23 +728,16 @@ def image_near_dup_pairs(
     ``max_bucket_size`` passes through to its hot-bucket guard (the
     identical-crop-cluster skew axis, soaked in docs/SCALE.md r10).
     """
-    hashed = df.select(F.col(id_col), image_dhash(px_col, side).alias("dhash"))
+    hashed = df.select(F.col("media_id"), image_dhash().alias("dhash"))
     return hamming_blocked_pairs(
-        hashed, "dhash", max_hamming, n_bits=side * (side - 1), id_col=id_col,
-        max_bucket_size=max_bucket_size,
+        hashed, "dhash", max_hamming, n_bits=56, max_bucket_size=max_bucket_size
     )
 
 
 def cropped_grid_pairs(
     df: DataFrame,
     max_crop: int = 2,
-    block: int | None = None,
     side: int = 8,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Crop-TOLERANT image near-dup over variable-size integer luma grids
@@ -797,18 +748,19 @@ def cropped_grid_pairs(
 
     Input rows are (id, w, h, px) with ``px`` the H×W grid flattened
     row-major. A pair is reported when one grid equals a window of the
-    other shifted by (dr, dc), |dr|,|dc| ≤ ``max_crop``, up to
-    ``ssd_tol`` integer residual over the overlap.
+    other shifted by (dr, dc), |dr|,|dc| ≤ ``max_crop``, exactly over the
+    overlap.
 
     Blocking is PIGEONHOLE-DETERMINISTIC, not probabilistic: every B×B
-    sub-block (B = ``block`` or side − max_crop) of every image becomes
+    sub-block (B = side − max_crop) of every image becomes
     an md5 token; a crop that removes ≤ max_crop rows/cols from any edge
     preserves at least one intact B×B block of the original verbatim, so
-    the token equi-join finds every PURE-crop pair (recall 1.0 at
-    ssd_tol = 0, same argument as the SimHash/Hamming segment blocking —
+    the token equi-join finds every PURE-crop pair (recall 1.0, same
+    argument as the SimHash/Hamming segment blocking —
     and unlike the shifted-sequence tier's LSH S-curve, which is why
-    this tier is oracle-pairable). At ssd_tol > 0 the verbatim-token
-    argument weakens: a residual pixel landing inside EVERY sub-block of
+    this tier is oracle-pairable). A tolerant verify
+    (:func:`incremental_cropped_dedup`'s ``ssd_tol`` > 0) weakens the
+    verbatim-token argument: a residual pixel landing inside EVERY sub-block of
     the smaller grid defeats the blocking, so recall for
     perturbed-and-cropped twins is best-effort (a tolerant tier would
     block on quantized tokens). Per-image fanout is bounded:
@@ -825,11 +777,11 @@ def cropped_grid_pairs(
     shuffles are the token exchange and the two grid re-attachments.
     Scale shape: candidates ∝ real crop density + capped token
     collisions, never all-pairs."""
-    B = block if block is not None else side - max_crop
-    grids = _crop_grids_norm(df, B, id_col, px_col, w_col, h_col)
+    B = side - max_crop
+    grids = _crop_grids_norm(df, B, "media_id", "px", "w", "h")
     toks = _crop_tokens(grids, B, max_bucket_size=max_bucket_size)
     cand = _crop_candidates(toks)
-    return _crop_verify(cand, grids, grids, max_crop, B, ssd_tol, "id_a", "id_b")
+    return _crop_verify(cand, grids, grids, max_crop, B, 0, "id_a", "id_b")
 
 
 def _crop_grids_norm(
@@ -1020,7 +972,6 @@ def incremental_cropped_dedup(
     px_col: str = "px",
     w_col: str = "w",
     h_col: str = "h",
-    max_bucket_size: int | None = None,
     frames: int = 1,
 ) -> DataFrame:
     """Crop-tolerant dedup of an incoming batch AGAINST an at-rest token
@@ -1029,10 +980,8 @@ def incremental_cropped_dedup(
     token collisions between batch and index generate candidates
     (pigeonhole recall 1.0 for crops ≤ max_crop), the exact 2-D lag scan
     verifies. Output (new_id, old_id, dr, dc, ssd ≤ ssd_tol). Cost is
-    O(batch × collision rate), never O(history); ``max_bucket_size``
-    caps hot HISTORY tokens (degenerate constant-image cliques) on the
-    index side before the join. With ``frames`` > 1 this is the VIDEO
-    crop cell's deployment shape (r12): :func:`crop_index` already
+    O(batch × collision rate), never O(history). With ``frames`` > 1 this
+    is the VIDEO crop cell's deployment shape (r12): :func:`crop_index` already
     tokens only the first plane (its max index is h·w − 1), and the
     verify sums SSD across every plane at the shared offset — no
     video-specific index format needed."""
@@ -1042,8 +991,6 @@ def incremental_cropped_dedup(
         F.col("__id__").alias("new_id"), "tok"
     )
     base_toks = idx_toks.select(F.col(id_col).alias("old_id"), "tok")
-    if max_bucket_size is not None:
-        base_toks = _cap_hot_buckets(base_toks, ["tok"], max_bucket_size)
     cand = probe.join(base_toks, "tok").select("new_id", "old_id").distinct()
     ig = _crop_grids_norm(idx_grids, B, id_col, px_col, w_col, h_col)
     return _crop_verify(
@@ -1057,12 +1004,6 @@ def video_cropped_pairs(
     frames: int = 4,
     max_crop: int = 1,
     side: int = 4,
-    block: int | None = None,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Per-frame crop-TOLERANT video near-dup (r12, VERDICT item 6) —
@@ -1079,45 +1020,39 @@ def video_cropped_pairs(
     token (:func:`_crop_tokens` verbatim on the frame-0 slice), and a
     per-frame crop ≤ max_crop preserves at least one intact B×B block of
     frame 0 — so the token equi-join finds every pure-crop pair with
-    recall 1.0 at ssd_tol = 0, deterministic, oracle-pairable (the
+    recall 1.0, deterministic, oracle-pairable (the
     :func:`cropped_grid_pairs` contract; blocking on frame 0 alone keeps
     the per-clip token fanout identical to the image tier instead of
     ×frames). Verify is the exact integer 2-D lag scan GENERALIZED over
     frames (:func:`_crop_verify` frames > 1): one (dr, dc) per pair,
     SSD summed across every plane — a pair whose frame 0 aligns but
     later frames diverge is rejected exactly. Output
-    (id_a, id_b, dr, dc, ssd ≤ ssd_tol).
+    (id_a, id_b, dr, dc, ssd = 0).
 
     Scale shape: token fanout (h−B+1)·(w−B+1) per clip regardless of
     frame count; candidates ∝ crop density + capped token collisions
     (``max_bucket_size`` drops degenerate constant-frame buckets);
     verify is O(candidates × (2·max_crop+1)² · frames·B²) map work."""
-    B = block if block is not None else side - max_crop
-    grids = _crop_grids_norm(df, B, id_col, px_col, w_col, h_col)
+    B = side - max_crop
+    grids = _crop_grids_norm(df, B, "media_id", "px", "w", "h")
     # frame-0 tokens without slicing: _crop_tokens' max index is
     # __h__*__w__ - 1, which IS the first plane of the frame-major array
     toks = _crop_tokens(grids, B, max_bucket_size=max_bucket_size)
     cand = _crop_candidates(toks)
     return _crop_verify(
-        cand, grids, grids, max_crop, B, ssd_tol, "id_a", "id_b",
+        cand, grids, grids, max_crop, B, 0, "id_a", "id_b",
         frames=frames,
     )
 
 
 def downscale_derivative_pairs(
-    df: DataFrame,
-    factor: int = 2,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
-    max_bucket_size: int | None = None,
+    df: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """SCALE-derivative image pairs (r11) — the third transform axis
     after shift (audio/video) and crop: detect (parent, thumbnail)
-    pairs where the thumbnail is the parent's ``factor``× BOX-AVERAGE
+    pairs where the thumbnail is the parent's 2× BOX-AVERAGE
     downscale, the decimation every thumbnailing pipeline runs. The
-    floor box average is INTEGER-EXACT (thumb[i,j] = tile_sum div f²),
+    floor box average is INTEGER-EXACT (thumb[i,j] = tile_sum div 4),
     so unlike interpolating resamplers the whole tier is deterministic
     and SQL-replayable: each image's derived half-res grid is computed
     in-plan, keyed by the md5 of its serialized values, and joined
@@ -1141,26 +1076,23 @@ def downscale_derivative_pairs(
     digest; ``max_bucket_size`` caps degenerate constant-image keys
     (a constant image's thumb key collides with every same-constant
     thumb)."""
-    f2 = factor * factor
-    # derived half-res grid: tile (i, j) sums the f×f block, floor-divides
+    # derived half-res grid: tile (i, j) sums the 2×2 block, floor-divides
     derived = (
-        f"flatten(transform(sequence(0, __h__ div {factor} - 1), i -> "
-        f"transform(sequence(0, __w__ div {factor} - 1), j -> "
-        f"aggregate(sequence(0, {f2 - 1}), cast(0 as bigint), (a, k) -> "
-        f"a + __px__[(i * {factor} + k div {factor}) * __w__ "
-        f"+ j * {factor} + k % {factor}]) div {f2})))"
+        "flatten(transform(sequence(0, __h__ div 2 - 1), i -> "
+        "transform(sequence(0, __w__ div 2 - 1), j -> "
+        "aggregate(sequence(0, 3), cast(0 as bigint), (a, k) -> "
+        "a + __px__[(i * 2 + k div 2) * __w__ "
+        "+ j * 2 + k % 2]) div 4)))"
     )
     key = "md5(concat(cast(__kw__ as string), 'x', cast(__kh__ as string), ':', array_join(transform(__g__, x -> cast(x as string)), ' ')))"
-    grids = _crop_grids_norm(df, 1, id_col, px_col, w_col, h_col)
+    grids = _crop_grids_norm(df, 1, "media_id", "px", "w", "h")
     parents = (
-        grids.filter(
-            (F.col("__h__") >= factor) & (F.col("__w__") >= factor)
-        )
+        grids.filter((F.col("__h__") >= 2) & (F.col("__w__") >= 2))
         .select(
             F.col("__id__").alias("full_id"),
             F.expr(derived).alias("__g__"),
-            (F.col("__w__") / factor).cast("int").alias("__kw__"),
-            (F.col("__h__") / factor).cast("int").alias("__kh__"),
+            (F.col("__w__") / 2).cast("int").alias("__kw__"),
+            (F.col("__h__") / 2).cast("int").alias("__kh__"),
         )
         .select(
             "full_id",
@@ -1222,8 +1154,6 @@ def _box_decimated_expr(factor: int, stride: int, v: str = "__s__") -> str:
 
 def resampled_derivative_pairs(
     df: DataFrame,
-    factor: int = 2,
-    id_col: str = "media_id",
     s_col: str = "s",
     max_bucket_size: int | None = None,
     stride: int = 1,
@@ -1232,10 +1162,10 @@ def resampled_derivative_pairs(
     item 5) — the audio cell of the transform matrix's scale axis, the
     1-D sibling of :func:`downscale_derivative_pairs`: detect
     (full, resampled) pairs where the resampled clip is the full clip's
-    ``factor``× box-average DECIMATION — the sample-rate halving every
+    2× box-average DECIMATION — the sample-rate halving every
     transcode pipeline runs (48 kHz → 24 kHz and friends). The decimated
-    sample is the truncating integer average of each ``factor``-sample
-    window (d[i] = Σ s[f·i + k] div f — Spark ``div`` and DuckDB ``//``
+    sample is the truncating integer average of each 2-sample
+    window (d[i] = Σ s[2·i + k] div 2 — Spark ``div`` and DuckDB ``//``
     both truncate toward zero, so the tier is engine-exact on SIGNED PCM
     with no offset trick), so each clip's derived half-rate signal is
     computed in-plan, keyed by md5 over (length, values), and joined
@@ -1253,24 +1183,24 @@ def resampled_derivative_pairs(
     downscale tier's contract verbatim.
 
     ``stride`` > 1 is the VIDEO cell of the same axis (r12): with stride
-    = one frame's pixels, the decimation window groups ``factor``
+    = one frame's pixels, the decimation window groups 2
     CONSECUTIVE FRAMES and averages them per pixel position — the
     frame-rate halving of a 60→30 fps transcode. d[g·stride + p] =
-    Σ_k s[(g·factor + k)·stride + p] div factor; stride = 1 reduces to
+    Σ_k s[(2g + k)·stride + p] div 2; stride = 1 reduces to
     the audio formula exactly (and generates the identical expression
     text, so the audio tier's plan is untouched)."""
     key = _SEQ_MD5_KEY_FMT
-    derived = _box_decimated_expr(factor, stride)
+    derived = _box_decimated_expr(2, stride)
     # min_bytes guard (r14 audit): the map is two md5 keys over short
     # arrays; interleaved A/B on audio_resampled_near_dup_pairs measured
     # the exchange a pure wash (B/A = 1.00) — it buys nothing under the
     # floor, so skip it (same guard on the index builder and the
     # incremental probe, which share this exact map shape)
     src = ensure_parallelism(df, min_bytes=GUARD_MIN_BYTES).select(
-        F.col(id_col).alias("__id__"), F.col(s_col).alias("__s__")
+        F.col("media_id").alias("__id__"), F.col(s_col).alias("__s__")
     ).localCheckpoint(eager=False)
     parents = (
-        src.filter(F.expr(f"size(__s__) >= {factor * stride}"))
+        src.filter(F.expr(f"size(__s__) >= {2 * stride}"))
         .select(
             F.col("__id__").alias("full_id"),
             F.expr(derived).alias("__d__"),  # derive once, key below
@@ -1783,7 +1713,7 @@ def _dihedral_index_maps(side: int) -> list[list[int]]:
     return maps
 
 
-def dihedral_canonical_key(px_col: str = "px", side: int = 8) -> Column:
+def dihedral_canonical_key(side: int = 8) -> Column:
     """ROTATION/MIRROR-invariant fingerprint of a square integer grid
     (r11) — the fourth transform axis (shift / crop / scale / rotation):
     serialize the grid under all 8 dihedral symmetries and md5 the
@@ -1796,19 +1726,14 @@ def dihedral_canonical_key(px_col: str = "px", side: int = 8) -> Column:
     engine-identical on ASCII digit strings)."""
     sers = [
         "array_join(array("
-        + ", ".join(f"cast({px_col}[{k}] as string)" for k in m)
+        + ", ".join(f"cast(px[{k}] as string)" for k in m)
         + "), ' ')"
         for m in _dihedral_index_maps(side)
     ]
     return F.expr("md5(least(" + ", ".join(sers) + "))")
 
 
-def rotated_dedup_pairs(
-    df: DataFrame,
-    side: int = 8,
-    id_col: str = "media_id",
-    px_col: str = "px",
-) -> DataFrame:
+def rotated_dedup_pairs(df: DataFrame, side: int = 8) -> DataFrame:
     """(keep_id, dup_id) pairs under rotation/mirror equivalence: group
     by :func:`dihedral_canonical_key`, keep the min id per orbit, emit
     one row per other member. One shuffle on the canonical hash; output
@@ -1820,8 +1745,8 @@ def rotated_dedup_pairs(
     deployment shapes (composition pinned in tests/test_dedup_scale.py
     test_canonical_keys_compose_with_incremental_exact_machinery)."""
     keyed = ensure_parallelism(df).select(
-        F.col(id_col).alias("__id__"),
-        dihedral_canonical_key(px_col, side).alias("ckey"),
+        F.col("media_id").alias("__id__"),
+        dihedral_canonical_key(side).alias("ckey"),
     )
     keep = keyed.groupBy("ckey").agg(F.min("__id__").alias("keep_id"))
     return (
@@ -1831,10 +1756,10 @@ def rotated_dedup_pairs(
     )
 
 
-def waveform_dhash(s_col: str = "s", n_samples: int = 64) -> Column:
-    """1-D gradient fingerprint over decoded PCM samples — the audio twin
-    of :func:`image_dhash`: bit k is set iff s[k+1] > s[k], n_samples−1
-    bits (63 for 64-sample clips) packed little-endian into one bigint.
+def waveform_dhash() -> Column:
+    """1-D gradient fingerprint over the decoded PCM samples of a 64-sample
+    ``s`` clip — the audio twin of :func:`image_dhash`: bit k is set iff
+    s[k+1] > s[k], 63 bits packed little-endian into one bigint.
     Robust to uniform gain/DC offset (monotone transforms preserve every
     comparison), integer-exact over the bit-exact WAV decoder, so
     SQL-replayable — unlike spectral fingerprints there is no float FFT
@@ -1853,19 +1778,16 @@ def waveform_dhash(s_col: str = "s", n_samples: int = 64) -> Column:
     bench-only: strong local maxima stand in for spectral peaks on this
     corpus; swap in STFT peaks via ``mapInPandas`` for real audio) and
     stays out of the oracle-able tier by design."""
-    n_bits = n_samples - 1
     return F.expr(
-        f"aggregate(sequence(0, {n_bits - 1}), cast(0 as bigint), (acc, k) -> "
-        f"acc + IF({s_col}[k + 1] > {s_col}[k], "
-        f"shiftleft(cast(1 as bigint), k), cast(0 as bigint)))"
+        "aggregate(sequence(0, 62), cast(0 as bigint), (acc, k) -> "
+        "acc + IF(s[k + 1] > s[k], "
+        "shiftleft(cast(1 as bigint), k), cast(0 as bigint)))"
     )
 
 
-def video_dhash(
-    px_col: str = "px", frames: int = 4, side: int = 4
-) -> Column:
+def video_dhash(frames: int = 4, side: int = 4) -> Column:
     """Per-frame gradient hash over a decoded clip stored as a flat
-    row-major int array (frames × side × side luma): frame f contributes
+    row-major int array ``px`` (frames × side × side luma): frame f contributes
     side·(side−1) bits (its :func:`image_dhash`) at offset
     f·side·(side−1) — 48 bits for a 4-frame 4×4 clip. Temporal structure
     is preserved (frame order is part of the fingerprint), and the hash
@@ -1876,9 +1798,9 @@ def video_dhash(
     fsz = side * side
     return F.expr(
         f"aggregate(sequence(0, {n_bits - 1}), cast(0 as bigint), (acc, k) -> "
-        f"acc + IF({px_col}[(k div {per}) * {fsz} "
+        f"acc + IF(px[(k div {per}) * {fsz} "
         f"+ ((k % {per}) div {n_c}) * {side} + ((k % {per}) % {n_c}) + 1] "
-        f"> {px_col}[(k div {per}) * {fsz} "
+        f"> px[(k div {per}) * {fsz} "
         f"+ ((k % {per}) div {n_c}) * {side} + ((k % {per}) % {n_c})], "
         f"shiftleft(cast(1 as bigint), k), cast(0 as bigint)))"
     )
@@ -1887,8 +1809,6 @@ def video_dhash(
 def video_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 5,
-    id_col: str = "media_id",
-    px_col: str = "px",
     frames: int = 4,
     side: int = 4,
 ) -> DataFrame:
@@ -1896,31 +1816,19 @@ def video_near_dup_pairs(
     max_hamming — same segment blocking as the image/audio tiers
     (default max_hamming=5 gives six exact 8-bit segments over the
     48-bit clip fingerprint)."""
-    hashed = df.select(
-        F.col(id_col), video_dhash(px_col, frames, side).alias("vhash")
-    )
+    hashed = df.select(F.col("media_id"), video_dhash(frames, side).alias("vhash"))
     return hamming_blocked_pairs(
-        hashed, "vhash", max_hamming, n_bits=frames * side * (side - 1), id_col=id_col
+        hashed, "vhash", max_hamming, n_bits=frames * side * (side - 1)
     )
 
 
-def audio_near_dup_pairs(
-    df: DataFrame,
-    max_hamming: int = 6,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    n_samples: int = 64,
-) -> DataFrame:
+def audio_near_dup_pairs(df: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Audio near-duplicate pairs by waveform-gradient Hamming ≤
     max_hamming — same segment blocking as the image tier (callers feed
     DECODED samples so the fingerprint sees what the RIFF/PCM decoder
     produced, catching re-encoded/gain-adjusted copies)."""
-    hashed = df.select(
-        F.col(id_col), waveform_dhash(s_col, n_samples).alias("whash")
-    )
-    return hamming_blocked_pairs(
-        hashed, "whash", max_hamming, n_bits=n_samples - 1, id_col=id_col
-    )
+    hashed = df.select(F.col("media_id"), waveform_dhash().alias("whash"))
+    return hamming_blocked_pairs(hashed, "whash", max_hamming, n_bits=63)
 
 
 # (win, stride) per time scale of the energy-envelope fingerprint: 64-sample
@@ -1932,10 +1840,11 @@ def audio_near_dup_pairs(
 AUDIO_EB_SCALES = ((8, 2), (16, 4), (32, 8))
 
 
-def audio_energy_hash(s_col: str = "s", n_samples: int = 64) -> Column:
-    """Shift-tolerant audio fingerprint: gradient signs of OVERLAPPING
-    frame energies at three time scales (the Haitsma–Kalker energy-band
-    idea restricted to the time domain so it stays integer-exact — no
+def audio_energy_hash() -> Column:
+    """Shift-tolerant audio fingerprint of a 64-sample ``s`` clip: gradient
+    signs of OVERLAPPING frame energies at three time scales (the
+    Haitsma–Kalker energy-band idea restricted to the time domain so it
+    stays integer-exact — no
     FFT). Bit (scale, k) is set iff E(k+1) > E(k), where E(j) is the sum
     of squared samples in window j of that scale; scales pack
     little-endian into one bigint (:data:`AUDIO_EB_SCALES` → 44 bits for
@@ -1951,12 +1860,12 @@ def audio_energy_hash(s_col: str = "s", n_samples: int = 64) -> Column:
         return (
             f"aggregate(sequence(({j}) * {stride}, ({j}) * {stride} + {win - 1}), "
             f"cast(0 as bigint), (a, i) -> "
-            f"a + cast({s_col}[i] as bigint) * cast({s_col}[i] as bigint))"
+            f"a + cast(s[i] as bigint) * cast(s[i] as bigint))"
         )
 
     parts, off = [], 0
     for win, stride in AUDIO_EB_SCALES:
-        n_win = (n_samples - win) // stride + 1
+        n_win = (64 - win) // stride + 1
         parts.append(
             f"aggregate(sequence(0, {n_win - 2}), cast(0 as bigint), (acc, k) -> "
             f"acc + IF({wsum('k + 1', win, stride)} > {wsum('k', win, stride)}, "
@@ -1966,25 +1875,22 @@ def audio_energy_hash(s_col: str = "s", n_samples: int = 64) -> Column:
     return F.expr(" + ".join(parts))
 
 
-def audio_energy_hash_bits(n_samples: int = 64) -> int:
-    """Total bit width of :func:`audio_energy_hash` for a clip length."""
-    # n_win - 1 gradient bits per scale, n_win = (n - win) // stride + 1
-    return sum((n_samples - win) // stride for win, stride in AUDIO_EB_SCALES)
+def audio_energy_hash_bits() -> int:
+    """Total bit width of :func:`audio_energy_hash` for 64-sample clips."""
+    # n_win - 1 gradient bits per scale, n_win = (64 - win) // stride + 1
+    return sum((64 - win) // stride for win, stride in AUDIO_EB_SCALES)
 
 
 def shifted_sequence_pairs(
     df: DataFrame,
     stride: int = 1,
     max_lag: int = 2,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
     s_col: str = "s",
     n_elems: int = 64,
     n_bands: int = 4,
     rows_per_band: int = 4,
     candidate_jaccard: float = 0.8,
     value_offset: int = 32768,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Generic shift-TOLERANT near-dup over integer SEQUENCES (BENCH_ONLY
     tier) — one core for every time-structured modality: candidates from
@@ -1994,7 +1900,7 @@ def shifted_sequence_pairs(
     the shift budget in units; the verify takes the minimum overlap-only
     sum-of-squared-differences over lag ∈ [−max_lag, max_lag]·stride, so
     a pure ℓ-unit shift scores ssd = 0 at lag ℓ. Output (id_a, id_b,
-    jaccard, lag, ssd) for pairs with ssd ≤ ssd_tol; ``lag`` is in shift
+    jaccard, lag, ssd) for the exact pairs (ssd = 0); ``lag`` is in shift
     UNITS.
 
     Why MinHash blocking: position-free n-grams are shift-invariant BY
@@ -2024,16 +1930,15 @@ def shifted_sequence_pairs(
     together are covered by the landmark family
     (:func:`landmark_sequence_pairs`, r14: bench-only, measured
     recall). Scale shape: the
-    measured LSH path (band-bucket shuffle, hot buckets cappable via
-    ``max_bucket_size``); the verify is O(candidates × max_lag · n_elems)
-    map work."""
+    measured LSH path (band-bucket shuffle); the verify is
+    O(candidates × max_lag · n_elems) map work."""
     # value_offset keeps every token unsigned — the shingle tokenizer
     # keeps [a-z0-9]+ runs, so a raw '-123' would lose its sign
     textified = (
         f"array_join(transform({s_col}, x -> cast(x + {value_offset} as string)), ' ')"
     )
     seqs = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("media_id").alias("doc_id"),
         F.expr(textified).alias("text"),
         F.col(s_col).alias("__s__"),
     ).localCheckpoint(eager=False)
@@ -2042,7 +1947,6 @@ def shifted_sequence_pairs(
         threshold=candidate_jaccard,
         n_bands=n_bands,
         rows_per_band=rows_per_band,
-        max_bucket_size=max_bucket_size,
     ).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "jaccard"
     )
@@ -2079,7 +1983,7 @@ def shifted_sequence_pairs(
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("__best__", F.expr(best))
-        .filter(F.col("__best__.ssd") <= ssd_tol)
+        .filter(F.col("__best__.ssd") <= 0)
         .select(
             "id_a",
             "id_b",
@@ -2090,18 +1994,7 @@ def shifted_sequence_pairs(
     )
 
 
-def audio_shifted_pairs(
-    df: DataFrame,
-    max_lag: int = 2,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    n_samples: int = 64,
-    n_bands: int = 4,
-    rows_per_band: int = 4,
-    candidate_jaccard: float = 0.8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def audio_shifted_pairs(df: DataFrame) -> DataFrame:
     """Shift-TOLERANT audio near-dup: :func:`shifted_sequence_pairs` at
     stride 1 (the shift unit IS the sample), catching the time-shifted
     re-encodes :func:`waveform_dhash` provably misses (its docstring
@@ -2110,25 +2003,10 @@ def audio_shifted_pairs(
     feature on the verified pairs. Design history and the measured
     S-curve/soak numbers live on the generic core's docstring and
     docs/SCALE.md."""
-    pairs = shifted_sequence_pairs(
-        df,
-        stride=1,
-        max_lag=max_lag,
-        ssd_tol=ssd_tol,
-        id_col=id_col,
-        s_col=s_col,
-        n_elems=n_samples,
-        n_bands=n_bands,
-        rows_per_band=rows_per_band,
-        candidate_jaccard=candidate_jaccard,
-        value_offset=32768,
-        max_bucket_size=max_bucket_size,
-    )
-    eh = df.select(
-        F.col(id_col), audio_energy_hash(s_col, n_samples).alias("__eh__")
-    )
-    ea = eh.select(F.col(id_col).alias("id_a"), F.col("__eh__").alias("__eha__"))
-    eb = eh.select(F.col(id_col).alias("id_b"), F.col("__eh__").alias("__ehb__"))
+    pairs = shifted_sequence_pairs(df)
+    eh = df.select(F.col("media_id"), audio_energy_hash().alias("__eh__"))
+    ea = eh.select(F.col("media_id").alias("id_a"), F.col("__eh__").alias("__eha__"))
+    eb = eh.select(F.col("media_id").alias("id_b"), F.col("__eh__").alias("__ehb__"))
     return (
         pairs.join(ea, "id_a")
         .join(eb, "id_b")
@@ -2146,14 +2024,7 @@ def audio_shifted_pairs(
 
 
 def video_frame_shifted_pairs(
-    df: DataFrame,
-    frames: int = 4,
-    side: int = 4,
-    max_lag: int = 1,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    max_bucket_size: int | None = None,
+    df: DataFrame, frames: int = 4, side: int = 4
 ) -> DataFrame:
     """Frame-shift-TOLERANT video near-dup: :func:`shifted_sequence_pairs`
     with stride = one frame's pixels — catching re-encodes that start a
@@ -2169,16 +2040,13 @@ def video_frame_shifted_pairs(
     return shifted_sequence_pairs(
         df,
         stride=per_frame,
-        max_lag=max_lag,
-        ssd_tol=ssd_tol,
-        id_col=id_col,
-        s_col=px_col,
+        max_lag=1,
+        s_col="px",
         n_elems=frames * per_frame,
         n_bands=8,
         rows_per_band=2,
         candidate_jaccard=0.45,
         value_offset=0,
-        max_bucket_size=max_bucket_size,
     )
 
 
@@ -2189,12 +2057,7 @@ def video_frame_shifted_pairs(
 CHUNK_TOKENS = 20
 
 
-def chunk_dedup(
-    df: DataFrame,
-    chunk_tokens: int = CHUNK_TOKENS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_dedup(df: DataFrame, chunk_tokens: int = CHUNK_TOKENS) -> DataFrame:
     """Sub-document exact dedup at fixed-token chunk grain — the
     RefinedWeb/CCNet "line dedup" step (boilerplate headers, repeated
     paragraphs) adapted to corpora without newline structure: split each
@@ -2219,7 +2082,7 @@ def chunk_dedup(
     from pyspark.sql.window import Window
 
     df = ensure_parallelism(df)
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(
+    base = df.select(F.col("doc_id"), tokens("text").alias("_toks")).filter(
         F.size("_toks") > 0
     )
     c = int(chunk_tokens)
@@ -2228,11 +2091,11 @@ def chunk_dedup(
         f"i -> array_join(slice(_toks, i * {c} + 1, {c}), ' '))"
     )
     chunks = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.expr(f"cast(ceil(size(_toks) / {c}.0) as int)").alias("n_chunks"),
         F.posexplode(F.expr(chunk_arr)).alias("chunk_idx", "chunk_text"),
     )
-    w = Window.partitionBy("chunk_text").orderBy(id_col, "chunk_idx")
+    w = Window.partitionBy("chunk_text").orderBy("doc_id", "chunk_idx")
     kept = chunks.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     rebuilt = F.array_join(
         F.transform(
@@ -2242,13 +2105,13 @@ def chunk_dedup(
         " ",
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.first("n_chunks").alias("n_chunks"),
             F.count("*").alias("kept_chunks"),
             rebuilt.alias("dedup_text"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
@@ -2258,7 +2121,7 @@ def chunk_dedup(
 
 
 def incremental_exact_dedup(
-    incoming_fps: DataFrame, history_fps: DataFrame, id_col: str = "doc_id"
+    incoming_fps: DataFrame, history_fps: DataFrame
 ) -> DataFrame:
     """Exact dedup for CONTINUAL ingest: an incoming batch survives only if
     its fingerprint is (a) absent from the at-rest history and (b) the
@@ -2274,7 +2137,7 @@ def incremental_exact_dedup(
     fresh = incoming_fps.join(
         history_fps.select("fingerprint").distinct(), "fingerprint", "left_anti"
     )
-    return exact_dedup(fresh, id_col)
+    return exact_dedup(fresh)
 
 
 def lsh_index(
@@ -2356,7 +2219,6 @@ def keep_best_per_cluster(
     clusters: DataFrame,
     scores: DataFrame,
     id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
     score_col: str = "quality_score",
 ) -> DataFrame:
     """Cluster-representative selection POLICY: given near-dup clusters
@@ -2373,17 +2235,17 @@ def keep_best_per_cluster(
     from pyspark.sql import Window
 
     joined = clusters.join(scores.select(id_col, score_col), id_col)
-    w = Window.partitionBy(cluster_col).orderBy(
+    w = Window.partitionBy("cluster_id").orderBy(
         F.col(score_col).desc(), F.col(id_col).asc()
     )
     return (
         joined.withColumn("__rk__", F.row_number().over(w))
         .withColumn(
-            "cluster_size", F.count("*").over(Window.partitionBy(cluster_col))
+            "cluster_size", F.count("*").over(Window.partitionBy("cluster_id"))
         )
         .filter(F.col("__rk__") == 1)
         .select(
-            F.col(cluster_col),
+            F.col("cluster_id"),
             F.col(id_col).alias("keeper"),
             F.col(score_col).alias("keeper_score"),
             F.col("cluster_size").cast("bigint").alias("cluster_size"),
@@ -2498,10 +2360,6 @@ _LM_TOKENS_EXPR = (
 
 def landmark_sequence_pairs(
     df: DataFrame,
-    min_votes: int = 2,
-    corr2_min: float = 0.995,
-    min_overlap: int = 8,
-    id_col: str = "media_id",
     s_col: str = "s",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -2525,7 +2383,7 @@ def landmark_sequence_pairs(
        (id, tok, pos) behind checkpoint barriers.
     2. **Offset vote**: self-join on tok (id_a < id_b); each match
        votes for offset = pos_a − pos_b; keep each pair's best offset
-       when >= ``min_votes`` tokens agree. Random token collisions
+       when >= 2 tokens agree. Random token collisions
        exist (the token space is small by design — coarse enough to
        survive noise) but almost never agree on an offset twice
        (measured: 0 of 500 random pairs survive the vote + verify at
@@ -2535,8 +2393,9 @@ def landmark_sequence_pairs(
        elements of |s| <= ~64k) give Pearson corr² = cov²/(vx·vy) over
        the overlap; accept cov > 0 (monotone gain only — an inverted
        copy fails blocking anyway: its peaks are valleys) and corr² >=
-       ``corr2_min``. An affine-gain twin has corr² = 1 minus the noise
-       floor; random aligned walks decorrelate.
+       0.995 over at least 8 overlapping elements. An affine-gain twin
+       has corr² = 1 minus the noise floor; random aligned walks
+       decorrelate.
 
     Unlike the exact tiers this is NOT oracle-pairable — recall is
     measured, not pigeonhole-guaranteed (planted trim∘gain∘noise twins:
@@ -2547,7 +2406,7 @@ def landmark_sequence_pairs(
     ``max_bucket_size`` hot-bucket cap, vote aggregation on (pair,
     offset), verify O(accepted pairs × overlap) map work. Output
     (id_a, id_b, offset, votes, corr2)."""
-    marks = _lm_norm(df, id_col, s_col)
+    marks = _lm_norm(df, "media_id", s_col)
     toks = _lm_explode_tokens(marks)
     if max_bucket_size is not None:
         toks = _cap_hot_buckets(toks, ["tok"], max_bucket_size)
@@ -2558,14 +2417,14 @@ def landmark_sequence_pairs(
         F.col("__id__").alias("id_b"), "tok", F.col("pos").alias("__pb__")
     )
     joined = ta.join(tb, "tok").filter(F.col("id_a") < F.col("id_b"))
-    best = _lm_vote_best(joined, "id_a", "id_b", min_votes)
+    best = _lm_vote_best(joined, "id_a", "id_b", 2)
     sa = marks.select(
         F.col("__id__").alias("id_a"), F.col("__s__").alias("__sa__")
     )
     sb = marks.select(
         F.col("__id__").alias("id_b"), F.col("__s__").alias("__sb__")
     )
-    return _lm_verify(best, sa, sb, "id_a", "id_b", corr2_min, min_overlap)
+    return _lm_verify(best, sa, sb, "id_a", "id_b", 0.995, 8)
 
 
 def _lm_norm(df: DataFrame, id_col: str, s_col: str) -> DataFrame:

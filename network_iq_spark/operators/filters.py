@@ -42,17 +42,6 @@ def distinct_domain(df: DataFrame, col: str) -> DataFrame:
     return df.select(col).na.drop().distinct().orderBy(col)
 
 
-def drop_null_subset(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P6: ``dropna(subset=…)``."""
-    return df.na.drop(subset=list(cols))
-
-
-def range_validity(col: Column | str, lo: float, hi: float) -> Column:
-    """P8: value inside [lo, hi] (geo-validity style check)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.isNotNull() & (c >= lo) & (c <= hi)
-
-
 def threshold_filter(df: DataFrame, col: str, min_value: float) -> DataFrame:
     """P11: ``fillna(0) >= t`` (streamlit_app.py:829-830)."""
     return df.filter(F.coalesce(F.col(col), F.lit(0.0)) >= F.lit(min_value))
@@ -62,9 +51,3 @@ def row_lookup(df: DataFrame, key_col: str, key: object) -> DataFrame:
     """P13: string-normalized single-row lookup
     (streamlit_app.py:1124-1126)."""
     return df.filter(F.col(key_col).cast("string") == F.lit(str(key))).limit(1)
-
-
-def existing_columns(df: DataFrame, wanted: Sequence[str]) -> list[str]:
-    """P10: guarded column-subset projection helper."""
-    have = set(df.columns)
-    return [c for c in wanted if c in have]

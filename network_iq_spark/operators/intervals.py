@@ -31,78 +31,60 @@ US_PER_HOUR = 3_600_000_000
 US_PER_DAY = 24 * US_PER_HOUR
 
 
-def bucketed_interval_join(
-    facts: DataFrame,
-    intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start_us",
-    end_col: str = "end_us",
-    granularity_us: int = US_PER_DAY,
-    broadcast_intervals: bool = True,
-) -> DataFrame:
+def bucketed_interval_join(facts: DataFrame, intervals: DataFrame) -> DataFrame:
     """Join each fact row to every interval containing its timestamp.
 
     ``facts`` keeps all its columns plus the interval's; ``intervals`` must
-    carry integer-microsecond ``start_col``/``end_col`` (half-open). With
-    ``broadcast_intervals`` (the common case: intervals ≪ facts) the join is
-    map-side — zero shuffle of the fact table; otherwise both sides hash-
-    partition on the bucket key.
+    carry integer-microsecond ``start_us``/``end_us`` (half-open). The
+    intervals are broadcast (the common case: intervals ≪ facts), so the
+    join is map-side — zero shuffle of the fact table.
     """
-    g = int(granularity_us)
+    g = US_PER_DAY
     iv = intervals.withColumn(
         "__bucket__",
         F.explode(
             F.sequence(
-                F.expr(f"{start_col} div {g}"),
-                F.expr(f"({end_col} - 1) div {g}"),
+                F.expr(f"start_us div {g}"),
+                F.expr(f"(end_us - 1) div {g}"),
             )
         ),
     )
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
-    fx = facts.withColumn("__us__", F.unix_micros(F.col(ts_col))).withColumn(
+    fx = facts.withColumn("__us__", F.unix_micros(F.col("ts"))).withColumn(
         "__bucket__", F.expr(f"__us__ div {g}")
     )
     return (
-        fx.join(iv, "__bucket__")
+        fx.join(F.broadcast(iv), "__bucket__")
         .filter(
-            (F.col("__us__") >= F.col(start_col)) & (F.col("__us__") < F.col(end_col))
+            (F.col("__us__") >= F.col("start_us")) & (F.col("__us__") < F.col("end_us"))
         )
         .drop("__bucket__", "__us__")
     )
 
 
-def span_windows(
-    facts: DataFrame,
-    n_windows: int = 8,
-    num: int = 2,
-    den: int = 10,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Derive ``n_windows`` overlapping intervals covering the fact table's
-    time span: window *i* = ``[lo + i·span/den, lo + (i+num)·span/den)`` in
-    integer microseconds (span = hi−lo+1, so the last window's end strictly
-    covers hi). Overlap (num > 1) makes the interval join genuinely 1-to-many.
+def span_windows(facts: DataFrame) -> DataFrame:
+    """Derive 8 overlapping intervals covering the fact table's time span:
+    window *i* = ``[lo + i·span/10, lo + (i+2)·span/10)`` in integer
+    microseconds (span = hi−lo+1, so the last window's end strictly covers
+    hi). The two-tenths width against a one-tenth step makes the interval
+    join genuinely 1-to-many.
 
     The min/max pass is one partial-aggregated scan; the window table itself
-    is n rows — a broadcast dimension derived entirely in-plan (no collect).
+    is 8 rows — a broadcast dimension derived entirely in-plan (no collect).
     """
     b = facts.agg(
-        F.min(F.unix_micros(F.col(ts_col))).alias("lo"),
-        F.max(F.unix_micros(F.col(ts_col))).alias("hi"),
+        F.min(F.unix_micros(F.col("ts"))).alias("lo"),
+        F.max(F.unix_micros(F.col("ts"))).alias("hi"),
     )
     return (
         b.select(
-            F.explode(F.sequence(F.lit(0), F.lit(n_windows - 1))).alias("__wi__"),
+            F.explode(F.sequence(F.lit(0), F.lit(7))).alias("__wi__"),
             "lo",
             "hi",
         )
         .select(F.col("__wi__").cast("bigint").alias("window_id"), "lo", "hi")
         .select(
             "window_id",
-            F.expr(f"lo + (window_id * (hi - lo + 1)) div {den}").alias("start_us"),
-            F.expr(
-                f"lo + ((window_id + {num}) * (hi - lo + 1)) div {den}"
-            ).alias("end_us"),
+            F.expr("lo + (window_id * (hi - lo + 1)) div 10").alias("start_us"),
+            F.expr("lo + ((window_id + 2) * (hi - lo + 1)) div 10").alias("end_us"),
         )
     )

@@ -19,20 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def baseline_join(
-    fact: DataFrame, baseline: DataFrame, on: Sequence[str], how: str = "left"
-) -> DataFrame:
+def baseline_join(fact: DataFrame, baseline: DataFrame, on: Sequence[str]) -> DataFrame:
     """J1/J2: fact ⟕ small per-group baseline, broadcast build side
     (streamlit_app.py:539,607,691)."""
-    return fact.join(F.broadcast(baseline), list(on), how)
-
-
-def dim_enrich(
-    fact: DataFrame, dim: DataFrame, on: Sequence[str], how: str = "left"
-) -> DataFrame:
-    """J3: fact ⟕ deduped dimension (prediction↔coordinate join,
-    streamlit_app.py:978)."""
-    return fact.join(F.broadcast(dim), list(on), how)
+    return fact.join(F.broadcast(baseline), list(on), "left")
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:

@@ -351,9 +351,7 @@ def sniff_format(payload: bytes | None) -> str:
     return "unknown"
 
 
-def media_decode_contract(
-    df: DataFrame, format_col: str = "declared_format"
-) -> DataFrame:
+def media_decode_contract(df: DataFrame) -> DataFrame:
     """Per-format decode-vs-fallback census — the media twin of the
     tabular ``contract_summary``/quarantine pattern, turning "which rows
     silently fell back to the metadata-only path" into a SHIPPED NUMBER
@@ -384,7 +382,7 @@ def media_decode_contract(
                 decoded.append(int(ok))
             yield pd.DataFrame(
                 {
-                    "declared_format": pdf[format_col],
+                    "declared_format": pdf["declared_format"],
                     "sniffed_format": sniffed,
                     "decoded": decoded,
                 }
@@ -568,9 +566,9 @@ def resize_media(df: DataFrame, max_w: int = 336, max_h: int = 336) -> DataFrame
     return ensure_parallelism(prepped).mapInPandas(batches, schema=RESIZE_SCHEMA)
 
 
-def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 32) -> DataFrame:
+def sample_frames(df: DataFrame, max_frames: int = 32) -> DataFrame:
     """Frame-sampling stage for video rows: one output row per sampled
-    timestamp (bounded explode — fanout = min(duration/every_ms,
+    second (bounded explode — fanout = min(duration_ms/1000,
     max_frames), computed from METADATA before any Python runs, so the
     blow-up is capped in the plan, not discovered in a worker).
 
@@ -616,7 +614,7 @@ def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 32) -> 
     )
     n_frames = F.least(
         F.lit(max_frames),
-        F.greatest(F.lit(1), (F.col("duration_ms") / every_ms).cast("int")),
+        F.greatest(F.lit(1), (F.col("duration_ms") / 1000).cast("int")),
     )
     exploded = vids.select(
         "media_id",
@@ -626,7 +624,7 @@ def sample_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 32) -> 
         "media_id",
         "payload",
         F.col("frame_idx").cast("int").alias("frame_idx"),
-        (F.col("frame_idx") * every_ms).cast("int").alias("ts_ms"),
+        (F.col("frame_idx") * 1000).cast("int").alias("ts_ms"),
     )
     from network_iq_spark.operators import ensure_parallelism
 

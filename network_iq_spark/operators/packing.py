@@ -25,13 +25,7 @@ from pyspark.sql import functions as F
 from network_iq_spark.operators.text import tokens
 
 
-def sequence_packing(
-    df: DataFrame,
-    capacity: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shard_col: str = "source",
-) -> DataFrame:
+def sequence_packing(df: DataFrame, capacity: int) -> DataFrame:
     """Per-shard concat-and-chunk pack assignment + per-pack stats.
 
     Returns one row per (shard, pack_id): number of documents starting in
@@ -40,13 +34,13 @@ def sequence_packing(
     result is bit-identical across engines and partitionings.
     """
     base = df.select(
-        F.col(shard_col).alias("shard"),
-        F.col(id_col),
-        F.size(tokens(text_col)).alias("n_tokens"),
+        F.col("source").alias("shard"),
+        F.col("doc_id"),
+        F.size(tokens("text")).alias("n_tokens"),
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint")
@@ -60,8 +54,8 @@ def sequence_packing(
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").alias("pack_tokens"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
         .orderBy("shard", "pack_id")
     )
@@ -71,8 +65,6 @@ def chunk_manifest(
     df: DataFrame,
     chunk_tokens: int = 128,
     overlap: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Sliding-window chunk manifest: the (doc, chunk, token-range) table a
     tokenizer/embedder consumes to split long documents with overlap — the
@@ -87,7 +79,7 @@ def chunk_manifest(
     assert 0 <= overlap < chunk_tokens
     step = chunk_tokens - overlap
     base = df.select(
-        F.col(id_col), F.size(tokens(text_col)).alias("n_tokens")
+        F.col("doc_id"), F.size(tokens("text")).alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
     # number of chunks: 1 if n <= chunk else ceil((n - chunk)/step) + 1
     n_chunks = F.expr(
@@ -97,14 +89,14 @@ def chunk_manifest(
     return (
         base.withColumn("__nc__", n_chunks)
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.explode(F.expr("sequence(cast(0 as bigint), __nc__ - 1)")).alias(
                 "chunk_id"
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             (F.col("chunk_id") * step).alias("tok_start"),
             F.least(
@@ -114,15 +106,9 @@ def chunk_manifest(
     )
 
 
-def span_corruption_manifest(
-    docs,  # DataFrame
-    mask_rate_pct: int = 15,
-    span_len: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def span_corruption_manifest(docs):  # DataFrame
     """T5/UL2-style span-corruption manifest, fully deterministic: for each
-    document, ~mask_rate_pct% of tokens are covered by fixed-length spans
+    document, ~15% of tokens are covered by 3-token spans
     whose starts derive from md5(doc_id, span_index) — a pure function of
     the document identity, so the SAME spans are masked on every run,
     every engine, every partitioning (the property that makes corruption
@@ -142,45 +128,39 @@ def span_corruption_manifest(
 
     base = (
         ensure_parallelism(docs)
-        .select(F.col(id_col), F.size(tokens(text_col)).alias("n_tok"))
-        .filter(F.col("n_tok") >= span_len)
+        .select(F.col("doc_id"), F.size(tokens("text")).alias("n_tok"))
+        .filter(F.col("n_tok") >= 3)
     )
     # explicit floor: a bare double→int cast truncates in Spark but ROUNDS
     # in DuckDB — floor is the one semantics both engines share
     n_spans = F.greatest(
         F.lit(1),
-        F.floor(F.col("n_tok") * mask_rate_pct / 100 / span_len).cast("int"),
+        F.floor(F.col("n_tok") * 15 / 100 / 3).cast("int"),
     )
-    # start_i = md5(doc_id||'#'||i) first-12-hex as int, mod (n_tok - span_len + 1)
+    # start_i = md5(doc_id||'#'||i) first-12-hex as int, mod (n_tok - 3 + 1)
     starts = F.expr(
-        f"array_sort(array_distinct(transform(sequence(1, __k__), "
-        f"i -> cast(conv(substring(md5(concat(cast({id_col} as string), '#', "
-        f"cast(i as string))), 1, 12), 16, 10) as bigint) "
-        f"% (n_tok - {span_len} + 1))))"
+        "array_sort(array_distinct(transform(sequence(1, __k__), "
+        "i -> cast(conv(substring(md5(concat(cast(doc_id as string), '#', "
+        "cast(i as string))), 1, 12), 16, 10) as bigint) "
+        "% (n_tok - 3 + 1))))"
     )
     return (
         base.withColumn("__k__", n_spans)
         .withColumn("__starts__", starts)
         .select(
-            id_col,
+            "doc_id",
             F.posexplode("__starts__").alias("span_id", "start_tok"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("span_id").cast("int").alias("span_id"),
             "start_tok",
-            F.lit(span_len).alias("span_len"),
+            F.lit(3).alias("span_len"),
         )
     )
 
 
-def ffd_packing(
-    df: DataFrame,
-    capacity: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shard_col: str = "source",
-) -> DataFrame:
+def ffd_packing(df: DataFrame, capacity: int) -> DataFrame:
     """First-fit-decreasing bin packing WITHOUT document splitting — the
     other production packing strategy: when truncating/straddling a
     document across sequences is unacceptable (instruction tuning,
@@ -199,7 +179,7 @@ def ffd_packing(
     hiding it).
 
     Scale shape: the shard is the parallel unit — one hash exchange on
-    ``shard_col``, then per-shard FFD inside ``applyInPandas`` (state =
+    ``source``, then per-shard FFD inside ``applyInPandas`` (state =
     the shard's open-pack loads, O(packs) memory; the sequential loop is
     inherent to bin packing, so the design keeps it BOUNDED by shard
     size, exactly like real pipelines pack within crawl shards). A shard
@@ -211,14 +191,14 @@ def ffd_packing(
 
     cap = int(capacity)
     base = df.select(
-        F.col(shard_col).alias("shard"),
-        F.col(id_col),
-        F.size(tokens(text_col)).alias("n_tokens"),
+        F.col("source").alias("shard"),
+        F.col("doc_id"),
+        F.size(tokens("text")).alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
-            ["n_tokens", id_col], ascending=[False, True]
+            ["n_tokens", "doc_id"], ascending=[False, True]
         )
         loads: list[int] = []
         counts: list[int] = []

@@ -55,7 +55,6 @@ def hash_split(
     key: str,
     weights: Mapping[str, float],
     salt: str = "",
-    out: str = "split",
 ) -> DataFrame:
     """Assign every row to one named split (train/val/test…) by key hash.
 
@@ -73,16 +72,16 @@ def hash_split(
         cum += w
         cond = bucket < _bp(cum)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(out, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
-    df: DataFrame, key: str, strata_col: str, rates: Mapping, salt: str = ""
+    df: DataFrame, key: str, strata_col: str, rates: Mapping
 ) -> DataFrame:
     """Per-stratum deterministic sampling (the reproducible ``sampleBy``):
     each stratum keeps its own fraction, keyed by the same row hash. Strata
     missing from ``rates`` are dropped (rate 0)."""
-    bucket = hash_bucket(F.col(key), salt)
+    bucket = hash_bucket(F.col(key))
     thr = None
     for stratum, rate in rates.items():
         cond = F.col(strata_col) == F.lit(stratum)
@@ -91,9 +90,7 @@ def stratified_sample(
     return df.filter(bucket < F.coalesce(thr, F.lit(0)))
 
 
-def equalize_groups(
-    df: DataFrame, key: str, group: str, salt: str = "mix"
-) -> DataFrame:
+def equalize_groups(df: DataFrame, key: str, group: str) -> DataFrame:
     """Deterministic domain-mix resampling: downsample every group to the
     size of the smallest so the output mix is uniform — the degenerate but
     exactly-checkable case of target-proportion data mixing (the Pile /
@@ -122,7 +119,7 @@ def equalize_groups(
         ).alias("__rate_bp__"),
     )
     return df.join(F.broadcast(rates), group).filter(
-        hash_bucket(F.col(key), salt) < F.col("__rate_bp__")
+        hash_bucket(F.col(key), "mix") < F.col("__rate_bp__")
     ).drop("__rate_bp__")
 
 
@@ -131,7 +128,6 @@ def target_mixture(
     key: str,
     group: str,
     targets_bp: Mapping[str, int],
-    salt: str = "mix",
 ) -> DataFrame:
     """Deterministic downsampling to an ARBITRARY target mixture — the
     general form of :func:`equalize_groups` (Pile/DoReMi-style domain
@@ -176,7 +172,7 @@ def target_mixture(
     )
     return (
         df.join(F.broadcast(rates.drop("__n__")), group)
-        .filter(hash_bucket(F.col(key), salt) < F.col("__rate_bp__"))
+        .filter(hash_bucket(F.col(key), "mix") < F.col("__rate_bp__"))
         .drop("__rate_bp__")
     )
 
@@ -221,11 +217,7 @@ _ES_POW48 = float(1 << 48)
 
 
 def weighted_sample_k(
-    df: DataFrame,
-    group_col: str,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
+    df: DataFrame, group_col: str, weight_col: str, k: int
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per group — the
     Efraimidis-Spirakis one-pass reservoir (2006): draw u ~ U(0,1] per
@@ -233,7 +225,7 @@ def weighted_sample_k(
     and avoids the pow; u is md5-derived ((h+1)/2^48 — an exact rational
     in (0,1], the minhash trick), so the "random" draw replays on any
     engine, retry, or partitioning. The key is floor-quantized to integer
-    nano-units and ties break on the id, so the selected set is
+    nano-units and ties break on ``doc_id``, so the selected set is
     engine-exact like every other sampler here.
 
     This is the right primitive when mixture construction must weight by
@@ -245,17 +237,15 @@ def weighted_sample_k(
     from pyspark.sql import Window
 
     key = (
-        f"cast(floor(ln((cast(conv(substring(md5(cast({id_col} as string)), 1, 12), "
+        "cast(floor(ln((cast(conv(substring(md5(cast(doc_id as string)), 1, 12), "
         f"16, 10) as double) + 1.0) / {_ES_POW48!r}) "
         f"/ cast({weight_col} as double) * {ES_QUANT}.0) as bigint)"
     )
-    w = Window.partitionBy(group_col).orderBy(
-        F.desc("es_key_units"), F.col(id_col)
-    )
+    w = Window.partitionBy(group_col).orderBy(F.desc("es_key_units"), F.col("doc_id"))
     return (
         df.withColumn("es_key_units", F.expr(key))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(group_col, "rank", id_col, weight_col, "es_key_units")
+        .select(group_col, "rank", "doc_id", weight_col, "es_key_units")
         .orderBy(group_col, "rank")
     )

@@ -44,30 +44,28 @@ def _dot(a: str, b: str) -> Column:
     )
 
 
-def with_norm(df: DataFrame, vec: str = "v", out: str = "norm") -> DataFrame:
-    return df.withColumn(out, F.sqrt(_dot(vec, vec)))
+def with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("norm", F.sqrt(_dot("v", "v")))
 
 
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
     """Exact cosine top-k: queries × corpus → cos → row_number ≤ k.
 
-    Both sides must carry (id_col, vec_col[array<double>], norm). Output:
+    Both sides must carry (vec_id, v[array<double>], norm). Output:
     (q_vec_id, n_vec_id, rank, cos).
     """
     q = queries.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("q_vec_id"),
+        F.col("v").alias("qv"),
         F.col("norm").alias("qn"),
     )
     c = corpus.select(
-        F.col(id_col).alias("n_vec_id"),
-        F.col(vec_col).alias("cv"),
+        F.col("vec_id").alias("n_vec_id"),
+        F.col("v").alias("cv"),
         F.col("norm").alias("cn"),
     )
     scored = (
@@ -103,17 +101,9 @@ def _hyperplane(dim: int, seed: int, plane: int) -> list[float]:
     return vals
 
 
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """Multi-table random-hyperplane signatures: for each of ``n_tables``
-    independent tables, bucket = Σ_{p} (v·h_{t,p} > 0)·2^p. Output long form
+def lsh_signatures(df: DataFrame, dim: int) -> DataFrame:
+    """Multi-table random-hyperplane signatures: for each of 16
+    independent tables, bucket = Σ_{p<4} (v·h_{t,p} > 0)·2^p. Output long form
     (id, table, bucket) — one row per table; the ANN join key is
     (table, bucket).
 
@@ -140,18 +130,18 @@ def lsh_signatures(
 
     planes = np.array(
         [
-            _hyperplane(dim, seed + t * 7919, p)
-            for t in range(n_tables)
-            for p in range(n_planes)
+            _hyperplane(dim, 42 + t * 7919, p)
+            for t in range(16)
+            for p in range(4)
         ],
         dtype=np.float64,
     )  # (L·k, dim)
-    weights = np.tile(2 ** np.arange(n_planes, dtype=np.int64), n_tables)
-    table_of = np.repeat(np.arange(n_tables, dtype=np.int64), n_planes)
+    weights = np.tile(2 ** np.arange(4, dtype=np.int64), 16)
+    table_of = np.repeat(np.arange(16, dtype=np.int64), 4)
 
     out_schema = StructType(
         [
-            df.schema[id_col],
+            df.schema["vec_id"],
             StructField("table", IntegerType()),
             StructField("bucket", LongType()),
         ]
@@ -161,28 +151,26 @@ def lsh_signatures(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].to_numpy())  # (n, dim)
+            v = np.stack(pdf["v"].to_numpy())  # (n, dim)
             bits = (v @ planes.T) > 0  # (n, L·k)
             contrib = bits * weights  # weighted bits per plane
-            buckets = np.zeros((len(pdf), n_tables), dtype=np.int64)
-            for t in range(n_tables):
+            buckets = np.zeros((len(pdf), 16), dtype=np.int64)
+            for t in range(16):
                 buckets[:, t] = contrib[:, table_of == t].sum(axis=1)
-            ids = np.repeat(pdf[id_col].to_numpy(), n_tables)
+            ids = np.repeat(pdf["vec_id"].to_numpy(), 16)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
-                    "table": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(pdf)
-                    ),
+                    "vec_id": ids,
+                    "table": np.tile(np.arange(16, dtype=np.int32), len(pdf)),
                     "bucket": buckets.reshape(-1),
                 }
             )
 
     from network_iq_spark.operators import ensure_parallelism
 
-    return ensure_parallelism(df.select(id_col, vec_col), min_bytes=DENSE_GUARD_MIN_BYTES).mapInPandas(
-        signatures, schema=out_schema
-    )
+    return ensure_parallelism(
+        df.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(signatures, schema=out_schema)
 
 
 def cosine_topk_lsh(
@@ -190,10 +178,6 @@ def cosine_topk_lsh(
     query_ids: DataFrame,
     dim: int,
     k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     multiprobe: bool = False,
 ) -> DataFrame:
     """ANN top-k: exact cosine restricted to candidates sharing a bucket in
@@ -205,42 +189,40 @@ def cosine_topk_lsh(
     recall oracle.
 
     ``multiprobe`` additionally probes, per table, every bucket at Hamming
-    distance 1 from the query's bucket (flip each of the k plane bits) — a
+    distance 1 from the query's bucket (flip each of the 4 plane bits) — a
     near-boundary vector usually lands one sign-flip away, so this trades
     k+1× more QUERY-side lookups (the tiny broadcast side; the corpus index
     is untouched) for recall the same number of tables can't reach. The
     standard knob when re-indexing with more tables is too expensive.
     """
-    sig = lsh_signatures(
-        df, dim, n_planes, n_tables, id_col=id_col, vec_col=vec_col
-    )
-    q = sig.join(query_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("q_vec_id"), "table", "bucket"
+    sig = lsh_signatures(df, dim)
+    q = sig.join(query_ids, "vec_id", "left_semi").select(
+        F.col("vec_id").alias("q_vec_id"), "table", "bucket"
     )
     if multiprobe:
         variants = F.array(
             F.col("bucket"),
-            *[F.expr(f"bucket ^ {1 << p}") for p in range(n_planes)],
+            *[F.expr(f"bucket ^ {1 << p}") for p in range(4)],
         )
         q = q.select(
             "q_vec_id", "table", F.explode(variants).alias("bucket")
         )
     cand = (
-        sig.select(F.col(id_col).alias("n_vec_id"), "table", "bucket")
+        sig.select(F.col("vec_id").alias("n_vec_id"), "table", "bucket")
         .join(F.broadcast(q), ["table", "bucket"])
         .filter(F.col("n_vec_id") != F.col("q_vec_id"))
         .select("q_vec_id", "n_vec_id")
         .distinct()
     )
-    vecs = with_norm(df.select(id_col, vec_col), vec_col)
+    vecs = with_norm(df.select("vec_id", "v"))
     qv = vecs.select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("q_vec_id"),
+        F.col("v").alias("qv"),
         F.col("norm").alias("qn"),
     )
     cv = vecs.select(
-        F.col(id_col).alias("n_vec_id"),
-        F.col(vec_col).alias("cv"),
+        F.col("vec_id").alias("n_vec_id"),
+        F.col("v").alias("cv"),
         F.col("norm").alias("cn"),
     )
     scored = (
@@ -265,8 +247,8 @@ def cosine_topk_lsh(
 # ---------------------------------------------------------------------------
 
 
-def int_hyperplane(dim: int, seed: int, plane: int, w_range: int = 16) -> list[int]:
-    """INTEGER hyperplane weights in [-w_range/2, w_range/2) from the same
+def int_hyperplane(dim: int, seed: int, plane: int) -> list[int]:
+    """INTEGER hyperplane weights in [-8, 8) from the same
     splitmix-style hash as :func:`_hyperplane`.
 
     Integer weights exist for cross-engine determinism: the signature bit is
@@ -284,7 +266,7 @@ def int_hyperplane(dim: int, seed: int, plane: int, w_range: int = 16) -> list[i
         x ^= x >> 31
         x = (x * 0xD6E8FEB86659FD93) % (2**64)
         x ^= x >> 27
-        vals.append(int(x % w_range) - w_range // 2)
+        vals.append(int(x % 16) - 8)
     return vals
 
 
@@ -293,14 +275,10 @@ def int_lsh_signatures(
     dim: int,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
-    scale: int = 1 << 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-table hyperplane signatures over INTEGERIZED embeddings.
 
-    Each float component is quantized ``floor(x·scale + 0.5)`` (exact
+    Each float component is quantized ``floor(x·2²⁰ + 0.5)`` (exact
     double op in every engine), then bucket bit p of table t is
     ``(q · w_{t,p}) > 0`` with integer weights — all-integer arithmetic,
     so the buckets are reproducible anywhere (the registered oracle
@@ -313,7 +291,7 @@ def int_lsh_signatures(
 
     planes = np.array(
         [
-            int_hyperplane(dim, seed + t * 7919, p)
+            int_hyperplane(dim, 42 + t * 7919, p)
             for t in range(n_tables)
             for p in range(n_planes)
         ],
@@ -324,7 +302,7 @@ def int_lsh_signatures(
 
     out_schema = StructType(
         [
-            df.schema[id_col],
+            df.schema["vec_id"],
             StructField("table", IntegerType()),
             StructField("bucket", LongType()),
         ]
@@ -334,8 +312,8 @@ def int_lsh_signatures(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            q = np.floor(v * float(scale) + 0.5).astype(np.int64)  # (n, dim)
+            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q = np.floor(v * float(1 << 20) + 0.5).astype(np.int64)  # (n, dim)
             bits = (q @ planes.T) > 0  # exact integer dots
             contrib = bits * weights
             buckets = np.zeros((len(pdf), n_tables), dtype=np.int64)
@@ -343,7 +321,7 @@ def int_lsh_signatures(
                 buckets[:, t] = contrib[:, table_of == t].sum(axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_tables),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_tables),
                     "table": np.tile(np.arange(n_tables, dtype=np.int32), len(pdf)),
                     "bucket": buckets.reshape(-1),
                 }
@@ -351,9 +329,9 @@ def int_lsh_signatures(
 
     from network_iq_spark.operators import ensure_parallelism
 
-    return ensure_parallelism(df.select(id_col, vec_col), min_bytes=DENSE_GUARD_MIN_BYTES).mapInPandas(
-        signatures, schema=out_schema
-    )
+    return ensure_parallelism(
+        df.select("vec_id", "embedding"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(signatures, schema=out_schema)
 
 
 def near_dup_pairs(
@@ -362,9 +340,6 @@ def near_dup_pairs(
     threshold: float,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, candidate-restricted.
 
@@ -376,27 +351,21 @@ def near_dup_pairs(
     the verify join touches candidates only — never the N² cross product.
     Output: (id_a, id_b, cos), id_a < id_b.
     """
-    sig = int_lsh_signatures(
-        corpus, dim, n_planes, n_tables, seed, id_col=id_col, vec_col=vec_col
-    )
-    a = sig.select(
-        F.col(id_col).alias("id_a"), "table", "bucket"
-    )
-    b = sig.select(F.col(id_col).alias("id_b"), "table", "bucket")
+    sig = int_lsh_signatures(corpus, dim, n_planes, n_tables)
+    a = sig.select(F.col("vec_id").alias("id_a"), "table", "bucket")
+    b = sig.select(F.col("vec_id").alias("id_b"), "table", "bucket")
     cand = (
         a.join(b, ["table", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = with_norm(
-        corpus.select(id_col, as_double_vec(vec_col).alias("v")), "v"
-    )
+    vecs = with_norm(corpus.select("vec_id", as_double_vec("embedding").alias("v")))
     va = vecs.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("av"), F.col("norm").alias("an")
+        F.col("vec_id").alias("id_a"), F.col("v").alias("av"), F.col("norm").alias("an")
     )
     vb = vecs.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("bv"), F.col("norm").alias("bn")
+        F.col("vec_id").alias("id_b"), F.col("v").alias("bv"), F.col("norm").alias("bn")
     )
     return (
         cand.join(va, "id_a")
@@ -442,9 +411,7 @@ def seed_centroids(
     )
 
 
-def ivf_assign_np(
-    vecs: DataFrame, centroids: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def ivf_assign_np(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment as ONE numpy matmul per Arrow batch —
     the throughput path for large cell counts. The expression-tree
     :func:`ivf_assign` costs N·k *interpreted* array folds, which is the
@@ -483,18 +450,15 @@ def ivf_assign_np(
             vn[vn == 0.0] = 1.0
             cos = (V / vn[:, None]) @ Cu.T
             best = c_ids[np.argmax(cos, axis=1)]
-            yield pd.DataFrame({id_col: pdf[id_col].values, "cell": best})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].values, "cell": best})
 
-    return ensure_parallelism(vecs.select(id_col, "v"), min_bytes=DENSE_GUARD_MIN_BYTES).mapInPandas(
-        assign, schema=f"{id_col} bigint, cell bigint"
-    )
+    return ensure_parallelism(
+        vecs.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(assign, schema="vec_id bigint, cell bigint")
 
 
 def ivf_assign_hier(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    n_groups: int | None = None,
+    vecs: DataFrame, centroids: DataFrame, n_groups: int | None = None
 ) -> DataFrame:
     """Two-level (IMI-style) coarse assignment: the k centroids are grouped
     under ~√k super-representatives (picked by the same deterministic
@@ -560,11 +524,11 @@ def ivf_assign_hier(
                     continue
                 sub = Vu[rows] @ Cu[mem].T  # (|rows|, |mem|)
                 out[rows] = c_ids[mem[np.argmax(sub, axis=1)]]
-            yield pd.DataFrame({id_col: pdf[id_col].values, "cell": out})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].values, "cell": out})
 
     return ensure_parallelism(
-        vecs.select(id_col, "v"), min_bytes=DENSE_GUARD_MIN_BYTES
-    ).mapInPandas(assign, schema=f"{id_col} bigint, cell bigint")
+        vecs.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(assign, schema="vec_id bigint, cell bigint")
 
 
 def ivf_assign_dist(
@@ -627,6 +591,8 @@ def ivf_assign_dist(
         .select("c_id", "cv")
         .collect()
     )
+    if not rep_rows:
+        raise ValueError("ivf_assign_dist: empty input")
     rep_ids = np.array([c for c, _ in rep_rows], dtype=np.int64)
     R = np.array([v for _, v in rep_rows], dtype=np.float64)
     Rn = np.sqrt((R * R).sum(axis=1))
@@ -727,8 +693,6 @@ def cosine_topk_ivf(
     n_cells: int = 16,
     nprobe: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
     assigner=None,
 ) -> DataFrame:
     """IVF ANN top-k: probe the ``nprobe`` nearest cells per query, exact
@@ -747,11 +711,11 @@ def cosine_topk_ivf(
     from network_iq_spark.operators import ensure_parallelism
 
     vecs = with_norm(
-        ensure_parallelism(df.select(id_col, vec_col), min_bytes=DENSE_GUARD_MIN_BYTES), vec_col
-    ).select(id_col, F.col(vec_col).alias("v"), "norm")
-    qv = vecs.join(query_ids, id_col, "left_semi")
+        ensure_parallelism(df.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES)
+    )
+    qv = vecs.join(query_ids, "vec_id", "left_semi")
     return ivf_search(
-        vecs, qv, n_cells, nprobe, k, id_col, assigner, exclude_self=True
+        vecs, qv, n_cells, nprobe, k, assigner=assigner, exclude_self=True
     )
 
 
@@ -833,23 +797,20 @@ def ivf_search(
 SEMANTIC_CELL_TARGET = 125  # expected vectors per cell when auto-scaling
 
 
-def auto_n_cells(
-    n_rows: int, target_cell_size: int = SEMANTIC_CELL_TARGET, floor: int = 8
-) -> int:
+def auto_n_cells(n_rows: int) -> int:
     """The n_cells ∝ N discipline as code: cells sized so the expected
-    occupancy stays ``target_cell_size`` as the corpus grows, which holds
-    the within-cell quadratic term at O(N · target) instead of O(N²/k).
+    occupancy stays ``SEMANTIC_CELL_TARGET`` (at least 8 cells) as the
+    corpus grows, which holds the within-cell quadratic term at
+    O(N · target) instead of O(N²/k).
     Measured (docs/SCALE.md soak): fixed cells go super-linear by 10×
     corpus growth; auto cells restore a near-linear runtime curve."""
-    return max(floor, n_rows // max(1, target_cell_size))
+    return max(8, n_rows // SEMANTIC_CELL_TARGET)
 
 
 def semantic_dedup(
     corpus: DataFrame,
     n_cells: int | None,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster embeddings with the deterministic coarse quantizer, then inside
@@ -872,13 +833,15 @@ def semantic_dedup(
     # the assignment + in-cell scoring stages are CPU-dense interpreted
     # array folds — a single-row-group scan must not serialize them
     vecs = with_norm(
-        ensure_parallelism(corpus.select(id_col, as_double_vec(vec_col).alias("v")), min_bytes=DENSE_GUARD_MIN_BYTES),
-        "v",
+        ensure_parallelism(
+            corpus.select("vec_id", as_double_vec("embedding").alias("v")),
+            min_bytes=DENSE_GUARD_MIN_BYTES,
+        )
     )
     if n_cells is None:
         import functools
 
-        n_rows = corpus.select(id_col).count()
+        n_rows = corpus.select("vec_id").count()
         n_cells = auto_n_cells(n_rows)
         # scale path: distributed two-level assignment — only √k reps in
         # the closure, centroids resolved via a cogrouped equi-join (the
@@ -889,15 +852,15 @@ def semantic_dedup(
         )
     else:
         assigner = ivf_assign  # oracle-pinned path: SQL-replayable folds
-    cents = seed_centroids(vecs, n_cells, id_col)
-    assign = assigner(vecs, cents, id_col)
-    cellv = assign.join(vecs, id_col)
+    cents = seed_centroids(vecs, n_cells)
+    assign = assigner(vecs, cents, "vec_id")
+    cellv = assign.join(vecs, "vec_id")
     a = cellv.select(
-        F.col(id_col).alias("id_a"), "cell",
+        F.col("vec_id").alias("id_a"), "cell",
         F.col("v").alias("av"), F.col("norm").alias("an"),
     )
     b = cellv.select(
-        F.col(id_col).alias("id_b"), "cell",
+        F.col("vec_id").alias("id_b"), "cell",
         F.col("v").alias("bv"), F.col("norm").alias("bn"),
     )
     dup_ids = (
@@ -906,19 +869,17 @@ def semantic_dedup(
         .filter(
             _dot("av", "bv") / (F.col("an") * F.col("bn")) >= F.lit(threshold)
         )
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("is_dup", F.lit(True))
     )
     return (
-        assign.join(dup_ids, id_col, "left")
-        .select(id_col, "cell", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
+        assign.join(dup_ids, "vec_id", "left")
+        .select("vec_id", "cell", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
     )
 
 
-def quantize_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization (max-abs scaling) — the
     standard memory lever for billion-vector similarity search: 4× smaller
     than float32 at ~1% cosine error, and integer dot products.
@@ -930,11 +891,11 @@ def quantize_int8(
     quantized vectors are bit-identical cross-engine. Zero vectors emit
     all-zero codes. Output: (id, q array<bigint> — int8-ranged, maxabs).
     """
-    v = as_double_vec(vec_col)
-    out = df.select(F.col(id_col), v.alias("__v__"))
+    v = as_double_vec("embedding")
+    out = df.select(F.col("vec_id"), v.alias("__v__"))
     maxabs = F.expr("array_max(transform(__v__, x -> abs(x)))")
     return out.withColumn("maxabs", maxabs).select(
-        id_col,
+        "vec_id",
         "maxabs",
         F.expr(
             "CASE WHEN maxabs = 0.0 THEN transform(__v__, x -> cast(0 as bigint)) "
@@ -947,8 +908,6 @@ def quantized_cosine_topk(
     df: DataFrame,
     query_ids: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_match_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine over int8-quantized vectors, with the true
@@ -973,9 +932,12 @@ def quantized_cosine_topk(
     # q, v, and norm all derive from the same scan row — one projection, no
     # self-join (joining quantize_int8's output back to the float vectors
     # would shuffle the corpus on vec_id for data already co-located)
-    keep = [id_col] + ([exclude_match_col] if exclude_match_col else [])
+    keep = ["vec_id"] + ([exclude_match_col] if exclude_match_col else [])
     base = with_norm(
-        ensure_parallelism(df.select(*keep, as_double_vec(vec_col).alias("v")), min_bytes=DENSE_GUARD_MIN_BYTES), "v"
+        ensure_parallelism(
+            df.select(*keep, as_double_vec("embedding").alias("v")),
+            min_bytes=DENSE_GUARD_MIN_BYTES,
+        )
     )
     maxabs = F.expr("array_max(transform(v, x -> abs(x)))")
     full = base.withColumn("__ma__", maxabs).withColumn(
@@ -991,15 +953,15 @@ def quantized_cosine_topk(
     cextra = (
         [F.col(exclude_match_col).alias("n_label")] if exclude_match_col else []
     )
-    qside = full.join(query_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("q_vec_id"),
+    qside = full.join(query_ids, "vec_id", "left_semi").select(
+        F.col("vec_id").alias("q_vec_id"),
         F.col("q").alias("qa"),
         F.col("v").alias("va"),
         F.col("norm").alias("na"),
         *qextra,
     )
     cside = full.select(
-        F.col(id_col).alias("n_vec_id"),
+        F.col("vec_id").alias("n_vec_id"),
         F.col("q").alias("qb"),
         F.col("v").alias("vb"),
         F.col("norm").alias("nb"),
@@ -1042,13 +1004,10 @@ def cosine_topk_int_lsh(
     k: int = 10,
     n_planes: int = 6,
     n_tables: int = 4,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     multiprobe: bool = False,
 ) -> DataFrame:
-    """ANN top-k from INTEGERIZED hyperplane buckets — the oracle-checkable
+    """ANN top-k over 64-dim ``embedding`` vectors from INTEGERIZED
+    hyperplane buckets — the oracle-checkable
     sibling of :func:`cosine_topk_lsh` (whose float numpy signatures cannot
     be replayed in SQL; these integer ones can, same trick as
     ``embedding_near_dup``).
@@ -1063,11 +1022,9 @@ def cosine_topk_int_lsh(
     int64 matmul per Arrow batch, candidates shuffle once on
     (table, bucket), scoring touches candidates only.
     """
-    sig = int_lsh_signatures(
-        df, dim, n_planes, n_tables, seed, id_col=id_col, vec_col=vec_col
-    )
-    qsig = sig.join(query_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("q_vec_id"), "table", "bucket"
+    sig = int_lsh_signatures(df, 64, n_planes, n_tables)
+    qsig = sig.join(query_ids, "vec_id", "left_semi").select(
+        F.col("vec_id").alias("q_vec_id"), "table", "bucket"
     )
     if multiprobe:
         variants = F.array(
@@ -1077,7 +1034,7 @@ def cosine_topk_int_lsh(
         qsig = qsig.select(
             "q_vec_id", "table", F.explode(variants).alias("bucket")
         )
-    csig = sig.select(F.col(id_col).alias("n_vec_id"), "table", "bucket")
+    csig = sig.select(F.col("vec_id").alias("n_vec_id"), "table", "bucket")
     cand = (
         qsig.join(csig, ["table", "bucket"])
         .filter(F.col("q_vec_id") != F.col("n_vec_id"))
@@ -1087,13 +1044,16 @@ def cosine_topk_int_lsh(
     from network_iq_spark.operators import ensure_parallelism
 
     vecs = with_norm(
-        ensure_parallelism(df.select(id_col, as_double_vec(vec_col).alias("v")), min_bytes=DENSE_GUARD_MIN_BYTES), "v"
+        ensure_parallelism(
+            df.select("vec_id", as_double_vec("embedding").alias("v")),
+            min_bytes=DENSE_GUARD_MIN_BYTES,
+        )
     )
     va = vecs.select(
-        F.col(id_col).alias("q_vec_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
+        F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
     )
     vb = vecs.select(
-        F.col(id_col).alias("n_vec_id"), F.col("v").alias("nv"), F.col("norm").alias("nn")
+        F.col("vec_id").alias("n_vec_id"), F.col("v").alias("nv"), F.col("norm").alias("nn")
     )
     scored = (
         cand.join(va, "q_vec_id")
@@ -1119,9 +1079,7 @@ def cosine_topk_int_lsh(
 # ---------------------------------------------------------------------------
 
 
-def pq_codebook(
-    vecs: DataFrame, m: int, k: int, dim: int, id_col: str = "vec_id"
-) -> DataFrame:
+def pq_codebook(vecs: DataFrame, m: int, k: int, dim: int) -> DataFrame:
     """Seeded PQ codebook: the ``k`` corpus vectors with the smallest
     md5-id hash (the `seed_centroids` idiom — reproducible in any engine,
     no float k-means) donate their subvectors as codewords. Output:
@@ -1130,17 +1088,17 @@ def pq_codebook(
     """
     sub = dim // m
     h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 12), 16, 10
+        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 12), 16, 10
     ).cast("bigint")
     seeds = (
         vecs.withColumn("__h__", h)
-        .orderBy("__h__", id_col)
+        .orderBy("__h__", "vec_id")
         .limit(k)
-        .select(id_col, "v", "__h__")
+        .select("vec_id", "v", "__h__")
         .withColumn(
             "j",
             F.row_number().over(
-                Window.orderBy(F.col("__h__").asc(), F.col(id_col).asc())
+                Window.orderBy(F.col("__h__").asc(), F.col("vec_id").asc())
             )
             - 1,
         )
@@ -1161,9 +1119,7 @@ def _sq_l2(a: str, b: str):
     )
 
 
-def assign_np_l2(
-    vecs: DataFrame, centroids: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def assign_np_l2(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid (squared-L2) assignment as one numpy matmul per
     Arrow batch — the vectorized twin of the ``_sq_l2`` argmin used by
     the PQ/IVF-PQ tier. Unlike the cosine `ivf_assign_np`, this IS the
@@ -1183,6 +1139,8 @@ def assign_np_l2(
         (int(r["c_id"]), list(r["cv"]))
         for r in centroids.select("c_id", "cv").collect()
     )
+    if not rows:
+        raise ValueError("assign_np_l2: empty input")
     c_ids = np.array([c for c, _ in rows], dtype=np.int64)
     C = np.array([v for _, v in rows], dtype=np.float64)
     c2 = (C * C).sum(axis=1)
@@ -1194,18 +1152,16 @@ def assign_np_l2(
             V = np.array(list(pdf["v"]), dtype=np.float64)
             d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c2[None, :]
             best = c_ids[np.argmin(d2, axis=1)]
-            yield pd.DataFrame({id_col: pdf[id_col].values, "cell": best})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].values, "cell": best})
 
     return ensure_parallelism(
-        vecs.select(id_col, "v"), min_bytes=DENSE_GUARD_MIN_BYTES
-    ).mapInPandas(assign, schema=f"{id_col} bigint, cell bigint")
+        vecs.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(assign, schema="vec_id bigint, cell bigint")
 
 
-def pq_encode(
-    vecs: DataFrame, codebook: DataFrame, m: int, dim: int, id_col: str = "vec_id"
-) -> DataFrame:
+def pq_encode(vecs: DataFrame, codebook: DataFrame, m: int, dim: int) -> DataFrame:
     """PQ encoding: per (vector, subspace), the codeword index minimizing
-    exact squared L2 (tie → smallest j). Output: (id_col, s, code) —
+    exact squared L2 (tie → smallest j). Output: (vec_id, s, code) —
     m·log2(k) bits per vector in a real deployment (the 64× memory win
     that lets a 100 TB corpus's index fit its cluster's RAM).
 
@@ -1227,6 +1183,8 @@ def pq_encode(
         (int(r["s"]), int(r["j"]), list(r["cv"]))
         for r in codebook.select("s", "j", "cv").collect()
     )
+    if not rows:
+        raise ValueError("pq_encode: empty input")
     k = max(j for _, j, _ in rows) + 1
     C = np.zeros((m, k, sub), dtype=np.float64)
     for s, j, cv in rows:
@@ -1250,15 +1208,15 @@ def pq_encode(
                 codes[:, s] = np.argmin(d2, axis=1)  # first-min = smallest j
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].values, m),
+                    "vec_id": np.repeat(pdf["vec_id"].values, m),
                     "s": np.tile(np.arange(m, dtype=np.int32), n),
                     "code": codes.reshape(-1),
                 }
             )
 
     return ensure_parallelism(
-        vecs.select(id_col, "v"), min_bytes=DENSE_GUARD_MIN_BYTES
-    ).mapInPandas(encode, schema=f"{id_col} bigint, s int, code int")
+        vecs.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(encode, schema="vec_id bigint, s int, code int")
 
 
 def pq_adc_topk(
@@ -1268,7 +1226,6 @@ def pq_adc_topk(
     k_codes: int = 16,
     dim: int = 64,
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: queries keep their
     full vectors, corpus vectors are m codes; distance ≈ Σ_s ||q_s −
@@ -1281,12 +1238,12 @@ def pq_adc_topk(
     approximation itself is hash-replayable in SQL (`ann_pq_adc_topk`).
     """
     sub = dim // m
-    cb = pq_codebook(vecs, m, k_codes, dim, id_col).localCheckpoint(eager=False)
-    codes = pq_encode(vecs, cb, m, dim, id_col)
+    cb = pq_codebook(vecs, m, k_codes, dim).localCheckpoint(eager=False)
+    codes = pq_encode(vecs, cb, m, dim)
 
-    qv = vecs.join(query_ids, id_col, "left_semi")
+    qv = vecs.join(query_ids, "vec_id", "left_semi")
     s_ids = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s")
-    qsubs = qv.select(F.col(id_col).alias("q_vec_id"), s_ids, "v").select(
+    qsubs = qv.select(F.col("vec_id").alias("q_vec_id"), s_ids, "v").select(
         "q_vec_id", "s", F.slice("v", F.col("s") * sub + 1, sub).alias("qsv")
     )
     lut = qsubs.join(F.broadcast(cb), "s").select(
@@ -1296,7 +1253,7 @@ def pq_adc_topk(
         _sq_l2("qsv", "cv").alias("pd"),
     )
     scored = (
-        codes.select(F.col(id_col).alias("n_vec_id"), "s", "code")
+        codes.select(F.col("vec_id").alias("n_vec_id"), "s", "code")
         .join(
             F.broadcast(lut),
             (F.col("s") == F.col("lut_s")) & (F.col("code") == F.col("lut_j")),
@@ -1328,7 +1285,6 @@ def pq_rerank_topk(
     dim: int = 64,
     k: int = 10,
     rerank: int = 50,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage PQ search — the PRODUCTION shape: ADC over compressed
     codes preselects ``rerank`` candidates per query (cheap, touches only
@@ -1338,12 +1294,12 @@ def pq_rerank_topk(
     neighbors only need to land in the top-``rerank``, not the top-k.
     Output: (q_vec_id, n_vec_id, rank, d2) by exact distance."""
     cand = pq_adc_topk(
-        vecs, query_ids, m=m, k_codes=k_codes, dim=dim, k=rerank, id_col=id_col
+        vecs, query_ids, m=m, k_codes=k_codes, dim=dim, k=rerank
     ).select("q_vec_id", "n_vec_id")
-    qside = vecs.join(query_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("q_vec_id"), F.col("v").alias("qv")
+    qside = vecs.join(query_ids, "vec_id", "left_semi").select(
+        F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv")
     )
-    nside = vecs.select(F.col(id_col).alias("n_vec_id"), F.col("v").alias("cv"))
+    nside = vecs.select(F.col("vec_id").alias("n_vec_id"), F.col("v").alias("cv"))
     rescored = (
         cand.join(F.broadcast(qside), "q_vec_id")
         .join(nside, "n_vec_id")
@@ -1364,9 +1320,7 @@ def pq_rerank_topk(
     )
 
 
-def ivf_lloyd_round(
-    vecs: DataFrame, cent: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
+def ivf_lloyd_round(vecs: DataFrame, cent: DataFrame) -> DataFrame:
     """One INTEGER-EXACT Lloyd refinement of a coarse quantizer: assign
     every vector to its nearest (squared-L2) centroid, then replace each
     centroid with the floor of its members' per-dimension mean. Seeded
@@ -1382,8 +1336,8 @@ def ivf_lloyd_round(
     collect_list-based mean would hold a whole cell in one task at
     100 TB).
     """
-    inv = assign_np_l2(vecs, cent, id_col)
-    mem = vecs.select(id_col, "v").join(inv, id_col).select(
+    inv = assign_np_l2(vecs, cent)
+    mem = vecs.select("vec_id", "v").join(inv, "vec_id").select(
         "cell", F.posexplode("v").alias("di", "val")
     )
     cstat = mem.groupBy("cell", "di").agg(
@@ -1407,7 +1361,6 @@ def ivfpq_topk(
     k: int = 10,
     rerank: int = 50,
     lloyd_rounds: int = 0,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ — the layout a 100 TB vector corpus actually deploys: a
     coarse inverted file prunes the corpus to ``nprobe`` cells per query,
@@ -1428,17 +1381,17 @@ def ivfpq_topk(
     0.87 at identical nprobe when the metrics were mixed vs aligned).
     """
     sub = dim // m
-    vv = vecs.select(id_col, "v")
-    cent = seed_centroids(with_norm(vv), n_cells, id_col).drop("cn")
+    vv = vecs.select("vec_id", "v")
+    cent = seed_centroids(with_norm(vv), n_cells).drop("cn")
     for _ in range(lloyd_rounds):
-        cent = ivf_lloyd_round(vv, cent, id_col).localCheckpoint(eager=False)
-    inv = assign_np_l2(vv, cent, id_col)
-    cb = pq_codebook(vecs, m, k_codes, dim, id_col).localCheckpoint(eager=False)
-    codes = pq_encode(vecs, cb, m, dim, id_col)
+        cent = ivf_lloyd_round(vv, cent).localCheckpoint(eager=False)
+    inv = assign_np_l2(vv, cent)
+    cb = pq_codebook(vecs, m, k_codes, dim).localCheckpoint(eager=False)
+    codes = pq_encode(vecs, cb, m, dim)
 
-    qv = vv.join(query_ids, id_col, "left_semi")
+    qv = vv.join(query_ids, "vec_id", "left_semi")
     probe_scored = qv.crossJoin(F.broadcast(cent)).select(
-        F.col(id_col).alias("q_vec_id"),
+        F.col("vec_id").alias("q_vec_id"),
         "c_id",
         _sq_l2("v", "cv").alias("cd2"),
     )
@@ -1451,14 +1404,14 @@ def ivfpq_topk(
         .select("q_vec_id", F.col("c_id").alias("cell"))
     )
     cand = (
-        inv.select(F.col(id_col).alias("n_vec_id"), "cell")
+        inv.select(F.col("vec_id").alias("n_vec_id"), "cell")
         .join(F.broadcast(probes), "cell")
         .filter(F.col("n_vec_id") != F.col("q_vec_id"))
         .select("q_vec_id", "n_vec_id")
     )
 
     s_ids = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s")
-    qsubs = qv.select(F.col(id_col).alias("q_vec_id"), s_ids, "v").select(
+    qsubs = qv.select(F.col("vec_id").alias("q_vec_id"), s_ids, "v").select(
         "q_vec_id", "s", F.slice("v", F.col("s") * sub + 1, sub).alias("qsv")
     )
     lut = qsubs.join(F.broadcast(cb), "s").select(
@@ -1469,7 +1422,7 @@ def ivfpq_topk(
     )
     adc = (
         cand.join(
-            codes.select(F.col(id_col).alias("n_vec_id"), "s", "code"), "n_vec_id"
+            codes.select(F.col("vec_id").alias("n_vec_id"), "s", "code"), "n_vec_id"
         )
         .join(
             F.broadcast(lut),
@@ -1488,10 +1441,10 @@ def ivfpq_topk(
         .filter(F.col("rk") <= rerank)
         .select("q_vec_id", "n_vec_id")
     )
-    qside = vecs.join(query_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("q_vec_id"), F.col("v").alias("qv")
+    qside = vecs.join(query_ids, "vec_id", "left_semi").select(
+        F.col("vec_id").alias("q_vec_id"), F.col("v").alias("qv")
     )
-    nside = vecs.select(F.col(id_col).alias("n_vec_id"), F.col("v").alias("cv"))
+    nside = vecs.select(F.col("vec_id").alias("n_vec_id"), F.col("v").alias("cv"))
     rescored = (
         shortlist.join(F.broadcast(qside), "q_vec_id")
         .join(nside, "n_vec_id")
@@ -1515,15 +1468,10 @@ def ivfpq_topk(
 PCA_SCALE = 4  # integer-unit quantization for the exact Gram pass
 
 
-def pca_fit(
-    vecs: DataFrame,
-    dim: int,
-    out_dim: int = 8,
-    scale: int = PCA_SCALE,
-    vec_col: str = "v",
-):
+def pca_fit(vecs: DataFrame, dim: int, out_dim: int = 8):
     """Distributed PCA fit with an EXACT aggregation pass: quantize each
-    element to integer units (floor(x·10^s + 0.5), the dsum trick), then
+    element to integer units (floor(x·10^s + 0.5) with s = ``PCA_SCALE``,
+    the dsum trick), then
     accumulate per-Arrow-batch partial (count, sum-vector, Gram matrix) in
     int64 — sums of products of bounded ints are exact, so the covariance
     is ORDER- AND PARTITIONING-INDEPENDENT (float Gram passes drift under
@@ -1536,17 +1484,17 @@ def pca_fit(
     explained_variance [out_dim]).
 
     int64 headroom: |x|·10^s ≤ B units ⇒ Gram entries ≤ N·B². With B≈10⁴
-    (unit-norm embeddings at s=4) that's exact past N=10¹⁰ rows; raise s
-    only with that budget in mind.
+    (unit-norm embeddings at s=4) that's exact past N=10¹⁰ rows; raise
+    ``PCA_SCALE`` only with that budget in mind.
     """
     import numpy as np
 
     from network_iq_spark.operators import ensure_parallelism
 
     rows = (
-        ensure_parallelism(vecs.select(vec_col), min_bytes=DENSE_GUARD_MIN_BYTES)
+        ensure_parallelism(vecs.select("v"), min_bytes=DENSE_GUARD_MIN_BYTES)
         .mapInPandas(
-            _pca_partials_fn(vec_col, dim, scale),
+            _pca_partials_fn("v", dim, PCA_SCALE),
             schema="n bigint, s array<bigint>, g array<bigint>",
         )
         .collect()
@@ -1559,7 +1507,7 @@ def pca_fit(
     for r in rows:
         s += np.asarray(r.s, dtype=np.int64)
         g += np.asarray(r.g, dtype=np.int64).reshape(dim, dim)
-    mult = float(10**scale)
+    mult = float(10**PCA_SCALE)
     mean_u = s.astype(np.float64) / n
     # covariance of the quantized data, in original units
     cov = (g.astype(np.float64) / n - np.outer(mean_u, mean_u)) / (mult * mult)
@@ -1596,14 +1544,7 @@ def _pca_partials_fn(vec_col: str, dim: int, scale: int):
     return partials
 
 
-def pca_project(
-    vecs: DataFrame,
-    dim: int,
-    out_dim: int = 8,
-    scale: int = PCA_SCALE,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
+def pca_project(vecs: DataFrame, dim: int, out_dim: int = 8) -> DataFrame:
     """Fit + project: y = (u − ū)/10^s · Wᵀ per row (one numpy matmul per
     Arrow batch — the ivf_assign_np/pq_encode vectorization lesson), W
     riding the closure as a bounded model artifact (out_dim×dim floats).
@@ -1615,23 +1556,21 @@ def pca_project(
 
     from network_iq_spark.operators import ensure_parallelism
 
-    components, s_units, n, _ = pca_fit(vecs, dim, out_dim, scale, vec_col)
-    mean_vec = (s_units.astype(np.float64) / n) / float(10**scale)
+    components, s_units, n, _ = pca_fit(vecs, dim, out_dim)
+    mean_vec = (s_units.astype(np.float64) / n) / float(10**PCA_SCALE)
     w_t = components.T.copy()  # (dim, out_dim)
-    mult = float(10**scale)
+    mult = float(10**PCA_SCALE)
 
     def project(it):
         for pdf in it:
-            m = np.stack(pdf[vec_col].to_numpy())[:, :dim].astype(np.float64)
+            m = np.stack(pdf["v"].to_numpy())[:, :dim].astype(np.float64)
             u = np.floor(m * mult + 0.5) / mult  # quantized, same as fit
             y = (u - mean_vec) @ w_t
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "proj": list(y)}
-            )
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "proj": list(y)})
 
     return ensure_parallelism(
-        vecs.select(id_col, vec_col), min_bytes=DENSE_GUARD_MIN_BYTES
-    ).mapInPandas(project, schema=f"{id_col} bigint, proj array<double>")
+        vecs.select("vec_id", "v"), min_bytes=DENSE_GUARD_MIN_BYTES
+    ).mapInPandas(project, schema="vec_id bigint, proj array<double>")
 
 
 # ---------------------------------------------------------------------------
@@ -1639,12 +1578,7 @@ def pca_project(
 # ---------------------------------------------------------------------------
 
 
-def ivf_int_recenter(
-    qvecs: DataFrame,
-    n_cells: int,
-    id_col: str = "vec_id",
-    q_col: str = "q",
-) -> DataFrame:
+def ivf_int_recenter(qvecs: DataFrame, n_cells: int) -> DataFrame:
     """One Lloyd re-centering step over an INTEGER-quantized corpus — the
     index-maintenance pass ``seed_centroids`` deliberately skips in float
     (its docstring: float centroid updates are summation-order-dependent
@@ -1681,12 +1615,12 @@ def ivf_int_recenter(
     # brings the one unguarded similarity site in line with the family's
     # DENSE_GUARD_MIN_BYTES discipline
     vecs = ensure_parallelism(
-        qvecs.select(F.col(id_col), F.col(q_col).alias("q")),
+        qvecs.select("vec_id", "q"),
         min_bytes=DENSE_GUARD_MIN_BYTES,
     )
-    w = Window.orderBy(id_col)
+    w = Window.orderBy("vec_id")
     seeds = (
-        vecs.orderBy(id_col)
+        vecs.orderBy("vec_id")
         .limit(n_cells)
         .withColumn("cell_id", F.row_number().over(w) - 1)
         .select("cell_id", F.col("q").alias("c"))
@@ -1697,15 +1631,15 @@ def ivf_int_recenter(
         return (
             frame.crossJoin(F.broadcast(cents))
             .withColumn("__d__", F.expr(dist))
-            .groupBy(id_col)
+            .groupBy("vec_id")
             .agg(F.min(F.struct("__d__", "cell_id")).alias("__m__"))
-            .select(id_col, F.col("__m__.cell_id").alias(out))
+            .select("vec_id", F.col("__m__.cell_id").alias(out))
         )
 
     vecs = vecs.localCheckpoint(eager=False)  # feeds both passes + the sums
     old = assign(vecs, seeds, "old_cell").localCheckpoint(eager=False)
     dims = (
-        vecs.join(old, id_col)
+        vecs.join(old, "vec_id")
         .select("old_cell", F.posexplode("q").alias("dim", "val"))
         .groupBy("old_cell", "dim")
         .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
@@ -1736,7 +1670,7 @@ def ivf_int_recenter(
     )
     new_assign = assign(vecs, newc.select("cell_id", "c"), "new_cell")
     churn = (
-        old.join(new_assign, id_col)
+        old.join(new_assign, "vec_id")
         .groupBy("old_cell")
         .agg(
             F.sum(

@@ -15,7 +15,7 @@ strongest determinism its algebra allows:
 
 Guarantee: estimate ≥ true count always (never under), within
 εN (ε = e/w) with probability 1−δ (δ = e^−d). The sketch state is
-d·w integers per key-group — bounded, at-rest-friendly, and the merge
+d·w integers — bounded, at-rest-friendly, and the merge
 is associative/commutative (sum), so per-batch sketches fold exactly
 like the rollup monoid.
 """
@@ -45,31 +45,28 @@ def cm_sketch_state(
     item_col: str,
     depth: int = CM_DEPTH,
     width: int = CM_WIDTH,
-    keys: Sequence[str] = (),
 ) -> DataFrame:
     """Build the sketch state: each item increments one bucket per hash
     row. One explode (×depth) + one combinable groupBy — the map-side
     partials ARE partial sketches, so the shuffle carries at most
-    keys × d × w rows per map task, never the item stream."""
+    d × w rows per map task, never the item stream."""
     rows = items.select(
-        *keys,
         F.col(item_col).alias("_it"),
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
     ).select(
-        *keys,
         "row",
         F.expr(_bucket_expr("_it", "row", width)).alias("bucket"),
     )
-    return rows.groupBy(*keys, "row", "bucket").agg(F.count("*").alias("cnt"))
+    return rows.groupBy("row", "bucket").agg(F.count("*").alias("cnt"))
 
 
-def merge_cm_states(states: Sequence[DataFrame], keys: Sequence[str] = ()) -> DataFrame:
+def merge_cm_states(states: Sequence[DataFrame]) -> DataFrame:
     """Fold sketches: counters add (SUM monoid — associative, commutative,
     exact)."""
     from functools import reduce
 
     unioned = reduce(lambda a, b: a.unionByName(b), states)
-    return unioned.groupBy(*keys, "row", "bucket").agg(F.sum("cnt").alias("cnt"))
+    return unioned.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cm_estimate(

@@ -81,7 +81,6 @@ def salted_broadcast_join(
     dim: DataFrame,
     key: str,
     n_salts: int = 16,
-    how: str = "left",
 ) -> DataFrame:
     """Hot-key-tolerant fact ⟕ dim: dim rows replicate n_salts times (still
     tiny), fact rows salt deterministically, join on (key, salt)."""
@@ -89,4 +88,5 @@ def salted_broadcast_join(
         "__salt__", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
     fact_s = fact.withColumn("__salt__", _salt(fact, n_salts))
-    return fact_s.join(F.broadcast(dim_rep), [key, "__salt__"], how).drop("__salt__")
+    joined = fact_s.join(F.broadcast(dim_rep), [key, "__salt__"], "left")
+    return joined.drop("__salt__")

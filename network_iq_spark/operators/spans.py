@@ -33,29 +33,25 @@ from network_iq_spark.operators.text import tokens
 WINDOW_K = 8  # testdata docs run 10-99 tokens; 8 gives span-grain signal
 
 
-def positional_windows(
-    df: DataFrame, k: int = WINDOW_K, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def positional_windows(df: DataFrame, k: int = WINDOW_K) -> DataFrame:
     """(id, pos, win_hash): every k-token window with its 1-based token
     position; the window key is md5 of the space-joined tokens (identical
     digests in any engine — same contract as dedup.minhash_sig). Docs with
     fewer than k tokens emit nothing. Pure map + explode."""
     df = ensure_parallelism(df)
-    out = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(
+    out = df.select(F.col("doc_id"), tokens("text").alias("_toks")).filter(
         F.size("_toks") >= k
     )
     win = F.expr(
         f"transform(sequence(1, size(_toks) - {k} + 1), "
         f"i -> struct(i AS pos, md5(concat_ws(' ', slice(_toks, i, {k}))) AS wh))"
     )
-    return out.select(F.col(id_col), F.explode(win).alias("w")).select(
-        id_col, F.col("w.pos").alias("pos"), F.col("w.wh").alias("win_hash")
+    return out.select(F.col("doc_id"), F.explode(win).alias("w")).select(
+        "doc_id", F.col("w.pos").alias("pos"), F.col("w.wh").alias("win_hash")
     )
 
 
-def duplicate_window_stats(
-    df: DataFrame, k: int = WINDOW_K, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def duplicate_window_stats(df: DataFrame, k: int = WINDOW_K) -> DataFrame:
     """Per-document duplicated-span profile: of a doc's k-token windows, how
     many (and what fraction) also occur in at least one OTHER document.
 
@@ -69,8 +65,8 @@ def duplicate_window_stats(
     # three consumers (distinct doc-hash pairs, totals, the semi-join) would
     # re-run the tokenize+explode+md5 build once each — materialize the
     # narrow (id, pos, hash) stream once instead (cf. dedup.minhash_lsh_pairs)
-    w = positional_windows(df, k, text_col, id_col).localCheckpoint()
-    per_doc = w.select(id_col, "win_hash").distinct()
+    w = positional_windows(df, k).localCheckpoint()
+    per_doc = w.select("doc_id", "win_hash").distinct()
     cross_doc = (
         per_doc.groupBy("win_hash")
         .agg(F.count("*").alias("__nd__"))
@@ -79,16 +75,16 @@ def duplicate_window_stats(
     )
     dup_counts = (
         w.join(cross_doc, "win_hash", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_dup_windows"))
     )
-    totals = w.groupBy(id_col).agg(F.count("*").alias("n_windows"))
+    totals = w.groupBy("doc_id").agg(F.count("*").alias("n_windows"))
     return (
-        df.select(id_col)
-        .join(totals, id_col, "left")
-        .join(dup_counts, id_col, "left")
+        df.select("doc_id")
+        .join(totals, "doc_id", "left")
+        .join(dup_counts, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
             F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
             F.when(F.coalesce(F.col("n_windows"), F.lit(0)) == 0, F.lit(0.0))
@@ -105,8 +101,6 @@ def contamination_overlap(
     train: DataFrame,
     benchmark: DataFrame,
     k: int = WINDOW_K,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """N-gram benchmark decontamination: per training document, the number
     of k-token windows shared with the benchmark set and how many distinct
@@ -118,11 +112,11 @@ def contamination_overlap(
     the hash, never a cross product. Output contains only contaminated
     docs; the caller anti-joins to get the clean set.
     """
-    tw = positional_windows(train, k, text_col, id_col).select(
-        F.col(id_col).alias("train_doc"), "win_hash"
+    tw = positional_windows(train, k).select(
+        F.col("doc_id").alias("train_doc"), "win_hash"
     ).distinct()
-    bw = positional_windows(benchmark, k, text_col, id_col).select(
-        F.col(id_col).alias("bench_doc"), "win_hash"
+    bw = positional_windows(benchmark, k).select(
+        F.col("doc_id").alias("bench_doc"), "win_hash"
     ).distinct()
     return (
         tw.join(bw, "win_hash")
@@ -140,8 +134,6 @@ def decontamination_spans(
     train: DataFrame,
     benchmark: DataFrame,
     k: int = WINDOW_K,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Span-grain decontamination — the EXCISION list, one step past
     :func:`contamination_overlap`'s doc-grain flags: for each training
@@ -160,10 +152,10 @@ def decontamination_spans(
     """
     from pyspark.sql import Window
 
-    tw = positional_windows(train, k, text_col, id_col)
-    bw = positional_windows(benchmark, k, text_col, id_col).select("win_hash")
+    tw = positional_windows(train, k)
+    bw = positional_windows(benchmark, k).select("win_hash")
     hits = tw.join(bw, "win_hash", "left_semi").select(
-        F.col(id_col).alias("train_doc"),
+        F.col("doc_id").alias("train_doc"),
         F.col("pos").alias("s"),
         (F.col("pos") + k).alias("e"),
     )

@@ -43,7 +43,7 @@ def _in_list(lam_var: str, words: tuple[str, ...]) -> str:
     return f"{lam_var} IN ({quoted})"
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting: whitespace-ish word tokens + BPE-ish segments + mean
     token length. All integer counts → deterministic ratios.
 
@@ -53,15 +53,15 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     scan's own splits."""
     df = ensure_parallelism(df, min_bytes=GUARD_MIN_BYTES)
     out = df.select(
-        id_col,
-        tokens(text_col).alias("_toks"),
-        tokens(text_col, BPE_RE).alias("_bpe"),
-        F.length(F.col(text_col)).alias("n_chars_measured"),
+        "doc_id",
+        tokens("text").alias("_toks"),
+        tokens("text", BPE_RE).alias("_bpe"),
+        F.length(F.col("text")).alias("n_chars_measured"),
     )
     n = F.size("_toks")
     tok_len_sum = F.expr("aggregate(transform(_toks, t -> length(t)), 0, (a, x) -> a + x)")
     return out.select(
-        id_col,
+        "doc_id",
         "n_chars_measured",
         n.alias("n_tokens"),
         F.size("_bpe").alias("n_bpe_tokens"),
@@ -71,16 +71,16 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic document-quality scoring (length / punctuation / stopword
     ratios) — the standard pre-training filter features. Score ∈ [0,1]."""
     df = ensure_parallelism(df)
-    toks = tokens(text_col)
+    toks = tokens("text")
     out = df.select(
-        id_col,
+        "doc_id",
         toks.alias("_toks"),
-        F.length(text_col).alias("n_chars"),
-        F.size(F.regexp_extract_all(F.lower(text_col), F.lit("[^a-z0-9 ]"), 0)).alias(
+        F.length("text").alias("n_chars"),
+        F.size(F.regexp_extract_all(F.lower("text"), F.lit("[^a-z0-9 ]"), 0)).alias(
             "n_punct"
         ),
     )
@@ -101,7 +101,7 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         ),
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_chars",
         n.alias("n_tokens"),
         stop_ratio.alias("stopword_ratio"),
@@ -110,20 +110,20 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """:func:`quality_score` fused in place: appends (n_tokens,
     quality_score) to the input row instead of projecting a score frame.
     The scoring is row-local, so a pipeline that needs score AND text must
     not pay a projection + self-join on the id to reattach the text — that
     join is a full corpus shuffle at scale; this form is zero-shuffle."""
     df = ensure_parallelism(df)
-    tmp = df.withColumn("_q_toks", tokens(text_col))
+    tmp = df.withColumn("_q_toks", tokens("text"))
     n = F.size("_q_toks")
     stop_n = F.expr(f"size(filter(_q_toks, t -> {_in_list('t', STOPWORDS)}))")
     stop_ratio = F.when(n == 0, F.lit(0.0)).otherwise(stop_n.cast("double") / n)
-    n_chars = F.length(text_col)
+    n_chars = F.length("text")
     n_punct = F.size(
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[^a-z0-9 ]"), 0)
+        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[^a-z0-9 ]"), 0)
     )
     punct_ratio = F.when(n_chars == 0, F.lit(0.0)).otherwise(
         n_punct.cast("double") / n_chars
@@ -145,11 +145,11 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-stopword language-ID heuristic: per-language marker-hit rates,
     argmax with a fixed priority order (deterministic ties)."""
     df = ensure_parallelism(df)
-    out = df.select(id_col, tokens(text_col).alias("_toks"))
+    out = df.select("doc_id", tokens("text").alias("_toks"))
     n = F.size("_toks")
     scores = {
         lang: F.when(n == 0, F.lit(0.0)).otherwise(
@@ -167,7 +167,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
             cond = cond & (scores[lang] >= scores[later])
         pred = F.when(cond, F.lit(lang)) if pred is None else pred.when(cond, F.lit(lang))
     pred = pred.otherwise(F.lit("unknown"))
-    sel = [F.col(id_col)] + [scores[lang].alias(f"score_{lang}") for lang in langs]
+    sel = [F.col("doc_id")] + [scores[lang].alias(f"score_{lang}") for lang in langs]
     return out.select(*sel, pred.alias("pred_lang"))
 
 
@@ -178,14 +178,14 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 WS_RE = r"[ \t\n\r\f\x0b]+"
 
 
-def fingerprint_col(text_col: str = "text") -> Column:
+def fingerprint_col() -> Column:
     """The exact-dedup key as a bare Column (md5 of whitespace-normalized
     lowercase text), for fusing into a wider per-doc stat grain without a
     projection + re-join."""
-    return F.md5(F.regexp_replace(F.trim(F.lower(F.col(text_col))), WS_RE, " "))
+    return F.md5(F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " "))
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Content fingerprint: md5 of whitespace-normalized lowercase text —
     the exact-dedup key (F13 analogue: sha-256 content hashing,
     streamlit_app.py:1162-1163).
@@ -195,12 +195,10 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     whole guarded query (B/A = 0.66 on doc_fingerprints), the
     multimodal_features shape exactly."""
     df = ensure_parallelism(df, min_bytes=GUARD_MIN_BYTES)
-    return df.select(id_col, fingerprint_col(text_col).alias("fingerprint"))
+    return df.select("doc_id", fingerprint_col().alias("fingerprint"))
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher/RefinedWeb-style repetition signals: per document, the
     distinct-token ratio and the share of the single most frequent bigram —
     the two cheapest detectors of boilerplate and degenerate (looping)
@@ -213,17 +211,17 @@ def repetition_stats(
     survives book-length docs at 100 TB.
     """
     df = ensure_parallelism(df)
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
+    base = df.select(F.col("doc_id"), tokens("text").alias("_toks"))
     n = F.size("_toks")
     head = base.select(
-        id_col,
+        "doc_id",
         n.alias("n_tokens"),
         F.when(n == 0, F.lit(0.0))
         .otherwise(F.size(F.array_distinct("_toks")).cast("double") / n)
         .alias("distinct_token_ratio"),
     )
     bi = base.filter(n >= 2).select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
                 "transform(sequence(1, size(_toks) - 1), "
@@ -232,22 +230,22 @@ def repetition_stats(
         ).alias("bigram"),
     )
     top = (
-        bi.groupBy(id_col, "bigram")
+        bi.groupBy("doc_id", "bigram")
         .agg(F.count("*").alias("__c__"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.max("__c__").alias("__top__"),
             F.sum("__c__").alias("__nbi__"),
         )
         .select(
-            id_col,
+            "doc_id",
             (F.col("__top__").cast("double") / F.col("__nbi__")).alias(
                 "top_bigram_share"
             ),
         )
     )
-    return head.join(top, id_col, "left").select(
-        id_col,
+    return head.join(top, "doc_id", "left").select(
+        "doc_id",
         "n_tokens",
         "distinct_token_ratio",
         F.coalesce("top_bigram_share", F.lit(0.0)).alias("top_bigram_share"),
@@ -263,25 +261,23 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", out_col: str | None = None
-) -> DataFrame:
+def redact_pii(df: DataFrame, out_col: str | None = None) -> DataFrame:
     """Replace each PII match with its ``<TYPE>`` placeholder — the standard
     pre-training scrub pass. Chained ``regexp_replace`` (JVM, codegen,
     map-only); patterns applied in dict order so composite strings redact
     deterministically. Adds ``pii_<type>_count`` columns so the scrub is
     auditable without a second scan."""
-    out = out_col or text_col
-    red = F.lower(F.col(text_col))
+    out = out_col or "text"
+    red = F.lower(F.col("text"))
     counts = []
     for name, pat in PII_PATTERNS.items():
         counts.append(
-            F.size(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 0)).alias(
+            F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), 0)).alias(
                 f"pii_{name}_count"
             )
         )
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
-    keep = [c for c in df.columns if c != text_col or out != text_col]
+    keep = [c for c in df.columns if c != "text" or out != "text"]
     return df.select(*keep, *counts, red.alias(out))
 
 
@@ -289,9 +285,7 @@ ROLL_B = (1 << 20) + 7          # polynomial base
 ROLL_P = 2_147_483_647          # 2³¹ − 1 (Mersenne prime)
 
 
-def rolling_fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def rolling_fingerprint(df: DataFrame) -> DataFrame:
     """Karp–Rabin rolling fingerprint over the token stream:
     ``fp = Σ h48(tok_i)·B^(n−i) mod P``, folded left-to-right as
     ``acc = (acc·B + h48(tok)) mod P``.
@@ -307,10 +301,10 @@ def rolling_fingerprint(
     """
     df = ensure_parallelism(df)
     return df.select(
-        F.col(id_col),
-        tokens(text_col).alias("_toks"),
+        F.col("doc_id"),
+        tokens("text").alias("_toks"),
     ).select(
-        id_col,
+        "doc_id",
         F.expr(
             "aggregate("
             "  transform(_toks, t -> cast(conv(substring(md5(t), 1, 12), 16, 10) as bigint)),"
@@ -320,12 +314,7 @@ def rolling_fingerprint(
     )
 
 
-def bigram_rarity(
-    df: DataFrame,
-    rare_max: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_rarity(df: DataFrame, rare_max: int = 2) -> DataFrame:
     """Corpus-relative n-gram rarity: for each document, how unusual its
     bigrams are against the whole corpus — the count-based stand-in for a
     language-model perplexity filter (CCNet-style quality bucketing) that
@@ -343,9 +332,9 @@ def bigram_rarity(
     Linear in corpus token count — no pairwise anything.
     """
     df = ensure_parallelism(df)
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
+    base = df.select(F.col("doc_id"), tokens("text").alias("_toks"))
     bi = base.filter(F.size("_toks") >= 2).select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
                 "transform(sequence(1, size(_toks) - 1), "
@@ -365,7 +354,7 @@ def bigram_rarity(
     corpus = bi.groupBy("bigram").agg(F.count("*").alias("__freq__"))
     per_doc = (
         bi.join(corpus, "bigram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
             F.sum(
@@ -375,10 +364,10 @@ def bigram_rarity(
         )
     )
     return (
-        base.select(id_col)
-        .join(per_doc, id_col, "left")
+        base.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.coalesce("n_rare", F.lit(0)).alias("n_rare"),
             F.when(F.coalesce("n_bigrams", F.lit(0)) == 0, F.lit(0.0))
@@ -391,12 +380,7 @@ def bigram_rarity(
     )
 
 
-def doc_keywords(
-    df: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_keywords(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document keyword extraction by tf/df ranking — the deterministic
     stand-in for tf-idf (identical top-k order: idf = ln(N/df) is monotone
     decreasing in df, so ranking by the rational score tf·10⁶/df avoids the
@@ -411,43 +395,38 @@ def doc_keywords(
 
     df = ensure_parallelism(df)
     tok = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
+        F.col("doc_id"), F.explode(tokens("text")).alias("tok")
     )
     # df derives from the tf grain (one row per (doc, tok), so df(tok) =
     # row count) — a second aggregate over `tok` would re-run the explode
     # (no subtree reuse in Spark 4); the tf grain materializes once
     tf = (
-        tok.groupBy(id_col, "tok")
+        tok.groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
         .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
     scored = tf.join(dfreq, "tok").select(
-        id_col,
+        "doc_id",
         "tok",
         "tf",
         "df",
         (F.col("tf") * F.lit(1_000_000) / F.col("df")).alias("score"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("tok").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "tok", "tf", "df", "score")
+        .select("doc_id", "rank", "tok", "tf", "df", "score")
     )
 
 
 WINNOW_W = 4  # picks one fingerprint per window of WINNOW_W consecutive grams
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    w: int = WINNOW_W,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame, w: int = WINNOW_W) -> DataFrame:
     """Winnowing (Schleimer, Wilkerson, Aiken 2003 — the MOSS algorithm):
     position-robust local fingerprints. In every window of ``w`` consecutive
     3-gram hashes select the minimum (rightmost on ties); the distinct
@@ -462,7 +441,7 @@ def winnowing_fingerprints(
     shuffles. Docs with fewer than w 3-grams emit nothing.
     """
     df = ensure_parallelism(df)
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(
+    base = df.select(F.col("doc_id"), tokens("text").alias("_toks")).filter(
         F.size("_toks") >= 2 + w
     )
     # positional 3-gram 48-bit hashes (same digest as dedup.minhash_sig)
@@ -481,21 +460,16 @@ def winnowing_fingerprints(
         f"named_struct('pos', cast(i as bigint), 'h', __hs__[i]), acc))))"
     )
     return (
-        base.select(F.col(id_col), F.expr(hs).alias("__hs__"))
-        .select(F.col(id_col), F.explode(F.expr(picks)).alias("fp"))
-        .select(id_col, F.col("fp.pos").alias("pos"), F.col("fp.h").alias("h"))
+        base.select(F.col("doc_id"), F.expr(hs).alias("__hs__"))
+        .select(F.col("doc_id"), F.explode(F.expr(picks)).alias("fp"))
+        .select("doc_id", F.col("fp.pos").alias("pos"), F.col("fp.h").alias("h"))
     )
 
 
 SURPRISAL_QUANT = 1000  # milli-nats per token
 
 
-def unigram_surprisal(
-    df: DataFrame,
-    quant: int = SURPRISAL_QUANT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Unigram-LM likelihood scoring (the CCNet/C4 perplexity-filter shape
     with the corpus itself as the LM): fit a unigram model over the corpus
     (token → count / total), then score every document by its mean token
@@ -504,8 +478,8 @@ def unigram_surprisal(
     degenerate stopword soup.
 
     Per-token surprisal is quantized to integer milli-nats
-    (``floor(−ln p · quant)``) before the per-document sum, so the aggregate
-    is order-independent and bit-deterministic across engines — the same
+    (``floor(−ln p · SURPRISAL_QUANT)``) before the per-document sum, so
+    the aggregate is order-independent and bit-deterministic across engines — the same
     integer-units pattern as ``dsum`` (a real KenLM swap-in would change
     only the per-token score column, not the plan).
 
@@ -517,18 +491,18 @@ def unigram_surprisal(
     Ref provenance: beyond-reference tier (SURVEY.md §7 F).
     """
     df = ensure_parallelism(df)
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("tok"))
     vocab = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
     mnats = F.floor(
         -F.log(F.col("cnt").cast("double") / F.col("total").cast("double"))
-        * F.lit(float(quant))
+        * F.lit(float(SURPRISAL_QUANT))
     ).cast("bigint")
     return (
         toks.join(F.broadcast(vocab), "tok")
         .crossJoin(F.broadcast(total))
-        .select(F.col(id_col), mnats.alias("_mnats"))
-        .groupBy(id_col)
+        .select(F.col("doc_id"), mnats.alias("_mnats"))
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
             F.sum("_mnats").alias("surprisal_mnats"),
@@ -537,26 +511,21 @@ def unigram_surprisal(
             "avg_surprisal_mnats",
             F.col("surprisal_mnats").cast("double") / F.col("n_tokens"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
 KN_DISCOUNT = 0.75  # the standard absolute discount (Chen & Goodman 1998)
 
 
-def kn_trigram_surprisal(
-    df: DataFrame,
-    discount: float = KN_DISCOUNT,
-    quant: int = SURPRISAL_QUANT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def kn_trigram_surprisal(df: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney trigram-LM surprisal — the real CCNet/KenLM
     perplexity-filter shape (``unigram_surprisal`` is the order-1 stand-in).
     The corpus is its own LM: every scored trigram was observed, so the
     discounted probability is strictly positive without an OOV backstop.
 
-    Model (absolute discount D, continuation counts per Chen & Goodman):
+    Model (absolute discount D = ``KN_DISCOUNT``, continuation counts per
+    Chen & Goodman):
 
       P(w3|w1w2) = max(c(w1w2w3)-D,0)/c(w1w2•)
                    + D·N1+(w1w2•)/c(w1w2•) · Pcont(w3|w2)
@@ -582,20 +551,20 @@ def kn_trigram_surprisal(
     rather than five model tables.
     Ref provenance: beyond-reference tier (SURVEY.md §7 F).
     """
-    d_lit = repr(float(discount))  # exact decimal repr; 0.75 is binary-exact
+    d_lit = repr(float(KN_DISCOUNT))  # exact decimal repr; 0.75 is binary-exact
     df = ensure_parallelism(df)
-    base = df.select(F.col(id_col), tokens(text_col).alias("_toks")).filter(
+    base = df.select(F.col("doc_id"), tokens("text").alias("_toks")).filter(
         F.size("_toks") >= 3
     )
     tri = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.expr(
                 "transform(sequence(2, size(_toks) - 1), i -> "
                 "struct(_toks[i-2] AS w1, _toks[i-1] AS w2, _toks[i] AS w3))"
             )
         ).alias("_t"),
-    ).select(id_col, "_t.w1", "_t.w2", "_t.w3")
+    ).select("doc_id", "_t.w1", "_t.w2", "_t.w3")
     # trigram TYPE grain — narrow, shuffled once, consumed by 4 diamonds
     t3 = tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c3"))
     t3 = t3.localCheckpoint(eager=False)
@@ -633,13 +602,13 @@ def kn_trigram_surprisal(
             "w2",
             "w3",
             F.expr(
-                f"cast(floor(-ln({p_tri}) * {quant}.0) as bigint)"
+                f"cast(floor(-ln({p_tri}) * {SURPRISAL_QUANT}.0) as bigint)"
             ).alias("_mnats"),
         )
     )
     return (
         tri.join(scored, ["w1", "w2", "w3"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_trigrams"),
             F.sum("_mnats").alias("kn_surprisal_mnats"),
@@ -648,13 +617,11 @@ def kn_trigram_surprisal(
             "avg_kn_surprisal_mnats",
             F.col("kn_surprisal_mnats").cast("double") / F.col("n_trigrams"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def normalize_text(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Unicode normalization for multilingual corpora: NFC composition
     (byte-identical text that differs only in combining-character order
     must dedup together) and a fold column (casefold + accent strip) for
@@ -680,25 +647,23 @@ def normalize_text(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            texts = pdf[text_col].fillna("")
+            texts = pdf["text"].fillna("")
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "text_nfc": [unicodedata.normalize("NFC", s) for s in texts],
                     "text_folded": [_fold(s) for s in texts],
                 }
             )
 
     df = ensure_parallelism(df)
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} bigint, text_nfc string, text_folded string"
+    return df.select("doc_id", "text").mapInPandas(
+        batches, schema="doc_id bigint, text_nfc string, text_folded string"
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document top-k TF-IDF terms with RATIONAL scoring: score =
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Per-document top-5 TF-IDF terms with RATIONAL scoring: score =
     tf·N / df — the idf kept as an exact integer ratio instead of
     log(N/df), so the ranking is bit-deterministic across engines (one
     IEEE division of exact integers; a transcendental log would differ in
@@ -716,8 +681,8 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     df_in = ensure_parallelism(docs)
-    toks = df_in.select(id_col, F.explode(tokens(text_col)).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    toks = df_in.select("doc_id", F.explode(tokens("text")).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # diamond lineage: tf feeds BOTH the df aggregate and the score join,
     # and Spark 4 does not reuse the shared exchange across the two
     # branches (verified empirically) — without this the token explosion
@@ -730,7 +695,7 @@ def tfidf_top_terms(
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(n))
         .select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             "df",
@@ -739,19 +704,17 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, F.col("rank").cast("int").alias("rank"), "term", "tf", "df", "score")
+        .filter(F.col("rank") <= 5)
+        .select("doc_id", F.col("rank").cast("int").alias("rank"), "term", "tf", "df", "score")
     )
 
 
-def term_postings(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def term_postings(docs: DataFrame) -> DataFrame:
     """Inverted-index statistics pass: per term, document frequency, total
     term frequency, and the posting-list extent (first/last doc id). The
     full posting lists themselves would be the index payload; the stats
@@ -762,13 +725,13 @@ def term_postings(
     rows — then one narrow shuffle on term; hot stopword-ish terms are
     AQE-splittable because every aggregate is commutative."""
     df_in = ensure_parallelism(docs)
-    toks = df_in.select(id_col, F.explode(tokens(text_col)).alias("term"))
-    per_doc = toks.groupBy("term", id_col).agg(F.count("*").alias("tf"))
+    toks = df_in.select("doc_id", F.explode(tokens("text")).alias("term"))
+    per_doc = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     return per_doc.groupBy("term").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("tf_total"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
@@ -833,9 +796,7 @@ HTML_STRIP_PATTERNS = [
 ]
 
 
-def html_to_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "text"
-) -> DataFrame:
+def html_to_text(df: DataFrame) -> DataFrame:
     """HTML → plain text, entirely JVM-side (regexp chain, zero Python):
     drop script/style bodies and comments, strip tags, decode the common
     entities, collapse whitespace. The extraction step of a web-crawl
@@ -846,13 +807,13 @@ def html_to_text(
     the DuckDB oracle can run the IDENTICAL chain — the whole extraction
     is hash-replayable, not just spot-checked.
     """
-    x = F.col(html_col)
+    x = F.col("html")
     for pat in HTML_STRIP_PATTERNS:
         x = F.regexp_replace(x, pat, " ")
     for src, dst in HTML_ENTITIES:
         x = F.replace(x, F.lit(src), F.lit(dst))
     x = F.trim(F.regexp_replace(x, WS_RE, " "))
-    return df.withColumn(out_col, x)
+    return df.withColumn("text", x)
 
 
 # A fixed merge table in priority order — REAL byte-pair-encoding merge
@@ -888,9 +849,7 @@ def bpe_segment(word_col: Column) -> Column:
     return F.trim(F.replace(x, F.lit("|"), F.lit("")))
 
 
-def bpe_token_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bpe_token_stats(df: DataFrame) -> DataFrame:
     """Per-document REAL-BPE statistics: total merged-symbol count,
     character count, and the compression ratio chars/tokens — the number
     a training-data pipeline budgets context length with. Pure JVM
@@ -898,7 +857,7 @@ def bpe_token_stats(
     zero explode — the per-word merge chain runs inside one projection).
     """
     df = ensure_parallelism(df)
-    toks = tokens(text_col)
+    toks = tokens("text")
     # the merge chain as SQL text so it can run INSIDE the transform
     # lambda over the token array (a Column can't cross the lambda
     # scope); marker representation — see BPE_MERGES comment
@@ -907,16 +866,16 @@ def bpe_token_stats(
         seg_sql = f"replace({seg_sql}, '|{a} |{b} ', '|{a}{b} ')"
     seg_sql = f"trim({seg_sql})"
     out = df.select(
-        id_col,
+        "doc_id",
         toks.alias("_toks"),
-        F.length(text_col).alias("n_chars"),
+        F.length("text").alias("n_chars"),
     )
     total = F.expr(
         f"aggregate(transform(_toks, w -> size(split({seg_sql}, ' '))), "
         "0, (a, x) -> a + x)"
     )
     return out.select(
-        id_col,
+        "doc_id",
         F.col("n_chars").cast("bigint").alias("n_chars"),
         F.size("_toks").cast("bigint").alias("n_words"),
         total.cast("bigint").alias("n_bpe_tokens"),
@@ -960,9 +919,7 @@ def canonical_url(url: Column) -> Column:
     return F.concat(scheme, F.lit("://"), host, path, query)
 
 
-def bpe_train_merges(
-    df: DataFrame, n_merges: int = 8, text_col: str = "text"
-) -> DataFrame:
+def bpe_train_merges(df: DataFrame, n_merges: int = 8) -> DataFrame:
     """LEARN a BPE merge table from the corpus itself — the training half
     of the tokenizer story (``bpe_segment``/``bpe_token_stats`` apply a
     merge table; this induces one), implementing the classic
@@ -996,7 +953,7 @@ def bpe_train_merges(
     """
     df = ensure_parallelism(df)
     words = (
-        df.select(F.explode(tokens(text_col)).alias("word"))
+        df.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
@@ -1058,17 +1015,11 @@ def bpe_train_merges(
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def c4_line_filter(
-    df: DataFrame,
-    min_words: int = 5,
-    min_kept_lines: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """The C4 line-grain cleaning rules (Raffel et al. 2020 §2.2) as one
     map-only transform: keep a line iff it ends in terminal punctuation
-    ([.!?"]), has ≥ ``min_words`` words, and does not contain
-    "javascript"; a document survives iff ≥ ``min_kept_lines`` lines
+    ([.!?"]), has ≥ 5 words, and does not contain
+    "javascript"; a document survives iff ≥ 3 lines
     survive and it contains neither "lorem ipsum" nor "{". Output carries
     the cleaned text (kept lines re-joined) plus the audit counts — the
     filter is a transform AND its own evidence.
@@ -1078,37 +1029,31 @@ def c4_line_filter(
     at scan speed next to the other map-only text operators.
     """
     df = ensure_parallelism(df)
-    lc = F.lower(F.col(text_col))
+    lc = F.lower(F.col("text"))
     kept = F.expr(
-        f"filter(split({text_col}, '\\n'), l -> "
-        f"l rlike '[.!?\"]$' "
-        f"AND size(regexp_extract_all(lower(l), '{WORD_RE}', 0)) >= {min_words} "
+        "filter(split(text, '\\n'), l -> "
+        "l rlike '[.!?\"]$' "
+        f"AND size(regexp_extract_all(lower(l), '{WORD_RE}', 0)) >= 5 "
         f"AND NOT contains(lower(l), 'javascript'))"
     )
     out = df.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), "\n")).cast("bigint").alias("n_lines"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), "\n")).cast("bigint").alias("n_lines"),
         F.size(kept).cast("bigint").alias("kept_lines"),
         F.array_join(kept, "\n").alias("kept_text"),
         (~F.contains(lc, F.lit("lorem ipsum"))
-         & ~F.contains(F.col(text_col), F.lit("{"))).alias("_doc_ok"),
+         & ~F.contains(F.col("text"), F.lit("{"))).alias("_doc_ok"),
     )
     return out.select(
-        id_col,
+        "doc_id",
         "n_lines",
         "kept_lines",
-        ((F.col("kept_lines") >= min_kept_lines) & F.col("_doc_ok")).alias(
-            "keep_doc"
-        ),
+        ((F.col("kept_lines") >= 3) & F.col("_doc_ok")).alias("keep_doc"),
         "kept_text",
     )
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """The Gopher document-grain quality rules (Rae et al. 2021, Appendix
     A) as measured columns plus the combined keep flag: word count in
     [50, 100k], mean word length in [3, 10], symbol-to-word ratio (# and
@@ -1124,10 +1069,10 @@ def gopher_quality_flags(
     generic score, so corpus governance can cite the exact filter.
     """
     df = ensure_parallelism(df)
-    t = F.col(text_col)
+    t = F.col("text")
     base = df.select(
-        F.col(id_col),
-        tokens(text_col).alias("_toks"),
+        F.col("doc_id"),
+        tokens("text").alias("_toks"),
         F.split(t, "\n").alias("_lines"),
         (
             (F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit(""))))
@@ -1151,7 +1096,7 @@ def gopher_quality_flags(
         stop_hits = hit if stop_hits is None else (stop_hits + hit)
     dbl = lambda c: c.cast("double")  # noqa: E731
     measured = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("bigint").alias("n_words"),
         F.when(n == 0, F.lit(0.0)).otherwise(dbl(wl_sum) / dbl(n)).alias(
             "mean_word_len"
@@ -1186,9 +1131,7 @@ BM25_K1, BM25_B = 1.2, 0.75
 BM25_QUANT = 1_000_000  # per-term score micro-units (order-independent sums)
 
 
-def term_freqs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def term_freqs(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf) — the corpus tokenize + per-(doc, term) count
     every sparse-retrieval arm starts from, materialized once
     (lazy localCheckpoint) so hybrid callers can feed BM25 AND Jaccard
@@ -1197,9 +1140,7 @@ def term_freqs(
     ``tf.select(doc_id, term)`` replaces its tokenize + explode +
     DISTINCT shuffle outright (guide §2.4)."""
     df_in = ensure_parallelism(docs)
-    toks = df_in.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
-    )
+    toks = df_in.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     return tf.localCheckpoint(eager=False)  # feeds df, query side, scoring
 
@@ -1208,10 +1149,6 @@ def bm25_topk(
     docs: DataFrame,
     query_pred,  # Column: which docs act as queries
     k: int = 5,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df_ratio: float | None = None,
     exclude=None,  # Column over (q_doc_id, doc_id); default: identity
     tf: DataFrame | None = None,
@@ -1250,14 +1187,14 @@ def bm25_topk(
     """
     df_in = ensure_parallelism(docs)
     if tf is None:
-        tf = term_freqs(docs, text_col, id_col)
+        tf = term_freqs(docs)
     # dl stays its own cheap size-only tokenize pass: deriving it from
     # Σ tf per doc (exact, incl. the zero-token left-join edge) measured
     # ~10% SLOWER at bench SF in an interleaved A/B — the extra
     # groupBy + join exchanges cost more than the regex split here
     # (r14; revisit if the corpus-scan-to-shuffle ratio flips at scale).
-    base = df_in.select(F.col(id_col), tokens(text_col).alias("_toks"))
-    dl = base.select(F.col(id_col).alias("doc_id"), F.size("_toks").alias("dl"))
+    base = df_in.select(F.col("doc_id"), tokens("text").alias("_toks"))
+    dl = base.select("doc_id", F.size("_toks").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     scalars = dl.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("len_sum")
@@ -1282,11 +1219,11 @@ def bm25_topk(
         )
     qterms = (
         df_in.filter(query_pred)
-        .select(F.col(id_col).alias("q_doc_id"))
+        .select(F.col("doc_id").alias("q_doc_id"))
         .join(tf.select(F.col("doc_id").alias("q_doc_id"), "term"), "q_doc_id")
         .distinct()
     )
-    k1_l, b_l = repr(float(k1)), repr(float(b))
+    k1_l, b_l = repr(float(BM25_K1)), repr(float(BM25_B))
     # identical infix in the oracle → identical IEEE tree
     units = (
         f"cast(floor(ln((cast(n_docs as double) - cast(df as double) + 0.5) "
@@ -1349,8 +1286,6 @@ def jaccard_topk(
     docs: DataFrame,
     query_pred,
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     dtok: DataFrame | None = None,
 ) -> DataFrame:
     """Exact token-set Jaccard retrieval for a SMALL query set: each query
@@ -1373,17 +1308,14 @@ def jaccard_topk(
     df_in = ensure_parallelism(docs)
     if dtok is None:
         dtok = (
-            df_in.select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(tokens(text_col)).alias("term"),
-            )
+            df_in.select("doc_id", F.explode(tokens("text")).alias("term"))
             .distinct()
             .localCheckpoint(eager=False)  # feeds sizes, query side, join
         )
     sizes = dtok.groupBy("doc_id").agg(F.count("*").alias("n_dist"))
     qt = (
         df_in.filter(query_pred)
-        .select(F.col(id_col).alias("q_doc_id"))
+        .select(F.col("doc_id").alias("q_doc_id"))
         .join(dtok.select(F.col("doc_id").alias("q_doc_id"), "term"), "q_doc_id")
     )
     inter = (
@@ -1418,13 +1350,14 @@ def jaccard_topk(
 RRF_K = 60
 
 
-def rrf_fuse(rank_lists: list[DataFrame], k: int = 5, k_rrf: int = RRF_K) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009): each list contributes
-    10^6 div (k_rrf + rank) — pure INTEGER arithmetic, so fused scores and
-    their ordering are engine-exact with no float anywhere. Inputs carry
-    (q_doc_id, rank, doc_id); candidates absent from a list contribute 0
-    (union semantics). The standard way to combine lexical (BM25/Jaccard)
-    and dense (ANN) rankings without score calibration."""
+def rrf_fuse(rank_lists: list[DataFrame]) -> DataFrame:
+    """Reciprocal-rank fusion (Cormack et al. 2009) into a top-5 per query:
+    each list contributes 10^6 div (RRF_K + rank) — pure INTEGER
+    arithmetic, so fused scores and their ordering are engine-exact with
+    no float anywhere. Inputs carry (q_doc_id, rank, doc_id); candidates
+    absent from a list contribute 0 (union semantics). The standard way to
+    combine lexical (BM25/Jaccard) and dense (ANN) rankings without score
+    calibration."""
     from functools import reduce
 
     from pyspark.sql import Window
@@ -1433,7 +1366,7 @@ def rrf_fuse(rank_lists: list[DataFrame], k: int = 5, k_rrf: int = RRF_K) -> Dat
         df.select(
             "q_doc_id",
             "doc_id",
-            F.expr(f"cast(1000000 div ({k_rrf} + rank) as bigint)").alias("_u"),
+            F.expr(f"cast(1000000 div ({RRF_K} + rank) as bigint)").alias("_u"),
         )
         for df in rank_lists
     ]
@@ -1447,7 +1380,7 @@ def rrf_fuse(rank_lists: list[DataFrame], k: int = 5, k_rrf: int = RRF_K) -> Dat
     )
     return (
         fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("q_doc_id", "rank", "doc_id", "n_lists", "rrf_units")
         .orderBy("q_doc_id", "rank")
     )

@@ -32,15 +32,15 @@ def top_k(
     return df.orderBy(*order).limit(k)
 
 
-def ordered_preview(df: DataFrame, order: Sequence[str], k: int = 100) -> DataFrame:
-    """O4: first-k preview in a stated order (streamlit_app.py:308)."""
-    return df.orderBy(*order).limit(k)
+def ordered_preview(df: DataFrame, order: Sequence[str]) -> DataFrame:
+    """O4: first-100 preview in a stated order (streamlit_app.py:308)."""
+    return df.orderBy(*order).limit(100)
 
 
-def distinct_head(df: DataFrame, col: str, k: int = 50) -> DataFrame:
-    """O7: first-k distinct values (dropdown domains,
+def distinct_head(df: DataFrame, col: str) -> DataFrame:
+    """O7: first-50 distinct values (dropdown domains,
     streamlit_app.py:1301). Ordered so "first" is well-defined."""
-    return df.select(col).distinct().orderBy(col).limit(k)
+    return df.select(col).distinct().orderBy(col).limit(50)
 
 
 def grouped_top_k(

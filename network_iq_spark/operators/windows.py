@@ -39,7 +39,7 @@ def centered_frame(w: int) -> tuple[int, int]:
 
 
 def centered_moving_avg(
-    df: DataFrame, order: str, value: Column | str, w: int, out: str = "smoothed"
+    df: DataFrame, order: str, value: Column | str, w: int
 ) -> DataFrame:
     """W1: centered moving average with pandas ``min_periods=1`` edges.
 
@@ -48,7 +48,7 @@ def centered_moving_avg(
     lo, hi = centered_frame(w)
     spec = Window.orderBy(order).rowsBetween(lo, hi)
     c = F.col(value) if isinstance(value, str) else value
-    return df.withColumn(out, F.avg(c).over(spec))
+    return df.withColumn("smoothed", F.avg(c).over(spec))
 
 
 def trailing_window(keys: Sequence[str], order: Sequence[str], n: int) -> WindowSpec:
@@ -61,16 +61,15 @@ def rolling_features(
     keys: Sequence[str],
     order: Sequence[str],
     metrics: Sequence[str],
-    n: int = 3,
 ) -> DataFrame:
-    """W2+W3: per-key trailing rolling mean/std + first-difference.
+    """W2+W3: per-key trailing 3-row rolling mean/std + first-difference.
 
     Reference ``_add_roll`` (streamlit_app.py:697-701): for each metric m
     emits ``m_rmean`` (rolling mean), ``m_rstd`` (rolling sample std, NaN→0),
     ``m_rdiff`` (diff, first-row→0). One shuffle on ``keys``, all features in
     a single window pass.
     """
-    roll = trailing_window(keys, order, n)
+    roll = trailing_window(keys, order, 3)
     lag_w = Window.partitionBy(*keys).orderBy(*order)
     out = df
     for m in metrics:
@@ -83,14 +82,14 @@ def rolling_features(
     return out
 
 
-def zscore(value: Column | str, mean: Column | str, std: Column | str, eps: float = 1e-9) -> Column:
+def zscore(value: Column | str, mean: Column | str, std: Column | str) -> Column:
     """W5: z-score vs a baseline with the reference's zero-std guard
     (streamlit_app.py:540-543)."""
     v = F.col(value) if isinstance(value, str) else value
     m = F.col(mean) if isinstance(mean, str) else mean
     s = F.col(std) if isinstance(std, str) else std
     s = F.coalesce(s, F.lit(0.0))
-    return (v - m) / F.when(s == 0, F.lit(eps)).otherwise(s)
+    return (v - m) / F.when(s == 0, F.lit(1e-9)).otherwise(s)
 
 
 def dedup_keep_last(
@@ -116,9 +115,7 @@ def dedup_keep_last(
     )
 
 
-def minmax_normalize(
-    df: DataFrame, value: Column | str, out: str = "norm"
-) -> DataFrame:
+def minmax_normalize(df: DataFrame, value: Column | str) -> DataFrame:
     """W7: (x−min)/(max−min) over the whole frame; constant input → 1.0
     (streamlit_app.py:996-998).
 
@@ -134,14 +131,12 @@ def minmax_normalize(
     mn, mx = F.col("__mn__"), F.col("__mx__")
     return (
         df.crossJoin(F.broadcast(scalars))
-        .withColumn(out, F.when(mx == mn, F.lit(1.0)).otherwise((c - mn) / (mx - mn)))
+        .withColumn("norm", F.when(mx == mn, 1.0).otherwise((c - mn) / (mx - mn)))
         .drop("__mn__", "__mx__")
     )
 
 
-def winsorize(
-    df: DataFrame, col: str, lo_q: float = 0.05, hi_q: float = 0.95, out: str | None = None
-) -> DataFrame:
+def winsorize(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
     """Q3/A14: clip a metric to its scope quantiles (the reference's
     declared winsorization rule, docs/KPI_dictionary.md:21, applied for viz
     at streamlit_app.py:333-336,425-428).
@@ -151,8 +146,8 @@ def winsorize(
     ``minmax_normalize``; no single-partition window over the fact table.
     """
     scalars = df.agg(
-        F.percentile(F.col(col), F.lit(lo_q)).alias("__lo__"),
-        F.percentile(F.col(col), F.lit(hi_q)).alias("__hi__"),
+        F.percentile(F.col(col), F.lit(0.05)).alias("__lo__"),
+        F.percentile(F.col(col), F.lit(0.95)).alias("__hi__"),
     )
     return (
         df.crossJoin(F.broadcast(scalars))
@@ -190,10 +185,8 @@ def latest_snapshot(df: DataFrame, ts: str) -> DataFrame:
     )
 
 
-def time_sliced_window(
-    keys: Sequence[str], ts_col: str, n: int, slice_fmt: str = "yyyy-MM"
-) -> WindowSpec:
-    """Trailing-n frame whose partition key is SPLIT by a calendar slice —
+def time_sliced_window(keys: Sequence[str], ts_col: str, n: int) -> WindowSpec:
+    """Trailing-n frame whose partition key is SPLIT by a calendar month —
     the documented skewed-window mitigation (docs/SCALE.md windows §(b)).
 
     A window partitioned only by ``keys`` sorts each key in ONE task: a
@@ -215,7 +208,7 @@ def time_sliced_window(
     feature family.
     """
     return (
-        Window.partitionBy(F.date_format(ts_col, slice_fmt), *keys)
+        Window.partitionBy(F.date_format(ts_col, "yyyy-MM"), *keys)
         .orderBy(ts_col)
         .rowsBetween(-(n - 1), 0)
     )
@@ -227,7 +220,6 @@ def time_sliced_rolling(
     ts_col: str,
     metrics: Sequence[str],
     n: int = 3,
-    slice_fmt: str = "yyyy-MM",
 ) -> DataFrame:
     """:func:`rolling_features` with the partition key split by a calendar
     slice (see :func:`time_sliced_window`): same three features per metric
@@ -236,7 +228,7 @@ def time_sliced_rolling(
     the same partitioning — and sort tasks bounded by
     rows-per-(key, slice)."""
     slice_col = "__slice__"
-    out = df.withColumn(slice_col, F.date_format(ts_col, slice_fmt))
+    out = df.withColumn(slice_col, F.date_format(ts_col, "yyyy-MM"))
     roll = (
         Window.partitionBy(slice_col, *keys)
         .orderBy(ts_col)

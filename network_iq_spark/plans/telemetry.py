@@ -83,7 +83,7 @@ def hourly_panel(df: DataFrame, metric: str, smooth_window: int = 3, q: float = 
         .groupBy("hour")
         .agg(F.avg(metric).alias("avg_value"))
     )
-    smoothed = centered_moving_avg(hourly, "hour", "avg_value", smooth_window, out="smoothed")
+    smoothed = centered_moving_avg(hourly, "hour", "avg_value", smooth_window)
     # threshold as a plan-level scalar (no collect): percentile over the row
     # grain, broadcast cross-joined onto the hourly aggregate
 

@@ -209,6 +209,104 @@ def _int_sig_ctes(n_tables: int, n_planes: int) -> str:
 
 _IVFD_CELLS, _IVFD_GROUPS, _IVFD_NPROBE, _IVFD_K = 16, 4, 4, 10
 _IVFD_SCALE = "1000000.0"
+# the embeddings quantized to integer-valued doubles (floor(x*1e6+0.5)):
+# every dot product over them is exact in float64 whatever the summation
+# order, which is what lets the matmul-based Spark stages replay in SQL
+_IVFD_NN = f"""nn AS (
+      SELECT vec_id,
+             list_transform(embedding::DOUBLE[],
+                            x -> floor(x * {_IVFD_SCALE} + 0.5)) AS v
+      FROM embeddings
+    )"""
+
+
+def _ivf_dist_sql(index_pred: str, query_pred: str) -> str:
+    """DuckDB twin of the DISTRIBUTED two-level IVF search
+    (operators/similarity.py ivf_assign_dist + ivf_search) over the
+    ``_IVFD_NN`` vectors: the index is built from the rows matching
+    ``index_pred`` and probed by the rows matching ``query_pred``. Stages:
+    seeded centroid pick → seeded √k rep pick → centroid-group resolution
+    (rep pinned to own group) → vector-group resolution → in-group argmax
+    (the inverted file) → flat probe list for queries → exact in-cell
+    cosine top-k, never matching a query to itself."""
+    cent_h = _sql_hex_int("md5(CAST(vec_id AS VARCHAR))", 12)
+    rep_h = _sql_hex_int("md5(CAST(c_id AS VARCHAR))", 12)
+    return f"""
+    WITH {_IVFD_NN},
+    n AS (
+      -- gn mirrors the Spark assigner's zero-norm guard (norm==0 -> 1.0,
+      -- operators/similarity.py ivf_assign_dist): guarded norms drive the
+      -- group-resolution/assignment stages only; probes + final scoring
+      -- divide by the RAW norm exactly like the Spark plan
+      SELECT vec_id, v, norm,
+             CASE WHEN norm = 0 THEN 1.0 ELSE norm END AS gn
+      FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM nn)
+    ),
+    hist AS (SELECT * FROM n WHERE {index_pred}),
+    q AS (SELECT * FROM n WHERE {query_pred}),
+    cent AS (
+      SELECT vec_id AS c_id, v AS cv, norm AS cn, gn AS gcn
+      FROM hist ORDER BY {cent_h}, vec_id LIMIT {_IVFD_CELLS}
+    ),
+    reps AS (
+      SELECT c_id AS rep_id, cv AS rv, gcn AS grn
+      FROM cent ORDER BY {rep_h}, c_id LIMIT {_IVFD_GROUPS}
+    ),
+    cgrp AS (
+      SELECT c_id, cv, gcn,
+             CASE WHEN c_id IN (SELECT rep_id FROM reps)
+                  THEN c_id ELSE best_rep END AS grp
+      FROM (
+        SELECT c.c_id, c.cv, c.gcn, r.rep_id AS best_rep,
+               ROW_NUMBER() OVER (PARTITION BY c.c_id
+                 ORDER BY list_dot_product(c.cv, r.rv) / (c.gcn * r.grn) DESC,
+                          r.rep_id ASC) AS rk
+        FROM cent c, reps r
+      ) WHERE rk = 1
+    ),
+    vgrp AS (
+      SELECT vec_id, grp FROM (
+        SELECT h.vec_id, r.rep_id AS grp,
+               ROW_NUMBER() OVER (PARTITION BY h.vec_id
+                 ORDER BY list_dot_product(h.v, r.rv) / (h.gn * r.grn) DESC,
+                          r.rep_id ASC) AS rk
+        FROM hist h, reps r
+      ) WHERE rk = 1
+    ),
+    assign AS (
+      SELECT vec_id AS n_vec_id, c_id AS cell FROM (
+        SELECT h.vec_id, c.c_id,
+               ROW_NUMBER() OVER (PARTITION BY h.vec_id
+                 ORDER BY list_dot_product(h.v, c.cv) / (h.gn * c.gcn) DESC,
+                          c.c_id ASC) AS rk
+        FROM hist h
+        JOIN vgrp ON vgrp.vec_id = h.vec_id
+        JOIN cgrp c ON c.grp = vgrp.grp
+      ) WHERE rk = 1
+    ),
+    probes AS (
+      SELECT vec_id AS q_vec_id, c_id AS cell FROM (
+        SELECT q.vec_id, c.c_id,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                 ORDER BY list_dot_product(q.v, c.cv) / (q.norm * c.cn) DESC,
+                          c.c_id ASC) AS rk
+        FROM q, cent c
+      ) WHERE rk <= {_IVFD_NPROBE}
+    ),
+    scored AS (
+      SELECT p.q_vec_id, a.n_vec_id,
+             list_dot_product(qq.v, m.v) / (qq.norm * m.norm) AS cos
+      FROM probes p
+      JOIN assign a ON a.cell = p.cell AND a.n_vec_id != p.q_vec_id
+      JOIN q qq ON qq.vec_id = p.q_vec_id
+      JOIN n m ON m.vec_id = a.n_vec_id
+    )
+    SELECT q_vec_id, n_vec_id, CAST(rank AS INT) AS rank, cos FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_vec_id
+                                   ORDER BY cos DESC, n_vec_id ASC) AS rank
+      FROM scored
+    ) WHERE rank <= {_IVFD_K} ORDER BY q_vec_id, rank
+    """
 
 
 _SPLIT_SALT = "v1"

@@ -85,7 +85,7 @@ def q_ordered_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    return ordered_preview(ev, ["ts", "event_id"], k=100)
+    return ordered_preview(ev, ["ts", "event_id"])
 
 
 @register(
@@ -94,7 +94,7 @@ def q_ordered_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_distinct_users_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O7: first-k distinct keys (dropdown domain, streamlit_app.py:1301)."""
-    return distinct_head(load_table(spark, sf_dir, "events"), "user_id", k=50)
+    return distinct_head(load_table(spark, sf_dir, "events"), "user_id")
 
 
 @register(
@@ -339,7 +339,7 @@ def q_winsorized_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from network_iq_spark.operators.windows import winsorize
 
     ev = load_table(spark, sf_dir, "events")
-    w = winsorize(ev, "value", 0.05, 0.95, out="wv")
+    w = winsorize(ev, "value", out="wv")
     return (
         w.withColumn("hour", F.hour("ts"))
         .groupBy("hour")
@@ -452,7 +452,7 @@ def q_events_in_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from network_iq_spark.operators import intervals as I
 
     ev = load_table(spark, sf_dir, "events")
-    win = I.span_windows(ev, n_windows=8, num=2, den=10)
+    win = I.span_windows(ev)
     joined = I.bucketed_interval_join(ev, win)
     return (
         joined.groupBy("window_id")

@@ -39,6 +39,7 @@ from network_iq_spark.queries._fragments import (  # noqa: F401
     _SPLIT_HEX,
     _SPLIT_SALT,
     _TOKS,
+    _ivf_dist_sql,
     _minhash_pairs_cte,
     _sql_hex_int,
 )
@@ -531,98 +532,12 @@ def q_span_corruption_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IANN_SPLIT, _IANN_QN = 250, 260  # history < 250; incoming batch [250, 260)
 
 
-def _incremental_ann_sql(n_cells: int, g: int, nprobe: int, k: int) -> str:
-    """DuckDB twin of the incremental ANN search: the history side's
-    two-level distributed inverted file (same structure as _ivf_dist_sql,
-    restricted to vec_id < split) probed by EXTERNAL query vectors (the
-    incoming batch) — integer-quantized throughout so every stage
-    hash-replays."""
-    cent_h = _sql_hex_int("md5(CAST(vec_id AS VARCHAR))", 12)
-    rep_h = _sql_hex_int("md5(CAST(c_id AS VARCHAR))", 12)
-    return f"""
-    WITH nn AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> floor(x * {_IVFD_SCALE} + 0.5)) AS v
-      FROM embeddings
-    ),
-    n AS (
-      -- gn mirrors the Spark assigner's zero-norm guard (see _ivf_dist_sql)
-      SELECT vec_id, v, norm,
-             CASE WHEN norm = 0 THEN 1.0 ELSE norm END AS gn
-      FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM nn)
-    ),
-    hist AS (SELECT * FROM n WHERE vec_id < {_IANN_SPLIT}),
-    q AS (SELECT * FROM n
-          WHERE vec_id >= {_IANN_SPLIT} AND vec_id < {_IANN_QN}),
-    cent AS (
-      SELECT vec_id AS c_id, v AS cv, norm AS cn, gn AS gcn
-      FROM hist ORDER BY {cent_h}, vec_id LIMIT {n_cells}
-    ),
-    reps AS (
-      SELECT c_id AS rep_id, cv AS rv, gcn AS grn
-      FROM cent ORDER BY {rep_h}, c_id LIMIT {g}
-    ),
-    cgrp AS (
-      SELECT c_id, cv, gcn,
-             CASE WHEN c_id IN (SELECT rep_id FROM reps)
-                  THEN c_id ELSE best_rep END AS grp
-      FROM (
-        SELECT c.c_id, c.cv, c.gcn, r.rep_id AS best_rep,
-               ROW_NUMBER() OVER (PARTITION BY c.c_id
-                 ORDER BY list_dot_product(c.cv, r.rv) / (c.gcn * r.grn) DESC,
-                          r.rep_id ASC) AS rk
-        FROM cent c, reps r
-      ) WHERE rk = 1
-    ),
-    vgrp AS (
-      SELECT vec_id, grp FROM (
-        SELECT h.vec_id, r.rep_id AS grp,
-               ROW_NUMBER() OVER (PARTITION BY h.vec_id
-                 ORDER BY list_dot_product(h.v, r.rv) / (h.gn * r.grn) DESC,
-                          r.rep_id ASC) AS rk
-        FROM hist h, reps r
-      ) WHERE rk = 1
-    ),
-    assign AS (
-      SELECT vec_id AS n_vec_id, c_id AS cell FROM (
-        SELECT h.vec_id, c.c_id,
-               ROW_NUMBER() OVER (PARTITION BY h.vec_id
-                 ORDER BY list_dot_product(h.v, c.cv) / (h.gn * c.gcn) DESC,
-                          c.c_id ASC) AS rk
-        FROM hist h
-        JOIN vgrp ON vgrp.vec_id = h.vec_id
-        JOIN cgrp c ON c.grp = vgrp.grp
-      ) WHERE rk = 1
-    ),
-    probes AS (
-      SELECT vec_id AS q_vec_id, c_id AS cell FROM (
-        SELECT q.vec_id, c.c_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_dot_product(q.v, c.cv) / (q.norm * c.cn) DESC,
-                          c.c_id ASC) AS rk
-        FROM q, cent c
-      ) WHERE rk <= {nprobe}
-    ),
-    scored AS (
-      SELECT p.q_vec_id, a.n_vec_id,
-             list_dot_product(qq.v, m.v) / (qq.norm * m.norm) AS cos
-      FROM probes p
-      JOIN assign a ON a.cell = p.cell
-      JOIN q qq ON qq.vec_id = p.q_vec_id
-      JOIN n m ON m.vec_id = a.n_vec_id
-    )
-    SELECT q_vec_id, n_vec_id, CAST(rank AS INT) AS rank, cos FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_vec_id
-                                   ORDER BY cos DESC, n_vec_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {k} ORDER BY q_vec_id, rank
-    """
-
-
 @register(
     "incremental_ann_topk",
-    oracle=_incremental_ann_sql(_IVFD_CELLS, _IVFD_GROUPS, _IVFD_NPROBE, _IVFD_K),
+    oracle=_ivf_dist_sql(
+        f"vec_id < {_IANN_SPLIT}",
+        f"vec_id >= {_IANN_SPLIT} AND vec_id < {_IANN_QN}",
+    ),
 )
 def q_incremental_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continual-ingest ANN: the incoming embedding batch (vec_id in
@@ -813,7 +728,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         "quality_score",
         "split",
-        T.fingerprint_col("text").alias("fingerprint"),
+        T.fingerprint_col().alias("fingerprint"),
     ).localCheckpoint(eager=False)
     base = grain.agg(
         F.count("*").alias("n_docs"),

@@ -118,7 +118,7 @@ def _pipeline_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice. min(doc_id) over a fingerprint partition selects exactly the
     # keepers the groupBy picked (r14, guide §2.4; measured 3.3s → 2.4s
     # on the cascade-through-final, doc sets verified equal).
-    fpd = qdocs.withColumn("__fp__", T.fingerprint_col("text"))
+    fpd = qdocs.withColumn("__fp__", T.fingerprint_col())
     keep_w = Window.partitionBy("__fp__")
     # Materialized once for the three consumers (signature build, the
     # near-dup anti-join, the split aggregation). This tradeoff has flipped

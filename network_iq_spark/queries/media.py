@@ -633,7 +633,7 @@ def _image_cropped_pairs_from(img: DataFrame) -> DataFrame:
     ``_audio_resampled_pairs_from`` build-once rationale)."""
     base, crops = _crop_corpus_from(img)
     return D.cropped_grid_pairs(
-        base.unionByName(crops), max_crop=_CROP_MAX, side=_IMG_SIDE, ssd_tol=0
+        base.unionByName(crops), max_crop=_CROP_MAX, side=_IMG_SIDE
     ).orderBy("id_a", "id_b")
 
 
@@ -757,7 +757,7 @@ def _image_thumbnail_pairs_from(img: DataFrame) -> DataFrame:
         "px",
     )
     imgs = base.unionByName(_thumb_twins(base))
-    return D.downscale_derivative_pairs(imgs, factor=2).orderBy(
+    return D.downscale_derivative_pairs(imgs).orderBy(
         "full_id", "thumb_id"
     )
 
@@ -834,7 +834,7 @@ def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return D.keep_best_per_cluster(
         clusters, scores, id_col="media_id",
-        cluster_col="cluster_id", score_col="px_var_units",
+        score_col="px_var_units",
     ).orderBy("cluster_id")
 
 
@@ -866,14 +866,14 @@ def _img_probe_batch(hist: DataFrame) -> DataFrame:
     return _roundtrip(
         _dhash_twins(hist), "px", "uint8",
         lambda a: decode_image(encode_png(a.reshape(_IMG_SIDE, _IMG_SIDE))),
-    ).select("media_id", D.image_dhash("px", _IMG_SIDE).alias("dhash"))
+    ).select("media_id", D.image_dhash(_IMG_SIDE).alias("dhash"))
 
 
 def _img_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dHash segment index over the at-rest corpus (hamming_index
     rows) — what a deployment persists partitioned by (seg, seg_val)."""
     hist_hashed = _img_grid(spark, sf_dir).select(
-        "media_id", D.image_dhash("px", _IMG_SIDE).alias("dhash")
+        "media_id", D.image_dhash(_IMG_SIDE).alias("dhash")
     )
     return D.hamming_index(
         hist_hashed, "dhash", _DHASH_MAX_HAMMING,
@@ -1689,9 +1689,9 @@ def q_audio_shifted_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     )
     # env_hamming (the gain-invariant envelope feature) stays an operator
     # extra: the sheet projection carries the oracle-replayable columns
-    return D.audio_shifted_pairs(
-        decoded, max_lag=2, ssd_tol=0
-    ).select("id_a", "id_b", "jaccard", "lag", "ssd").orderBy("id_a", "id_b")
+    return D.audio_shifted_pairs(decoded).select(
+        "id_a", "id_b", "jaccard", "lag", "ssd"
+    ).orderBy("id_a", "id_b")
 
 
 _VID_FRAMES, _VID_SIDE, _VID_FPS = 4, 4, 2  # 4 frames of 4x4 luma at 2 fps
@@ -1773,7 +1773,7 @@ def q_decoded_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="media_id bigint, payload binary, media_type string, "
         "width int, height int, duration_ms int",
     )
-    sampled = M.sample_frames(media, every_ms=1000, max_frames=32)
+    sampled = M.sample_frames(media, max_frames=32)
 
     def stats(it):
         for pdf in it:
@@ -1977,7 +1977,7 @@ def q_video_frame_shifted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )[3],
     )
     return D.video_frame_shifted_pairs(
-        decoded, frames=_VID_FRAMES, side=_VID_SIDE, max_lag=1, ssd_tol=0
+        decoded, frames=_VID_FRAMES, side=_VID_SIDE
     ).orderBy("id_a", "id_b")
 
 
@@ -2211,7 +2211,7 @@ def _audio_resampled_pairs_from(src: DataFrame) -> DataFrame:
     once instead of once per arm (guide §3.3: planning time is a real
     cost; measured r14, the composites' build is py4j/parse-bound)."""
     clips = src.unionByName(_rsmp_twins(src))
-    return D.resampled_derivative_pairs(clips, factor=2).orderBy(
+    return D.resampled_derivative_pairs(clips).orderBy(
         "full_id", "resampled_id"
     )
 
@@ -2399,7 +2399,6 @@ def _video_cropped_pairs_from(vbase: DataFrame) -> DataFrame:
     clips = base.unionByName(_vcrop_twins(base))
     return D.video_cropped_pairs(
         clips, frames=_VID_FRAMES, max_crop=_VCROP_MAX, side=_VID_SIDE,
-        ssd_tol=0,
     ).orderBy("id_a", "id_b")
 
 
@@ -2464,7 +2463,7 @@ def _video_resampled_pairs_from(base: DataFrame) -> DataFrame:
     ``_audio_resampled_pairs_from`` build-once rationale)."""
     clips = base.unionByName(_vrsmp_twins(base))
     return D.resampled_derivative_pairs(
-        clips, factor=2, stride=16, s_col="px"
+        clips, stride=16, s_col="px"
     ).orderBy("full_id", "resampled_id")
 
 

@@ -50,7 +50,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-sized), N a broadcast scalar, top-k windows the per-doc
     term grain — never the raw token explosion."""
     docs = load_table(spark, sf_dir, "documents")
-    return T.tfidf_top_terms(docs, k=5).orderBy("doc_id", "rank")
+    return T.tfidf_top_terms(docs).orderBy("doc_id", "rank")
 
 
 @register(
@@ -325,7 +325,7 @@ def q_related_docs_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     jc = T.jaccard_topk(
         docs, pred, k=10, dtok=tf.select("doc_id", "term")
     ).select("q_doc_id", "rank", "doc_id")
-    return T.rrf_fuse([bm, jc], k=5)
+    return T.rrf_fuse([bm, jc])
 
 
 # Dense arm: the SAME integerized-hyperplane constants the hash-checked
@@ -438,4 +438,4 @@ def q_related_docs_rrf_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         F.col("n_vec_id").alias("doc_id"),
     )
-    return T.rrf_fuse([bm, jc, dn], k=5)
+    return T.rrf_fuse([bm, jc, dn])

@@ -17,8 +17,10 @@ from network_iq_spark.queries._fragments import (  # noqa: F401
     _IVFD_GROUPS,
     _IVFD_K,
     _IVFD_NPROBE,
+    _IVFD_NN,
     _IVFD_SCALE,
     _int_sig_ctes,
+    _ivf_dist_sql,
     _sql_hex_int,
 )
 
@@ -178,106 +180,12 @@ def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=_IVF_CELLS,
         nprobe=_IVF_NPROBE,
         k=_IVF_K,
-        vec_col="v",
     ).orderBy("q_vec_id", "rank")
-
-
-def _ivf_dist_sql(n_cells: int, g: int, nprobe: int, k: int) -> str:
-    """DuckDB twin of the DISTRIBUTED two-level IVF path
-    (operators/similarity.py ivf_assign_dist + cosine_topk_ivf): vectors
-    quantized to integer-valued doubles (floor(x*1e6+0.5)) so every dot
-    product is exact in float64 regardless of summation order — which is
-    what makes the matmul-assigned cells bit-replayable in SQL. Stages:
-    seeded centroid pick → seeded √k rep pick → centroid-group resolution
-    (rep pinned to own group) → vector-group resolution → in-group argmax
-    (the inverted file) → flat probe list for queries → exact in-cell
-    cosine top-k."""
-    cent_h = _sql_hex_int("md5(CAST(vec_id AS VARCHAR))", 12)
-    rep_h = _sql_hex_int("md5(CAST(c_id AS VARCHAR))", 12)
-    return f"""
-    WITH nn AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> floor(x * {_IVFD_SCALE} + 0.5)) AS v
-      FROM embeddings
-    ),
-    n AS (
-      -- gn mirrors the Spark assigner's zero-norm guard (norm==0 -> 1.0,
-      -- operators/similarity.py ivf_assign_dist): guarded norms drive the
-      -- group-resolution/assignment stages only; probes + final scoring
-      -- divide by the RAW norm exactly like the Spark plan
-      SELECT vec_id, v, norm,
-             CASE WHEN norm = 0 THEN 1.0 ELSE norm END AS gn
-      FROM (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM nn)
-    ),
-    cent AS (
-      SELECT vec_id AS c_id, v AS cv, norm AS cn, gn AS gcn
-      FROM n ORDER BY {cent_h}, vec_id LIMIT {n_cells}
-    ),
-    reps AS (
-      SELECT c_id AS rep_id, cv AS rv, gcn AS grn
-      FROM cent ORDER BY {rep_h}, c_id LIMIT {g}
-    ),
-    cgrp AS (
-      SELECT c_id, cv, gcn,
-             CASE WHEN c_id IN (SELECT rep_id FROM reps)
-                  THEN c_id ELSE best_rep END AS grp
-      FROM (
-        SELECT c.c_id, c.cv, c.gcn, r.rep_id AS best_rep,
-               ROW_NUMBER() OVER (PARTITION BY c.c_id
-                 ORDER BY list_dot_product(c.cv, r.rv) / (c.gcn * r.grn) DESC,
-                          r.rep_id ASC) AS rk
-        FROM cent c, reps r
-      ) WHERE rk = 1
-    ),
-    vgrp AS (
-      SELECT vec_id, grp FROM (
-        SELECT n.vec_id, r.rep_id AS grp,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, r.rv) / (n.gn * r.grn) DESC,
-                          r.rep_id ASC) AS rk
-        FROM n, reps r
-      ) WHERE rk = 1
-    ),
-    assign AS (
-      SELECT vec_id AS n_vec_id, c_id AS cell FROM (
-        SELECT n.vec_id, c.c_id,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.gn * c.gcn) DESC,
-                          c.c_id ASC) AS rk
-        FROM n
-        JOIN vgrp ON vgrp.vec_id = n.vec_id
-        JOIN cgrp c ON c.grp = vgrp.grp
-      ) WHERE rk = 1
-    ),
-    probes AS (
-      SELECT vec_id AS q_vec_id, c_id AS cell FROM (
-        SELECT n.vec_id, c.c_id,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                 ORDER BY list_dot_product(n.v, c.cv) / (n.norm * c.cn) DESC,
-                          c.c_id ASC) AS rk
-        FROM n, cent c WHERE n.vec_id < 10
-      ) WHERE rk <= {nprobe}
-    ),
-    scored AS (
-      SELECT p.q_vec_id, a.n_vec_id,
-             list_dot_product(q.v, m.v) / (q.norm * m.norm) AS cos
-      FROM probes p
-      JOIN assign a ON a.cell = p.cell AND a.n_vec_id != p.q_vec_id
-      JOIN n q ON q.vec_id = p.q_vec_id
-      JOIN n m ON m.vec_id = a.n_vec_id
-    )
-    SELECT q_vec_id, n_vec_id, CAST(rank AS INT) AS rank, cos FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY q_vec_id
-                                   ORDER BY cos DESC, n_vec_id ASC) AS rank
-      FROM scored
-    ) WHERE rank <= {k} ORDER BY q_vec_id, rank
-    """
 
 
 @register(
     "ivf_centroid_join_topk",
-    oracle=_ivf_dist_sql(_IVFD_CELLS, _IVFD_GROUPS, _IVFD_NPROBE, _IVFD_K),
+    oracle=_ivf_dist_sql("TRUE", "vec_id < 10"),
 )
 def q_ivf_centroid_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-10 whose inverted file is built by the DISTRIBUTED
@@ -304,7 +212,6 @@ def q_ivf_centroid_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=_IVFD_CELLS,
         nprobe=_IVFD_NPROBE,
         k=_IVFD_K,
-        vec_col="v",
         assigner=functools.partial(
             S.ivf_assign_dist, n_groups=_IVFD_GROUPS, n_centroids=_IVFD_CELLS
         ),
@@ -325,12 +232,7 @@ def _pq_core_sql() -> str:
     )
     ss = ", ".join(str(i) for i in range(_PQ_M))
     return f"""
-    WITH nn AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> floor(x * {_IVFD_SCALE} + 0.5)) AS v
-      FROM embeddings
-    ),
+    WITH {_IVFD_NN},
     seeds AS (
       SELECT vec_id, v,
              ROW_NUMBER() OVER (ORDER BY {hexi}, vec_id) - 1 AS j
@@ -563,12 +465,7 @@ def _ivfpq_sql() -> str:
         " + list_dot_product(n.v, n.v))"
     )
     return f"""
-    WITH nn AS (
-      SELECT vec_id,
-             list_transform(embedding::DOUBLE[],
-                            x -> floor(x * {_IVFD_SCALE} + 0.5)) AS v
-      FROM embeddings
-    ),
+    WITH {_IVFD_NN},
     cent0 AS (
       SELECT vec_id AS c_id, v AS cv
       FROM nn ORDER BY {hexi}, vec_id LIMIT {_IVFPQ_CELLS}

@@ -403,7 +403,7 @@ def q_minmax_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global min-max normalization (W7; streamlit_app.py:996-998). min/max
     are exact selections (no float accumulation) — deterministic."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    return minmax_normalize(ev, "value", out="norm")
+    return minmax_normalize(ev, "value")
 
 
 # ---------------------------------------------------------------------------

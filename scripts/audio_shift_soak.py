@@ -51,7 +51,7 @@ CELLS = [
         "audio_shifted_pairs",
         (1, 3, 10),
         _prepare,
-        {"2% shifted twins": lambda spark, d: D.audio_shifted_pairs(d[0], max_lag=2)},
+        {"2% shifted twins": lambda spark, d: D.audio_shifted_pairs(d[0])},
         _check,
     )
 ]

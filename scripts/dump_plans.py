@@ -3,11 +3,13 @@
 
 Used for the committed `plans/r<N>/<query>_{before,after}.txt` evidence:
 run once against the current tree for "after", and once with PLAN_REPO
-pointing at a git worktree of the pre-round commit for "before".
+pointing at a checkout of the pre-round commit for "before". With no query
+names it dumps every registered query.
 
   PLAN_OUT=plans/r15 PLAN_SUFFIX=_after python scripts/dump_plans.py q1 q2 ...
   PLAN_REPO=/tmp/r14tree PLAN_OUT=plans/r15 PLAN_SUFFIX=_before \
       python scripts/dump_plans.py q1 q2 ...
+  PLAN_OUT=/tmp/plans python scripts/dump_plans.py      # every query
 
 SPARK_GRAFT_SF_DIR picks the data (default /root/testdata/sf0.1) so the
 plan (AQE initial plan, join strategies from estimates) matches what the
@@ -32,14 +34,12 @@ SUFFIX = os.environ.get("PLAN_SUFFIX", "")
 
 
 def main() -> None:
-    names = sys.argv[1:]
-    if not names:
-        print("usage: dump_plans.py <query> [<query> ...]", file=sys.stderr)
-        sys.exit(2)
     os.makedirs(OUT, exist_ok=True)
 
     from network_iq_spark.registry import QUERIES  # noqa: E402 — after path pin
     from network_iq_spark.session import get_spark  # noqa: E402
+
+    names = sys.argv[1:] or sorted(QUERIES)
 
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")

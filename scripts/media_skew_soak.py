@@ -94,7 +94,7 @@ def _hashed_images(spark, mult):
     df = spark.createDataFrame(
         synth_images(mult), "media_id long, px array<int>"
     ).localCheckpoint()
-    return df.select("media_id", D.image_dhash("px").alias("dh"))
+    return df.select("media_id", D.image_dhash().alias("dh"))
 
 
 def _pairs(data, rows):

@@ -283,7 +283,7 @@ def _prepare_media_index(spark, mult: int) -> str:
         hist = emb.filter(F.col("vec_id") < n_vecs - BATCH_VECS).select(
             F.col("vec_id").alias("media_id"), F.expr(_IMG_QUANT).alias("px")
         )
-        hashed = hist.select("media_id", D.image_dhash("px").alias("dhash"))
+        hashed = hist.select("media_id", D.image_dhash().alias("dhash"))
         os.makedirs(art + ".tmp", exist_ok=True)
         D.hamming_index(hashed, "dhash", 6, n_bits=56).write.parquet(
             f"{art}.tmp/img_index"
@@ -316,7 +316,7 @@ def _inc_media(spark, d):
 
     batch = batch_px.mapInPandas(
         roundtrip, schema="media_id bigint, px array<int>"
-    ).select("media_id", D.image_dhash("px").alias("dhash"))
+    ).select("media_id", D.image_dhash().alias("dhash"))
     index = spark.read.parquet(os.path.join(d, "art_media", "img_index"))
     return D.incremental_hamming_dedup(batch, index, "dhash", 6, n_bits=56)
 

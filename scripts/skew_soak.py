@@ -108,7 +108,7 @@ def _naive_window(spark, data):
 
 def _sliced_window(spark, data):
     out = time_sliced_rolling(
-        data[0], ["cell_id"], "ts", ["value"], n=ROLL_N, slice_fmt="yyyy-MM"
+        data[0], ["cell_id"], "ts", ["value"], n=ROLL_N
     )
     return _digest(out, ["value_rmean", "value_rstd", "value_rdiff"])
 

@@ -108,7 +108,7 @@ CELLS = [
     _cell(
         "resampled_derivative_pairs",
         audio_rows,
-        lambda df: D.resampled_derivative_pairs(df, factor=2),
+        lambda df: D.resampled_derivative_pairs(df),
         ("full_id", "resampled_id"),
     ),
     _cell(
@@ -121,7 +121,7 @@ CELLS = [
     _cell(
         "video_resampled_pairs",
         video_resample_rows,
-        lambda df: D.resampled_derivative_pairs(df, factor=2, stride=16),
+        lambda df: D.resampled_derivative_pairs(df, stride=16),
         ("full_id", "resampled_id"),
     ),
 ]

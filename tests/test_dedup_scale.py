@@ -162,7 +162,7 @@ def test_image_dhash_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "media_id int, px array<int>")
     got = {
         r.media_id: r.dh
-        for r in df.select("media_id", D.image_dhash("px").alias("dh")).collect()
+        for r in df.select("media_id", D.image_dhash().alias("dh")).collect()
     }
     for mid, px in rows:
         want = 0
@@ -185,9 +185,9 @@ def test_image_near_dup_blocked_equals_bruteforce(spark):
     ]
     df = spark.createDataFrame(base + twins, "media_id int, px array<int>")
     blocked = sorted(
-        map(tuple, D.image_near_dup_pairs(df, max_hamming=6, id_col="media_id").collect())
+        map(tuple, D.image_near_dup_pairs(df, max_hamming=6).collect())
     )
-    s = df.select("media_id", D.image_dhash("px").alias("dh"))
+    s = df.select("media_id", D.image_dhash().alias("dh"))
     a = s.select(F.col("media_id").alias("id_a"), F.col("dh").alias("da"))
     b = s.select(F.col("media_id").alias("id_b"), F.col("dh").alias("db"))
     brute = (
@@ -265,7 +265,7 @@ def test_hamming_blocked_pairs_bucket_cap(spark):
     twins = [(i + 500, perturb(px)) for i, px in base if i % 4 == 0]
     crop = [(1000 + i, img(77)) for i in range(25)]  # identical-crop cluster
     df = spark.createDataFrame(base + twins + crop, "media_id int, px array<int>")
-    hashed = df.select("media_id", D.image_dhash("px").alias("dh"))
+    hashed = df.select("media_id", D.image_dhash().alias("dh"))
     un = {
         (r.id_a, r.id_b)
         for r in D.hamming_blocked_pairs(hashed, "dh", 6, n_bits=56, id_col="media_id").collect()
@@ -289,7 +289,7 @@ def test_waveform_dhash_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "media_id int, s array<int>")
     got = {
         r.media_id: r.wh
-        for r in df.select("media_id", D.waveform_dhash("s").alias("wh")).collect()
+        for r in df.select("media_id", D.waveform_dhash().alias("wh")).collect()
     }
     for mid, s in rows:
         want = sum(1 << k for k in range(63) if s[k + 1] > s[k])
@@ -307,9 +307,9 @@ def test_audio_near_dup_blocked_equals_bruteforce(spark):
     ]
     df = spark.createDataFrame(base + twins, "media_id int, s array<int>")
     blocked = sorted(
-        map(tuple, D.audio_near_dup_pairs(df, max_hamming=6, id_col="media_id").collect())
+        map(tuple, D.audio_near_dup_pairs(df, max_hamming=6).collect())
     )
-    h = df.select("media_id", D.waveform_dhash("s").alias("wh"))
+    h = df.select("media_id", D.waveform_dhash().alias("wh"))
     a = h.select(F.col("media_id").alias("id_a"), F.col("wh").alias("wa"))
     b = h.select(F.col("media_id").alias("id_b"), F.col("wh").alias("wb"))
     brute = (
@@ -350,7 +350,7 @@ def test_audio_energy_hash_matches_numpy_reference(spark):
     df = spark.createDataFrame(rows, "media_id int, s array<int>")
     got = {
         r.media_id: r.eh
-        for r in df.select("media_id", D.audio_energy_hash("s").alias("eh")).collect()
+        for r in df.select("media_id", D.audio_energy_hash().alias("eh")).collect()
     }
     for mid, s in rows:
         arr = np.asarray(s, dtype=np.int64)
@@ -363,7 +363,7 @@ def test_audio_energy_hash_matches_numpy_reference(spark):
                     want |= 1 << (off + k)
             off += n_win - 1
         assert got[mid] == want, mid
-    assert D.audio_energy_hash_bits(64) == 44
+    assert D.audio_energy_hash_bits() == 44
 
 
 def test_audio_shifted_pairs_catch_what_dhash_misses(spark):
@@ -380,7 +380,7 @@ def test_audio_shifted_pairs_catch_what_dhash_misses(spark):
     df = spark.createDataFrame(base + twins, "media_id int, s array<int>")
     got = {
         (r.id_a, r.id_b): (r.lag, r.ssd)
-        for r in D.audio_shifted_pairs(df, max_lag=2).collect()
+        for r in D.audio_shifted_pairs(df).collect()
     }
     true_twins = {(i, i + 1000) for i, _ in base if i % 3 == 0}
     # (c) exact verify: every reported pair IS a planted twin
@@ -394,7 +394,7 @@ def test_audio_shifted_pairs_catch_what_dhash_misses(spark):
     # (b) the gradient-hash tier misses every shifted twin
     aligned = {
         (r.id_a, r.id_b)
-        for r in D.audio_near_dup_pairs(df, max_hamming=6, id_col="media_id").collect()
+        for r in D.audio_near_dup_pairs(df, max_hamming=6).collect()
     }
     assert not (aligned & true_twins)
 
@@ -436,7 +436,7 @@ def test_video_dhash_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "media_id int, px array<int>")
     got = {
         r.media_id: r.vh
-        for r in df.select("media_id", D.video_dhash("px").alias("vh")).collect()
+        for r in df.select("media_id", D.video_dhash().alias("vh")).collect()
     }
     for mid, px in rows:
         want = 0
@@ -458,9 +458,9 @@ def test_video_near_dup_blocked_equals_bruteforce(spark):
     ]
     df = spark.createDataFrame(base + twins, "media_id int, px array<int>")
     blocked = sorted(
-        map(tuple, D.video_near_dup_pairs(df, max_hamming=5, id_col="media_id").collect())
+        map(tuple, D.video_near_dup_pairs(df, max_hamming=5).collect())
     )
-    h = df.select("media_id", D.video_dhash("px").alias("vh"))
+    h = df.select("media_id", D.video_dhash().alias("vh"))
     a = h.select(F.col("media_id").alias("id_a"), F.col("vh").alias("va"))
     b = h.select(F.col("media_id").alias("id_b"), F.col("vh").alias("vb"))
     brute = (
@@ -712,8 +712,8 @@ def test_incremental_hamming_equals_full_cross_pairs(spark):
     ]
     hdf = spark.createDataFrame(hist, "media_id int, px array<int>")
     bdf = spark.createDataFrame(batch, "media_id int, px array<int>")
-    hh = hdf.select("media_id", D.image_dhash("px").alias("dhash"))
-    bh = bdf.select("media_id", D.image_dhash("px").alias("dhash"))
+    hh = hdf.select("media_id", D.image_dhash().alias("dhash"))
+    bh = bdf.select("media_id", D.image_dhash().alias("dhash"))
     idx = D.hamming_index(hh, "dhash", 6, n_bits=56)
     inc = sorted(
         map(tuple, D.incremental_hamming_dedup(bh, idx, "dhash", 6, n_bits=56).collect())
@@ -753,7 +753,7 @@ def test_video_frame_shifted_pairs_catch_what_video_dhash_misses(spark):
     df = spark.createDataFrame(base + twins, "media_id int, px array<int>")
     got = {
         (r.id_a, r.id_b): (r.lag, r.ssd)
-        for r in D.video_frame_shifted_pairs(df, max_lag=1).collect()
+        for r in D.video_frame_shifted_pairs(df).collect()
     }
     true_twins = {(i, i + 1000) for i, _ in base if i % 3 == 0}
     assert set(got) <= true_twins
@@ -761,7 +761,7 @@ def test_video_frame_shifted_pairs_catch_what_video_dhash_misses(spark):
     assert all(ssd == 0 and lag == 1 for lag, ssd in got.values())
     aligned = {
         (r.id_a, r.id_b)
-        for r in D.video_near_dup_pairs(df, max_hamming=5, id_col="media_id").collect()
+        for r in D.video_near_dup_pairs(df, max_hamming=5).collect()
     }
     assert not (aligned & true_twins)
 
@@ -791,7 +791,7 @@ def test_resampled_pairs_exact_and_capped(spark):
             rows.append((i + 2000, [int(x) for x in rhu]))
     rows.append((9000, [int(x) for x in rng.integers(-32000, 32000, 32)]))
     df = spark.createDataFrame(rows, "media_id long, s array<int>")
-    out = D.resampled_derivative_pairs(df, factor=2).collect()
+    out = D.resampled_derivative_pairs(df).collect()
     assert {(r.full_id, r.resampled_id) for r in out} == want
     assert all(r.resampled_n == 32 for r in out)
     # constant clique: identical constant clips share derived/own keys
@@ -848,7 +848,7 @@ def test_video_cropped_pairs_catch_what_shift_and_dhash_miss(spark):
     )
     shifted = {
         (r.id_a, r.id_b)
-        for r in D.video_frame_shifted_pairs(flat, max_lag=1).collect()
+        for r in D.video_frame_shifted_pairs(flat).collect()
     }
     assert not (shifted & set(want))
     # (d) constant clips: every frame identical constant -> one hot token
@@ -988,12 +988,12 @@ def test_video_resampled_pairs_strided_exact(spark):
             p = px.reshape(32, 2).astype(np.int64)
             rows.append((i + 2000, [int(x) for x in (p.sum(1) // 2)]))
     df = spark.createDataFrame(rows, "media_id long, s array<int>")
-    out = D.resampled_derivative_pairs(df, factor=2, stride=16).collect()
+    out = D.resampled_derivative_pairs(df, stride=16).collect()
     assert {(r.full_id, r.resampled_id) for r in out} == want
     assert all(r.resampled_n == 32 for r in out)
     # the sample-wise twins ARE found by the stride-1 (audio) tier
     out1 = {(r.full_id, r.resampled_id)
-            for r in D.resampled_derivative_pairs(df, factor=2, stride=1).collect()}
+            for r in D.resampled_derivative_pairs(df, stride=1).collect()}
     assert out1 == {(i, i + 2000) for i in range(24) if i % 3 == 1}
     q = QUERIES["video_resampled_near_dup_pairs"](spark, SF)
     plan = q._jdf.queryExecution().executedPlan().toString()

@@ -22,7 +22,7 @@ def _naive_join(facts, win):
 
 def test_bucketed_equals_naive_containment(spark):
     ev = load_table(spark, SF, "events")
-    win = I.span_windows(ev, n_windows=8, num=2, den=10)
+    win = I.span_windows(ev)
     got = sorted(
         (r.event_id, r.window_id)
         for r in I.bucketed_interval_join(ev, win)
@@ -40,7 +40,7 @@ def test_bucketed_equals_naive_containment(spark):
 def test_overlapping_windows_match_multiple(spark):
     """num=2/den=10 windows overlap by half — interior events must match 2."""
     ev = load_table(spark, SF, "events")
-    win = I.span_windows(ev, n_windows=8, num=2, den=10)
+    win = I.span_windows(ev)
     per_event = (
         I.bucketed_interval_join(ev, win)
         .groupBy("event_id")
@@ -54,7 +54,7 @@ def test_bucketed_join_is_hash_join(spark):
     """The rewrite's purpose: an equi key the planner can hash on. The naive
     predicate-only join is the nested-loop anti-pattern."""
     ev = load_table(spark, SF, "events")
-    win = I.span_windows(ev, n_windows=8, num=2, den=10)
+    win = I.span_windows(ev)
     plan = (
         I.bucketed_interval_join(ev, win)
         ._jdf.queryExecution()

@@ -99,7 +99,7 @@ def test_time_sliced_rolling_equals_plain_when_frames_dont_span(spark):
     df = spark.createDataFrame(
         rows, "event_id bigint, user_id bigint, ts timestamp, value double"
     )
-    plain_df = rolling_features(df, ["user_id"], ["ts"], ["value"], n=3)
+    plain_df = rolling_features(df, ["user_id"], ["ts"], ["value"])
     sliced_df = time_sliced_rolling(df, ["user_id"], "ts", ["value"], n=3)
     plain = {r["event_id"]: (r["value_rmean"], r["value_rstd"], r["value_rdiff"])
              for r in plain_df.collect()}

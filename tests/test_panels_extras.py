@@ -243,7 +243,7 @@ def test_sample_frames_bounded_fanout_and_deterministic(spark):
         "media_id bigint, payload binary, media_type string, "
         "width int, height int, duration_ms int",
     )
-    out = sample_frames(df, every_ms=1000, max_frames=8).collect()
+    out = sample_frames(df, max_frames=8).collect()
     by_id: dict[int, list] = {}
     for r in out:
         by_id.setdefault(r["media_id"], []).append(r)
@@ -253,7 +253,7 @@ def test_sample_frames_bounded_fanout_and_deterministic(spark):
     assert 3 not in by_id
     assert len(by_id[4]) == 8  # metadata-computed cap, not worker-discovered
     # deterministic stub frames: same (payload, ts) -> same bytes
-    out2 = sample_frames(df, every_ms=1000, max_frames=8).collect()
+    out2 = sample_frames(df, max_frames=8).collect()
     assert sorted((r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in out) == \
            sorted((r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in out2)
 

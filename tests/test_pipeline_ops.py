@@ -487,7 +487,7 @@ def test_jaccard_topk_and_rrf_fuse_hand_computed(spark):
     )
     fused = [
         (r.rank, r.doc_id, r.n_lists, r.rrf_units)
-        for r in rrf_fuse([a, b], k=5).collect()
+        for r in rrf_fuse([a, b]).collect()
     ]
     u1, u2 = 1_000_000 // 61, 1_000_000 // 62
     assert fused == [

@@ -220,7 +220,7 @@ def test_ivf_assign_np_matches_interpreted_assignment(spark, vecs):
     }
     np_a = {
         r["vec_id"]: r["cell"]
-        for r in S.ivf_assign_np(vecs, cents, "vec_id").collect()
+        for r in S.ivf_assign_np(vecs, cents).collect()
     }
     assert flat == np_a
 
@@ -584,3 +584,36 @@ def test_ivf_int_recenter_lloyd_monotonicity(spark):
     sse_old = int(d0[np.arange(n), old].sum())
     sse_new = int(d1[np.arange(n), new].sum())
     assert sse_new <= sse_old
+
+
+@pytest.fixture(scope="module")
+def empty_embeddings_dir(spark, tmp_path_factory):
+    """A catalog whose ``embeddings`` table has the real schema and no rows."""
+    d = tmp_path_factory.mktemp("empty_embeddings")
+    spark.read.parquet(f"{SF}/embeddings.parquet").limit(0).write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "query, operator",
+    [
+        ("ann_ivfpq_topk", "assign_np_l2"),
+        ("incremental_ann_topk", "ivf_assign_dist"),
+        ("ivf_centroid_join_topk", "ivf_assign_dist"),
+        ("semantic_dedup_scaled", "ivf_assign_dist"),
+        ("ann_pq_adc_topk", "pq_encode"),
+        ("ann_pq_rerank_topk", "pq_encode"),
+    ],
+)
+def test_trainers_reject_empty_input_by_name(
+    spark, empty_embeddings_dir, query, operator
+):
+    """The driver-side trainers collect centroids or a codebook before the
+    plan is built; on an empty corpus they raise a clear error naming
+    themselves instead of a numpy AxisError or an empty-``max`` failure."""
+    from network_iq_spark.registry import QUERIES
+
+    with pytest.raises(ValueError, match=f"^{operator}: empty input$"):
+        QUERIES[query](spark, empty_embeddings_dir).collect()

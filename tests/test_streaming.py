@@ -902,7 +902,7 @@ def _sink_case(name, spark, root):
         c, i = paths("corpus", "index")
         dhash = frame(
             "media_id bigint, px array<int>",
-            lambda df: df.select("media_id", image_dhash("px").alias("dhash")),
+            lambda df: df.select("media_id", image_dhash().alias("dhash")),
         )
         return (SD.incremental_media_dedup_sink(c, i, "dhash", 6, 56), c, {i: 1},
                 dhash, lambda seed: (_md5_bytes(f"img{seed}", 64),),
@@ -1327,7 +1327,7 @@ def test_incremental_media_dedup_sink_streams_against_at_rest_index(spark, tmp_p
 
     def media(rows):
         df = spark.createDataFrame(rows, "media_id bigint, px array<int>")
-        return df.select("media_id", image_dhash("px").alias("dhash"))
+        return df.select("media_id", image_dhash().alias("dhash"))
 
     a, b = img(1), img(2)
     novel = img(40)

@@ -78,7 +78,7 @@ def test_sample_frames_extracts_real_y4m_frames(spark):
     )
     out = {
         (r.media_id, r.frame_idx): r
-        for r in sample_frames(df, every_ms=1000, max_frames=32).collect()
+        for r in sample_frames(df, max_frames=32).collect()
     }
     # media 1: ts 0 -> frame 0, ts 1000 -> frame 2 (really extracted)
     assert (decode_image(bytes(out[(1, 0)].frame)) == frames[0]).all()
