@@ -7,7 +7,10 @@
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -25,126 +28,26 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["pricing_summary"](spark, SMOKE_SF_DIR)
 
 
-# The driver hash-checks a 50-query prefix of this dict per round. Surface
-# the queries with the least external verification first. After the r14
-# window every member of it holds an r14 stamp; remaining stamps stand at
-# 37 r13 / 39 r12 / 43 r11 / 37 r10. The r15 window (per the r14 verdict's
-# committed overflow order + the same plan-change discipline): FIRST the
-# seven queries whose bench-SF executed plan the r15 optimization commits
-# CHANGED (diff-verified modulo expression/RDD ids against plans/r15/):
-# the three capped-tier consumers whose candidate stage reverted to the
-# rare⋈rare join form after the scale A/B refuted the r14 posting form
-# (jaccard/containment_top_pairs, lsh_quality_report — Exchange 22→24 /
-# 44→48 / 32→34), and the keep-best family whose member scoring moved
-# BEFORE the CC join, collapsing the 4-source members union to one
-# pre-scored frame (image/audio/video_resolution_keep_best + the
-# admission manifest that composes them). The OTHER r15-touched queries
-# (dedup_clusters, census, media_near_dup_census, cluster_keep_best,
-# *_transform_resolution) are runtime-only changes — threaded plan
-# construction, lazy checkpoint materialization, CC-loop overlap — whose
-# executed plans are byte-identical modulo RDD ids (plans/r15/), and
-# they all hold fresh r14 stamps, so they stay out. THEN the committed
-# r15 overflow verbatim: chunk_overlap_admission leads, then the
-# displaced-r10 cohort alphabetically (36 entries), then the first six
-# of the r11 cohort (ann_ivfpq_topk .. centered_mavg_volume). The
-# displaced r11 entries keep their r11 stamps and lead the committed
-# r16 overflow below the boundary.
-_VERIFY_FIRST = [
-    "jaccard_top_pairs",
-    "containment_top_pairs",
-    "lsh_quality_report",
-    "image_resolution_keep_best",
-    "audio_resolution_keep_best",
-    "video_resolution_keep_best",
-    "transform_admission_manifest",
-    "chunk_overlap_admission",
-    "contract_quarantine_summary",
-    "data_contract_events",
-    "decoded_image_stats",
-    "decoded_png_stats",
-    "distinct_users_head",
-    "domain_mix_sample",
-    "embedding_drift",
-    "event_type_transitions",
-    "grouped_quantile",
-    "grouping_sets_revenue",
-    "image_near_dup_pairs",
-    "image_near_dup_pairs_capped",
-    "incremental_ann_topk",
-    "incremental_chunk_near_dup",
-    "incremental_image_dedup",
-    "ivf_centroid_join_topk",
-    "lang_sample_k",
-    "lateral_top_orders",
-    "media_dhash_index",
-    "media_near_dup_census",
-    "nation_trade_volume",
-    "ordered_preview",
-    "packing_efficiency",
-    "parts_bought_together",
-    "pii_redact",
-    "quantized_cosine_topk",
-    "salted_event_stats",
-    "session_window_stats",
-    "sessionize",
-    "shipping_priority",
-    "span_corruption_manifest",
-    "time_sliced_rolling",
-    "variant_props_stats",
-    "video_near_dup_pairs",
-    "vocab_drift_top_movers",
-    "weighted_discount",
-    "ann_ivfpq_topk",
-    "ann_pq_adc_topk",
-    "ann_pq_rerank_topk",
-    "bpe_train_merges",
-    "brand_top_parts",
-    "centered_mavg_volume",
-    # --- 50-slot window boundary ---
-    # overflow, r16-priority order: the displaced r11 cohort, alphabetical
-    "cohort_retention",
-    "customers_without_orders",
-    "decoded_audio_stats",
-    "decoded_video_stats",
-    "dedup_keep_last",
-    "event_type_domains",
-    "funnel_steps",
-    "group_safe_splits",
-    "hourly_baseline",
-    "hourly_compare_unpivot",
-    "hourly_profile",
-    "hourly_type_pivot",
-    "html_extract",
-    "incremental_image_crop_probe",
-    "json_props_stats",
-    "kpi_cards",
-    "latest_snapshot",
-    "minmax_norm",
-    "nation_supplier_balance",
-    "order_line_rollup",
-    "order_priority_stats",
-    "order_snapshot_diff",
-    "pricing_summary",
-    "quality_psi_drift",
-    "recursive_copurchase_reach",
-    "regional_revenue",
-    "risky_hours",
-    "rolling_features",
-    "segment_acctbal_stats",
-    "sequence_packing",
-    "simhash60_pairs",
-    "stratified_sample_counts",
-    "top_revenue_customers",
-    "url_canonical_dedup",
-    "video_frame_shifted_pairs",
-    "zscore_top_anomalies",
-]
+# The driver hash-checks a 50-query prefix of this dict per round, and
+# stamps each query it checked in that round's CORRECTNESS_r<NN>.json.
+# Surface the least recently verified queries first: order by the round of
+# each query's last ``hash_match: true`` stamp, oldest first (never
+# verified ranks as round 0), ties by name.
+def _last_verified() -> dict[str, int]:
+    last: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name, stamp in json.load(fh).items():
+                if stamp.get("hash_match") is True:
+                    last[name] = max(last.get(name, 0), rnd)
+    return last
 
 
 def _ordered(d: dict) -> dict:
-    front = {k: d[k] for k in _VERIFY_FIRST if k in d}
-    rest = {k: v for k, v in d.items() if k not in front}
-    return {**front, **rest}
+    last = _last_verified()
+    return {k: d[k] for k in sorted(d, key=lambda k: (last.get(k, 0), k))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -136,7 +136,7 @@ def main() -> None:
     print("[hotspots] worst p95 latency:", [(r.cell_id, round(r.p95_latency_ms, 1)) for r in hot])
     anom = anomaly_panel(cur).collect()[:3]
     print("[anomalies] top z:", [(r.cell_id, round(r.max_anom_z, 2)) for r in anom])
-    inc = incident_panel(cur, "latency_ms", q=0.9)
+    inc = incident_panel(cur, q=0.9)
     print(f"[incidents] {inc.count()} cell-hours above P90")
 
     # -- ML: features → labels → train → score -----------------------------

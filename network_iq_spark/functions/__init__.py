@@ -3,8 +3,8 @@
 Two concerns live here:
 
 1. **Reference scalar semantics** re-expressed as Column expressions —
-   clip (F6), zero-replace guard (F7), fill-null (F8), weekend flag (W8 with
-   the pandas-Mon=0 vs Spark-Sun=1 mapping), coerce-or-null casts (P7).
+   zero-replace guard (F7), day of week and weekend flag (W8 with the
+   pandas-Mon=0 vs Spark-Sun=1 mapping).
 
 2. **Cross-engine deterministic aggregates** for the correctness oracle.
    Floating-point SUM/AVG are order-dependent; Spark and DuckDB will disagree
@@ -89,26 +89,14 @@ def sql_davg(expr: str, scale: int = 4) -> str:
 # ---------------------------------------------------------------------------
 
 
-def clip01(col: Column | str) -> Column:
-    """``Series.clip(0, 1)`` (streamlit_app.py:996) → least/greatest."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.least(F.greatest(c, F.lit(0.0)), F.lit(1.0))
-
-
-def zero_guard(col: Column | str, eps: float = 1e-9) -> Column:
+def zero_guard(col: Column | str) -> Column:
     """``Series.replace(0, 1e-9)`` (streamlit_app.py:540,608,691).
 
     Semantic requirement of the z-score operators, not an optimization: a
-    zero std must become ``eps`` so the division stays finite.
+    zero std must become 1e-9 so the division stays finite.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c == 0, F.lit(eps)).otherwise(c)
-
-
-def fill0(col: Column | str) -> Column:
-    """``Series.fillna(0)`` (streamlit_app.py:700-701,829)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c, F.lit(0.0))
+    return F.when(c == 0, F.lit(1e-9)).otherwise(c)
 
 
 def pandas_dow(ts: Column | str) -> Column:
@@ -126,16 +114,3 @@ def is_weekend(ts: Column | str) -> Column:
     SURVEY.md §2.5)."""
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.dayofweek(c).isin(1, 7).cast("int")
-
-
-def coerce_double(col: Column | str) -> Column:
-    """``pd.to_numeric(errors="coerce")`` (P7): failed casts yield null even
-    under ANSI mode."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("double")
-
-
-def coerce_timestamp(col: Column | str) -> Column:
-    """``pd.to_datetime(errors="coerce")`` (P7)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("timestamp")

@@ -15,7 +15,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,7 +79,6 @@ def read_csv_split(
     spark: SparkSession,
     path: str | Sequence[str],
     schema: StructType,
-    bad_records_col: str = "_corrupt_record",
 ) -> tuple[DataFrame, DataFrame]:
     """Header-CSV scan split into (valid_rows, corrupt_lines) — the CSV
     twin of ``sources.jsonl.read_jsonl_split``, because a raw operator feed
@@ -105,15 +104,15 @@ def read_csv_split(
     from pyspark.sql.types import StringType, StructField, StructType as _ST
 
     paths = [path] if isinstance(path, str) else list(path)
-    full = _ST(list(schema.fields) + [StructField(bad_records_col, StringType())])
+    full = _ST(list(schema.fields) + [StructField("_corrupt_record", StringType())])
     scanned = (
         spark.read.option("header", True)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", bad_records_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .schema(full)
         .csv(paths)
     )
-    valid = scanned.filter(F.col(bad_records_col).isNull()).drop(bad_records_col)
+    valid = scanned.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     # concat_ws over every data column: always-true at runtime (concat_ws
     # skips nulls, length is never negative) but not provably so to the
     # optimizer, which keeps the full schema in the required set even under
@@ -125,10 +124,10 @@ def read_csv_split(
     )
     corrupt = (
         scanned.filter(
-            F.col(bad_records_col).isNotNull() & (F.length(all_cols) >= 0)
+            F.col("_corrupt_record").isNotNull() & (F.length(all_cols) >= 0)
         )
         .select(
-            F.coalesce(F.col(bad_records_col), all_cols).alias("raw_line"),
+            F.coalesce(F.col("_corrupt_record"), all_cols).alias("raw_line"),
             F.input_file_name().alias("src_file"),
         )
     )
@@ -139,35 +138,29 @@ def ingest(
     df: DataFrame,
     output_path: str,
     partition_cols: Sequence[str] = ("date", "cell_id"),
-    clean_rules: Callable[[], list[Column]] = default_clean_rules,
-    derivations: Callable[[], dict[str, Column]] = default_derivations,
-    mode: str = "overwrite",
 ) -> None:
-    """Cleansing filter → derived projections → partition-aligned
-    repartition → hive-partitioned parquet write."""
+    """Cleansing filter (:func:`default_clean_rules`) → derived projections
+    (:func:`default_derivations`) → partition-aligned repartition →
+    hive-partitioned parquet write that overwrites ``output_path``."""
     out = df
-    for rule in clean_rules():
+    for rule in default_clean_rules():
         out = out.filter(rule)
-    for name, expr in derivations().items():
+    for name, expr in default_derivations().items():
         out = out.withColumn(name, expr)
     (
         out.repartition(*partition_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy(*partition_cols)
         .parquet(output_path)
     )
 
 
-def read_curated(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
+def read_curated(spark: SparkSession, path: str) -> DataFrame:
     """S2: hive-partitioned parquet scan with automatic partition discovery —
     filters on ``date``/``cell_id`` prune directories before any I/O.
 
-    Pass ``schema`` to keep an all-filtered (hence file-less) curated dir
-    readable: Spark cannot infer a schema from a ``_SUCCESS``-only output.
+    An all-filtered (hence file-less) curated dir is not readable this
+    way: Spark cannot infer a schema from a ``_SUCCESS``-only output. Read
+    one with ``spark.read.schema(...).parquet(path)``.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return spark.read.parquet(path)

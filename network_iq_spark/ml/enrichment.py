@@ -205,11 +205,10 @@ def enrich_batch(
     df: DataFrame,
     llm: LlmFn,
     system_msg: str,
-    json_col: str = "context_json",
-    out_col: str = "briefing",
     calls_per_second: float = 5.0,
 ) -> DataFrame:
-    """Per-row LLM enrichment at scale: ``mapInPandas`` batches rows into one
+    """Per-row LLM enrichment at scale: appends ``briefing``, the model's
+    answer to each row's ``context_json``. ``mapInPandas`` batches rows into one
     Python worker per partition, throttled to ``calls_per_second`` — the
     pattern for enriching millions of keys without per-row UDF overhead.
     Partition count bounds concurrency (repartition upstream to set the
@@ -218,7 +217,7 @@ def enrich_batch(
 
     # copy — StructType.add MUTATES the DataFrame's own schema object
     out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, StringType())]
+        list(df.schema.fields) + [StructField("briefing", StringType())]
     )
     min_interval = 1.0 / calls_per_second if calls_per_second > 0 else 0.0
 
@@ -226,13 +225,13 @@ def enrich_batch(
         last = 0.0
         for pdf in batches:
             results = []
-            for payload in pdf[json_col]:
+            for payload in pdf["context_json"]:
                 wait = min_interval - (time.monotonic() - last)
                 if wait > 0:
                     time.sleep(wait)
                 last = time.monotonic()
                 results.append(llm(system_msg, payload))
-            pdf[out_col] = results
+            pdf["briefing"] = results
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)

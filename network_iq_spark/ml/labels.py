@@ -18,9 +18,9 @@ def derive_labels(
     features: DataFrame,
     metric: str = "latency_ms",
     q: float = 0.8,
-    hi_bad: bool = True,
 ) -> DataFrame:
-    """Append ``label`` = next-hour incident flag.
+    """Append ``label`` = next-hour incident flag: the next hour's
+    ``metric`` at or above its ``q`` quantile (a high-is-bad metric).
 
     ``features`` must carry (cell_id, ts, <metric>). The quantile threshold
     comes from the row-grain scope (A15 semantics); ``lead`` looks one row
@@ -32,11 +32,7 @@ def derive_labels(
     flagged = features.crossJoin(F.broadcast(thr)).withColumn(
         "__next__", nxt
     )
-    incident = (
-        (F.col("__next__") >= F.col("__thr__"))
-        if hi_bad
-        else (F.col("__next__") <= F.col("__thr__"))
-    )
+    incident = F.col("__next__") >= F.col("__thr__")
     return (
         flagged.filter(F.col("__next__").isNotNull())
         .withColumn("label", incident.cast("double"))

@@ -61,10 +61,9 @@ REFERENCE_MODEL_COMPARISON = {
 }
 
 
-def make_estimator(
-    features_col: str = "features_vec", label_col: str = "label"
-) -> tuple[object, str]:
-    """(estimator, name): ``SparkXGBClassifier(**XGB_PARAMS)`` wherever
+def make_estimator() -> tuple[object, str]:
+    """(estimator, name) over ``features_vec`` and ``label``:
+    ``SparkXGBClassifier(**XGB_PARAMS)`` wherever
     xgboost.spark imports (M6 parity — the reference ships an XGB bundle),
     else the LogisticRegression fallback. Both are pyspark.ml Estimators,
     so either slots into the same Pipeline unchanged; the distributed XGB
@@ -75,15 +74,15 @@ def make_estimator(
     except ImportError:
         return (
             LogisticRegression(
-                featuresCol=features_col,
-                labelCol=label_col,
+                featuresCol="features_vec",
+                labelCol="label",
                 probabilityCol="probability",
             ),
             "logistic_regression",
         )
     return (
         SparkXGBClassifier(
-            features_col=features_col, label_col=label_col, **XGB_PARAMS
+            features_col="features_vec", label_col="label", **XGB_PARAMS
         ),
         "xgboost",
     )
@@ -132,20 +131,16 @@ def build_pipeline(
             inputCols=["num_scaled", *ohe_outputs], outputCol="features_vec"
         )
     )
-    est, _ = make_estimator(features_col="features_vec", label_col="label")
+    est, _ = make_estimator()
     stages.append(est)
     return Pipeline(stages=stages)
 
 
-def train_next_hour(
-    labeled: DataFrame,
-    num_cols: Sequence[str] = NUM_FEATURES,
-    cat_cols: Sequence[str] = CAT_FEATURES,
-    label_rule: dict | None = None,
-) -> tuple[PipelineModel, dict]:
-    """Fit the pipeline; return (model, bundle-metadata with metrics)."""
-    present_num = [c for c in num_cols if c in labeled.columns]
-    present_cat = [c for c in cat_cols if c in labeled.columns]
+def train_next_hour(labeled: DataFrame) -> tuple[PipelineModel, dict]:
+    """Fit the pipeline on the ``NUM_FEATURES`` and ``CAT_FEATURES`` columns
+    ``labeled`` carries; return (model, bundle-metadata with metrics)."""
+    present_num = [c for c in NUM_FEATURES if c in labeled.columns]
+    present_cat = [c for c in CAT_FEATURES if c in labeled.columns]
     train = labeled.na.fill(0.0, subset=present_num).na.fill(
         "missing", subset=present_cat
     )
@@ -160,15 +155,14 @@ def train_next_hour(
     n = train.count()
     positives = int(train.agg({"label": "sum"}).collect()[0][0] or 0)
     metrics = {"auc": auc, "ap": ap, "n": n, "positives": positives}
-    metrics.update(precision_recall_at_k(scored, ks=(10, 20)))
+    metrics.update(precision_recall_at_k(scored))
     _, est_name = make_estimator()
     meta = {
         "estimator": est_name,
         "reference_model_comparison": REFERENCE_MODEL_COMPARISON,
         "num_cols": present_num,
         "cat_cols": present_cat,
-        "label_rule": label_rule
-        or {
+        "label_rule": {
             "metric": "latency_ms",
             "q": 0.8,
             "hi_bad_primary": True,
@@ -183,14 +177,12 @@ def train_next_hour(
     return model, meta
 
 
-def precision_recall_at_k(
-    scored: DataFrame, ks: Sequence[int] = (10, 20), label_col: str = "label"
-) -> dict[str, float]:
-    """M4 bundle metrics parity: P@k / R@k, keyed ``p_at_k``/``r_at_k``
-    exactly like the reference bundle's metrics dict
+def precision_recall_at_k(scored: DataFrame) -> dict[str, float]:
+    """M4 bundle metrics parity: P@k / R@k for k in 10 and 20, keyed
+    ``p_at_k``/``r_at_k`` exactly like the reference bundle's metrics dict
     (data/models/next_hour_congestion.joblib: p_at_10/r_at_10/p_at_20/
     r_at_20). Top-k by predicted P(label=1); one TakeOrderedAndProject of
-    max(ks) rows plus one scalar agg — no full collect.
+    20 rows plus one scalar agg — no full collect.
 
     Tied scores (duplicate feature rows) order negatives first — a
     DETERMINISTIC, conservative tie-break; a bare ``orderBy(p1).limit(k)``
@@ -201,20 +193,20 @@ def precision_recall_at_k(
     from pyspark.sql import functions as F
 
     total_pos = scored.agg(
-        F.sum(F.col(label_col).cast("double")).alias("p")
+        F.sum(F.col("label").cast("double")).alias("p")
     ).first()["p"] or 0.0
     top = (
         scored.select(
-            F.col(label_col).cast("double").alias("y"),
+            F.col("label").cast("double").alias("y"),
             vector_to_array("probability").getItem(1).alias("p1"),
         )
         .filter(F.col("p1").isNotNull() & ~F.isnan("p1"))
         .orderBy(F.col("p1").desc(), F.col("y").asc())
-        .limit(max(ks))
+        .limit(20)
         .collect()
     )
     out: dict[str, float] = {}
-    for k in ks:
+    for k in (10, 20):
         hits = sum(r.y for r in top[:k])
         out[f"p_at_{k}"] = hits / k
         out[f"r_at_{k}"] = (hits / total_pos) if total_pos else 0.0

@@ -628,10 +628,9 @@ def hamming_index(
     hash_col: str,
     max_hamming: int,
     n_bits: int,
-    id_col: str = "media_id",
 ) -> DataFrame:
-    """At-rest segment index for incremental Hamming dedup: (id, hash,
-    seg, seg_val) — one row per fingerprint segment. A deployment
+    """At-rest segment index for incremental Hamming dedup: (media_id,
+    hash, seg, seg_val) — one row per fingerprint segment. A deployment
     persists this partitioned/bucketed by (seg, seg_val) so the batch
     probe co-locates without a history-side shuffle (the lsh_index
     precedent for the text tier)."""
@@ -641,10 +640,10 @@ def hamming_index(
         F.struct(F.lit(i).alias("seg"), segs[i].alias("seg_val")) for i in range(n_seg)
     ]
     return df.select(
-        F.col(id_col), F.col(hash_col).alias("__h__"),
+        F.col("media_id"), F.col(hash_col).alias("__h__"),
         F.explode(F.array(*seg_structs)).alias("b"),
     ).select(
-        F.col(id_col), F.col("__h__").alias(hash_col),
+        F.col("media_id"), F.col("__h__").alias(hash_col),
         F.col("b.seg").alias("seg"), F.col("b.seg_val").alias("seg_val"),
     )
 
@@ -655,7 +654,6 @@ def incremental_hamming_dedup(
     hash_col: str,
     max_hamming: int,
     n_bits: int,
-    id_col: str = "media_id",
 ) -> DataFrame:
     """Near-dup detection of an incoming media batch AGAINST an at-rest
     fingerprint index (:func:`hamming_index`) — the media twin of
@@ -668,12 +666,12 @@ def incremental_hamming_dedup(
     from the hash pair, data already in the join output) replaces a
     distinct() shuffle, exactly as in :func:`hamming_blocked_pairs`."""
     n_seg = max_hamming + 1
-    probe = hamming_index(batch, hash_col, max_hamming, n_bits, id_col).select(
-        F.col(id_col).alias("new_id"), F.col(hash_col).alias("h_new"),
+    probe = hamming_index(batch, hash_col, max_hamming, n_bits).select(
+        F.col("media_id").alias("new_id"), F.col(hash_col).alias("h_new"),
         "seg", "seg_val",
     )
     base_idx = index.select(
-        F.col(id_col).alias("old_id"), F.col(hash_col).alias("h_old"),
+        F.col("media_id").alias("old_id"), F.col(hash_col).alias("h_old"),
         "seg", "seg_val",
     )
     xor = F.col("h_new").bitwiseXOR(F.col("h_old"))
@@ -2167,33 +2165,29 @@ def incremental_near_dup(
     index_bands: DataFrame,
     index_sets: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """Near-dup detection of an incoming batch AGAINST an at-rest LSH index
-    (:func:`lsh_index`): band-bucket collisions between batch and index
+    """Near-dup detection of an incoming (doc_id, text) batch AGAINST an
+    at-rest LSH index (:func:`lsh_index`): band-bucket collisions between batch and index
     generate candidates; exact Jaccard over the hash sets verifies. Output
     (new_doc, old_doc, jaccard ≥ threshold) — the rows a continual-ingest
     pipeline drops (or links) before appending survivors and their index
     rows. Cost is O(batch × collision rate), never O(history)."""
     new_bands, new_sets = lsh_index(
-        incoming, text_col, id_col, n_bands, rows_per_band
+        incoming, n_bands=n_bands, rows_per_band=rows_per_band
     )
     cand = (
-        new_bands.select(
-            F.col(id_col).alias("new_doc"), "band", "bucket"
-        )
+        new_bands.select(F.col("doc_id").alias("new_doc"), "band", "bucket")
         .join(
-            index_bands.select(F.col(id_col).alias("old_doc"), "band", "bucket"),
+            index_bands.select(F.col("doc_id").alias("old_doc"), "band", "bucket"),
             ["band", "bucket"],
         )
         .select("new_doc", "old_doc")
         .distinct()
     )
-    sa = new_sets.select(F.col(id_col).alias("new_doc"), F.col("hs").alias("hs_a"))
-    sb = index_sets.select(F.col(id_col).alias("old_doc"), F.col("hs").alias("hs_b"))
+    sa = new_sets.select(F.col("doc_id").alias("new_doc"), F.col("hs").alias("hs_a"))
+    sb = index_sets.select(F.col("doc_id").alias("old_doc"), F.col("hs").alias("hs_b"))
     inter = F.array_size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
     return (
         cand.join(sa, "new_doc")
@@ -2566,9 +2560,7 @@ def _lm_verify(
     )
 
 
-def landmark_index(
-    df: DataFrame, id_col: str = "media_id", s_col: str = "s"
-) -> DataFrame:
+def landmark_index(df: DataFrame) -> DataFrame:
     """AT-REST landmark index: one row per history clip —
     (media_id, s, toks: array<struct<tok, pos>>) — the deployment
     artifact of the landmark family (signal store and fingerprints in
@@ -2577,7 +2569,7 @@ def landmark_index(
     tok; here it is the committed aux_data artifact the probe query
     reads (the media-index discipline). Same derivation as the pairs
     tier via the shared helpers — the two can never desync."""
-    marks = _lm_norm(df, id_col, s_col)
+    marks = _lm_norm(df, "media_id", "s")
     return marks.select(
         F.col("__id__").alias("media_id"),
         F.col("__s__").alias("s"),
@@ -2588,11 +2580,6 @@ def landmark_index(
 def incremental_landmark_probe(
     batch: DataFrame,
     index: DataFrame,
-    min_votes: int = 2,
-    corr2_min: float = 0.995,
-    min_overlap: int = 8,
-    id_col: str = "media_id",
-    s_col: str = "s",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Incremental landmark dedup — the DEPLOYMENT shape of the
@@ -2605,8 +2592,9 @@ def incremental_landmark_probe(
     fingerprints together), so no second corpus join exists. Output
     (new_id, old_id, offset, votes, corr2) — offset is the batch
     clip's alignment inside the history clip, exactly the pairs
-    tier's semantic with a = history, b = batch."""
-    bmarks = _lm_norm(batch, id_col, s_col)
+    tier's semantic with a = history, b = batch. A pair needs 2 votes,
+    corr² ≥ 0.995 and 8 overlapping samples."""
+    bmarks = _lm_norm(batch, "media_id", "s")
     btoks = _lm_explode_tokens(bmarks)
     itoks = index.select(
         F.col("media_id").alias("old_id"),
@@ -2623,12 +2611,12 @@ def incremental_landmark_probe(
         F.col("__id__").alias("new_id"), "tok", F.col("pos").alias("__pb__")
     )
     joined = itoks.join(tb, "tok").filter(F.col("old_id") != F.col("new_id"))
-    best = _lm_vote_best(joined, "old_id", "new_id", min_votes)
+    best = _lm_vote_best(joined, "old_id", "new_id", 2)
     sa = index.select(
         F.col("media_id").alias("old_id"), F.col("s").alias("__sa__")
     )
     sb = bmarks.select(
         F.col("__id__").alias("new_id"), F.col("__s__").alias("__sb__")
     )
-    out = _lm_verify(best, sa, sb, "old_id", "new_id", corr2_min, min_overlap)
+    out = _lm_verify(best, sa, sb, "old_id", "new_id", 0.995, 8)
     return out.select("new_id", "old_id", "offset", "votes", "corr2")

@@ -16,8 +16,6 @@ in tests/test_reference_parity.py):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,7 +34,7 @@ BASE_FEATURES = (
     "sinr_db",
 )
 
-LO_BAD_METRICS = ("throughput_mbps",)  # low values are bad (sign-flip z)
+LO_BAD_METRICS = ("throughput_mbps",)  # low values are bad (flag ≤ threshold)
 
 
 def _false_if_null(cond: Column) -> Column:
@@ -74,9 +72,9 @@ def kpi_panel(df: DataFrame) -> DataFrame:
     )
 
 
-def hourly_panel(df: DataFrame, metric: str, smooth_window: int = 3, q: float = 0.9) -> DataFrame:
+def hourly_panel(df: DataFrame, metric: str, smooth_window: int = 3) -> DataFrame:
     """Hourly profile + centered smoothing + quantile risk flags
-    (streamlit_app.py:320-375). The threshold is the ROW-grain quantile of
+    (streamlit_app.py:320-375). The threshold is the ROW-grain P90 of
     the scope; the flag applies to hourly means (A15 scope semantics)."""
     hourly = (
         df.withColumn("hour", F.hour("timestamp"))
@@ -87,7 +85,7 @@ def hourly_panel(df: DataFrame, metric: str, smooth_window: int = 3, q: float = 
     # threshold as a plan-level scalar (no collect): percentile over the row
     # grain, broadcast cross-joined onto the hourly aggregate
 
-    row_thr = df.agg(F.percentile(F.col(metric), F.lit(q)).alias("__thr__"))
+    row_thr = df.agg(F.percentile(F.col(metric), F.lit(0.9)).alias("__thr__"))
     out = smoothed.crossJoin(F.broadcast(row_thr))
     flag = (
         F.col("avg_value") <= F.col("__thr__")
@@ -136,66 +134,55 @@ def _hour_baseline(df: DataFrame, metric: str, mean_name: str, std_name: str) ->
     )
 
 
-def anomaly_panel(df: DataFrame, metric: str = "latency_ms", k: int = 10) -> DataFrame:
-    """Anomaly top-k (streamlit_app.py:516-552): z vs hour-of-day baseline,
-    sign-flipped for lo-bad metrics, per-cell max, top-k."""
-    base = _hour_baseline(df, metric, "base_mean", "base_std")
+def anomaly_panel(df: DataFrame) -> DataFrame:
+    """Anomaly top-10 (streamlit_app.py:516-552) of ``latency_ms``, a
+    hi-bad metric: z vs hour-of-day baseline, per-cell max, top-10."""
+    base = _hour_baseline(df, "latency_ms", "base_mean", "base_std")
     scored = baseline_join(
         df.withColumn("hour", F.hour("timestamp")), base, ["hour"]
     ).withColumn(
         "z",
-        (F.col(metric) - F.col("base_mean")) / zero_guard(F.col("base_std")),
+        (F.col("latency_ms") - F.col("base_mean")) / zero_guard(F.col("base_std")),
     )
-    z_bad = (-F.col("z")) if metric in LO_BAD_METRICS else F.col("z")
     agg = (
-        scored.withColumn("z_bad", z_bad)
+        scored.withColumn("z_bad", F.col("z"))
         .groupBy("cell_id")
         .agg(F.max("z_bad").alias("max_anom_z"))
     )
-    return top_k(agg, [("max_anom_z", True)], k, tiebreak=["cell_id"])
+    return top_k(agg, [("max_anom_z", True)], 10, tiebreak=["cell_id"])
 
 
-def incident_panel(
-    df: DataFrame, metric: str = "latency_ms", q: float = 0.95, k: int = 50
-) -> DataFrame:
-    """Incident summary (streamlit_app.py:554-625): cell-hour means, risk
-    flag from the ROW-grain quantile (hi-bad ≥ P_q; lo-bad ≤ P_{1-q}),
-    z vs hour-of-day baseline, top-k by severity.
+def incident_panel(df: DataFrame, q: float = 0.95) -> DataFrame:
+    """Incident summary (streamlit_app.py:554-625) of ``latency_ms``, a
+    hi-bad metric: cell-hour means, risk flag from the ROW-grain quantile
+    (≥ P_q), z vs hour-of-day baseline, top 50 by severity.
 
     Output columns mirror the reference export: cell_id, hour_ts,
-    <metric value as `value`>, anom_z.
+    <latency_ms mean as `value`>, anom_z.
     """
     scope = df.withColumn("ts", F.date_trunc("hour", F.col("timestamp")))
     agg = (
         scope.filter(F.col("cell_id").isNotNull() & F.col("ts").isNotNull())
         .groupBy("cell_id", "ts")
-        .agg(F.avg(metric).alias("value"))
+        .agg(F.avg("latency_ms").alias("value"))
         .na.drop(subset=["value"])
     )
-    lo_bad = metric in LO_BAD_METRICS
-    thr_q = (1.0 - q) if lo_bad else q
-    row_thr = scope.agg(F.percentile(F.col(metric), F.lit(thr_q)).alias("__thr__"))
+    row_thr = scope.agg(F.percentile(F.col("latency_ms"), F.lit(q)).alias("__thr__"))
     flagged = agg.crossJoin(F.broadcast(row_thr)).withColumn(
-        "risky",
-        _false_if_null(
-            F.col("value") <= F.col("__thr__")
-            if lo_bad
-            else F.col("value") >= F.col("__thr__")
-        ),
+        "risky", _false_if_null(F.col("value") >= F.col("__thr__"))
     )
-    base = _hour_baseline(scope, metric, "base_mean", "base_std")
+    base = _hour_baseline(scope, "latency_ms", "base_mean", "base_std")
     scored = baseline_join(
         flagged.withColumn("hour", F.hour("ts")), base, ["hour"]
     ).withColumn(
         "z", (F.col("value") - F.col("base_mean")) / zero_guard(F.col("base_std"))
     )
-    z_bad = (-F.col("z")) if lo_bad else F.col("z")
     incidents = (
-        scored.withColumn("anom_z", z_bad)
+        scored.withColumn("anom_z", F.col("z"))
         .filter(F.col("risky"))
         .select("cell_id", F.col("ts").alias("hour_ts"), "value", "anom_z")
     )
-    return top_k(incidents, [("anom_z", True)], k, tiebreak=["cell_id", "hour_ts"])
+    return top_k(incidents, [("anom_z", True)], 50, tiebreak=["cell_id", "hour_ts"])
 
 
 def map_panel(predictions: DataFrame, coords: DataFrame) -> DataFrame:
@@ -246,15 +233,13 @@ def map_panel(predictions: DataFrame, coords: DataFrame) -> DataFrame:
 
 def briefing_context(
     df: DataFrame,
-    metric: str = "latency_ms",
     predictions: DataFrame | None = None,
     model_meta: dict | None = None,
-    top_k: int = 10,
 ) -> DataFrame:
     """AI-briefing context (``_collect_ai_context``,
     streamlit_app.py:1055-1115) as ONE struct-building query: the reference
-    runs ~8 collect-like extractions; here the KPIs, hotspot/anomaly top-k
-    arrays, and prediction head fold into a single 1-row plan with
+    runs ~8 collect-like extractions; here the KPIs, latency hotspot/anomaly
+    top-10 arrays, and prediction head fold into a single 1-row plan with
     ``to_json`` (F14) and a sha-256 content hash (F13) for cache keying.
     """
     import json
@@ -265,10 +250,10 @@ def briefing_context(
         )
     )
     hot = (
-        hotspot_panels(df, k=top_k)["worst_latency"]
+        hotspot_panels(df)["worst_latency"]
         .agg(F.collect_list(F.struct("cell_id", "p95_latency_ms")).alias("hotspots"))
     )
-    anom = anomaly_panel(df, metric, k=top_k).agg(
+    anom = anomaly_panel(df).agg(
         F.collect_list(F.struct("cell_id", "max_anom_z")).alias("anomalies")
     )
     ctx = kpis.crossJoin(hot).crossJoin(anom)
@@ -294,15 +279,11 @@ def briefing_context(
     )
 
 
-def build_history_features(
-    df: DataFrame,
-    label_metric: str = "latency_ms",
-    roll: int = 3,
-    features: Sequence[str] = BASE_FEATURES,
-) -> DataFrame:
+def build_history_features(df: DataFrame) -> DataFrame:
     """M1 feature pipeline over ALL rows (the training-side variant):
-    hour-floor → hour-of-day z-baseline → per-cell trailing rolling
-    mean/std/diff → calendar feats. ``build_latest_features`` is this plan's
+    hour-floor → hour-of-day ``latency_ms`` z-baseline → per-cell trailing
+    3-row rolling mean/std/diff of each of ``BASE_FEATURES`` → calendar
+    feats. ``build_latest_features`` is this plan's
     latest-hour slice.
 
     The reference needs a grouped ``apply`` + positional repair (J4); here
@@ -316,20 +297,16 @@ def build_history_features(
     base = (
         use.groupBy("hour")
         .agg(
-            F.avg(label_metric).alias("b_mean"),
-            F.stddev_samp(label_metric).alias("b_std"),
+            F.avg("latency_ms").alias("b_mean"),
+            F.stddev_samp("latency_ms").alias("b_std"),
         )
         .withColumn("b_std", zero_guard(F.col("b_std")))
     )
     use = baseline_join(use, base, ["hour"]).withColumn(
-        "z_bad", (F.col(label_metric) - F.col("b_mean")) / F.col("b_std")
+        "z_bad", (F.col("latency_ms") - F.col("b_mean")) / F.col("b_std")
     )
-    present = [c for c in features if c in use.columns]
-    roll_w = (
-        Window.partitionBy("cell_id")
-        .orderBy("ts", "timestamp")
-        .rowsBetween(-(roll - 1), 0)
-    )
+    present = [c for c in BASE_FEATURES if c in use.columns]
+    roll_w = Window.partitionBy("cell_id").orderBy("ts", "timestamp").rowsBetween(-2, 0)
     seq_w = Window.partitionBy("cell_id").orderBy("ts", "timestamp")
     for c in present:
         col = F.col(c)
@@ -347,15 +324,8 @@ def build_history_features(
     )
 
 
-def build_latest_features(
-    df: DataFrame,
-    label_metric: str = "latency_ms",
-    roll: int = 3,
-    features: Sequence[str] = BASE_FEATURES,
-) -> DataFrame:
+def build_latest_features(df: DataFrame) -> DataFrame:
     """M1 feature builder (``_build_latest_features``,
     streamlit_app.py:667-715): the history pipeline sliced to the latest
     hour (P12) — the inference-time frame."""
-    return latest_snapshot(
-        build_history_features(df, label_metric, roll, features), "ts"
-    )
+    return latest_snapshot(build_history_features(df), "ts")

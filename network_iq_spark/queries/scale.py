@@ -438,5 +438,5 @@ def q_incremental_quantile_refresh(spark: SparkSession, sf_dir: str) -> DataFram
     ]
     merged = merge_histogram_states(states, keys)
     return histogram_quantiles(
-        merged, keys, lo=_HQ_LO, hi=_HQ_HI, n_bins=_HQ_BINS, pcts=(50, 95)
+        merged, keys, lo=_HQ_LO, hi=_HQ_HI, n_bins=_HQ_BINS
     ).orderBy("event_type")

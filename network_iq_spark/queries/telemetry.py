@@ -668,25 +668,25 @@ def q_variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH tagged AS (
       SELECT
-        CASE WHEN NOT (value IS NOT NULL AND value >= 0.0)
-             THEN 1 ELSE 0 END AS f_value_nonneg,
-        CASE WHEN NOT (user_id IS NOT NULL AND user_id >= 0)
-             THEN 1 ELSE 0 END AS f_user_valid,
-        CASE WHEN NOT (event_type IN ('view','click','purchase','signup','error'))
-             THEN 1 ELSE 0 END AS f_known_type
+        CASE WHEN value IS NOT NULL AND value >= 0.0
+             THEN 0 ELSE 1 END AS f_value_nonneg,
+        CASE WHEN user_id IS NOT NULL AND user_id >= 0
+             THEN 0 ELSE 1 END AS f_user_valid,
+        CASE WHEN event_type IN ('view','click','purchase','signup','error')
+             THEN 0 ELSE 1 END AS f_known_type
       FROM events
     )
     SELECT failed_rule, n FROM (
       SELECT 'value_nonneg' AS failed_rule,
-             CAST(SUM(f_value_nonneg) AS BIGINT) AS n FROM tagged
+             CAST(COALESCE(SUM(f_value_nonneg), 0) AS BIGINT) AS n FROM tagged
       UNION ALL
-      SELECT 'user_valid', CAST(SUM(f_user_valid) AS BIGINT) FROM tagged
+      SELECT 'user_valid', CAST(COALESCE(SUM(f_user_valid), 0) AS BIGINT) FROM tagged
       UNION ALL
-      SELECT 'known_type', CAST(SUM(f_known_type) AS BIGINT) FROM tagged
+      SELECT 'known_type', CAST(COALESCE(SUM(f_known_type), 0) AS BIGINT) FROM tagged
       UNION ALL
       SELECT '__valid_rows__',
-             CAST(SUM(CASE WHEN f_value_nonneg + f_user_valid + f_known_type = 0
-                           THEN 1 ELSE 0 END) AS BIGINT) FROM tagged
+             CAST(COALESCE(SUM(CASE WHEN f_value_nonneg + f_user_valid + f_known_type = 0
+                                    THEN 1 ELSE 0 END), 0) AS BIGINT) FROM tagged
     ) ORDER BY failed_rule
     """,
 )
@@ -695,7 +695,12 @@ def q_contract_quarantine_summary(spark: SparkSession, sf_dir: str) -> DataFrame
     validate_and_quarantine) rolled up: per-rule violation counts from the
     quarantine branch (exploded failed_rules — a row violating two rules
     counts under both) plus the surviving-row count from the valid branch.
-    NULL predicate results count as failures (unknown ≠ pass)."""
+    NULL predicate results count as failures (unknown ≠ pass), and every
+    count is 0, never NULL, on an empty table. The oracle states both
+    itself: each flag is ``CASE WHEN <rule> THEN 0 ELSE 1 END``, so a
+    NULL ``event_type`` fails ``known_type`` (``NOT (NULL IN ...)`` would
+    take the ``ELSE 0`` branch and pass it), and each ``SUM`` is wrapped
+    in ``COALESCE(..., 0)``."""
     from network_iq_spark.operators.quality import validate_and_quarantine
 
     ev = load_table(spark, sf_dir, "events")

@@ -9,7 +9,7 @@ that tolerance at plan-build time: aliases resolve once against the schema
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -33,15 +33,11 @@ def pick(df: DataFrame, *candidates: str) -> str | None:
     return None
 
 
-def resolve(
-    df: DataFrame,
-    aliases: Mapping[str, Sequence[str]] = TELEMETRY_ALIASES,
-    required: Sequence[str] = (),
-) -> DataFrame:
-    """Rename alias columns to canonical names; raise only for missing
-    *required* canonicals."""
+def resolve(df: DataFrame, required: Sequence[str] = ()) -> DataFrame:
+    """Rename ``TELEMETRY_ALIASES`` columns to canonical names; raise only
+    for missing *required* canonicals."""
     out = df
-    for canonical, cands in aliases.items():
+    for canonical, cands in TELEMETRY_ALIASES.items():
         found = pick(out, *cands)
         if found is None:
             if canonical in required:

@@ -6,13 +6,12 @@ from network_iq_spark.sources.jsonl import (
     write_jsonl,
 )
 from network_iq_spark.sources.orc import parquet_to_orc, read_orc, write_orc
-from network_iq_spark.sources.tables import TABLES, load_table, load_tables
+from network_iq_spark.sources.tables import TABLES, load_table
 
 __all__ = [
     "TABLES",
     "jsonl_to_parquet",
     "load_table",
-    "load_tables",
     "parquet_to_orc",
     "read_jsonl",
     "read_jsonl_split",

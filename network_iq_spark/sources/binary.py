@@ -27,20 +27,16 @@ from pyspark.sql import functions as F
 def read_media_dir(
     spark: SparkSession,
     path: str,
-    media_type: str = "image",
     glob: str | None = None,
-    streaming: bool = False,
 ) -> DataFrame:
-    """Scan a media directory into MEDIA_SCHEMA-shaped rows.
+    """Scan an image directory into MEDIA_SCHEMA-shaped rows.
 
     media_id is the 48-bit md5 of the file path — stable across re-scans
     and engines, independent of listing order. width/height/duration are
     left null here (metadata-free listing stays map-only); fill them with
     :func:`with_image_dims` when downstream stages need real dimensions.
     """
-    reader = (
-        spark.readStream if streaming else spark.read
-    ).format("binaryFile")
+    reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     raw = reader.load(path)
@@ -49,7 +45,7 @@ def read_media_dir(
         .cast("bigint")
         .alias("media_id"),
         F.col("content").alias("payload"),
-        F.lit(media_type).alias("media_type"),
+        F.lit("image").alias("media_type"),
         F.lit(None).cast("int").alias("width"),
         F.lit(None).cast("int").alias("height"),
         F.lit(None).cast("int").alias("duration_ms"),

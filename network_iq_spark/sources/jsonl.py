@@ -33,10 +33,9 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    bad_records_col: str = "_corrupt_record",
 ) -> DataFrame:
     """Schema-first JSONL scan in PERMISSIVE mode: malformed lines land in
-    ``bad_records_col`` instead of failing the job — at crawl scale some
+    ``_corrupt_record`` instead of failing the job — at crawl scale some
     fraction of lines is always broken, and dropping them silently (or
     dying on line 40 billion) are both wrong. Callers split the frame with
     :func:`read_jsonl_split`.
@@ -44,12 +43,12 @@ def read_jsonl(
     # StructType.add MUTATES the receiver — build a fresh struct so the
     # caller's schema object is never widened behind their back
     full = T.StructType(
-        list(schema.fields) + [T.StructField(bad_records_col, T.StringType())]
+        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", bad_records_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
 
@@ -58,7 +57,6 @@ def read_jsonl_split(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    bad_records_col: str = "_corrupt_record",
 ) -> tuple[DataFrame, DataFrame]:
     """Schema-first JSONL scan split into (valid_rows, corrupt_lines).
 
@@ -72,21 +70,21 @@ def read_jsonl_split(
     both probes keeps the valid/corrupt classification consistent; blank
     lines (which the json reader skips entirely) are excluded from the
     corrupt probe to match."""
-    scanned = read_jsonl(spark, path, schema, bad_records_col)
-    valid = scanned.filter(F.col(bad_records_col).isNull()).drop(bad_records_col)
+    scanned = read_jsonl(spark, path, schema)
+    valid = scanned.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     probe = T.StructType(
-        list(schema.fields) + [T.StructField(bad_records_col, T.StringType())]
+        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
     parsed = F.from_json(
         F.col("value"),
         probe,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": bad_records_col},
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
     )
     corrupt = (
         spark.read.text(path)
         .filter(F.length(F.trim(F.col("value"))) > 0)
         .withColumn("_parsed", parsed)
-        .filter(F.col(f"_parsed.{bad_records_col}").isNotNull())
+        .filter(F.col("_parsed._corrupt_record").isNotNull())
         .select(
             F.col("value").alias("raw_line"),
             F.input_file_name().alias("src_file"),
@@ -95,14 +93,13 @@ def read_jsonl_split(
     return valid, corrupt
 
 
-def write_jsonl(
-    df: DataFrame, path: str, mode: str = "overwrite", compression: str | None = "gzip"
-) -> None:
-    """Distributed JSONL writer (one file per partition). Gzip by default:
+def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
+    """Distributed JSONL writer (one file per partition) that overwrites
+    ``path``. Gzip by default:
     JSONL exports exist to leave the cluster, and 3-5× wire shrink beats
     splittability for an export artifact (for re-ingest, parquet is the
     answer, not uncompressed JSONL)."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if compression:
         w = w.option("compression", compression)
     w.json(path)
@@ -113,15 +110,15 @@ def jsonl_to_parquet(
     src: str,
     dst: str,
     schema: T.StructType,
-    mode: str = "overwrite",
 ) -> DataFrame:
     """The edge-to-lake hop: schema-first JSONL scan → parquet, map-only
     (no shuffle — file-parallel read, file-parallel write), corrupt lines
-    quarantined to ``{dst}_corrupt``. Returns the valid frame re-read from
-    the parquet copy so downstream plans get column pruning + pushdown."""
+    quarantined to ``{dst}_corrupt``; both outputs are overwritten. Returns
+    the valid frame re-read from the parquet copy so downstream plans get
+    column pruning + pushdown."""
     valid, corrupt = read_jsonl_split(spark, src, schema)
-    valid.write.mode(mode).parquet(dst)
-    corrupt.write.mode(mode).json(f"{dst.rstrip('/')}_corrupt")
+    valid.write.mode("overwrite").parquet(dst)
+    corrupt.write.mode("overwrite").json(f"{dst.rstrip('/')}_corrupt")
     return spark.read.parquet(dst)
 
 
@@ -134,9 +131,8 @@ def read_xml_records(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    record_tag: str = "record",
 ) -> DataFrame:
-    """One-XML-record-per-line edge scan (the XML sibling of
+    """One-XML-record-per-line (``<record>``) edge scan (the XML sibling of
     :func:`read_jsonl`): a distributed text scan + ``from_xml`` under an
     EXPLICIT schema — no inference pass, map-only, file-parallel. Rows
     whose line fails to parse or lacks the record tag come back as
@@ -148,7 +144,7 @@ def read_xml_records(
     return (
         spark.read.text(path)
         .filter(F.length(F.trim(F.col("value"))) > 0)
-        .filter(F.col("value").contains(f"<{record_tag}"))
+        .filter(F.col("value").contains("<record"))
         .select(parsed.alias("_r"))
         .select("_r.*")
     )

@@ -136,8 +136,6 @@ def zorder_write(
     path: str,
     cols: Sequence[str],
     n_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet write (the OPTIMIZE ZORDER technique,
     parquet-native): interleave the bits of each clustering column's
@@ -147,7 +145,8 @@ def zorder_write(
     min-max stats (Spark parquet filter pushdown, DuckDB zone maps) skip
     files for predicates on ANY of the columns, not just the first sort
     key. A plain ``ORDER BY a, b`` clusters only on ``a``; b-predicates
-    still read every file.
+    still read every file. Each column gets up to 16 bits of rank; the
+    write overwrites ``path``.
 
     Scale shape: one scalar agg for the per-column bounds (broadcast), a
     map to compute the Morton code, one range exchange on it — the same
@@ -161,11 +160,11 @@ def zorder_write(
         raise ValueError("zorder_write expects 2-4 clustering columns")
     # The interleaved code must fit in the 63 value bits of a signed bigint:
     # bit j of column i lands at j*len(cols)+i, so the top bit is at
-    # bits*len(cols)-1. With 4 columns and the default bits=16 that would be
+    # bits*len(cols)-1. With 4 columns and 16 bits each that would be
     # position 63 — the SIGN bit — making the upper half of the 4th column's
     # range sort NEGATIVE and breaking the z-curve layout. Clamp per-column
     # resolution so the code stays non-negative (4 cols → 15 bits each).
-    bits = min(bits, 63 // len(cols))
+    bits = min(16, 63 // len(cols))
     bounds_row = df.agg(
         *[F.min(c).alias(f"_mn_{c}") for c in cols],
         *[F.max(c).alias(f"_mx_{c}") for c in cols],
@@ -195,7 +194,7 @@ def zorder_write(
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -207,7 +206,6 @@ def bucketed_write(
     n_buckets: int,
     path: str,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed (+ optionally sorted) parquet table — the CO-LOCATED join
     layout (docs/SCALE.md): rows are hash-distributed into ``n_buckets``
@@ -226,7 +224,7 @@ def bucketed_write(
     """
     writer = (
         df.write.format("parquet")
-        .mode(mode)
+        .mode("overwrite")
         .option("path", path)
         .bucketBy(int(n_buckets), *keys)
     )
@@ -412,11 +410,10 @@ ROLLUP_SCALE = 4
 def rollup_state(
     df: DataFrame,
     keys: Sequence[str],
-    value_col: str = "value",
-    scale: int = ROLLUP_SCALE,
 ) -> DataFrame:
-    """Mergeable per-key aggregate STATE — the commutative-monoid form of a
-    rollup (count / non-null count / exact integer-unit sum / min / max).
+    """Mergeable per-key aggregate STATE of ``value`` — the commutative-monoid
+    form of a rollup (count / non-null count / exact integer-unit sum / min /
+    max).
 
     This is the materialized-view-maintenance pattern: at 100 TB you never
     re-aggregate the full fact table per refresh — you keep this state
@@ -432,14 +429,14 @@ def rollup_state(
     """
     from pyspark.sql import functions as F
 
-    mult = float(10**scale)
-    units = F.floor(F.col(value_col) * F.lit(mult) + F.lit(0.5)).cast("bigint")
+    mult = float(10**ROLLUP_SCALE)
+    units = F.floor(F.col("value") * F.lit(mult) + F.lit(0.5)).cast("bigint")
     return df.groupBy(*keys).agg(
         F.count("*").alias("n_rows"),
-        F.count(value_col).alias("n_vals"),
+        F.count("value").alias("n_vals"),
         F.sum(units).alias("sum_units"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
     )
 
 
@@ -463,12 +460,12 @@ def merge_rollup_states(states: Sequence[DataFrame], keys: Sequence[str]) -> Dat
     )
 
 
-def present_rollup(state: DataFrame, scale: int = ROLLUP_SCALE) -> DataFrame:
+def present_rollup(state: DataFrame) -> DataFrame:
     """Presentation grain of a rollup state: recover the exact decimal sum
     and the order-independent average from the integer-unit state."""
     from pyspark.sql import functions as F
 
-    mult = float(10**scale)
+    mult = float(10**ROLLUP_SCALE)
     return state.select(
         *[c for c in state.columns if c not in ("n_rows", "n_vals", "sum_units", "min_value", "max_value")],
         "n_rows",
@@ -486,15 +483,14 @@ def rollup_distinct_state(
     df: DataFrame,
     keys: Sequence[str],
     distinct_col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """The sketch tier ``rollup_state`` points at: a mergeable
-    DISTINCT-count state (DataSketches HLL, register array of 2^lgk
+    DISTINCT-count state (DataSketches HLL, register array of 2^12
     buckets). Exact distinct is not boundedly mergeable — its state is the
     key set itself — but the HLL register array IS a monoid (union =
     element-wise max), so it composes with the same at-rest/merge/refresh
-    pattern as the exact monoid columns. Estimate error ~1.6%/√(2^lgk)
-    (~2.5% at the default lgk=12, 4 KB per key). Determinism caveat,
+    pattern as the exact monoid columns. Estimate error ~1.6%/√(2^12)
+    (~2.5%, 4 KB per key). Determinism caveat,
     measured not assumed: the merge is DETERMINISTIC (same partials →
     same registers → same estimate, which is what replay convergence
     needs), but a merged sketch is NOT estimate-identical to one built
@@ -508,7 +504,7 @@ def rollup_distinct_state(
 
     return df.groupBy(*keys).agg(
         F.count("*").alias("n_rows"),
-        F.hll_sketch_agg(distinct_col, F.lit(lgk)).alias("distinct_sketch"),
+        F.hll_sketch_agg(distinct_col, F.lit(12)).alias("distinct_sketch"),
     )
 
 
@@ -676,9 +672,8 @@ def histogram_quantiles(
     lo: float,
     hi: float,
     n_bins: int,
-    pcts: Sequence[int] = (50, 95),
 ) -> DataFrame:
-    """Quantile estimates from the histogram state: for each percentile p,
+    """Quantile estimates from the histogram state: for p in 50 and 95,
     the RIGHT EDGE of the smallest bin whose cumulative count reaches p% —
     an integer-arithmetic threshold (cum·100 ≥ p·total), so engines cannot
     disagree at the boundary. Error ≤ one bin width by construction."""
@@ -699,7 +694,7 @@ def histogram_quantiles(
         F.sum("cnt").over(w_all).alias("total"),
     )
     aggs = [F.max("total").alias("n_vals")]
-    for p in pcts:
+    for p in (50, 95):
         hit = F.when(
             F.col("cum") * 100 >= F.lit(int(p)) * F.col("total"), F.col("bin")
         )

@@ -17,44 +17,34 @@ map-only conversion in either direction, no shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """ORC scan. Schema is optional (unlike JSONL: ORC files carry their
-    own typed footer, so there is no inference pass to avoid), but passing
-    one pins the read contract and lets mismatches fail at planning time
-    instead of 3 hours into a 100 TB job."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
+    """ORC scan under the files' own schema (unlike JSONL: ORC files carry
+    their own typed footer, so there is no inference pass to avoid). A
+    reader that must pin the read contract, so mismatches fail at planning
+    time instead of 3 hours into a 100 TB job, states it with
+    ``spark.read.schema(...).orc(path)``."""
+    return spark.read.orc(path)
 
 
 def write_orc(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    compression: str = "zstd",
 ) -> None:
-    """Partitioned ORC sink (zstd: best ratio/speed of the codecs ORC
-    ships; splittable either way because ORC compresses per-stripe)."""
-    w = df.write.mode(mode).option("compression", compression)
+    """Partitioned ORC sink that overwrites ``path`` (zstd: best
+    ratio/speed of the codecs ORC ships; splittable either way because ORC
+    compresses per-stripe)."""
+    w = df.write.mode("overwrite").option("compression", "zstd")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
 
 
-def parquet_to_orc(
-    spark: SparkSession, src: str, dst: str, mode: str = "overwrite"
-) -> DataFrame:
+def parquet_to_orc(spark: SparkSession, src: str, dst: str) -> DataFrame:
     """Lake-to-lake hop, map-only (file-parallel read and write, no
     shuffle). Returns the frame re-read from the ORC copy so callers chain
     onto the converted table."""
-    write_orc(spark.read.parquet(src), dst, mode=mode)
+    write_orc(spark.read.parquet(src), dst)
     return read_orc(spark, dst)

@@ -1,4 +1,4 @@
-"""Export sinks (SURVEY.md §2.1 S8-S10) + the S4 partition-path fallback.
+"""Export sinks (SURVEY.md §2.1 S8-S9) + the S4 partition-path fallback.
 
 The reference's exports are UI-sized CSV byte blobs (streamlit_app.py:
 844-849,915-925); a distributed engine needs both that driver-side shape
@@ -18,22 +18,18 @@ def to_csv_bytes(df: DataFrame, limit: int = 100_000) -> bytes:
     return df.limit(limit).toPandas().to_csv(index=False).encode("utf-8")
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S9 distributed CSV writer (one file per partition)."""
-    df.write.mode(mode).option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S9 distributed CSV writer (one file per partition) that overwrites
+    ``path``."""
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_markdown(text: str, path: str) -> None:
-    """S10: persist an LLM briefing (driver-side — not an engine op)."""
-    with open(path, "w") as f:
-        f.write(text)
-
-
-def partition_value_from_path(pattern: str = r"date=([^/]+)") -> Column:
-    """S4: regex partition-value parse from the input file path — the
-    fallback when a layout was written without hive discovery in mind.
+def partition_value_from_path() -> Column:
+    """S4: regex parse of the ``date=`` partition value from the input
+    file path — the fallback when a layout was written without hive
+    discovery in mind.
     Built-in partition discovery (S2) supersedes this for proper layouts."""
-    return F.regexp_extract(F.input_file_name(), pattern, 1)
+    return F.regexp_extract(F.input_file_name(), r"date=([^/]+)", 1)
 
 
 def parse_partition_path(path: str) -> dict[str, str]:

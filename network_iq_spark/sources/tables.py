@@ -169,11 +169,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All catalog tables as lazy DataFrames (no I/O until an action)."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def read_evolved_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     """Schema-evolution-tolerant parquet scan: union directories written
     at different schema generations (columns added over time) with

@@ -269,9 +269,9 @@ _RECORD_SCHEMA = (
 )
 
 
-def warc_records(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Explode WARC file blobs (one row per file, e.g. from the
-    ``binaryFile`` source) into one row per record. Arrow-batched
+def warc_records(df: DataFrame) -> DataFrame:
+    """Explode WARC file blobs (one row per file in ``content``, e.g. from
+    the ``binaryFile`` source) into one row per record. Arrow-batched
     map-only — at 100 TB this is the embarrassingly-parallel stage;
     per-record rows are what every downstream operator (html_to_text,
     dedup, quality) consumes."""
@@ -290,7 +290,7 @@ def warc_records(df: DataFrame, content_col: str = "content") -> DataFrame:
                     "body",
                 )
             }
-            for blob in pdf[content_col]:
+            for blob in pdf["content"]:
                 if blob is None:
                     continue
                 for rec in iter_warc(bytes(blob)):

@@ -18,7 +18,6 @@ from network_iq_spark.streaming.kpis import (
     latest_per_key,
     read_telemetry_stream,
     sliding_distinct_keys,
-    sliding_features,
     tumbling_kpis,
 )
 from network_iq_spark.streaming.sessions import streaming_sessionize
@@ -33,7 +32,6 @@ __all__ = [
     "with_content_fingerprint",
     "read_telemetry_stream",
     "sliding_distinct_keys",
-    "sliding_features",
     "streaming_sessionize",
     "tumbling_kpis",
 ]

@@ -25,9 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def warc_document_stream(
-    spark: SparkSession, warc_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def warc_document_stream(spark: SparkSession, warc_dir: str) -> DataFrame:
     """Streaming (doc_id, url, text) from a directory ``.warc.gz`` files
     land in. ``doc_id`` is the 64-bit hash of the target URI — the
     deterministic identity a crawler has before any registry exists;
@@ -35,14 +33,16 @@ def warc_document_stream(
     from network_iq_spark.operators.text import html_to_text
     from network_iq_spark.sources.warc import warc_records
 
-    reader = spark.readStream.format("binaryFile").schema(
-        # the binaryFile source's fixed schema, stated explicitly — file
-        # streaming sources refuse to infer
-        "path string, modificationTime timestamp, length bigint, content binary"
+    blobs = (
+        spark.readStream.format("binaryFile")
+        .schema(
+            # the binaryFile source's fixed schema, stated explicitly — file
+            # streaming sources refuse to infer
+            "path string, modificationTime timestamp, length bigint, content binary"
+        )
+        .load(warc_dir)
+        .select("content")
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    blobs = reader.load(warc_dir).select("content")
     recs = warc_records(blobs)
     pages = recs.filter(
         (F.col("rec_type") == "response")

@@ -31,33 +31,30 @@ from pyspark.sql import functions as F
 from network_iq_spark.operators import dedup as D
 
 
-def with_content_fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "fingerprint"
-) -> DataFrame:
-    """md5 over whitespace-normalized lowercase text — identical to the
-    batch ``operators.text.fingerprint`` key, usable on a stream (pure
-    map, no state)."""
+def with_content_fingerprint(df: DataFrame) -> DataFrame:
+    """``fingerprint``: md5 over whitespace-normalized lowercase ``text`` —
+    identical to the batch ``operators.text.fingerprint`` key, usable on a
+    stream (pure map, no state)."""
     from network_iq_spark.operators.text import WS_RE
 
-    norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), WS_RE, " ")
-    return df.withColumn(out, F.md5(norm))
+    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_RE, " ")
+    return df.withColumn("fingerprint", F.md5(norm))
 
 
 def streaming_exact_dedup(
     stream: DataFrame,
     keys: Sequence[str],
     event_time_col: str,
-    watermark_delay: str = "2 hours",
 ) -> DataFrame:
     """First-arrival-wins exact dedup over a stream.
 
     ``dropDuplicatesWithinWatermark`` stores one state row per key seen
-    within the watermark horizon and emits only the first arrival; state
+    within the 2 h watermark horizon and emits only the first arrival; state
     for a key is evicted once the watermark passes its event time, so
     memory is O(keys per watermark window), not O(stream history).
     """
     return stream.withWatermark(
-        event_time_col, watermark_delay
+        event_time_col, "2 hours"
     ).dropDuplicatesWithinWatermark(list(keys))
 
 
@@ -156,8 +153,6 @@ def incremental_near_dup_sink(
     bands_path: str,
     sets_path: str,
     threshold: float = 0.6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     carry_cols: Sequence[str] = (),
 ):
     """``foreachBatch`` sink closing the continual-ingest dedup loop AS A
@@ -165,7 +160,7 @@ def incremental_near_dup_sink(
     MinHash-LSH index (operators/dedup.py ``incremental_near_dup`` —
     O(batch × collision rate), never O(history)); survivors append to the
     corpus and their band/set rows append to the index, so the next batch
-    sees them.
+    sees them. Batches carry ``doc_id`` and ``text``.
 
     This is the scale-correct home for UNBOUNDED dedup state: the
     watermark-bounded ``streaming_exact_dedup`` keeps state in executor
@@ -175,13 +170,13 @@ def incremental_near_dup_sink(
     """
 
     def rejected(batch, bands, sets):
-        return D.incremental_near_dup(
-            batch, bands, sets, threshold, text_col=text_col, id_col=id_col
-        ).select("new_doc")
+        return D.incremental_near_dup(batch, bands, sets, threshold).select(
+            "new_doc"
+        )
 
     return _admission_sink(
-        corpus_path, (bands_path, sets_path), (id_col, text_col), carry_cols,
-        rejected, lambda s: D.lsh_index(s, text_col, id_col),
+        corpus_path, (bands_path, sets_path), ("doc_id", "text"), carry_cols,
+        rejected, D.lsh_index,
     )
 
 
@@ -191,8 +186,6 @@ def incremental_media_dedup_sink(
     hash_col: str,
     max_hamming: int,
     n_bits: int,
-    id_col: str = "media_id",
-    carry_cols: Sequence[str] = (),
 ):
     """``foreachBatch`` sink closing the continual-ingest MEDIA dedup
     loop — the perceptual-hash sibling of :func:`incremental_near_dup_sink`:
@@ -206,21 +199,21 @@ def incremental_media_dedup_sink(
     them.
 
     One sink serves all modalities — the index schema is
-    (id, hash, seg, seg_val) regardless of whether the fingerprint came
+    (media_id, hash, seg, seg_val) regardless of whether the fingerprint came
     from pixels, PCM, or frames; a deployment runs one sink per modality
     stream against per-modality paths.
     """
 
     def rejected(batch, index):
         return D.incremental_hamming_dedup(
-            batch, index, hash_col, max_hamming, n_bits, id_col=id_col
+            batch, index, hash_col, max_hamming, n_bits
         ).select("new_id")
 
     def index(keys):
-        return (D.hamming_index(keys, hash_col, max_hamming, n_bits, id_col=id_col),)
+        return (D.hamming_index(keys, hash_col, max_hamming, n_bits),)
 
     return _admission_sink(
-        corpus_path, (index_path,), (id_col, hash_col), carry_cols, rejected, index
+        corpus_path, (index_path,), ("media_id", hash_col), (), rejected, index
     )
 
 
@@ -404,23 +397,13 @@ def chunk_admission_sink(
     )
 
 
-def incremental_landmark_dedup_sink(
-    corpus_path: str,
-    index_path: str,
-    min_votes: int = 2,
-    corr2_min: float = 0.995,
-    min_overlap: int = 8,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    carry_cols: Sequence[str] = (),
-    max_bucket_size: int | None = 256,
-):
+def incremental_landmark_dedup_sink(corpus_path: str, index_path: str):
     """``foreachBatch`` sink closing the continual-ingest LANDMARK
     dedup loop (r14) — the composed-transform sibling of
     :func:`incremental_trim_dedup_sink`, landing the same round as the
     tier itself so the landmark family ships with the full
     pairs/probe/sink symmetry every exact tier carries: each
-    micro-batch of (id, s) clips probes the AT-REST landmark index
+    micro-batch of (media_id, s) clips probes the AT-REST landmark index
     (operators/dedup.py ``incremental_landmark_probe`` — the index row
     stores signal + fingerprints together, so the gain-robust verify
     needs no second corpus read; O(batch) extraction, O(batch ×
@@ -431,16 +414,16 @@ def incremental_landmark_dedup_sink(
     the next batch sees them. The family's measured-recall
     contract carries over verbatim: a missed near-dup is admitted (the
     S-curve tiers' documented failure direction), never a false
-    drop — precision is the verify's, which the soak pins at 0 FP."""
+    drop — precision is the verify's, which the soak pins at 0 FP. The
+    probe keeps the family's defaults (2 votes, corr² ≥ 0.995, 8
+    overlapping samples) and caps each landmark bucket at 256 rows."""
 
     def rejected(batch, index):
         return D.incremental_landmark_probe(
-            batch, index, min_votes=min_votes, corr2_min=corr2_min,
-            min_overlap=min_overlap, id_col=id_col, s_col=s_col,
-            max_bucket_size=max_bucket_size,
+            batch, index, max_bucket_size=256
         ).select("new_id")
 
     return _admission_sink(
-        corpus_path, (index_path,), (id_col, s_col), carry_cols,
-        rejected, lambda s: (D.landmark_index(s, id_col=id_col, s_col=s_col),),
+        corpus_path, (index_path,), ("media_id", "s"), (),
+        rejected, lambda s: (D.landmark_index(s),),
     )

@@ -24,15 +24,13 @@ def enrich_stream(
     stream: DataFrame,
     dim: DataFrame,
     on: str | list[str],
-    how: str = "left",
 ) -> DataFrame:
-    """Broadcast the static dim onto the stream.
+    """Broadcast the static dim onto the stream with a left join.
 
-    ``left`` by default: an event whose key is missing from reference data
-    must flow through (with nulls) rather than silently vanish — dropping
-    unmatched events inside an enrichment step is the classic silent-loss
-    bug in streaming pipelines. Use ``inner`` only when the dim is a
-    filter by design.
+    ``left``: an event whose key is missing from reference data must flow
+    through (with nulls) rather than silently vanish — dropping unmatched
+    events inside an enrichment step is the classic silent-loss bug in
+    streaming pipelines.
     """
     if not stream.isStreaming:
         raise ValueError("enrich_stream expects a streaming DataFrame")
@@ -41,4 +39,4 @@ def enrich_stream(
             "dim side must be static (stream-stream joins need watermarks "
             "on both sides — use an explicit stream-stream join instead)"
         )
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), on, "left")

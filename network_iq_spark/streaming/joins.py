@@ -26,12 +26,10 @@ def interval_join_streams(
     key: str,
     left_ts: str,
     right_ts: str,
-    interval: str = "10 minutes",
     watermark: str = "20 minutes",
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two streams on ``key`` where ``right_ts`` lands within
-    [left_ts, left_ts + interval]. Both sides get the same watermark; the
+    """Inner-join two streams on ``key`` where ``right_ts`` lands within
+    [left_ts, left_ts + 10 minutes]. Both sides get the same watermark; the
     range predicate bounds the state the store must keep.
 
     Column hygiene: the right side's key is renamed before the join so the
@@ -48,6 +46,6 @@ def interval_join_streams(
     cond = (
         (F.col(lk) == F.col(rk))
         & (F.col(right_ts) >= F.col(left_ts))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {interval}"))
+        & (F.col(right_ts) <= F.col(left_ts) + F.expr("INTERVAL 10 minutes"))
     )
-    return l.join(r, cond, how).drop(rk)
+    return l.join(r, cond, "inner").drop(rk)

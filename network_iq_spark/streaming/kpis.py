@@ -6,7 +6,8 @@ a direct tumbling-window analogue:
 
 - A4/A5/A9 grouped aggregates → ``groupBy(window(ts, "1 hour"), keys)`` with
   a watermark bounding state.
-- W2 trailing features → sliding windows (``window(ts, "3 hours", "1 hour")``).
+- distinct keys per trailing window → sliding windows
+  (``window(ts, "3 hours", "1 hour")``) over an HLL++ sketch.
 - P12 latest-per-key snapshot → arbitrary stateful dedup
   (``applyInPandasWithState`` — the flatMapGroupsWithState analogue).
 
@@ -31,7 +32,6 @@ def read_telemetry_stream(
     spark: SparkSession,
     path: str | None = None,
     schema: StructType | None = None,
-    fmt: str = "parquet",
     source: str = "file",
     options: dict | None = None,
 ) -> DataFrame:
@@ -39,8 +39,8 @@ def read_telemetry_stream(
     (tumbling/sliding KPIs, sessionize, dedup, joins) never know where the
     rows came from:
 
-    - ``file`` (default): stream over the same at-rest layout the batch
-      tier scans — one pipeline definition serves both (Kappa posture).
+    - ``file`` (default): stream over the same at-rest parquet layout the
+      batch tier scans — one pipeline definition serves both (Kappa posture).
     - ``rate``: the built-in deterministic-content generator (consecutive
       ``value`` counters) — compose with :func:`telemetry_from_rate` to get
       typed telemetry rows; used by the rate-source equivalence tests.
@@ -53,7 +53,7 @@ def read_telemetry_stream(
     """
     opts = dict(options or {})
     if source == "file":
-        reader = spark.readStream.format(fmt).schema(schema)
+        reader = spark.readStream.format("parquet").schema(schema)
         for k, v in opts.items():
             reader = reader.option(k, v)
         return reader.load(path)
@@ -80,19 +80,19 @@ def decode_kafka_telemetry(raw: DataFrame, schema: StructType) -> DataFrame:
     ).select("r.*")
 
 
-def telemetry_from_rate(rate_df: DataFrame, epoch: str = "2025-01-01 00:00:00",
-                        n_cells: int = 4) -> DataFrame:
+def telemetry_from_rate(rate_df: DataFrame) -> DataFrame:
     """Deterministic telemetry rows from the rate source's ``value``
     counter (pure column expressions — apply the same transform to
     ``spark.range`` for the batch twin): event time advances one second
-    per row from ``epoch``, cells round-robin, latency is an exact
-    integer-valued function of the counter. Content depends only on WHICH
+    per row from 2025-01-01 00:00:00, four cells round-robin, latency is
+    an exact integer-valued function of the counter. Content depends only on WHICH
     counters a trigger consumed (always a contiguous prefix), never on
     wall-clock — what makes rate-source equivalence tests exact."""
     v = F.col("value")
+    epoch = F.to_timestamp(F.lit("2025-01-01 00:00:00"))
     return rate_df.select(
-        (F.to_timestamp(F.lit(epoch)) + F.make_interval(secs=v)).alias("timestamp"),
-        F.concat(F.lit("CELL-"), (v % n_cells).cast("string")).alias("cell_id"),
+        (epoch + F.make_interval(secs=v)).alias("timestamp"),
+        F.concat(F.lit("CELL-"), (v % 4).cast("string")).alias("cell_id"),
         (20 + (v % 50)).cast("double").alias("latency_ms"),
         v.alias("value"),
     )
@@ -100,20 +100,18 @@ def telemetry_from_rate(rate_df: DataFrame, epoch: str = "2025-01-01 00:00:00",
 
 def tumbling_kpis(
     stream: DataFrame,
-    ts_col: str = "timestamp",
     keys: Sequence[str] = (),
-    metric: str = "latency_ms",
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Hourly KPI aggregates as a watermarked tumbling-window stream
-    (the streaming twin of A4/A5)."""
+    """Hourly ``latency_ms`` KPI aggregates as a watermarked tumbling-window
+    stream (the streaming twin of A4/A5)."""
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), *keys)
+        stream.withWatermark("timestamp", watermark)
+        .groupBy(F.window(F.col("timestamp"), window), *keys)
         .agg(
-            F.avg(metric).alias("avg_value"),
-            F.stddev_samp(metric).alias("std_value"),
+            F.avg("latency_ms").alias("avg_value"),
+            F.stddev_samp("latency_ms").alias("std_value"),
             F.count("*").alias("n"),
         )
         .select(
@@ -127,57 +125,21 @@ def tumbling_kpis(
     )
 
 
-def sliding_features(
-    stream: DataFrame,
-    ts_col: str = "timestamp",
-    keys: Sequence[str] = ("cell_id",),
-    metric: str = "latency_ms",
-    window: str = "3 hours",
-    slide: str = "1 hour",
-    watermark: str = "3 hours",
-) -> DataFrame:
-    """Trailing 3 h rolling features (W2's streaming analogue): each hourly
-    slide emits the mean/std of the last 3 h per key."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide), *keys)
-        .agg(
-            F.avg(metric).alias("rmean"),
-            F.coalesce(F.stddev_samp(metric), F.lit(0.0)).alias("rstd"),
-            F.count("*").alias("n"),
-        )
-        .select(
-            F.col("window.end").alias("feature_ts"),
-            *keys,
-            "rmean",
-            "rstd",
-            "n",
-        )
-    )
-
-
-def sliding_distinct_keys(
-    stream: DataFrame,
-    ts_col: str = "timestamp",
-    distinct_col: str = "cell_id",
-    window: str = "3 hours",
-    slide: str = "1 hour",
-    watermark: str = "3 hours",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Distinct-cardinality per sliding window as an HLL++ sketch
-    (``approx_count_distinct``) — exact COUNT(DISTINCT) is unsupported in
-    streaming aggregations for a reason: its state is the value set itself.
+def sliding_distinct_keys(stream: DataFrame) -> DataFrame:
+    """Distinct ``cell_id`` count per 3 h window sliding by 1 h (3 h
+    watermark) as an HLL++ sketch (``approx_count_distinct``, rsd 0.02) —
+    exact COUNT(DISTINCT) is unsupported in streaming aggregations for a
+    reason: its state is the value set itself.
     The sketch is mergeable and register-maxing, so state per window is a
     fixed few KB, results are independent of arrival order/micro-batching,
     and the batch replay of the same data produces the IDENTICAL estimate
     (equivalence-tested) — the same exact/approx duality the batch tier
     documents for percentile vs percentile_approx."""
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide))
+        stream.withWatermark("timestamp", "3 hours")
+        .groupBy(F.window(F.col("timestamp"), "3 hours", "1 hour"))
         .agg(
-            F.approx_count_distinct(distinct_col, rsd).alias("approx_distinct"),
+            F.approx_count_distinct("cell_id", 0.02).alias("approx_distinct"),
             F.count("*").alias("n_rows"),
         )
         .select(
@@ -189,29 +151,23 @@ def sliding_distinct_keys(
     )
 
 
-def latest_per_key(
-    stream: DataFrame,
-    schema_ddl: str,
-    ts_col: str = "timestamp",
-    key: str = "cell_id",
-    value_cols: Sequence[str] = ("latency_ms", "throughput_mbps"),
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stateful latest-row-per-key (P12/W6 streaming twin) via
-    ``applyInPandasWithState``: state holds one (ts, values) tuple per key,
-    updated when a newer event arrives. State size = O(#keys), bounded.
+def latest_per_key(stream: DataFrame, schema_ddl: str) -> DataFrame:
+    """Stateful latest-row-per-``cell_id`` (P12/W6 streaming twin) via
+    ``applyInPandasWithState``: state holds one (timestamp, latency_ms,
+    throughput_mbps) tuple per key, updated when a newer event arrives
+    (2 h watermark). State size = O(#keys), bounded.
 
-    ``schema_ddl`` example: ``"cell_id string, ts timestamp, latency_ms
-    double, throughput_mbps double"``.
+    ``schema_ddl`` example: ``"cell_id string, timestamp timestamp,
+    latency_ms double, throughput_mbps double"``.
     """
-    cols = [key, ts_col, *value_cols]
+    cols = ["cell_id", "timestamp", "latency_ms", "throughput_mbps"]
 
     def update(
         key_tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         newest: tuple | None = state.get if state.exists else None
         for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
+            pdf = pdf.sort_values("timestamp")
             last = pdf.iloc[-1]
             cand = tuple(last[c] for c in cols)
             if newest is None or cand[1] > newest[1]:
@@ -221,9 +177,9 @@ def latest_per_key(
             yield pd.DataFrame([dict(zip(cols, newest))])
 
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("timestamp", "2 hours")
         .select(*cols)
-        .groupBy(key)
+        .groupBy("cell_id")
         .applyInPandasWithState(
             update,
             outputStructType=schema_ddl,

@@ -39,18 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 def rollup_state_sink(
     path: str,
     keys: Sequence[str],
-    value_col: str = "value",
-    scale: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function: micro-batch → partial rollup state
-    at ``_batch_id=<epoch>``. Replays of any epoch converge (the epoch's
-    directory is rewritten, never appended to)."""
-    from network_iq_spark.sources.maintenance import ROLLUP_SCALE, rollup_state
+    of ``value`` at ``_batch_id=<epoch>``. Replays of any epoch converge
+    (the epoch's directory is rewritten, never appended to)."""
+    from network_iq_spark.sources.maintenance import rollup_state
 
-    sc = ROLLUP_SCALE if scale is None else scale
-    return monoid_state_sink(
-        path, lambda batch_df: rollup_state(batch_df, keys, value_col, sc)
-    )
+    return monoid_state_sink(path, lambda batch_df: rollup_state(batch_df, keys))
 
 
 def read_rollup_state(

@@ -28,19 +28,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 US_PER_MIN = 60_000_000
+GAP_US = 30 * US_PER_MIN
 VAL_SCALE = 10_000
 
 
-def streaming_sessionize(
-    stream: DataFrame,
-    gap_min: int = 30,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    value: str = "value",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Emit CLOSED sessions: (key, session_start, session_end, n_events,
-    value_sum). Append-mode stream — a session row is final when emitted.
+def streaming_sessionize(stream: DataFrame) -> DataFrame:
+    """Emit CLOSED sessions of (user_id, ts, value) events split at
+    >30-minute gaps under a 2 h watermark: (user_id, session_start,
+    session_end, n_events, value_sum). Append-mode stream — a session row
+    is final when emitted.
 
     Output order within a batch is nondeterministic (it's a stream);
     identity of the emitted sessions matches the batch gap-split exactly
@@ -51,16 +47,15 @@ def streaming_sessionize(
     that range belongs to an already-emitted session and is issued as its
     own closed singleton (append mode cannot retract; see inline comment).
     """
-    gap_us = gap_min * US_PER_MIN
     out_schema = (
-        f"{key} bigint, session_start timestamp, session_end timestamp, "
+        "user_id bigint, session_start timestamp, session_end timestamp, "
         "n_events bigint, value_sum double"
     )
     state_schema = "start_us bigint, last_us bigint, n bigint, vsum_e4 bigint"
 
     def _row(key_val: int, start_us: int, last_us: int, n: int, vsum_e4: int):
         return {
-            key: key_val,
+            "user_id": key_val,
             "session_start": pd.Timestamp(start_us, unit="us"),
             "session_end": pd.Timestamp(last_us, unit="us"),
             "n_events": n,
@@ -84,12 +79,12 @@ def streaming_sessionize(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values(ts_col)
+            pdf = pdf.sort_values("ts")
             ts_us = (
-                pd.to_datetime(pdf[ts_col]).astype("int64") // 1000
+                pd.to_datetime(pdf["ts"]).astype("int64") // 1000
             ).to_numpy()
             vals_e4 = (
-                (pdf[value].to_numpy() * VAL_SCALE).round().astype("int64")
+                (pdf["value"].to_numpy() * VAL_SCALE).round().astype("int64")
             )
             for us, v in zip(ts_us, vals_e4):
                 us = int(us)
@@ -97,10 +92,10 @@ def streaming_sessionize(
                     open_sess = (us, us, 1, int(v))
                     continue
                 s, last, n, vs = open_sess
-                if us - last > gap_us:
+                if us - last > GAP_US:
                     closed.append(_row(key_val, *open_sess))
                     open_sess = (us, us, 1, int(v))
-                elif us < s - gap_us:
+                elif us < s - GAP_US:
                     # LATE event from before the open session's reach (more
                     # than a gap before session_start): in batch order it
                     # belongs to an earlier session, which under the
@@ -124,7 +119,7 @@ def streaming_sessionize(
             # Spark rejects it; clamping only matters for sessions already
             # older than the watermark — those close at the next batch.
             timeout_ms = max(
-                open_sess[1] // 1000 + gap_min * 60_000,
+                (open_sess[1] + GAP_US) // 1000,
                 state.getCurrentWatermarkMs() + 1,
             )
             state.setTimeoutTimestamp(timeout_ms)
@@ -132,9 +127,9 @@ def streaming_sessionize(
             yield pd.DataFrame(closed)
 
     return (
-        stream.withWatermark(ts_col, watermark)
-        .select(key, ts_col, value)
-        .groupBy(key)
+        stream.withWatermark("ts", "2 hours")
+        .select("user_id", "ts", "value")
+        .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType=out_schema,

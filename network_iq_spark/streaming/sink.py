@@ -25,7 +25,6 @@ def idempotent_upsert_sink(
     path: str,
     keys: Sequence[str],
     partition_cols: Sequence[str],
-    bootstrap_partition_by: Sequence[str] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` function: each micro-batch upserts into
     the hive-partitioned parquet table at ``path`` on ``keys``. The first
@@ -36,7 +35,7 @@ def idempotent_upsert_sink(
     """
     from network_iq_spark.sources.maintenance import upsert_partitioned
 
-    cols = list(partition_cols if bootstrap_partition_by is None else bootstrap_partition_by)
+    cols = list(partition_cols)
 
     def _marker_path(spark, name: str):
         jvm = spark._jvm

@@ -14,6 +14,14 @@ names it dumps every registered query.
 SPARK_GRAFT_SF_DIR picks the data (default /root/testdata/sf0.1) so the
 plan (AQE initial plan, join strategies from estimates) matches what the
 bench executes.
+
+What differs from run to run or from checkout to checkout is masked, so
+two dumps compare with ``diff -r``: expression ids (``#123`` -> ``#N``),
+exchange plan ids (``plan_id=N``), RDD ids (``RDD[N]``) and the checkout
+path (``<repo>``). One line is still not reproducible and is left as it
+is: ``value_equidepth_histogram``'s offsets array literal, which
+``operators.rank.ntile_scalable`` bakes in from the per-partition counts
+of a ``repartitionByRange`` whose bounds come from a random sample.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.environ.get(
@@ -31,6 +40,18 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("PLAN_OUT", "plans/out")
 SUFFIX = os.environ.get("PLAN_SUFFIX", "")
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+)
+
+
+def _masked(plan: str) -> str:
+    plan = plan.replace(REPO, "<repo>")
+    for pattern, mask in _MASKS:
+        plan = pattern.sub(mask, plan)
+    return plan
 
 
 def main() -> None:
@@ -49,10 +70,11 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
+        plan = _masked(buf.getvalue())
         path = os.path.join(OUT, f"{name}{SUFFIX}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
-        print(f"{path}: {len(buf.getvalue())} bytes", flush=True)
+            fh.write(plan)
+        print(f"{path}: {len(plan)} bytes", flush=True)
 
 
 if __name__ == "__main__":

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import __spark_entry__ as e
 
 
@@ -42,78 +46,20 @@ def test_cli_catalog_list_and_run(spark):
 
 
 def test_verify_first_names_all_resolve():
-    """Every name in the driver-sheet rotation list must exist in the
-    (bench-only-filtered) sheet — a typo would silently drop a query out
-    of the externally-verified window instead of failing loudly."""
+    """The driver hash-checks the first 50 queries of the sheet, so they are
+    the 50 least recently verified: ordered by the round of their last
+    ``hash_match: true`` stamp in the committed ``CORRECTNESS_r<NN>.json``
+    files (none ranks as 0), ties by name."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
+        with open(path) as fh:
+            for name, stamp in json.load(fh).items():
+                if stamp["hash_match"] is True:
+                    last[name] = max(last.get(name, 0), rnd)
     qs = e.queries()
-    missing = [n for n in e._VERIFY_FIRST if n not in qs]
-    assert not missing, missing
+    stalest = sorted(qs, key=lambda n: (last.get(n, 0), n))[:50]
+    assert list(qs)[:50] == stalest
     # the sheet is 100% oracle-paired (bench-only queries are filtered out)
     assert set(e.oracle_sql()) == set(qs)
-    # the r15 window (r14 verdict item 8 + the same plan-change
-    # discipline): the seven queries whose bench-SF executed plan the
-    # r15 optimization commits CHANGED lead (the three capped-tier
-    # revert consumers + the score-before-join keep-best family), then
-    # the committed r15 overflow verbatim (chunk_overlap_admission +
-    # the displaced-r10 cohort alphabetically + the first six of the
-    # r11 cohort); the displaced r11 entries keep their r11 stamps and
-    # lead the committed r16 overflow.
-    window = list(qs)[:50]
-    plan_changed_r15 = [
-        "jaccard_top_pairs",
-        "containment_top_pairs",
-        "lsh_quality_report",
-        "image_resolution_keep_best",
-        "audio_resolution_keep_best",
-        "video_resolution_keep_best",
-        "transform_admission_manifest",
-    ]
-    assert window[:7] == plan_changed_r15
-    r10_cohort = [
-        "chunk_overlap_admission",
-        "contract_quarantine_summary",
-        "data_contract_events",
-        "decoded_image_stats",
-        "decoded_png_stats",
-        "distinct_users_head",
-        "domain_mix_sample",
-        "embedding_drift",
-        "event_type_transitions",
-        "grouped_quantile",
-        "grouping_sets_revenue",
-        "image_near_dup_pairs",
-        "image_near_dup_pairs_capped",
-        "incremental_ann_topk",
-        "incremental_chunk_near_dup",
-        "incremental_image_dedup",
-        "ivf_centroid_join_topk",
-        "lang_sample_k",
-        "lateral_top_orders",
-        "media_dhash_index",
-        "media_near_dup_census",
-        "nation_trade_volume",
-        "ordered_preview",
-        "packing_efficiency",
-        "parts_bought_together",
-        "pii_redact",
-        "quantized_cosine_topk",
-        "salted_event_stats",
-        "session_window_stats",
-        "sessionize",
-        "shipping_priority",
-        "span_corruption_manifest",
-        "time_sliced_rolling",
-        "variant_props_stats",
-        "video_near_dup_pairs",
-        "vocab_drift_top_movers",
-        "weighted_discount",
-    ]
-    r11_head = [
-        "ann_ivfpq_topk",
-        "ann_pq_adc_topk",
-        "ann_pq_rerank_topk",
-        "bpe_train_merges",
-        "brand_top_parts",
-        "centered_mavg_volume",
-    ]
-    assert window[7:50] == r10_cohort + r11_head

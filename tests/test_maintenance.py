@@ -559,7 +559,7 @@ def test_histogram_state_merge_and_error_bound(spark):
         return {
             r.k: (r.n_vals, r.p50_est, r.p95_est)
             for r in histogram_quantiles(
-                state, keys, lo=0.0, hi=1000.0, n_bins=200, pcts=(50, 95)
+                state, keys, lo=0.0, hi=1000.0, n_bins=200
             ).collect()
         }
 

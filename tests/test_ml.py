@@ -14,7 +14,7 @@ def features(spark):
     from network_iq_spark.plans import build_history_features
 
     tdf = spark.createDataFrame(telemetry_pdf())
-    use = build_history_features(tdf, "latency_ms", roll=3)
+    use = build_history_features(tdf)
     use.persist().count()
     yield use
     use.unpersist()
@@ -112,7 +112,7 @@ def test_precision_recall_at_k_math(spark, features):
     pdf = pdf.dropna(subset=["p1"]).sort_values(
         ["p1", "y"], ascending=[False, True], kind="mergesort"
     )
-    out = precision_recall_at_k(scored, ks=(10, 20))
+    out = precision_recall_at_k(scored)
     for k in (10, 20):
         hits = pdf["y"].head(k).sum()
         assert out[f"p_at_{k}"] == pytest.approx(hits / k)

@@ -1,22 +1,28 @@
-"""Every public operator is used, and every keyword option it takes is set
-by some caller to a value other than its default.
+"""Every public engine function is used, and every keyword option it takes
+is set by some caller to a value other than its default.
 
 An option that every caller leaves at its default is a constant with a
 parameter's cost: it doubles the configurations a reader must consider and
 no test or query exercises the other branch. This test walks the AST of
 every call site in the engine, the scripts, ``bench.py``,
 ``__spark_entry__.py``, ``perfbench/`` and ``tests/`` and fails when a
-public function in ``network_iq_spark/operators/`` has an option nobody
+public top-level function of ``network_iq_spark`` has an option nobody
 sets, or is neither referenced nor named in a string or docstring outside
-its own definition.
+its own definition. The scan covers the top-level modules and every
+package but ``queries/``, whose queries are registered by decorator and
+whose helpers are private.
 
 Calls resolve by the called name alone, so a same-named function elsewhere
-can only make an option look used, never unused. A ``**name`` splat of a
-dict literal bound in the same file counts as its keywords; any other
-``*args`` or ``**kw`` splat counts as setting every option it could reach.
-A function used as a value (``functools.partial(f, ...)``, a callback
-argument, ``assigner = f``) is called where the scan cannot see its
-arguments, so every option it takes counts as set.
+can only make an option look used, never unused; a name bound by
+``from m import f as g`` resolves to ``f``. A ``**name`` splat of a dict
+literal bound in the same file counts as its keywords; any other ``*args``
+or ``**kw`` splat counts as setting every option it could reach. A function
+used as a value (``functools.partial(f, ...)``, a callback argument,
+``assigner = f``) is called where the scan cannot see its arguments, so
+every option it takes counts as set. An ``__all__`` list only re-exports a
+name, so its strings are not a reference. ``perfbench/`` is frozen with the
+benchmark, so an option one of its calls passes counts as set whatever the
+value.
 """
 
 from __future__ import annotations
@@ -26,7 +32,20 @@ import os
 import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OPERATORS = os.path.join("network_iq_spark", "operators")
+ENGINE = "network_iq_spark"
+UNSCANNED = os.path.join(ENGINE, "queries")
+FROZEN = "perfbench"
+# Deployment settings: the credentials, the env var that names the source
+# path and its fallback, and the env var of the API key differ from one
+# deployment to the next, so they stay options although every caller in
+# the repo leaves them at their defaults.
+DEPLOYMENT_SETTINGS = {
+    "cloud.s3a_conf(access_key=)",
+    "cloud.s3a_conf(secret_key=)",
+    "cloud.env_source_path(env_var=)",
+    "cloud.env_source_path(default=)",
+    "enrichment.http_chat_provider(api_key_env=)",
+}
 CALLER_TREES = (
     "network_iq_spark",
     "scripts",
@@ -104,16 +123,31 @@ def _dict_literals(tree: ast.AST) -> dict:
     return out
 
 
+def _aliases(tree: ast.AST) -> dict:
+    """``{g: f}`` for every ``from m import f as g`` in ``tree``."""
+    return {
+        a.asname: a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.asname
+    }
+
+
 def _calls(tree: ast.AST):
-    """Yield ``(name, args, keywords)`` for every call, with a ``**name``
-    splat of a dict literal bound in the same file yielding its keywords."""
+    """Yield ``(name, args, keywords)`` for every call, with an import alias
+    resolved to the imported name and a ``**name`` splat of a dict literal
+    bound in the same file yielding its keywords."""
     dicts = _dict_literals(tree)
+    aliases = _aliases(tree)
     for node in ast.walk(tree):
         if not isinstance(node, ast.Call):
             continue
         name = _callee(node.func)
         if name is None:
             continue
+        if isinstance(node.func, ast.Name):
+            name = aliases.get(name, name)
         keywords = []
         for kw in node.keywords:
             if kw.arg is None and isinstance(kw.value, ast.Name):
@@ -130,6 +164,7 @@ def _passed_as_values(tree: ast.Module):
     where the scan cannot see the arguments. Only names the file imports
     or defines at top level count, so a local variable that shares an
     operator's name does not."""
+    aliases = _aliases(tree)
     bound = {
         (a.asname or a.name).split(".")[0]
         for node in ast.walk(tree)
@@ -143,7 +178,7 @@ def _passed_as_values(tree: ast.Module):
             continue
         if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
             if node.id in bound:
-                yield node.id
+                yield aliases.get(node.id, node.id)
         elif (
             isinstance(node, ast.Attribute)
             and isinstance(node.value, ast.Name)
@@ -152,15 +187,25 @@ def _passed_as_values(tree: ast.Module):
             yield node.attr
 
 
+def _is_all(node: ast.AST) -> bool:
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+    )
+
+
 def _references(tree: ast.AST, own: dict):
-    """Yield each operator name loaded, or named in a string or docstring,
-    anywhere in ``tree`` except inside that operator's own definition."""
+    """Yield each function name loaded, or named in a string or docstring,
+    anywhere in ``tree`` except inside that function's own definition and
+    an ``__all__`` list."""
+    aliases = _aliases(tree)
 
     def visit(node: ast.AST, inside: str | None):
+        if _is_all(node):
+            return
         if node is own.get(getattr(node, "name", None)):
             inside = node.name
         if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            names = {node.id}
+            names = {aliases.get(node.id, node.id)}
         elif isinstance(node, ast.Attribute):
             names = {node.attr}
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
@@ -174,21 +219,31 @@ def _references(tree: ast.AST, own: dict):
     yield from visit(tree, None)
 
 
-def scan(trees: dict, operator_paths: set) -> tuple[list[str], list[str]]:
+def _module(path: str) -> str:
+    """``pkg/m.py`` -> ``m``; a package's ``pkg/__init__.py`` -> ``pkg``."""
+    head, base = os.path.split(os.path.splitext(path)[0])
+    return os.path.basename(head) if base == "__init__" else base
+
+
+def scan(
+    trees: dict, scanned: set, frozen: set = frozenset(), exempt: set = frozenset()
+) -> tuple[list[str], list[str]]:
     """``(unset options as "module.function(option=)", unreferenced
     functions as "module.function")`` for the public top-level functions of
-    the files in ``operator_paths``, over the call sites in ``trees``
-    (``{path: ast.Module}``)."""
+    the files in ``scanned``, over the call sites in ``trees``
+    (``{path: ast.Module}``). An option a call in a ``frozen`` file passes
+    counts as set whatever its value; an ``exempt`` option is not
+    reported."""
     ops = {}
-    for path in sorted(operator_paths):
-        mod = os.path.splitext(os.path.basename(path))[0]
+    for path in sorted(scanned):
         for node in trees[path].body:
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                ops[node.name] = (mod, node)
+                assert node.name not in ops, f"{node.name} is defined twice"
+                ops[node.name] = (_module(path), node)
     own = {name: fn for name, (_, fn) in ops.items()}
     set_opts: dict[str, set] = {name: set() for name in ops}
     referenced = set()
-    for tree in trees.values():
+    for path, tree in trees.items():
         referenced.update(_references(tree, own))
         for name in _passed_as_values(tree):
             if name in ops:
@@ -201,20 +256,22 @@ def scan(trees: dict, operator_paths: set) -> tuple[list[str], list[str]]:
                 if isinstance(arg, ast.Starred):
                     set_opts[name].update(pos[i:])
                     break
-                if i < len(pos) and pos[i] in opts and not _same_value(
-                    arg, opts[pos[i]]
+                if i < len(pos) and pos[i] in opts and (
+                    path in frozen or not _same_value(arg, opts[pos[i]])
                 ):
                     set_opts[name].add(pos[i])
             for kw in keywords:
                 if kw.arg is None:
                     set_opts[name].update(opts)
-                elif kw.arg in opts and not _same_value(kw.value, opts[kw.arg]):
+                elif kw.arg in opts and (
+                    path in frozen or not _same_value(kw.value, opts[kw.arg])
+                ):
                     set_opts[name].add(kw.arg)
     unset = [
         f"{mod}.{name}({opt}=)"
         for name, (mod, fn) in sorted(ops.items())
         for opt in _options(fn)[1]
-        if opt not in set_opts[name]
+        if opt not in set_opts[name] and f"{mod}.{name}({opt}=)" not in exempt
     ]
     unreferenced = [
         f"{mod}.{name}"
@@ -228,8 +285,13 @@ def _repo_scan() -> tuple[list[str], list[str]]:
     trees = {
         path: _parse(path) for target in CALLER_TREES for path in _py_files(target)
     }
-    ops = {p for p in trees if os.path.dirname(os.path.relpath(p, ROOT)) == OPERATORS}
-    return scan(trees, ops)
+    rel = {p: os.path.relpath(p, ROOT) for p in trees}
+    scanned = {
+        p for p, r in rel.items() if r.startswith(ENGINE + os.sep)
+        and not r.startswith(UNSCANNED + os.sep)
+    }
+    frozen = {p for p, r in rel.items() if r.startswith(FROZEN + os.sep)}
+    return scan(trees, scanned, frozen, DEPLOYMENT_SETTINGS)
 
 
 def test_every_operator_option_is_set_by_some_caller():
@@ -252,18 +314,44 @@ def test_scan_resolves_positions_keywords_values_splats_and_mentions():
         "    return df\n"
         "def hook(df, cap=None):\n"
         "    return df\n"
+        "def aliased(df, scale=2):\n"
+        "    return df\n"
+        "def exported(df):\n"
+        "    return df\n"
+        "def pinned(df, metric='x', q=0.9):\n"
+        "    return df\n"
+        "def deployed(df, key_env='KEY'):\n"
+        "    return df\n"
     )
     caller_src = (
         '"""See named."""\n'
         "from ops import m\n"
+        "from ops.m import aliased as _aliased, deployed\n"
         "op(df, 5, mode='a')\n"
         "m.op(df, used=x)\n"
         "op(df, 5.0, deep=False)\n"
         "kw = dict(at=2, mode='a')\n"
         "op(df, **kw)\n"
         "run(partial(m.hook))\n"
+        "_aliased(df, 6)\n"
+        "deployed(df)\n"
     )
-    trees = {"ops/m.py": ast.parse(op_src), "caller.py": ast.parse(caller_src)}
-    unset, unreferenced = scan(trees, {"ops/m.py"})
+    init_src = (
+        "from ops.m import exported\n"
+        "__all__ = ['exported']\n"
+    )
+    frozen_src = "from ops.m import pinned\npinned(df, 'x', q=0.9)\n"
+    trees = {
+        "ops/m.py": ast.parse(op_src),
+        "ops/__init__.py": ast.parse(init_src),
+        "caller.py": ast.parse(caller_src),
+        "frozen/w.py": ast.parse(frozen_src),
+    }
+    unset, unreferenced = scan(
+        trees,
+        {"ops/m.py", "ops/__init__.py"},
+        frozen={"frozen/w.py"},
+        exempt={"m.deployed(key_env=)"},
+    )
     assert unset == ["m.idle(n=)", "m.op(k=)", "m.op(mode=)", "m.op(deep=)"]
-    assert unreferenced == ["m.idle"]
+    assert unreferenced == ["m.exported", "m.idle"]

@@ -82,3 +82,51 @@ def test_query_matches_oracle(name, spark, sf_dir, registry_prefetch):
         (i, s, d) for i, (s, d) in enumerate(zip(spark_rows, duck_rows)) if s != d
     ]
     assert not mismatches, f"{name}: {len(mismatches)} mismatched rows; first 3: {mismatches[:3]}"
+
+
+@pytest.fixture(scope="module")
+def tiny_events_dirs(sf_dir, tmp_path_factory):
+    """Two catalogs whose ``events`` table has the real schema: one holds
+    (value 1.0, user 1, 'view') and (value 2.0, user 2, NULL type), the
+    other no rows. Written as single parquet files, as both engines read
+    the real catalog."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(os.path.join(sf_dir, "events.parquet"))
+    rows = [
+        {"event_id": 1, "user_id": 1, "event_type": "view", "value": 1.0},
+        {"event_id": 2, "user_id": 2, "event_type": None, "value": 2.0},
+    ]
+    dirs = {}
+    for name, table in (
+        ("two_rows", pa.Table.from_pylist(rows, schema)),
+        ("zero_rows", schema.empty_table()),
+    ):
+        d = tmp_path_factory.mktemp(name)
+        pq.write_table(table, str(d / "events.parquet"))
+        dirs[name] = str(d)
+    return dirs
+
+
+@pytest.mark.parametrize(
+    "catalog, want",
+    [
+        ("two_rows", {"known_type": 1, "user_valid": 0, "value_nonneg": 0,
+                      "__valid_rows__": 1}),
+        ("zero_rows", {"known_type": 0, "user_valid": 0, "value_nonneg": 0,
+                       "__valid_rows__": 0}),
+    ],
+)
+def test_contract_quarantine_summary_oracle_follows_engine_semantics(
+    spark, tiny_events_dirs, catalog, want
+):
+    """A NULL rule result is a failure and an empty table counts 0 per rule,
+    in the engine and in its oracle alike."""
+    d = tiny_events_dirs[catalog]
+    got = {
+        r["failed_rule"]: r["n"]
+        for r in QUERIES["contract_quarantine_summary"](spark, d).collect()
+    }
+    oracle = dict(_duck(d).execute(ORACLES["contract_quarantine_summary"]).fetchall())
+    assert got == oracle == want

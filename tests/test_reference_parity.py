@@ -92,7 +92,7 @@ def test_hourly_panel_centered_smoothing(tdf, pdf):
         )
         thr = pdf.latency_ms.quantile(0.9)
         hourly["risky"] = hourly["avg_value"] >= thr
-        got = hourly_panel(tdf, "latency_ms", smooth_window=w, q=0.9)
+        got = hourly_panel(tdf, "latency_ms", smooth_window=w)
         assert_frames_close(got, hourly, ["hour"])
 
 
@@ -136,7 +136,7 @@ def test_anomaly_panel(tdf, pdf):
         .sort_values("max_anom_z", ascending=False)
         .head(10)
     )
-    assert_frames_close(anomaly_panel(tdf, "latency_ms", k=10), want, ["cell_id"])
+    assert_frames_close(anomaly_panel(tdf), want, ["cell_id"])
     # std==0 hour must have fired the 1e-9 guard (constant-latency hour 3)
     assert (base.loc[base.hour == 3, "base_std"] == 0).all()
 
@@ -168,7 +168,7 @@ def test_incident_panel(tdf, pdf):
         .sort_values("anom_z", ascending=False)
         .head(50)
     )
-    got = incident_panel(tdf, "latency_ms", q=0.95, k=50)
+    got = incident_panel(tdf, q=0.95)
     assert_frames_close(got, want, ["cell_id", "hour_ts"])
 
 
@@ -196,7 +196,7 @@ def test_build_latest_features(tdf, pdf):
     use["is_weekend"] = (use["ts"].dt.dayofweek >= 5).astype(int)
     latest = use[use["ts"] == use["ts"].max()]
 
-    got = build_latest_features(tdf, "latency_ms", roll=3).toPandas()
+    got = build_latest_features(tdf).toPandas()
     assert len(got) == len(latest)
     cols = (
         ["z_bad", "b_mean", "b_std", "hour", "is_weekend"]

@@ -200,7 +200,7 @@ def test_streaming_sessionize_out_of_order_across_batches(spark, tmp_path):
     def run_once() -> None:
         stream = spark.readStream.schema(ddl).parquet(src)
         q = (
-            streaming_sessionize(stream, gap_min=30)
+            streaming_sessionize(stream)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -271,7 +271,7 @@ def test_streaming_sessionize_matches_batch_gap_split(spark, tmp_path):
             "user_id bigint, ts timestamp, value double"
         ).parquet(src)
         q = (
-            streaming_sessionize(stream, gap_min=30)
+            streaming_sessionize(stream)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -560,7 +560,7 @@ def test_interval_join_streams_matches_batch_interval_join(spark, tmp_path):
     rc = spark.readStream.schema("click_id bigint, click_ts timestamp, user_id bigint").parquet(clk_dir)
     joined = interval_join_streams(
         li, rc, key="user_id", left_ts="imp_ts", right_ts="click_ts",
-        interval="10 minutes", watermark="2 hours",
+        watermark="2 hours",
     ).select("imp_id", "click_id")
     q = (
         joined.writeStream.format("memory").queryName("t_attrib")
@@ -1273,7 +1273,7 @@ def test_monoid_state_sink_histogram_and_cm(spark, tmp_path):
         return sorted(
             tuple(r)
             for r in histogram_quantiles(
-                state, ["k"], lo=0.0, hi=1000.0, n_bins=100, pcts=(50, 95)
+                state, ["k"], lo=0.0, hi=1000.0, n_bins=100
             ).collect()
         )
 
