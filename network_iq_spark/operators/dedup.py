@@ -237,10 +237,9 @@ def containment_pairs_capped(sh: DataFrame, threshold: float, max_df: int) -> Da
 MINHASH_P = 1_000_000_007
 
 
-def minhash_sig(
-    df: DataFrame, n_hashes: int, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """MAP-ONLY MinHash signature frame (id, mins: array<bigint>[k], hs): a
+def minhash_sig(df: DataFrame, n_hashes: int) -> DataFrame:
+    """MAP-ONLY MinHash signature frame (doc_id, mins: array<bigint>[k], hs)
+    over a (doc_id, text) frame: a
     doc's shingles are already co-located in its row, so the k mins and the
     verify set fold as array expressions — no explode, no groupBy shuffle
     (the exploded formulation shuffled |docs|·|shingles| rows through a
@@ -258,7 +257,7 @@ def minhash_sig(
     root-cause; docs/ROUND9.md).
     Shared by :func:`minhash_lsh_pairs` and the incremental index tier."""
     base = ensure_parallelism(df).select(
-        F.col(id_col), tokens(text_col).alias("_toks")
+        F.col("doc_id"), tokens("text").alias("_toks")
     ).filter(F.size("_toks") >= SHINGLE_K)
     sh_arr = F.expr(shingle_array_expr())
     hs_arr = (
@@ -270,9 +269,9 @@ def minhash_sig(
         for i in range(n_hashes)
     ) + ")"
     return (
-        base.select(F.col(id_col), sh_arr.alias("__sh__"))
-        .select(F.col(id_col), F.expr(hs_arr).alias("hs"))
-        .select(F.col(id_col), F.expr(mins_arr).alias("mins"), "hs")
+        base.select(F.col("doc_id"), sh_arr.alias("__sh__"))
+        .select(F.col("doc_id"), F.expr(hs_arr).alias("hs"))
+        .select(F.col("doc_id"), F.expr(mins_arr).alias("mins"), "hs")
     )
 
 
@@ -930,31 +929,25 @@ def _crop_verify(
 
 
 def crop_index(
-    df: DataFrame,
-    max_crop: int = 2,
-    block: int | None = None,
-    side: int = 8,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
+    df: DataFrame, max_crop: int = 2, side: int = 8
 ) -> tuple[DataFrame, DataFrame]:
     """At-rest artifacts for incremental crop-tolerant dedup — the crop
     tier's twin of the text tier's :func:`lsh_index` (bands, sets) and
-    the media tier's :func:`hamming_index`: a (id, tok) sub-block token
-    table (a deployment persists it partitioned/bucketed by ``tok`` so
-    the batch probe co-locates without a history-side shuffle) and the
-    (id, w, h, px) grid table the verify reads."""
-    B = block if block is not None else side - max_crop
-    grids = _crop_grids_norm(df, B, id_col, px_col, w_col, h_col)
+    the media tier's :func:`hamming_index`: a (media_id, tok) sub-block
+    token table over B×B blocks, B = side − max_crop (a deployment
+    persists it partitioned/bucketed by ``tok`` so the batch probe
+    co-locates without a history-side shuffle) and the (media_id, w, h,
+    px) grid table the verify reads."""
+    B = side - max_crop
+    grids = _crop_grids_norm(df, B, "media_id", "px", "w", "h")
     toks = _crop_tokens(grids, B).select(
-        F.col("__id__").alias(id_col), "tok"
+        F.col("__id__").alias("media_id"), "tok"
     )
     return toks, grids.select(
-        F.col("__id__").alias(id_col),
-        F.col("__w__").alias(w_col),
-        F.col("__h__").alias(h_col),
-        F.col("__px__").alias(px_col),
+        F.col("__id__").alias("media_id"),
+        F.col("__w__").alias("w"),
+        F.col("__h__").alias("h"),
+        F.col("__px__").alias("px"),
     )
 
 
@@ -963,37 +956,31 @@ def incremental_cropped_dedup(
     idx_toks: DataFrame,
     idx_grids: DataFrame,
     max_crop: int = 2,
-    block: int | None = None,
     side: int = 8,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
     frames: int = 1,
 ) -> DataFrame:
-    """Crop-tolerant dedup of an incoming batch AGAINST an at-rest token
-    index (:func:`crop_index`) — completing the incremental symmetry
+    """Crop-tolerant dedup of an incoming (media_id, w, h, px) batch
+    AGAINST an at-rest token index (:func:`crop_index`, built with the
+    same ``max_crop`` and ``side``) — completing the incremental symmetry
     across every dedup grain (exact / near / chunk / hamming / crop):
     token collisions between batch and index generate candidates
     (pigeonhole recall 1.0 for crops ≤ max_crop), the exact 2-D lag scan
-    verifies. Output (new_id, old_id, dr, dc, ssd ≤ ssd_tol). Cost is
+    verifies. Output (new_id, old_id, dr, dc, ssd = 0). Cost is
     O(batch × collision rate), never O(history). With ``frames`` > 1 this
     is the VIDEO crop cell's deployment shape (r12): :func:`crop_index` already
     tokens only the first plane (its max index is h·w − 1), and the
     verify sums SSD across every plane at the shared offset — no
     video-specific index format needed."""
-    B = block if block is not None else side - max_crop
-    bg = _crop_grids_norm(batch, B, id_col, px_col, w_col, h_col)
+    B = side - max_crop
+    bg = _crop_grids_norm(batch, B, "media_id", "px", "w", "h")
     probe = _crop_tokens(bg, B).select(
         F.col("__id__").alias("new_id"), "tok"
     )
-    base_toks = idx_toks.select(F.col(id_col).alias("old_id"), "tok")
+    base_toks = idx_toks.select(F.col("media_id").alias("old_id"), "tok")
     cand = probe.join(base_toks, "tok").select("new_id", "old_id").distinct()
-    ig = _crop_grids_norm(idx_grids, B, id_col, px_col, w_col, h_col)
+    ig = _crop_grids_norm(idx_grids, B, "media_id", "px", "w", "h")
     return _crop_verify(
-        cand, bg, ig, max_crop, B, ssd_tol, "new_id", "old_id",
-        frames=frames,
+        cand, bg, ig, max_crop, B, 0, "new_id", "old_id", frames=frames
     )
 
 
@@ -1223,18 +1210,12 @@ def resampled_derivative_pairs(
     )
 
 
-def resample_index(
-    df: DataFrame,
-    factor: int = 2,
-    stride: int = 1,
-    id_col: str = "media_id",
-    s_col: str = "s",
-) -> DataFrame:
+def resample_index(df: DataFrame) -> DataFrame:
     """At-rest artifact for incremental resample-derivative dedup (r13,
     VERDICT item 5) — the scale-axis twin of :func:`crop_index` /
-    :func:`hamming_index`: one row per history clip carrying BOTH keys
-    the exact tier joins on — ``own_key`` (md5 of the clip as stored)
-    and ``derived_key`` (md5 of its ``factor``× truncating-box
+    :func:`hamming_index`: one row per history (media_id, s) clip
+    carrying BOTH keys the exact tier joins on — ``own_key`` (md5 of the
+    clip as stored) and ``derived_key`` (md5 of its 2× truncating-box
     decimation; NULL when the clip is too short to decimate) — plus the
     lengths. A deployment persists it partitioned/bucketed by the key
     columns so batch probes co-locate without a history-side shuffle.
@@ -1253,21 +1234,20 @@ def resample_index(
     also staged through its own projection so the md5 key's two
     references compute it once (CollapseProject declines to inline
     multi-referenced non-cheap aliases)."""
-    fs = factor * stride
-    derived = _box_decimated_expr(factor, stride, "__s__")
+    derived = _box_decimated_expr(2, 1, "__s__")
     src = (
         ensure_parallelism(df, min_bytes=GUARD_MIN_BYTES)
-        .select(F.col(id_col).alias("__id__"), F.col(s_col).alias("__s__"))
+        .select(F.col("media_id").alias("__id__"), F.col("s").alias("__s__"))
         .localCheckpoint(eager=False)
     )
     staged = src.select(
         "__id__",
         F.expr("cast(size(__s__) as int)").alias("n"),
         F.expr(_SEQ_MD5_KEY_FMT.format(v="__s__")).alias("own_key"),
-        F.expr(f"IF(size(__s__) >= {fs}, {derived}, NULL)").alias("__d__"),
+        F.expr(f"IF(size(__s__) >= 2, {derived}, NULL)").alias("__d__"),
     )
     return staged.select(
-        F.col("__id__").alias(id_col),
+        F.col("__id__").alias("media_id"),
         "n",
         "own_key",
         # md5 over a NULL array is NULL, so the too-short guard carries
@@ -1278,13 +1258,10 @@ def resample_index(
 def incremental_resampled_dedup(
     batch: DataFrame,
     idx: DataFrame,
-    factor: int = 2,
-    stride: int = 1,
-    id_col: str = "media_id",
-    s_col: str = "s",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Resample-derivative dedup of an incoming batch AGAINST an at-rest
+    """Resample-derivative dedup of an incoming (media_id, s) batch
+    AGAINST an at-rest
     key index (:func:`resample_index`) — the deployment shape of the
     scale-axis tiers, completing the incremental symmetry the crop/
     thumbnail arms already have: O(batch × collision), never
@@ -1299,23 +1276,19 @@ def incremental_resampled_dedup(
     resampled_n) with ``resampled_n`` the decimated clip's length.
     ``max_bucket_size`` caps degenerate constant-clip keys on the
     HISTORY side (the probe side is one row per batch clip per key)."""
-    fs = factor * stride
-    # emit the derived-signal expression directly over the caller's
-    # column (byte-identical to the old sentinel-replace path, minus
-    # the hazard of s_col containing the sentinel substring)
-    derived_b = _box_decimated_expr(factor, stride, v=s_col)
+    derived_b = _box_decimated_expr(2, 1, v="s")
     b = ensure_parallelism(batch, min_bytes=GUARD_MIN_BYTES).select(
-        F.col(id_col).alias("new_id"),
-        F.expr(f"cast(size({s_col}) as int)").alias("__bn__"),
-        F.expr(_SEQ_MD5_KEY_FMT.format(v=s_col)).alias("__bown__"),
+        F.col("media_id").alias("new_id"),
+        F.expr("cast(size(s) as int)").alias("__bn__"),
+        F.expr(_SEQ_MD5_KEY_FMT.format(v="s")).alias("__bown__"),
         F.expr(
-            f"IF(size({s_col}) >= {fs}, "
+            "IF(size(s) >= 2, "
             + _SEQ_MD5_KEY_FMT.format(v="(" + derived_b + ")")
             + ", NULL)"
         ).alias("__bder__"),
     ).localCheckpoint(eager=False)
     hist = idx.select(
-        F.col(id_col).alias("old_id"),
+        F.col("media_id").alias("old_id"),
         F.col("n").alias("__hn__"),
         F.col("own_key").alias("__hown__"),
         F.col("derived_key").alias("__hder__"),
@@ -1574,25 +1547,20 @@ def _trim_verify(
 
 
 def trim_index(
-    df: DataFrame,
-    max_trim: int = 2,
-    anchor: int = 16,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    stride: int = 1,
+    df: DataFrame, max_trim: int = 2, anchor: int = 16, stride: int = 1
 ) -> tuple[DataFrame, DataFrame]:
     """At-rest artifacts for incremental trim-tolerant dedup (r13) — the
-    trim tier's twin of :func:`crop_index` (toks, grids): a (id, tok)
-    head-window token table (offsets 0..max_trim; offset 0 is the prefix
-    token, so ONE table serves both probe directions — a deployment
-    persists it bucketed by ``tok``) and the (id, s) sequence table the
-    verify reads."""
-    src = _trim_norm(df, anchor * stride, id_col, s_col)
+    trim tier's twin of :func:`crop_index` (toks, grids): a (media_id,
+    tok) head-window token table (offsets 0..max_trim; offset 0 is the
+    prefix token, so ONE table serves both probe directions — a
+    deployment persists it bucketed by ``tok``) and the (media_id, s)
+    sequence table the verify reads."""
+    src = _trim_norm(df, anchor * stride, "media_id", "s")
     toks = _trim_parent_toks(src, anchor, max_trim, stride).select(
-        F.col("__id__").alias(id_col), "tok"
+        F.col("__id__").alias("media_id"), "tok"
     )
     return toks, src.select(
-        F.col("__id__").alias(id_col), F.col("__s__").alias(s_col)
+        F.col("__id__").alias("media_id"), F.col("__s__").alias("s")
     )
 
 
@@ -2140,8 +2108,6 @@ def incremental_exact_dedup(
 
 def lsh_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bands: int = N_BANDS,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> tuple[DataFrame, DataFrame]:
@@ -2152,12 +2118,14 @@ def lsh_index(
     sets by n_bands. In a deployment both are bucketed parquet tables
     ((band, bucket) and doc_id respectively); incremental batches then
     join candidate-side exchange-free."""
-    sig = minhash_sig(df, n_bands * rows_per_band, text_col, id_col).localCheckpoint()
+    sig = minhash_sig(df, n_bands * rows_per_band).localCheckpoint()
     bands = band_bucket_structs(n_bands, rows_per_band)
     band_rows = sig.select(
-        id_col, F.explode(F.array(*bands)).alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket"))
-    return band_rows, sig.select(id_col, "hs")
+        "doc_id", F.explode(F.array(*bands)).alias("b")
+    ).select(
+        "doc_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket")
+    )
+    return band_rows, sig.select("doc_id", "hs")
 
 
 def incremental_near_dup(
@@ -2169,8 +2137,9 @@ def incremental_near_dup(
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
     """Near-dup detection of an incoming (doc_id, text) batch AGAINST an
-    at-rest LSH index (:func:`lsh_index`): band-bucket collisions between batch and index
-    generate candidates; exact Jaccard over the hash sets verifies. Output
+    at-rest LSH index (:func:`lsh_index`): band-bucket collisions between
+    batch and index generate candidates; exact Jaccard over the hash sets
+    verifies. Output
     (new_doc, old_doc, jaccard ≥ threshold) — the rows a continual-ingest
     pipeline drops (or links) before appending survivors and their index
     rows. Cost is O(batch × collision rate), never O(history)."""
@@ -2577,11 +2546,7 @@ def landmark_index(df: DataFrame) -> DataFrame:
     )
 
 
-def incremental_landmark_probe(
-    batch: DataFrame,
-    index: DataFrame,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def incremental_landmark_probe(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Incremental landmark dedup — the DEPLOYMENT shape of the
     landmark family (the same pairs/probe symmetry every transform
     tier carries): probe an incoming batch against the at-rest
@@ -2593,7 +2558,9 @@ def incremental_landmark_probe(
     (new_id, old_id, offset, votes, corr2) — offset is the batch
     clip's alignment inside the history clip, exactly the pairs
     tier's semantic with a = history, b = batch. A pair needs 2 votes,
-    corr² ≥ 0.995 and 8 overlapping samples."""
+    corr² ≥ 0.995 and 8 overlapping samples. Each side's landmark
+    buckets are capped at 256 rows before the vote join, the hot-bucket
+    guard of the pairs tiers (:func:`_cap_hot_buckets`)."""
     bmarks = _lm_norm(batch, "media_id", "s")
     btoks = _lm_explode_tokens(bmarks)
     itoks = index.select(
@@ -2604,9 +2571,8 @@ def incremental_landmark_probe(
         F.col("__t__.tok").alias("tok"),
         F.col("__t__.pos").alias("__pa__"),
     )
-    if max_bucket_size is not None:
-        itoks = _cap_hot_buckets(itoks, ["tok"], max_bucket_size)
-        btoks = _cap_hot_buckets(btoks, ["tok"], max_bucket_size)
+    itoks = _cap_hot_buckets(itoks, ["tok"], 256)
+    btoks = _cap_hot_buckets(btoks, ["tok"], 256)
     tb = btoks.select(
         F.col("__id__").alias("new_id"), "tok", F.col("pos").alias("__pb__")
     )

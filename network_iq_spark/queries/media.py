@@ -667,7 +667,7 @@ def q_incremental_image_crop_probe(spark: SparkSession, sf_dir: str) -> DataFram
     base, crops = _crop_corpus(spark, sf_dir)
     toks, grids = D.crop_index(base, max_crop=_CROP_MAX, side=_IMG_SIDE)
     return D.incremental_cropped_dedup(
-        crops, toks, grids, max_crop=_CROP_MAX, side=_IMG_SIDE, ssd_tol=0
+        crops, toks, grids, max_crop=_CROP_MAX, side=_IMG_SIDE
     ).orderBy("new_id", "old_id")
 
 
@@ -2274,8 +2274,8 @@ def q_incremental_resample_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = _rsmp_twins(src)
     idx = _aux_parquet(spark, "resample_index", sf_dir)
     if idx is None:
-        idx = D.resample_index(src, factor=2)
-    return D.incremental_resampled_dedup(batch, idx, factor=2).orderBy(
+        idx = D.resample_index(src)
+    return D.incremental_resampled_dedup(batch, idx).orderBy(
         "new_id", "old_id", "role"
     )
 
@@ -3795,6 +3795,4 @@ def q_incremental_landmark_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _aux_parquet(spark, "landmark_index", sf_dir)
     if idx is None:
         idx = D.landmark_index(src)
-    return D.incremental_landmark_probe(
-        batch, idx, max_bucket_size=256
-    ).orderBy("new_id", "old_id")
+    return D.incremental_landmark_probe(batch, idx).orderBy("new_id", "old_id")

@@ -217,128 +217,79 @@ def incremental_media_dedup_sink(
     )
 
 
-def incremental_crop_dedup_sink(
-    corpus_path: str,
-    toks_path: str,
-    grids_path: str,
-    max_crop: int = 2,
-    block: int | None = None,
-    side: int = 8,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    px_col: str = "px",
-    w_col: str = "w",
-    h_col: str = "h",
-    carry_cols: Sequence[str] = (),
-    frames: int = 1,
-):
+def incremental_crop_dedup_sink(corpus_path: str, toks_path: str, grids_path: str):
     """``foreachBatch`` sink closing the continual-ingest CROP-tolerant
     dedup loop (r11) — the crop tier's sibling of
-    :func:`incremental_media_dedup_sink`: each micro-batch of (id, w, h,
-    px) grids probes the AT-REST sub-block token index
-    (operators/dedup.py ``incremental_cropped_dedup`` — pigeonhole
-    recall 1.0 for ≤max_crop crops, O(batch × collision), never
-    O(history)); a batch grid that is a crop of ANY at-rest grid (or
-    vice versa — the 2-D lag scan is symmetric in sign) is dropped,
-    survivors append to the corpus and their token + grid rows append to
-    the index, so the next batch sees them.
-    ``frames`` > 1 makes this the VIDEO crop cell's sink (r12):
-    crop_index tokens are frame-0-bounded by construction, so the
-    at-rest artifacts are format-identical — only the verify widens
-    to sum SSD across every plane."""
-
-    cols = dict(id_col=id_col, px_col=px_col, w_col=w_col, h_col=h_col)
+    :func:`incremental_media_dedup_sink`: each micro-batch of (media_id,
+    w, h, px) grids probes the AT-REST sub-block token index
+    (operators/dedup.py ``incremental_cropped_dedup`` at its defaults —
+    pigeonhole recall 1.0 for ≤2-pixel crops, exact SSD verify,
+    O(batch × collision), never O(history)); a batch grid that is a crop
+    of ANY at-rest grid (or vice versa — the 2-D lag scan is symmetric
+    in sign) is dropped, survivors append to the corpus and their token
+    + grid rows append to the index, so the next batch sees them. The
+    sink serves single-frame grids; the VIDEO crop cell (``frames`` > 1
+    in ``incremental_cropped_dedup``) writes format-identical artifacts,
+    since crop_index tokens are frame-0-bounded by construction — only
+    its verify widens to sum SSD across every plane."""
 
     def rejected(batch, toks, grids):
-        return D.incremental_cropped_dedup(
-            batch, toks, grids, max_crop=max_crop, block=block, side=side,
-            ssd_tol=ssd_tol, frames=frames, **cols,
-        ).select("new_id")
-
-    def index(keys):
-        return D.crop_index(keys, max_crop=max_crop, block=block, side=side, **cols)
+        return D.incremental_cropped_dedup(batch, toks, grids).select("new_id")
 
     return _admission_sink(
-        corpus_path, (toks_path, grids_path), (id_col, w_col, h_col, px_col),
-        carry_cols, rejected, index,
+        corpus_path, (toks_path, grids_path), ("media_id", "w", "h", "px"), (),
+        rejected, D.crop_index,
     )
 
 
-def incremental_trim_dedup_sink(
-    corpus_path: str,
-    toks_path: str,
-    seqs_path: str,
-    max_trim: int = 2,
-    anchor: int = 16,
-    ssd_tol: int = 0,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    carry_cols: Sequence[str] = (),
-    stride: int = 1,
-):
+def incremental_trim_dedup_sink(corpus_path: str, toks_path: str, seqs_path: str):
     """``foreachBatch`` sink closing the continual-ingest TRIM-tolerant
     dedup loop (r13) — the audio-trim cell's sibling of
     :func:`incremental_crop_dedup_sink`, landing the same round as the
-    tier itself: each micro-batch of (id, s) clips probes the AT-REST
-    head-window token + sequence index (operators/dedup.py
-    ``incremental_trimmed_dedup`` — pigeonhole recall 1.0 for trims ≤
-    max_trim per side, O(batch × collision), never O(history)); a batch
-    clip that is a trim of ANY at-rest clip or the untrimmed original
-    of an at-rest trim is dropped (first-arrival-wins), survivors
-    append to the corpus and their token + sequence rows append to the
-    index, so the next batch sees them. ``stride`` > 1 makes this the
-    VIDEO temporal-trim cell's sink (units = frames), the crop sink's
-    ``frames`` / resample sink's ``stride`` precedent."""
-
-    cols = dict(
-        max_trim=max_trim, anchor=anchor, id_col=id_col, s_col=s_col, stride=stride
-    )
+    tier itself: each micro-batch of (media_id, s) clips probes the
+    AT-REST head-window token + sequence index (operators/dedup.py
+    ``incremental_trimmed_dedup`` at its defaults — pigeonhole recall
+    1.0 for trims ≤ 2 samples per side, 16-sample anchors, exact verify,
+    O(batch × collision), never O(history)); a batch clip that is a
+    trim of ANY at-rest clip or the untrimmed original of an at-rest
+    trim is dropped (first-arrival-wins), survivors append to the
+    corpus and their token + sequence rows append to the index, so the
+    next batch sees them. The sink serves audio (units = samples); the
+    VIDEO temporal-trim cell is ``stride`` > 1 (units = frames) in the
+    operators."""
 
     def rejected(batch, toks, seqs):
-        return D.incremental_trimmed_dedup(
-            batch, toks, seqs, ssd_tol=ssd_tol, **cols
-        ).select("new_id")
+        return D.incremental_trimmed_dedup(batch, toks, seqs).select("new_id")
 
     return _admission_sink(
-        corpus_path, (toks_path, seqs_path), (id_col, s_col), carry_cols,
-        rejected, lambda s: D.trim_index(s, **cols),
+        corpus_path, (toks_path, seqs_path), ("media_id", "s"), (),
+        rejected, D.trim_index,
     )
 
 
-def incremental_resample_dedup_sink(
-    corpus_path: str,
-    index_path: str,
-    factor: int = 2,
-    stride: int = 1,
-    id_col: str = "media_id",
-    s_col: str = "s",
-    carry_cols: Sequence[str] = (),
-):
+def incremental_resample_dedup_sink(corpus_path: str, index_path: str):
     """``foreachBatch`` sink closing the continual-ingest RESAMPLE-
     derivative dedup loop (r13, VERDICT item 7) — the scale-axis
     sibling of :func:`incremental_crop_dedup_sink`, completing sink
-    coverage of the transform matrix: each micro-batch of (id, s) clips
-    probes the AT-REST key index (operators/dedup.py
-    ``incremental_resampled_dedup`` — two exact equi-joins, O(batch ×
-    collision), never O(history)); a batch clip that is the ``factor``×
-    decimation of an at-rest clip OR the full-rate original of an
-    at-rest decimation is dropped (first-arrival-wins, the family's
-    admission contract — a keep-best policy that prefers the full-rate
-    side is the graph tier's job, not the sink's), survivors append to
-    the corpus and their (own_key, derived_key) rows
-    (``resample_index``) append to the index, so the next batch sees
-    them. ``stride`` > 1 makes this the VIDEO frame-rate cell's sink —
-    the at-rest artifacts are format-identical (the crop sink's
-    ``frames`` precedent)."""
-
-    cols = dict(factor=factor, stride=stride, id_col=id_col, s_col=s_col)
+    coverage of the transform matrix: each micro-batch of (media_id, s)
+    clips probes the AT-REST key index (operators/dedup.py
+    ``incremental_resampled_dedup`` at its defaults — two exact
+    equi-joins, O(batch × collision), never O(history)); a batch clip
+    that is the 2× decimation of an at-rest clip OR the full-rate
+    original of an at-rest decimation is dropped (first-arrival-wins,
+    the family's admission contract — a keep-best policy that prefers
+    the full-rate side is the graph tier's job, not the sink's),
+    survivors append to the corpus and their (own_key, derived_key)
+    rows (``resample_index``) append to the index, so the next batch
+    sees them. The sink serves audio; the VIDEO frame-rate cell is
+    ``stride`` > 1 in the operators, with format-identical artifacts."""
 
     def rejected(batch, index):
-        return D.incremental_resampled_dedup(batch, index, **cols).select("new_id")
+        return D.incremental_resampled_dedup(batch, index).select("new_id")
 
     return _admission_sink(
-        corpus_path, (index_path,), (id_col, s_col), carry_cols,
-        rejected, lambda s: (D.resample_index(s, **cols),),
+        corpus_path, (index_path,), ("media_id", "s"), (),
+        rejected, lambda s: (D.resample_index(s),),
     )
 
 
@@ -347,14 +298,11 @@ def chunk_admission_sink(
     bands_path: str,
     sets_path: str,
     max_dup_ppm: int = 200_000,
-    threshold: float = 0.5,
-    n_bands: int = 16,
-    rows_per_band: int = 1,
-    carry_cols: Sequence[str] = (),
 ):
     """``foreachBatch`` sink running the CHUNK-OVERLAP ADMISSION rule as
     a stream (the streaming form of the ``chunk_overlap_admission``
-    sheet query): each micro-batch of documents is exploded into
+    sheet query, with its 16×1 LSH bands and 0.5 Jaccard threshold):
+    each micro-batch of documents is exploded into
     20-token chunks (``_fragments.chunk_docs`` — pure map, stream-safe),
     the chunks probe the AT-REST chunk LSH index, and a document is
     admitted while at most ``max_dup_ppm``/1e6 of its chunks near-match
@@ -370,9 +318,14 @@ def chunk_admission_sink(
     admitted (r10 ADVICE).
     """
 
-    from network_iq_spark.queries._fragments import _CHUNK_ID_BASE, chunk_docs
+    from network_iq_spark.queries._fragments import (
+        _CHUNK_ID_BASE,
+        _MH_BANDS,
+        _MH_ROWS,
+        chunk_docs,
+    )
 
-    lsh = dict(n_bands=n_bands, rows_per_band=rows_per_band)
+    lsh = dict(n_bands=_MH_BANDS, rows_per_band=_MH_ROWS)
 
     def doc_of(chunk_col):
         return F.expr(f"{chunk_col} div {_CHUNK_ID_BASE}").alias("doc_id")
@@ -381,7 +334,7 @@ def chunk_admission_sink(
         chunks = chunk_docs(batch)
         n_chunks = chunks.groupBy(doc_of("doc_id")).agg(F.count("*").alias("__n__"))
         dups = (
-            D.incremental_near_dup(chunks, bands, sets, threshold, **lsh)
+            D.incremental_near_dup(chunks, bands, sets, 0.5, **lsh)
             .groupBy(doc_of("new_doc"))
             .agg(F.countDistinct("new_doc").alias("__d__"))
         )
@@ -392,7 +345,7 @@ def chunk_admission_sink(
         )
 
     return _admission_sink(
-        corpus_path, (bands_path, sets_path), ("doc_id", "text"), carry_cols,
+        corpus_path, (bands_path, sets_path), ("doc_id", "text"), (),
         rejected, lambda s: D.lsh_index(chunk_docs(s), **lsh),
     )
 
@@ -419,9 +372,7 @@ def incremental_landmark_dedup_sink(corpus_path: str, index_path: str):
     overlapping samples) and caps each landmark bucket at 256 rows."""
 
     def rejected(batch, index):
-        return D.incremental_landmark_probe(
-            batch, index, max_bucket_size=256
-        ).select("new_id")
+        return D.incremental_landmark_probe(batch, index).select("new_id")
 
     return _admission_sink(
         corpus_path, (index_path,), ("media_id", "s"), (),

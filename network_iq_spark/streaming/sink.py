@@ -35,8 +35,6 @@ def idempotent_upsert_sink(
     """
     from network_iq_spark.sources.maintenance import upsert_partitioned
 
-    cols = list(partition_cols)
-
     def _marker_path(spark, name: str):
         jvm = spark._jvm
         return jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + name)
@@ -67,7 +65,7 @@ def idempotent_upsert_sink(
         if not _table_ready(spark):
             (
                 batch_df.write.mode("overwrite")
-                .partitionBy(*cols)
+                .partitionBy(*partition_cols)
                 .parquet(path)
             )
             # sink-owned marker, written only AFTER the bootstrap write

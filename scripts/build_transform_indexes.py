@@ -48,7 +48,7 @@ def main() -> None:
             F.col("vec_id").alias("media_id"), F.expr(_AUD_WALK_EXPR).alias("s")
         )
         out = os.path.join(_AUX_DATA_DIR, "resample_index", sf)
-        D.resample_index(src, factor=2).coalesce(1).write.mode(
+        D.resample_index(src).coalesce(1).write.mode(
             "overwrite"
         ).parquet(out)
         print(f"{sf}: {spark.read.parquet(out).count()} resample index rows")

@@ -119,7 +119,7 @@ CELLS = [
         _prepare_probe,
         {
             "fixed batch, growing index": lambda spark, d: (
-                D.incremental_landmark_probe(d[0], d[1], max_bucket_size=256)
+                D.incremental_landmark_probe(d[0], d[1])
             )
         },
         _check("old_id", "new_id"),

@@ -36,7 +36,7 @@ def _prepare(spark, m):
     hist = spark.createDataFrame([(i, _vals(i, 64)) for i in range(BASE * m)], schema)
     # the index is the AT-REST side: materialize it outside the timed
     # runs (a deployment reads it back bucketed by key)
-    idx = D.resample_index(hist, factor=2).localCheckpoint()
+    idx = D.resample_index(hist).localCheckpoint()
     batch = [(i + TWIN_OFF, _dec(_vals(i, 64))) for i in range(BATCH)]
     return spark.createDataFrame(batch, schema).localCheckpoint(), idx
 
@@ -55,7 +55,7 @@ CELLS = [
         _prepare,
         {
             "fixed 40-clip batch vs growing index": lambda spark, d: (
-                D.incremental_resampled_dedup(d[0], d[1], factor=2)
+                D.incremental_resampled_dedup(d[0], d[1])
             )
         },
         _check,

@@ -1103,7 +1103,7 @@ def test_incremental_resample_probe_both_directions(spark):
 
     hist_rows.append((505, dec(seqs[5])))  # an indexed decimation
     hdf = spark.createDataFrame(hist_rows, "media_id long, s array<int>")
-    idx = D.resample_index(hdf, factor=2)
+    idx = D.resample_index(hdf)
     batch = spark.createDataFrame(
         [
             (1003, dec(seqs[3])),  # resampled re-upload of clip 3
@@ -1114,7 +1114,7 @@ def test_incremental_resample_probe_both_directions(spark):
     )
     got = {
         (r.new_id, r.old_id): (r.role, r.resampled_n)
-        for r in D.incremental_resampled_dedup(batch, idx, factor=2).collect()
+        for r in D.incremental_resampled_dedup(batch, idx).collect()
     }
     assert got == {
         (1003, 3): ("batch_resampled", 32),
@@ -1126,7 +1126,7 @@ def test_incremental_resample_probe_both_directions(spark):
     const_hist = spark.createDataFrame(
         [(100 + i, [7] * 64) for i in range(10)], "media_id long, s array<int>"
     )
-    cidx = D.resample_index(const_hist, factor=2)
+    cidx = D.resample_index(const_hist)
     cbatch = spark.createDataFrame(
         [(900, [7] * 32)], "media_id long, s array<int>"
     )
@@ -1677,7 +1677,7 @@ def test_incremental_landmark_probe_matches_pairs_and_artifact(spark):
     inplan = {
         (r.old_id, r.new_id): r.offset
         for r in D2.incremental_landmark_probe(
-            _lm_twins(src), D2.landmark_index(src), max_bucket_size=256
+            _lm_twins(src), D2.landmark_index(src)
         ).collect()
     }
     assert inplan == got_probe

@@ -17,9 +17,13 @@ can only make an option look used, never unused; a name bound by
 ``from m import f as g`` resolves to ``f``. A ``**name`` splat of a dict
 literal bound in the same file counts as its keywords; any other ``*args``
 or ``**kw`` splat counts as setting every option it could reach. A function
-used as a value (``functools.partial(f, ...)``, a callback argument,
-``assigner = f``) is called where the scan cannot see its arguments, so
-every option it takes counts as set. An ``__all__`` list only re-exports a
+passed as an argument to a top-level function defined once in the scanned
+files, which only ever calls the parameter that receives it, is called by
+those calls: ``index(keys)`` inside a sink that takes ``index=lsh_index``
+sets no option of ``lsh_index``. A function used as any other value
+(``functools.partial(f, ...)``, ``assigner = f``, a callback handed to
+Spark) is called where the scan cannot see its arguments, so every option
+it takes counts as set. An ``__all__`` list only re-exports a
 name, so its strings are not a reference. ``perfbench/`` is frozen with the
 benchmark, so an option one of its calls passes counts as set whatever the
 value.
@@ -157,12 +161,53 @@ def _calls(tree: ast.AST):
         yield name, node.args, keywords
 
 
-def _passed_as_values(tree: ast.Module):
-    """Yield each function name that ``tree`` uses as a value rather than
-    calling it: passed as an argument (``functools.partial`` included),
-    bound to a name, or put in a container. Such a function can be called
-    where the scan cannot see the arguments. Only names the file imports
-    or defines at top level count, so a local variable that shares an
+def _receivers(trees: dict) -> dict:
+    """``{name: (path, FunctionDef)}`` for every top-level function of
+    ``trees``; a name defined in more than one file maps to ``None``, since
+    the scan cannot tell which one a call reaches."""
+    out: dict = {}
+    for path, tree in trees.items():
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                out[node.name] = None if node.name in out else (path, node)
+    return out
+
+
+def _param_calls(fn: ast.FunctionDef, index: int | None, keyword: str | None):
+    """The calls ``fn`` makes of the parameter that receives positional
+    argument ``index`` or ``keyword``, or ``None`` when that parameter is
+    used as anything but a callee (returned, passed on, stored)."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    if keyword is None:
+        param = pos[index] if index < len(pos) else None
+    else:
+        param = keyword if keyword in pos + [p.arg for p in a.kwonlyargs] else None
+    calls = [
+        n for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == param
+    ]
+    callees = {id(c.func) for c in calls}
+    loads = [
+        n for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and n.id == param and isinstance(n.ctx, ast.Load)
+    ]
+    if param is None or any(id(n) not in callees for n in loads):
+        return None
+    return calls
+
+
+def _passed_as_values(tree: ast.Module, receivers: dict):
+    """Yield ``(name, path, calls)`` for each function ``tree`` uses as a
+    value rather than calling it. When it is an argument of a function in
+    ``receivers`` that only calls the parameter receiving it, ``calls``
+    are those calls and ``path`` is the receiver's file; otherwise
+    (``functools.partial``, bound to a name, put in a container, handed to
+    code outside the scan) ``calls`` is ``None``: it can be called where
+    the scan cannot see the arguments. Only names the file imports or
+    defines at top level count, so a local variable that shares an
     operator's name does not."""
     aliases = _aliases(tree)
     bound = {
@@ -173,18 +218,42 @@ def _passed_as_values(tree: ast.Module):
     }
     bound |= {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
     callees = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+    slots = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            name = _callee(node.func)
+            if isinstance(node.func, ast.Name):
+                name = aliases.get(name, name)
+            receiver = receivers.get(name)
+            if receiver is None:
+                continue
+            for i, arg in enumerate(node.args):
+                if isinstance(arg, ast.Starred):
+                    break  # later arguments' parameters are unknown
+                slots[id(arg)] = (receiver, i, None)
+            for kw in node.keywords:
+                if kw.arg is not None:
+                    slots[id(kw.value)] = (receiver, None, kw.arg)
     for node in ast.walk(tree):
         if id(node) in callees:
             continue
         if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            if node.id in bound:
-                yield aliases.get(node.id, node.id)
+            if node.id not in bound:
+                continue
+            name = aliases.get(node.id, node.id)
         elif (
             isinstance(node, ast.Attribute)
             and isinstance(node.value, ast.Name)
             and node.value.id in bound
         ):
-            yield node.attr
+            name = node.attr
+        else:
+            continue
+        calls = path = None
+        if id(node) in slots:
+            (path, fn), index, keyword = slots[id(node)]
+            calls = _param_calls(fn, index, keyword)
+        yield name, path, calls
 
 
 def _is_all(node: ast.AST) -> bool:
@@ -243,30 +312,38 @@ def scan(
     own = {name: fn for name, (_, fn) in ops.items()}
     set_opts: dict[str, set] = {name: set() for name in ops}
     referenced = set()
+
+    def count(name, path, args, keywords):
+        pos, opts = _options(ops[name][1])
+        for i, arg in enumerate(args):
+            if isinstance(arg, ast.Starred):
+                set_opts[name].update(pos[i:])
+                break
+            if i < len(pos) and pos[i] in opts and (
+                path in frozen or not _same_value(arg, opts[pos[i]])
+            ):
+                set_opts[name].add(pos[i])
+        for kw in keywords:
+            if kw.arg is None:
+                set_opts[name].update(opts)
+            elif kw.arg in opts and (
+                path in frozen or not _same_value(kw.value, opts[kw.arg])
+            ):
+                set_opts[name].add(kw.arg)
+
+    receivers = _receivers(trees)
     for path, tree in trees.items():
         referenced.update(_references(tree, own))
-        for name in _passed_as_values(tree):
-            if name in ops:
-                set_opts[name].update(_options(ops[name][1])[1])
-        for name, args, keywords in _calls(tree):
+        for name, at, calls in _passed_as_values(tree, receivers):
             if name not in ops:
                 continue
-            pos, opts = _options(ops[name][1])
-            for i, arg in enumerate(args):
-                if isinstance(arg, ast.Starred):
-                    set_opts[name].update(pos[i:])
-                    break
-                if i < len(pos) and pos[i] in opts and (
-                    path in frozen or not _same_value(arg, opts[pos[i]])
-                ):
-                    set_opts[name].add(pos[i])
-            for kw in keywords:
-                if kw.arg is None:
-                    set_opts[name].update(opts)
-                elif kw.arg in opts and (
-                    path in frozen or not _same_value(kw.value, opts[kw.arg])
-                ):
-                    set_opts[name].add(kw.arg)
+            if calls is None:
+                set_opts[name].update(_options(ops[name][1])[1])
+            for call in calls or ():
+                count(name, at, call.args, call.keywords)
+        for name, args, keywords in _calls(tree):
+            if name in ops:
+                count(name, path, args, keywords)
     unset = [
         f"{mod}.{name}({opt}=)"
         for name, (mod, fn) in sorted(ops.items())
@@ -322,6 +399,8 @@ def test_scan_resolves_positions_keywords_values_splats_and_mentions():
         "    return df\n"
         "def deployed(df, key_env='KEY'):\n"
         "    return df\n"
+        "def cb(df, col='x'):\n"
+        "    return df\n"
     )
     caller_src = (
         '"""See named."""\n'
@@ -335,6 +414,9 @@ def test_scan_resolves_positions_keywords_values_splats_and_mentions():
         "run(partial(m.hook))\n"
         "_aliased(df, 6)\n"
         "deployed(df)\n"
+        "def apply(f, df):\n"
+        "    return f(df)\n"
+        "apply(m.cb, df)\n"
     )
     init_src = (
         "from ops.m import exported\n"
@@ -353,5 +435,7 @@ def test_scan_resolves_positions_keywords_values_splats_and_mentions():
         frozen={"frozen/w.py"},
         exempt={"m.deployed(key_env=)"},
     )
-    assert unset == ["m.idle(n=)", "m.op(k=)", "m.op(mode=)", "m.op(deep=)"]
+    assert unset == [
+        "m.cb(col=)", "m.idle(n=)", "m.op(k=)", "m.op(mode=)", "m.op(deep=)"
+    ]
     assert unreferenced == ["m.exported", "m.idle"]

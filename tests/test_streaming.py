@@ -1358,7 +1358,7 @@ def test_incremental_crop_dedup_sink_converges_and_drops_crops(spark, tmp_path):
     corpus = str(tmp_path / "ccorpus")
     toks = str(tmp_path / "ctoks")
     grids = str(tmp_path / "cgrids")
-    sink = incremental_crop_dedup_sink(corpus, toks, grids, max_crop=2)
+    sink = incremental_crop_dedup_sink(corpus, toks, grids)
 
     def img(seed):
         return [
@@ -1478,7 +1478,7 @@ def test_incremental_resample_dedup_sink_converges_both_directions(spark, tmp_pa
 
     corpus = str(tmp_path / "rcorpus")
     index = str(tmp_path / "ridx")
-    sink = incremental_resample_dedup_sink(corpus, index, factor=2)
+    sink = incremental_resample_dedup_sink(corpus, index)
 
     def clip(seed, n=64):
         return [
@@ -1528,7 +1528,7 @@ def test_incremental_trim_dedup_sink_converges_both_directions(spark, tmp_path):
     corpus = str(tmp_path / "tcorpus")
     toks = str(tmp_path / "ttoks")
     seqs = str(tmp_path / "tseqs")
-    sink = incremental_trim_dedup_sink(corpus, toks, seqs, max_trim=2, anchor=16)
+    sink = incremental_trim_dedup_sink(corpus, toks, seqs)
 
     def clip(seed, n=64):
         return [
