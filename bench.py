@@ -9,8 +9,11 @@ print one JSON line ``{"metric": ..., "value": N, "unit": "sec",
 Per-query timing = full plan execution to a noop sink (results are
 consumed, never collected to the driver in bulk). Each query repeats until
 its readings settle (``_settled``), every reading goes to stderr, and the
-query's time is their min. A warmup pass absorbs JVM startup and codegen
-so the numbers measure the plans, not the JIT.
+query's time is their min. A warmup run of the first query absorbs JVM
+startup; each query's own first runs absorb the compiles of its generated
+classes, which the session keeps for the rest of the suite
+(``session.py``). ``codegen_compiles`` in the artifact holds, per query,
+the classes its final run compiled: 0 once the query's plan has settled.
 """
 
 from __future__ import annotations
@@ -62,30 +65,39 @@ def _settled(readings: list[float]) -> bool:
     return all(r <= m * (1 + EPS) for r in readings[-2:])
 
 
-def _run_once(spark, query, sf_dir: str) -> float:
-    """One timed run of ``query`` (a registry builder) to a noop sink.
-    After the run, outside the timer, every RDD persisted during it is
-    unpersisted: the engine's ``localCheckpoint`` blocks are otherwise
-    freed only once the JVM collects their owners, and that cleanup lands
-    inside whichever query runs next."""
+def _compiled(spark) -> int:
+    """Classes the JVM's code generator has compiled so far (cache misses)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _run_once(spark, query, sf_dir: str) -> tuple[float, int]:
+    """One timed run of ``query`` (a registry builder) to a noop sink: its
+    seconds and the generated classes it compiled. After the run, outside
+    the timer, every RDD persisted during it is unpersisted: the engine's
+    ``localCheckpoint`` blocks are otherwise freed only once the JVM
+    collects their owners, and that cleanup lands inside whichever query
+    runs next."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
+    compiled = _compiled(spark)
     try:
         t0 = time.perf_counter()
         query(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        return time.perf_counter() - t0, _compiled(spark) - compiled
     finally:
         for rid, rdd in jsc.getPersistentRDDs().items():
             if rid not in before:
                 rdd.unpersist(True)
 
 
-def _time_query(spark, query, sf_dir: str) -> list[float]:
-    """Every reading of ``query``, run until the readings settle."""
-    readings: list[float] = []
-    while not _settled(readings):
-        readings.append(_run_once(spark, query, sf_dir))
-    return readings
+def _time_query(spark, query, sf_dir: str) -> list[tuple[float, int]]:
+    """Every run of ``query`` as ``_run_once`` gives it, until the
+    readings settle."""
+    runs: list[tuple[float, int]] = []
+    while not _settled([sec for sec, _ in runs]):
+        runs.append(_run_once(spark, query, sf_dir))
+    return runs
 
 
 def _artifact_path(sf: str, names_run: bool) -> str | None:
@@ -159,15 +171,17 @@ def main() -> None:
     # broken plan must never cost the round its entire BENCH artifact.
     timings: dict[str, float] = {}
     readings: dict[str, list[float]] = {}
+    codegen_compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     for n in names:
         try:
-            rs = _time_query(spark, QUERIES[n], SF_DIR)
+            runs = _time_query(spark, QUERIES[n], SF_DIR)
         except Exception as exc:  # noqa: BLE001 — keep benching the rest
             errors[n] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"BENCH ERROR {n}: {errors[n]}", file=sys.stderr)
             continue
-        readings[n] = [round(r, 4) for r in rs]
+        readings[n] = [round(sec, 4) for sec, _ in runs]
+        codegen_compiles[n] = runs[-1][1]
         timings[n] = min(readings[n])
         print(f"BENCH {n}: min={timings[n]}s readings={readings[n]}", file=sys.stderr)
 
@@ -257,7 +271,7 @@ def main() -> None:
             except OSError:
                 load_now = None
             try:
-                rs = [round(r, 4) for r in _time_query(spark, QUERIES[n], SF_DIR)]
+                rs = [round(sec, 4) for sec, _ in _time_query(spark, QUERIES[n], SF_DIR)]
             except Exception as exc:  # noqa: BLE001 — keep grounding the rest
                 retimed[n] = {"err": f"{type(exc).__name__}: {exc}"[:200]}
                 continue
@@ -298,7 +312,7 @@ def main() -> None:
                     # bump when the watchdog/retime schema gains fields, so
                     # tests can scope schema assertions to artifacts the
                     # current code actually wrote
-                    "gate_rev": 14,
+                    "gate_rev": 15,
                     "sf": float(sf),
                     "stop_rule": {
                         "eps": EPS, "warmup": WARMUP,
@@ -307,6 +321,7 @@ def main() -> None:
                     "n_queries": len(timings),
                     "queries": timings,
                     "readings": readings,
+                    "codegen_compiles": codegen_compiles,
                     "errors": errors,
                     "vs_committed": drift,
                     "vs_floor": vs_floor,

@@ -120,14 +120,14 @@ def connected_components(
     # until the fixpoint, and equality of the pair IS elementwise equality.
     # That turns the per-round convergence check from a join + count action
     # (one extra shuffle + scan of BOTH label frames) into a single-stage
-    # scan-aggregate of the new frame alone — and because the new frame is
-    # marked localCheckpoint(eager=False), the aggregate's own job is what
-    # materializes the checkpoint: ONE driver-blocking action per round
-    # where the old loop paid two (checkpoint materialize + convergence
-    # count). DECIMAL(38,0) keeps the sum exact far past any realistic
-    # vertex-id x vertex-count product (1e12 ids on 1e12 vertices = 1e24,
-    # 14 orders under the 38-digit ceiling), so the equality test never
-    # aliases through overflow.
+    # scan-aggregate of the new frame alone. The new frame's
+    # localCheckpoint(eager=False) is not free at the call: under AQE it
+    # finalizes the plan and runs every shuffle stage beneath it there and
+    # then. Only the last stage, which writes the checkpoint blocks, waits
+    # for the aggregate's job to run it. DECIMAL(38,0) keeps the sum exact
+    # far past any realistic vertex-id x vertex-count product (1e12 ids on
+    # 1e12 vertices = 1e24, 14 orders under the 38-digit ceiling), so the
+    # equality test never aliases through overflow.
     def _state(df: DataFrame) -> tuple:
         row = df.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
@@ -242,10 +242,11 @@ def pagerank_int(edges: DataFrame, n_iters: int = PR_ITERS) -> DataFrame:
                     )
                 ).cast("bigint").alias("r"),
             )
-            # lazy: truncates lineage identically but lets the final action
-            # drive all iterations instead of one eager job per round
-            # (fixed iteration count — nothing driver-side inspects ranks
-            # mid-loop, unlike the CC convergence check which stays eager)
+            # not free at the call: under AQE the lazy checkpoint finalizes
+            # the round's plan and runs every shuffle stage beneath it, so
+            # each round's jobs run while the query is built (36 build jobs
+            # for supplier_pagerank); only the last stage of each round
+            # waits for the final action
             .localCheckpoint(eager=False)
         )
     return ranks

@@ -180,19 +180,23 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     f3 = f2.withColumn(
         "seen_step2", F.coalesce(F.max("is_step2").over(w_prev), F.lit(0))
     )
-    return f3.agg(
-        F.countDistinct(
-            F.when(F.col("event_type") == "view", F.col("user_id"))
-        ).alias("n_view"),
-        F.countDistinct(F.when(F.col("is_step2") == 1, F.col("user_id"))).alias(
-            "n_view_click"
-        ),
-        F.countDistinct(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("seen_step2") == 1),
-                F.col("user_id"),
-            )
-        ).alias("n_full_funnel"),
+    # Per-user max flags, then a count of the users that hold each flag:
+    # the same numbers as COUNT(DISTINCT CASE ... THEN user_id END), and
+    # like it a NULL user_id counts nowhere. The aggregate reuses the
+    # window's user_id exchange. Three countDistincts would plan an Expand
+    # whose group order, and so whose generated code, varies between builds.
+    per_user = f3.groupBy("user_id").agg(
+        F.max(F.col("event_type") == "view").alias("view"),
+        F.max(F.col("is_step2") == 1).alias("view_click"),
+        F.max(
+            (F.col("event_type") == "purchase") & (F.col("seen_step2") == 1)
+        ).alias("full_funnel"),
+    )
+    return per_user.agg(
+        *(
+            F.count(F.when(F.col(flag), F.col("user_id"))).alias(f"n_{flag}")
+            for flag in ("view", "view_click", "full_funnel")
+        )
     )
 
 

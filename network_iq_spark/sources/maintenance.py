@@ -131,6 +131,13 @@ def upsert_partitioned(
     return len(parts)
 
 
+# The z-order file cut points are percentiles of the Morton code's top
+# this many bits: 65,536 cells are far more than the files a write makes,
+# and the percentile buffer stays bounded however many distinct codes the
+# rows have.
+_ZORDER_CUT_BITS = 16
+
+
 def zorder_write(
     df,  # DataFrame
     path: str,
@@ -148,11 +155,19 @@ def zorder_write(
     still read every file. Each column gets up to 16 bits of rank; the
     write overwrites ``path``.
 
-    Scale shape: one scalar agg for the per-column bounds (broadcast), a
-    map to compute the Morton code, one range exchange on it — the same
-    cost as any global sort-write. Min-max scaling (not exact rank) keeps
-    it one pass; heavily skewed columns should pre-transform (log, bucket)
-    the same way they would for any range layout.
+    The layout is a function of the rows alone: file ``i`` holds the codes
+    between the ``i``-th and ``i+1``-th of ``n_files - 1`` exact
+    percentiles of the code's top ``_ZORDER_CUT_BITS`` bits. A
+    ``repartitionByRange`` would take its cut points from a random sample
+    and move rows between files from one write to the next.
+
+    Scale shape: one scalar agg for the per-column bounds, one for the
+    percentiles (its buffer holds at most 2^_ZORDER_CUT_BITS distinct
+    prefixes), a map to compute the Morton code and one exchange on the
+    file index — the same cost as any global sort-write, whose range
+    sampling is the same extra pass. Min-max scaling (not exact rank)
+    keeps the code one pass; heavily skewed columns should pre-transform
+    (log, bucket) the same way they would for any range layout.
     """
     from pyspark.sql import functions as F
 
@@ -189,9 +204,15 @@ def zorder_write(
         for i, r in enumerate(ranks):
             bit = F.shiftright(r, j).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, j * len(cols) + i))
+    zdf = df.withColumn("_z", z)
+    prefix = F.shiftright("_z", max(0, bits * len(cols) - _ZORDER_CUT_BITS))
+    cuts = []
+    if n_files > 1:
+        pcts = [i / n_files for i in range(1, n_files)]
+        cuts = zdf.agg(F.percentile(prefix, pcts)).first()[0] or []
+    file_index = sum(((prefix > c).cast("int") for c in cuts), F.lit(0))
     (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
+        zdf.repartitionById(n_files, file_index)
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")

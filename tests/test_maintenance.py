@@ -228,6 +228,37 @@ def test_zorder_write_clusters_both_columns(spark, tmp_path):
     assert span_z < span_sorted * 0.85, (span_z, span_sorted)
 
 
+def test_zorder_write_layout_is_reproducible(spark, tmp_path):
+    """Two writes of the same rows, arriving in different orders and
+    partitionings, give the same per-file row sets."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from network_iq_spark.sources.maintenance import zorder_write
+
+    df = spark.range(0, 20000).select(
+        (F.col("id") % 1000).alias("a"),
+        F.floor(F.col("id") / 20).alias("b"),
+        F.col("id"),
+    )
+
+    def layout(path):
+        return {
+            frozenset(pq.read_table(f).column("id").to_pylist())
+            for f in glob.glob(f"{path}/part-*.parquet")
+        }
+
+    zorder_write(df, str(tmp_path / "z1"), ["a", "b"], n_files=8)
+    zorder_write(
+        df.repartition(5).orderBy(F.rand(3)), str(tmp_path / "z2"), ["a", "b"], n_files=8
+    )
+    first = layout(tmp_path / "z1")
+    assert len(first) == 8
+    assert layout(tmp_path / "z2") == first
+
+
 def test_zorder_write_rejects_bad_arity(spark, tmp_path):
     import pytest as _pytest
 
